@@ -6,16 +6,21 @@ Spark shape (SURVEY.md §3.1 "Spark shape"):
       → explode page buckets (salting: explicit skew handling for huge docs,
         replacing the reference's greedy LPT bin-packing,
         /root/reference/docprompt/_pdfium.py:258-289)
-      → repartition(doc_id, page_bucket)
-      → mapInPandas(parse + layout)          # Arrow-batched, no per-row Python UDFs
-      → window(page offsets) + groupBy(doc_id) ordered collect
+      → docs of <= SKEW_PAGE_THRESHOLD pages (the overwhelming majority):
+        mapInPandas(parse + layout + doc assembly) in one narrow kernel,
+        no post-parse shuffle               # Arrow-batched, no per-row Python UDFs
+      → skew tail only: repartition(doc_id, page_bucket)
+        → mapInPandas(parse + layout)
+        → window(page offsets) + groupBy(doc_id) ordered collect
       → (doc_id, spans array<struct<kind,text,media_ref,offset>>)
 
 Checkpoint/resume (reference FilesystemCache + anti-join resume,
 rasterizer.py:62-307): parsed page rows are appended to a parquet checkpoint
 table; a re-run anti-joins completed (doc_id, page_bucket) pairs and only
-parses the remainder. Per-partition lineage rows (partition id, doc/page/span
-counts, wall time, run id) are derived from the checkpointed pages.
+parses the remainder. This path still assembles every doc, small or not,
+through the window + groupBy(doc_id) above. Per-partition lineage rows
+(partition id, doc/page/span counts, wall time, run id) are derived from the
+checkpointed pages.
 """
 
 from __future__ import annotations

@@ -6,10 +6,12 @@ operator: dedup, similarity search, text analysis) to
 * a Spark DataFrame implementation ``fn(spark, sf_dir) -> DataFrame`` that is
   shuffle-conscious (broadcast small dims, single-pass aggregations, no
   row-at-a-time Python UDFs), and
-* a DuckDB oracle SQL string over the driver's pre-registered views
-  (``region nation customer supplier part orders lineitem events documents
-  embeddings``), or ``None`` for non-SQL-expressible pipelines (those get a
-  rows-only check).
+* a DuckDB oracle SQL over the pre-registered views (``region nation
+  customer supplier part orders lineitem events documents embeddings``),
+  declared with the query: either the SQL string itself or a zero-argument
+  function that returns it. Those functions embed generated ground truth as
+  VALUES tables (spans, media, document structure) and run only when
+  ``oracle_sql()`` first asks for them.
 
 Cross-engine determinism rules used throughout:
 * money aggregates: exact DECIMAL sums, then ``round(cast(.. as double), 2)``
@@ -20,16 +22,24 @@ Cross-engine determinism rules used throughout:
 
 from __future__ import annotations
 
-from typing import Callable, Dict, Optional, Tuple
+import functools
+import sys
+from typing import Callable, Dict, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-_REGISTRY: Dict[str, Tuple[QueryFn, Optional[str]]] = {}
+Oracle = Union[str, Callable[[], str]]
+_REGISTRY: Dict[str, Tuple[QueryFn, Oracle]] = {}
 
 
-def query(name: str, oracle: Optional[str]):
+def query(name: str, oracle: Oracle):
+    """Register ``fn`` under ``name`` with its oracle: the SQL string, or a
+    zero-argument callable that builds it (see ``oracle_sql``)."""
+    if not (isinstance(oracle, str) or callable(oracle)):
+        raise TypeError(f"{name}: oracle must be SQL or a callable, got {oracle!r}")
+
     def deco(fn: QueryFn) -> QueryFn:
         _REGISTRY[name] = (fn, oracle)
         return fn
@@ -37,7 +47,7 @@ def query(name: str, oracle: Optional[str]):
     return deco
 
 
-def registry() -> Dict[str, Tuple[QueryFn, Optional[str]]]:
+def registry() -> Dict[str, Tuple[QueryFn, Oracle]]:
     return dict(_REGISTRY)
 
 
@@ -2337,6 +2347,62 @@ def _ivf_assign_expr(cents: dict):
     return F.expr(f"array_min(array({','.join(structs)})).cid")
 
 
+def _ivf_oracle_sql() -> str:
+    """The same integer k-means unrolled as chained CTEs + a probe-cluster
+    cosine top-5 (dim-wise math via a range(1..dims) cross join)."""
+    k, dims, nd = _IVF_K, _IVF_DIMS, _IVF_DIMS + 1
+    parts = [
+        f"WITH e AS ({_EMB_SQL}),",
+        "iv AS (SELECT vec_id, emb,"
+        " list_transform(emb, x -> CAST(round(x * 1000) AS BIGINT)) AS iv FROM e),",
+        "d AS (SELECT vec_id, iv FROM iv WHERE vec_id <> 0),",
+        "c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS cid,"
+        f" iv FROM iv WHERE vec_id BETWEEN 1 AND {k}),",
+    ]
+    prev = "c0"
+    for it in range(1, _IVF_ITERS + 1):
+        parts += [
+            f"dist{it} AS (SELECT d.vec_id, c.cid,"
+            " sum((d.iv[r.d] - c.iv[r.d]) * (d.iv[r.d] - c.iv[r.d])) AS dist"
+            f" FROM d CROSS JOIN {prev} c CROSS JOIN range(1, {nd}) r(d)"
+            " GROUP BY d.vec_id, c.cid),",
+            f"a{it} AS (SELECT vec_id, cid FROM ("
+            " SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id"
+            f" ORDER BY dist, cid) AS rn FROM dist{it}) WHERE rn = 1),",
+            f"c{it} AS (SELECT cid, list(CAST(floor(CAST(s AS DOUBLE) / n)"
+            " AS BIGINT) ORDER BY dd) AS iv FROM ("
+            f" SELECT a{it}.cid, r.d AS dd, sum(d.iv[r.d]) AS s, count(*) AS n"
+            f" FROM d JOIN a{it} USING (vec_id) CROSS JOIN range(1, {nd}) r(d)"
+            f" GROUP BY a{it}.cid, r.d) GROUP BY cid),",
+        ]
+        prev = f"c{it}"
+    parts += [
+        f"fdist AS (SELECT d.vec_id, c.cid,"
+        " sum((d.iv[r.d] - c.iv[r.d]) * (d.iv[r.d] - c.iv[r.d])) AS dist"
+        f" FROM d CROSS JOIN {prev} c CROSS JOIN range(1, {nd}) r(d)"
+        " GROUP BY d.vec_id, c.cid),",
+        "fassign AS (SELECT vec_id, cid FROM ("
+        " SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id"
+        " ORDER BY dist, cid) AS rn FROM fdist) WHERE rn = 1),",
+        "qdist AS (SELECT c.cid,"
+        " sum((q.iv[r.d] - c.iv[r.d]) * (q.iv[r.d] - c.iv[r.d])) AS dist"
+        f" FROM iv q CROSS JOIN {prev} c CROSS JOIN range(1, {nd}) r(d)"
+        " WHERE q.vec_id = 0 GROUP BY c.cid),",
+        "qcid AS (SELECT cid FROM qdist ORDER BY dist, cid LIMIT 1),",
+        "q AS (SELECT emb FROM e WHERE vec_id = 0),",
+        "scored AS (SELECT a.vec_id, f.cid,"
+        " round(list_sum(list_transform(list_zip(a.emb, q.emb),"
+        " p -> p[1] * p[2])) / (sqrt(list_sum(list_transform(a.emb, x -> x*x)))"
+        " * sqrt(list_sum(list_transform(q.emb, x -> x*x)))), 6) AS sim"
+        " FROM e a JOIN fassign f ON a.vec_id = f.vec_id CROSS JOIN q"
+        " WHERE f.cid = (SELECT cid FROM qcid))",
+        "SELECT vec_id, CAST(cid AS BIGINT) AS cid, sim FROM scored"
+        " ORDER BY sim DESC, vec_id LIMIT 5",
+    ]
+    return "\n".join(parts)
+
+
+@query("ann_ivf_top5", _ivf_oracle_sql)
 def ann_ivf_top5(spark, sf_dir):
     """IVF-style ANN — the coarse-quantizer scale path next to brute force
     and LSH: k-means over INTEGER-quantized embeddings (round(x*1000);
@@ -2408,64 +2474,6 @@ def ann_ivf_top5(spark, sf_dir):
         )
     )
     return scored.orderBy(F.desc("sim"), F.asc("vec_id")).limit(5)
-
-
-def _ivf_oracle_sql() -> str:
-    """The same integer k-means unrolled as chained CTEs + a probe-cluster
-    cosine top-5 (dim-wise math via a range(1..dims) cross join)."""
-    k, dims, nd = _IVF_K, _IVF_DIMS, _IVF_DIMS + 1
-    parts = [
-        f"WITH e AS ({_EMB_SQL}),",
-        "iv AS (SELECT vec_id, emb,"
-        " list_transform(emb, x -> CAST(round(x * 1000) AS BIGINT)) AS iv FROM e),",
-        "d AS (SELECT vec_id, iv FROM iv WHERE vec_id <> 0),",
-        "c0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) AS BIGINT) AS cid,"
-        f" iv FROM iv WHERE vec_id BETWEEN 1 AND {k}),",
-    ]
-    prev = "c0"
-    for it in range(1, _IVF_ITERS + 1):
-        parts += [
-            f"dist{it} AS (SELECT d.vec_id, c.cid,"
-            " sum((d.iv[r.d] - c.iv[r.d]) * (d.iv[r.d] - c.iv[r.d])) AS dist"
-            f" FROM d CROSS JOIN {prev} c CROSS JOIN range(1, {nd}) r(d)"
-            " GROUP BY d.vec_id, c.cid),",
-            f"a{it} AS (SELECT vec_id, cid FROM ("
-            " SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id"
-            f" ORDER BY dist, cid) AS rn FROM dist{it}) WHERE rn = 1),",
-            f"c{it} AS (SELECT cid, list(CAST(floor(CAST(s AS DOUBLE) / n)"
-            " AS BIGINT) ORDER BY dd) AS iv FROM ("
-            f" SELECT a{it}.cid, r.d AS dd, sum(d.iv[r.d]) AS s, count(*) AS n"
-            f" FROM d JOIN a{it} USING (vec_id) CROSS JOIN range(1, {nd}) r(d)"
-            f" GROUP BY a{it}.cid, r.d) GROUP BY cid),",
-        ]
-        prev = f"c{it}"
-    parts += [
-        f"fdist AS (SELECT d.vec_id, c.cid,"
-        " sum((d.iv[r.d] - c.iv[r.d]) * (d.iv[r.d] - c.iv[r.d])) AS dist"
-        f" FROM d CROSS JOIN {prev} c CROSS JOIN range(1, {nd}) r(d)"
-        " GROUP BY d.vec_id, c.cid),",
-        "fassign AS (SELECT vec_id, cid FROM ("
-        " SELECT vec_id, cid, row_number() OVER (PARTITION BY vec_id"
-        " ORDER BY dist, cid) AS rn FROM fdist) WHERE rn = 1),",
-        "qdist AS (SELECT c.cid,"
-        " sum((q.iv[r.d] - c.iv[r.d]) * (q.iv[r.d] - c.iv[r.d])) AS dist"
-        f" FROM iv q CROSS JOIN {prev} c CROSS JOIN range(1, {nd}) r(d)"
-        " WHERE q.vec_id = 0 GROUP BY c.cid),",
-        "qcid AS (SELECT cid FROM qdist ORDER BY dist, cid LIMIT 1),",
-        "q AS (SELECT emb FROM e WHERE vec_id = 0),",
-        "scored AS (SELECT a.vec_id, f.cid,"
-        " round(list_sum(list_transform(list_zip(a.emb, q.emb),"
-        " p -> p[1] * p[2])) / (sqrt(list_sum(list_transform(a.emb, x -> x*x)))"
-        " * sqrt(list_sum(list_transform(q.emb, x -> x*x)))), 6) AS sim"
-        " FROM e a JOIN fassign f ON a.vec_id = f.vec_id CROSS JOIN q"
-        " WHERE f.cid = (SELECT cid FROM qcid))",
-        "SELECT vec_id, CAST(cid AS BIGINT) AS cid, sim FROM scored"
-        " ORDER BY sim DESC, vec_id LIMIT 5",
-    ]
-    return "\n".join(parts)
-
-
-_REGISTRY["ann_ivf_top5"] = (ann_ivf_top5, None)
 
 
 @query(
@@ -3000,6 +3008,16 @@ def self_exclusion_twins(spark, sf_dir):
     )
 
 
+def _mime_sniff_oracle_sql() -> str:
+    """mime_sniff_stats golden: the corpus wraps pdf bytes by idx%4
+    (corpus._wrap) — 32 docs -> raw 8, gzip 8, base64 16."""
+    return (
+        "SELECT envelope, CAST(n AS BIGINT) AS n FROM (VALUES"
+        " ('raw', 8), ('gzip', 8), ('base64', 16)) AS t(envelope, n)"
+    )
+
+
+@query("mime_sniff_stats", _mime_sniff_oracle_sql)
 def mime_sniff_stats(spark, sf_dir):
     """P1 is_pdf mime predicate (utils/util.py:19-30) over the corpus's raw
     byte column: classify wrapper envelopes without decoding (rows-only)."""
@@ -3014,9 +3032,6 @@ def mime_sniff_stats(spark, sf_dir):
     return docs.select(kindc.alias("envelope")).groupBy("envelope").agg(
         F.count("*").alias("n")
     )
-
-
-_REGISTRY["mime_sniff_stats"] = (mime_sniff_stats, None)
 
 
 _AUG_EMB_SQL = """
@@ -3115,7 +3130,8 @@ def embedding_cosine_neardup_pairs(spark, sf_dir):
 
 
 # ===========================================================================
-# 9. Multimodal media table + kernels (rows-only: stateful Arrow pipelines)
+# 9. Multimodal media table + kernels (oracles from the generator's media
+#    ground truth)
 # ===========================================================================
 
 
@@ -3129,6 +3145,53 @@ def _corpus_media(spark):
     return multimodal.media_table(docs.select("doc_id", "pdf", "n_pages"))
 
 
+def _r5(x: float) -> float:
+    """Round half-UP at 5 decimals on the double's shortest repr — exactly
+    what Spark's F.round(col, 5) does (BigDecimal HALF_UP); Python's builtin
+    round is half-even and disagrees on exact halves (169.515625)."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(Decimal(repr(float(x))).quantize(Decimal("0.00001"), ROUND_HALF_UP))
+
+
+def _golden_media(n_docs=36, seed=11):
+    """(media_ref, payload, samples, px_w, px_h) ground truth for the media
+    query corpus — one entry per distinct media_ref."""
+    from docprompt_spark.corpus import golden_page_layouts
+
+    seen = {}
+    for _doc, _pn, _layout, imgs in golden_page_layouts(n_docs, seed=seed, skew_every=0):
+        for im in imgs:
+            seen.setdefault(im["media_ref"], im)
+    return seen
+
+
+def _media_inventory_oracle_sql() -> str:
+    """media_inventory golden from ground-truth images (36 docs, seed 11)."""
+    from collections import defaultdict
+
+    from docprompt_spark.corpus import golden_page_layouts
+
+    per_doc = defaultdict(list)
+    for doc_id, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
+        per_doc[doc_id].extend(imgs)
+    rows = []
+    for d, imgs in sorted(per_doc.items()):
+        if not imgs:
+            continue
+        refs = {im["media_ref"] for im in imgs}
+        total = sum(im["n_bytes"] for im in imgs)
+        rows.append(f"({_sql_quote(d)},{len(imgs)},{total},{len(refs)})")
+    return (
+        "SELECT doc_id, CAST(n_media AS BIGINT) AS n_media,"
+        " CAST(total_bytes AS BIGINT) AS total_bytes,"
+        " CAST(n_distinct AS BIGINT) AS n_distinct"
+        " FROM (VALUES " + ",".join(rows) +
+        ") AS t(doc_id, n_media, total_bytes, n_distinct)"
+    )
+
+
+@query("media_inventory", _media_inventory_oracle_sql)
 def media_inventory(spark, sf_dir):
     """Media sidecar table: per-doc media counts + byte totals (ImageNode
     analog, content-addressed media_refs)."""
@@ -3140,6 +3203,30 @@ def media_inventory(spark, sf_dir):
     )
 
 
+def _media_codec_histogram_oracle_sql() -> str:
+    """Per-codec counts/bytes from the generator ground truth (36 docs,
+    seed 11), codec tags via corpus.writer_entry_codec == the pipeline's
+    classifier."""
+    from collections import defaultdict
+
+    from docprompt_spark.corpus import golden_page_layouts
+
+    agg = defaultdict(lambda: [0, 0])
+    for _d, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
+        for im in imgs:
+            agg[im["codec"]][0] += 1
+            agg[im["codec"]][1] += im["n_bytes"]
+    rows = [
+        f"({_sql_quote(c)},{n},{b})" for c, (n, b) in sorted(agg.items())
+    ]
+    return (
+        "SELECT codec, CAST(n_media AS BIGINT) AS n_media,"
+        " CAST(total_bytes AS BIGINT) AS total_bytes"
+        " FROM (VALUES " + ",".join(rows) + ") AS t(codec, n_media, total_bytes)"
+    )
+
+
+@query("media_codec_histogram", _media_codec_histogram_oracle_sql)
 def media_codec_histogram(spark, sf_dir):
     """Per-codec media counts + byte totals over the full codec rotation —
     one row per codec tag (gray8/flate/lzw, dct, jpx, jbig2, ccitt, with
@@ -3154,6 +3241,30 @@ def media_codec_histogram(spark, sf_dir):
     )
 
 
+def _media_features_oracle_sql() -> str:
+    import numpy as np
+
+    rows = []
+    for ref, im in sorted(_golden_media().items()):
+        px = (
+            np.frombuffer(im["samples"], dtype=np.uint8)
+            .reshape(im["px_h"], im["px_w"])
+            .astype(np.float64)
+        )
+        gx = float(np.abs(np.diff(px, axis=1)).mean()) if px.shape[1] > 1 else 0.0
+        rows.append(
+            f"({_sql_quote(ref)},{_r5(px.mean())},{_r5(px.std())},{_r5(gx)})"
+        )
+    return (
+        "SELECT media_ref, CAST(mean_intensity AS DOUBLE) AS mean_intensity,"
+        " CAST(std_intensity AS DOUBLE) AS std_intensity,"
+        " CAST(edge_density AS DOUBLE) AS edge_density FROM (VALUES "
+        + ",".join(rows)
+        + ") AS t(media_ref, mean_intensity, std_intensity, edge_density)"
+    )
+
+
+@query("media_image_features", _media_features_oracle_sql)
 def media_image_features(spark, sf_dir):
     """REAL pixel decode (raw/Flate gray8 — docprompt_spark.multimodal.
     decode_image) → per-image intensity/edge features, rounded for the
@@ -3170,6 +3281,38 @@ def media_image_features(spark, sf_dir):
     )
 
 
+def _media_thumbnails_oracle_sql(out_w=8, out_h=8) -> str:
+    import numpy as np
+
+    rows = []
+    for ref, im in sorted(_golden_media().items()):
+        px = (
+            np.frombuffer(im["samples"], dtype=np.uint8)
+            .reshape(im["px_h"], im["px_w"])
+            .astype(np.float64)
+        )
+        ys = np.linspace(0, px.shape[0], out_h + 1).astype(int)
+        xs = np.linspace(0, px.shape[1], out_w + 1).astype(int)
+        k = 0
+        for i in range(out_h):
+            for j in range(out_w):
+                v = float(
+                    px[
+                        ys[i] : max(ys[i + 1], ys[i] + 1),
+                        xs[j] : max(xs[j + 1], xs[j] + 1),
+                    ].mean()
+                )
+                rows.append(f"({_sql_quote(ref)},{k},{_r5(v)})")
+                k += 1
+    return (
+        "SELECT media_ref, CAST(cell_idx AS INT) AS cell_idx,"
+        " CAST(value AS DOUBLE) AS value FROM (VALUES "
+        + ",".join(rows)
+        + ") AS t(media_ref, cell_idx, value)"
+    )
+
+
+@query("media_thumbnails", _media_thumbnails_oracle_sql)
 def media_thumbnails(spark, sf_dir):
     """REAL pixel decode → 8x8 box-downsampled thumbnails, exploded to one
     row per cell (scalar columns hash robustly cross-engine)."""
@@ -3181,6 +3324,29 @@ def media_thumbnails(spark, sf_dir):
     ).select("media_ref", "cell_idx", F.round("value", 5).alias("value"))
 
 
+def _media_frames_oracle_sql(every_n_bytes=64, max_frames=4) -> str:
+    import hashlib as _hl
+
+    rows = []
+    for ref, im in sorted(_golden_media().items()):
+        # frame sampling runs on the raw stream payload (raw / flate / jpeg
+        # bytes as written) — carried verbatim in the golden
+        data = im["payload"]
+        n_frames = min(max(len(data) // every_n_bytes, 1), max_frames)
+        for k in range(n_frames):
+            frame = data[k * every_n_bytes : (k + 1) * every_n_bytes]
+            rows.append(
+                f"({_sql_quote(ref)},{k},'{_hl.md5(frame).hexdigest()}',{len(frame)})"
+            )
+    return (
+        "SELECT media_ref, CAST(frame_idx AS INT) AS frame_idx, frame_hash,"
+        " CAST(frame_bytes AS INT) AS frame_bytes FROM (VALUES "
+        + ",".join(rows)
+        + ") AS t(media_ref, frame_idx, frame_hash, frame_bytes)"
+    )
+
+
+@query("media_frame_samples", _media_frames_oracle_sql)
 def media_frame_samples(spark, sf_dir):
     """Frame-sampling fan-out (1 media row → N frame rows); frame hashes are
     content-derived, so the generator ground truth oracles them exactly."""
@@ -3200,6 +3366,25 @@ def _html_corpus_df(spark):
     return spark.createDataFrame(rows, ["doc_id", "html"])
 
 
+def _html_main_oracle_sql() -> str:
+    from docprompt_spark.html_corpus import gen_html_corpus
+
+    rows = []
+    for d in gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED):
+        for seq, s in enumerate(d["spans"]):
+            rows.append(
+                f"({_sql_quote(d['doc_id'])},{seq},{_sql_quote(s['kind'])},"
+                f"{_sql_quote(s['text'])},{_sql_quote(s['media_ref'])},{s['offset']})"
+            )
+    return (
+        'SELECT doc_id, CAST(seq AS INT) AS seq, kind, text, media_ref,'
+        ' CAST("offset" AS INT) AS "offset" FROM (VALUES\n'
+        + ",\n".join(rows)
+        + '\n) AS t(doc_id, seq, kind, text, media_ref, "offset")'
+    )
+
+
+@query("html_main_content", _html_main_oracle_sql)
 def html_main_content(spark, sf_dir):
     """HTML boilerplate strip + DOM heuristics (the north rule's HTML half;
     docprompt_spark.html_extract): from-scratch tokenizer, Readability-style
@@ -3254,24 +3439,29 @@ def html_main_content(spark, sf_dir):
     return docs.mapInPandas(fn, schema=schema)
 
 
-def _html_main_oracle_sql() -> str:
+def _html_stats_oracle_sql() -> str:
     from docprompt_spark.html_corpus import gen_html_corpus
 
     rows = []
     for d in gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED):
-        for seq, s in enumerate(d["spans"]):
-            rows.append(
-                f"({_sql_quote(d['doc_id'])},{seq},{_sql_quote(s['kind'])},"
-                f"{_sql_quote(s['text'])},{_sql_quote(s['media_ref'])},{s['offset']})"
-            )
+        st = d["stats"]
+        rows.append(
+            f"({_sql_quote(d['doc_id'])},{st['n_blocks']},{st['n_content_blocks']},"
+            f"{st['n_boilerplate_blocks']},{st['content_words']},{st['n_media']})"
+        )
     return (
-        'SELECT doc_id, CAST(seq AS INT) AS seq, kind, text, media_ref,'
-        ' CAST("offset" AS INT) AS "offset" FROM (VALUES\n'
-        + ",\n".join(rows)
-        + '\n) AS t(doc_id, seq, kind, text, media_ref, "offset")'
+        "SELECT doc_id, CAST(n_blocks AS INT) AS n_blocks,"
+        " CAST(n_content_blocks AS INT) AS n_content_blocks,"
+        " CAST(n_boilerplate_blocks AS INT) AS n_boilerplate_blocks,"
+        " CAST(content_words AS INT) AS content_words,"
+        " CAST(n_media AS INT) AS n_media FROM (VALUES "
+        + ",".join(rows)
+        + ") AS t(doc_id, n_blocks, n_content_blocks, n_boilerplate_blocks,"
+        " content_words, n_media)"
     )
 
 
+@query("html_boilerplate_stats", _html_stats_oracle_sql)
 def html_boilerplate_stats(spark, sf_dir):
     """Per-document boilerplate statistics (content vs dropped blocks, word
     totals, media counts) over the HTML corpus; oracle = structural ground
@@ -3314,32 +3504,6 @@ def html_boilerplate_stats(spark, sf_dir):
     )
 
 
-def _html_stats_oracle_sql() -> str:
-    from docprompt_spark.html_corpus import gen_html_corpus
-
-    rows = []
-    for d in gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED):
-        st = d["stats"]
-        rows.append(
-            f"({_sql_quote(d['doc_id'])},{st['n_blocks']},{st['n_content_blocks']},"
-            f"{st['n_boilerplate_blocks']},{st['content_words']},{st['n_media']})"
-        )
-    return (
-        "SELECT doc_id, CAST(n_blocks AS INT) AS n_blocks,"
-        " CAST(n_content_blocks AS INT) AS n_content_blocks,"
-        " CAST(n_boilerplate_blocks AS INT) AS n_boilerplate_blocks,"
-        " CAST(content_words AS INT) AS content_words,"
-        " CAST(n_media AS INT) AS n_media FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(doc_id, n_blocks, n_content_blocks, n_boilerplate_blocks,"
-        " content_words, n_media)"
-    )
-
-
-_REGISTRY["html_main_content"] = (html_main_content, None)
-_REGISTRY["html_boilerplate_stats"] = (html_boilerplate_stats, None)
-
-
 def _audio_corpus():
     """Deterministic synthetic audio table: seeded tones + noise encoded as
     real PCM WAV blobs (docprompt_spark.wav). (audio_id, payload)."""
@@ -3360,6 +3524,29 @@ def _audio_corpus():
     return out
 
 
+def _audio_features_oracle_sql() -> str:
+    from docprompt_spark import wav
+
+    rows = []
+    for aid, payload in _audio_corpus():
+        f = wav.features(payload)
+        rows.append(
+            f"({_sql_quote(aid)},{f['sample_rate']},{f['n_samples']},"
+            f"{_r5(f['duration_sec'])},{_r5(f['rms'])},{_r5(f['peak'])},"
+            f"{_r5(f['zero_crossing_rate'])})"
+        )
+    return (
+        "SELECT audio_id, CAST(sample_rate AS INT) AS sample_rate,"
+        " CAST(n_samples AS INT) AS n_samples,"
+        " CAST(duration_sec AS DOUBLE) AS duration_sec,"
+        " CAST(rms AS DOUBLE) AS rms, CAST(peak AS DOUBLE) AS peak,"
+        " CAST(zero_crossing_rate AS DOUBLE) AS zero_crossing_rate"
+        " FROM (VALUES " + ",".join(rows) + ") AS t(audio_id, sample_rate,"
+        " n_samples, duration_sec, rms, peak, zero_crossing_rate)"
+    )
+
+
+@query("audio_features", _audio_features_oracle_sql)
 def audio_features(spark, sf_dir):
     """Audio modality: REAL RIFF/WAVE PCM decode (docprompt_spark.wav, no
     external libs) → duration / RMS / zero-crossing-rate features per clip,
@@ -3400,128 +3587,27 @@ def audio_features(spark, sf_dir):
     )
 
 
-def _audio_features_oracle_sql() -> str:
-    from docprompt_spark import wav
-
-    rows = []
-    for aid, payload in _audio_corpus():
-        f = wav.features(payload)
-        rows.append(
-            f"({_sql_quote(aid)},{f['sample_rate']},{f['n_samples']},"
-            f"{_r5(f['duration_sec'])},{_r5(f['rms'])},{_r5(f['peak'])},"
-            f"{_r5(f['zero_crossing_rate'])})"
-        )
-    return (
-        "SELECT audio_id, CAST(sample_rate AS INT) AS sample_rate,"
-        " CAST(n_samples AS INT) AS n_samples,"
-        " CAST(duration_sec AS DOUBLE) AS duration_sec,"
-        " CAST(rms AS DOUBLE) AS rms, CAST(peak AS DOUBLE) AS peak,"
-        " CAST(zero_crossing_rate AS DOUBLE) AS zero_crossing_rate"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(audio_id, sample_rate,"
-        " n_samples, duration_sec, rms, peak, zero_crossing_rate)"
-    )
-
-
-_REGISTRY["audio_features"] = (audio_features, None)
-
-
-def _r5(x: float) -> float:
-    """Round half-UP at 5 decimals on the double's shortest repr — exactly
-    what Spark's F.round(col, 5) does (BigDecimal HALF_UP); Python's builtin
-    round is half-even and disagrees on exact halves (169.515625)."""
-    from decimal import ROUND_HALF_UP, Decimal
-
-    return float(Decimal(repr(float(x))).quantize(Decimal("0.00001"), ROUND_HALF_UP))
-
-
-def _golden_media(n_docs=36, seed=11):
-    """(media_ref, payload, samples, px_w, px_h) ground truth for the media
-    query corpus — one entry per distinct media_ref."""
-    from docprompt_spark.corpus import golden_page_layouts
-
-    seen = {}
-    for _doc, _pn, _layout, imgs in golden_page_layouts(n_docs, seed=seed, skew_every=0):
-        for im in imgs:
-            seen.setdefault(im["media_ref"], im)
-    return seen
-
-
-def _media_features_oracle_sql() -> str:
-    import numpy as np
-
-    rows = []
-    for ref, im in sorted(_golden_media().items()):
-        px = (
-            np.frombuffer(im["samples"], dtype=np.uint8)
-            .reshape(im["px_h"], im["px_w"])
-            .astype(np.float64)
-        )
-        gx = float(np.abs(np.diff(px, axis=1)).mean()) if px.shape[1] > 1 else 0.0
-        rows.append(
-            f"({_sql_quote(ref)},{_r5(px.mean())},{_r5(px.std())},{_r5(gx)})"
-        )
-    return (
-        "SELECT media_ref, CAST(mean_intensity AS DOUBLE) AS mean_intensity,"
-        " CAST(std_intensity AS DOUBLE) AS std_intensity,"
-        " CAST(edge_density AS DOUBLE) AS edge_density FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(media_ref, mean_intensity, std_intensity, edge_density)"
-    )
-
-
-def _media_thumbnails_oracle_sql(out_w=8, out_h=8) -> str:
-    import numpy as np
-
-    rows = []
-    for ref, im in sorted(_golden_media().items()):
-        px = (
-            np.frombuffer(im["samples"], dtype=np.uint8)
-            .reshape(im["px_h"], im["px_w"])
-            .astype(np.float64)
-        )
-        ys = np.linspace(0, px.shape[0], out_h + 1).astype(int)
-        xs = np.linspace(0, px.shape[1], out_w + 1).astype(int)
-        k = 0
-        for i in range(out_h):
-            for j in range(out_w):
-                v = float(
-                    px[
-                        ys[i] : max(ys[i + 1], ys[i] + 1),
-                        xs[j] : max(xs[j + 1], xs[j] + 1),
-                    ].mean()
-                )
-                rows.append(f"({_sql_quote(ref)},{k},{_r5(v)})")
-                k += 1
-    return (
-        "SELECT media_ref, CAST(cell_idx AS INT) AS cell_idx,"
-        " CAST(value AS DOUBLE) AS value FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(media_ref, cell_idx, value)"
-    )
-
-
-def _media_frames_oracle_sql(every_n_bytes=64, max_frames=4) -> str:
+def _media_png_oracle_sql() -> str:
     import hashlib as _hl
 
+    import numpy as np
+
+    from docprompt_spark import png as _png
+
     rows = []
     for ref, im in sorted(_golden_media().items()):
-        # frame sampling runs on the raw stream payload (raw / flate / jpeg
-        # bytes as written) — carried verbatim in the golden
-        data = im["payload"]
-        n_frames = min(max(len(data) // every_n_bytes, 1), max_frames)
-        for k in range(n_frames):
-            frame = data[k * every_n_bytes : (k + 1) * every_n_bytes]
-            rows.append(
-                f"({_sql_quote(ref)},{k},'{_hl.md5(frame).hexdigest()}',{len(frame)})"
-            )
+        px = np.frombuffer(im["samples"], dtype=np.uint8).reshape(
+            im["px_h"], im["px_w"]
+        )
+        data = _png.encode(px)
+        rows.append(f"({_sql_quote(ref)},'{_hl.md5(data).hexdigest()}',{len(data)})")
     return (
-        "SELECT media_ref, CAST(frame_idx AS INT) AS frame_idx, frame_hash,"
-        " CAST(frame_bytes AS INT) AS frame_bytes FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(media_ref, frame_idx, frame_hash, frame_bytes)"
+        "SELECT media_ref, png_md5, CAST(png_bytes AS INT) AS png_bytes"
+        " FROM (VALUES " + ",".join(rows) + ") AS t(media_ref, png_md5, png_bytes)"
     )
 
 
+@query("media_png_export", _media_png_oracle_sql)
 def media_png_export(spark, sf_dir):
     """REAL artifact output: decode each lossless image and re-encode as an
     actual PNG (docprompt_spark.png — zlib+numpy, spec-level from scratch);
@@ -3572,53 +3658,6 @@ def media_png_export(spark, sf_dir):
     return media.select(
         "media_ref", "payload", "width", "height", "codec", "palette"
     ).mapInPandas(fn, schema=schema)
-
-
-def _media_png_oracle_sql() -> str:
-    import hashlib as _hl
-
-    import numpy as np
-
-    from docprompt_spark import png as _png
-
-    rows = []
-    for ref, im in sorted(_golden_media().items()):
-        px = np.frombuffer(im["samples"], dtype=np.uint8).reshape(
-            im["px_h"], im["px_w"]
-        )
-        data = _png.encode(px)
-        rows.append(f"({_sql_quote(ref)},'{_hl.md5(data).hexdigest()}',{len(data)})")
-    return (
-        "SELECT media_ref, png_md5, CAST(png_bytes AS INT) AS png_bytes"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(media_ref, png_md5, png_bytes)"
-    )
-
-
-def media_page_rasters(spark, sf_dir):
-    """D7 page rasterization (reference _pdfium.py:126-135, rasterized via
-    Document.rasterize_page at scale=dpi/72): full page — glyph-cell text +
-    composited embedded images over REAL decoded pixels — rendered to a
-    deterministic gray8 raster inside the salted parse mapInPandas; only
-    digests leave the kernel. Oracle: the same renderer over the
-    generator's ground-truth layouts."""
-    from docprompt_spark import pipeline, rasterize
-
-    docs = pipeline.corpus_df(spark, 16, seed=11, skew_every=0)
-    return rasterize.page_raster_table(
-        docs.select("doc_id", "pdf", "n_pages")
-    ).select("doc_id", "page_number", "w_px", "h_px", "raster_md5", "n_images")
-
-
-def media_masked_rasters(spark, sf_dir):
-    """D12 mask_image_from_bboxes (reference rasterize.py:232-266,
-    utils/masking/image.py:10-29): every word bbox filled over the page
-    raster — trivially oracle-able deterministic pixels."""
-    from docprompt_spark import pipeline, rasterize
-
-    docs = pipeline.corpus_df(spark, 16, seed=11, skew_every=0)
-    return rasterize.page_raster_table(
-        docs.select("doc_id", "pdf", "n_pages")
-    ).select("doc_id", "page_number", "masked_md5", "n_masked")
 
 
 def _golden_raster_rows(n_docs=16, seed=11):
@@ -3693,6 +3732,22 @@ def _page_rasters_oracle_sql() -> str:
     )
 
 
+@query("media_page_rasters", _page_rasters_oracle_sql)
+def media_page_rasters(spark, sf_dir):
+    """D7 page rasterization (reference _pdfium.py:126-135, rasterized via
+    Document.rasterize_page at scale=dpi/72): full page — glyph-cell text +
+    composited embedded images over REAL decoded pixels — rendered to a
+    deterministic gray8 raster inside the salted parse mapInPandas; only
+    digests leave the kernel. Oracle: the same renderer over the
+    generator's ground-truth layouts."""
+    from docprompt_spark import pipeline, rasterize
+
+    docs = pipeline.corpus_df(spark, 16, seed=11, skew_every=0)
+    return rasterize.page_raster_table(
+        docs.select("doc_id", "pdf", "n_pages")
+    ).select("doc_id", "page_number", "w_px", "h_px", "raster_md5", "n_images")
+
+
 def _masked_rasters_oracle_sql() -> str:
     rows = [
         f"({_sql_quote(d)},{pn},'{mm}',{nm})"
@@ -3706,22 +3761,23 @@ def _masked_rasters_oracle_sql() -> str:
     )
 
 
-for _n, _f in [
-    ("media_inventory", media_inventory),
-    ("media_codec_histogram", media_codec_histogram),
-    ("media_image_features", media_image_features),
-    ("media_thumbnails", media_thumbnails),
-    ("media_frame_samples", media_frame_samples),
-    ("media_png_export", media_png_export),
-    ("media_page_rasters", media_page_rasters),
-    ("media_masked_rasters", media_masked_rasters),
-]:
-    _REGISTRY[_n] = (_f, None)
+@query("media_masked_rasters", _masked_rasters_oracle_sql)
+def media_masked_rasters(spark, sf_dir):
+    """D12 mask_image_from_bboxes (reference rasterize.py:232-266,
+    utils/masking/image.py:10-29): every word bbox filled over the page
+    raster — trivially oracle-able deterministic pixels."""
+    from docprompt_spark import pipeline, rasterize
+
+    docs = pipeline.corpus_df(spark, 16, seed=11, skew_every=0)
+    return rasterize.page_raster_table(
+        docs.select("doc_id", "pdf", "n_pages")
+    ).select("doc_id", "page_number", "masked_md5", "n_masked")
 
 
 # ===========================================================================
-# 10. Extraction pipeline entries (non-SQL-expressible → rows-only, except
-#    the flagship which embeds its golden fixture as a VALUES oracle)
+# 10. Extraction pipeline entries: golden spans, document structure,
+#    provenance and text blocks, each with a VALUES oracle built from the
+#    corpus generator's ground truth
 # ===========================================================================
 
 _FLAGSHIP_DOCS = 8
@@ -3768,83 +3824,38 @@ def _golden_spans_sql(
     )
 
 
-def extraction_spans_flat(spark, sf_dir):
-    """Flagship: deterministic corpus → from-scratch PDF parse → layout →
+# The golden-span extraction queries, one row each: (name, n_docs,
+# envelope, docstring). Each parses ``n_docs`` flagship-seed corpus
+# documents written with ``envelope`` through the parse->layout->spans
+# pipeline, and its oracle is the generator's golden spans for the same
+# corpus (golden spans are envelope-independent).
+_GOLDEN_SPAN_QUERIES = [
+    (
+        "extraction_spans_flat", _FLAGSHIP_DOCS, None,
+        """Flagship: deterministic corpus → from-scratch PDF parse → layout →
     ordered spans, flattened. Verified against the generator's golden spans
-    (embedded as the oracle)."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_spans_flat"] = (extraction_spans_flat, None)  # oracle added lazily
-
-
-def extraction_xrefstream_spans(spark, sf_dir):
-    """Same parse->layout->spans pipeline, but every document written with
+    (embedded as the oracle).""",
+    ),
+    (
+        "extraction_xrefstream_spans", 6, "xrefstream",
+        """Same parse->layout->spans pipeline, but every document written with
     the PDF 1.5+ envelope: cross-reference STREAM (/Type /XRef, W-array,
     PNG-Up predictor) + object stream (/Type /ObjStm) — the format modern
     writers emit and the reference handles via pdfium. Exercises
     pdfparse._parse_xref_stream + _objstm_objects end to end; golden spans
-    are envelope-independent."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="xrefstream"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_xrefstream_spans"] = (extraction_xrefstream_spans, None)
-
-
-def extraction_lzw_spans(spark, sf_dir):
-    """Same parse->layout->spans pipeline with every content stream
+    are envelope-independent.""",
+    ),
+    (
+        "extraction_lzw_spans", 6, "lzw",
+        """Same parse->layout->spans pipeline with every content stream
     LZW-compressed (/LZWDecode, PDF §7.4.4.2) — the legacy/scanned-corpus
     filter the reference reads through pdfium, implemented from scratch in
     docprompt_spark.lzw (variable-width 9-12 bit codes, EarlyChange=1).
-    Golden spans are filter-independent."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="lzw"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_lzw_spans"] = (extraction_lzw_spans, None)
-
-
-def extraction_cid_font_spans(spark, sf_dir):
-    """Same pipeline over documents whose Type0 font embeds a REAL
+    Golden spans are filter-independent.""",
+    ),
+    (
+        "extraction_cid_font_spans", 6, "cidfont",
+        """Same pipeline over documents whose Type0 font embeds a REAL
     CID-keyed CFF program (/FontFile3 /Subtype /CIDFontType0C on a
     /CIDFontType0 descendant — the form modern subsetters and CJK
     producers write; reference renders it via pdfium's CID path,
@@ -3857,139 +3868,49 @@ def extraction_cid_font_spans(spark, sf_dir):
     cidchar sections) — word geometry only survives if the reader walks
     the CMap (/W is keyed by CID, ToUnicode by code). Corpus rotates both
     xref envelopes + all three content filters; golden spans are
-    embedding-form-independent."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="cidfont"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_cid_font_spans"] = (extraction_cid_font_spans, None)
-
-
-def extraction_encrypted_spans(spark, sf_dir):
-    """Same pipeline over ENCRYPTED documents (PDF §7.6 Standard security
+    embedding-form-independent.""",
+    ),
+    (
+        "extraction_encrypted_spans", 6, "encrypted",
+        """Same pipeline over ENCRYPTED documents (PDF §7.6 Standard security
     handler — the reference opens these via pdfium's password support,
     schema/document.py:64): corpus rotates AES-128 (/V4 /AESV2), RC4-128
     (/V2 /R3) and RC4-40 (/V1 /R2), empty user password. From-scratch RC4 +
     FIPS-197 AES in docprompt_spark.crypt (KAT- and cross-checked). Golden
-    spans are encryption-independent."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="encrypted"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_encrypted_spans"] = (extraction_encrypted_spans, None)
-
-
-def extraction_ccitt_spans(spark, sf_dir):
-    """Same pipeline over the scanned-document profile: every embedded
+    spans are encryption-independent.""",
+    ),
+    (
+        "extraction_ccitt_spans", 6, "ccitt",
+        """Same pipeline over the scanned-document profile: every embedded
     image CCITT Group 4 (/CCITTFaxDecode /K -1, ITU-T T.6 MMR — the filter
     pdfium gives the reference for free, implemented from scratch in
     docprompt_spark.ccitt). Media spans hash the G4 payloads; golden spans
-    are generated with the same forced codec."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="ccitt"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_ccitt_spans"] = (extraction_ccitt_spans, None)
-
-
-def extraction_encrypted_r6_spans(spark, sf_dir):
-    """Same pipeline over PDF 2.0 AES-256 encrypted documents (/V5 /R6
+    are generated with the same forced codec.""",
+    ),
+    (
+        "extraction_encrypted_r6_spans", 4, "encrypted-r6",
+        """Same pipeline over PDF 2.0 AES-256 encrypted documents (/V5 /R6
     /AESV3 — ISO 32000-2 Algorithms 2.A/2.B/8-10, SHA-256/384/512 iterated
     KDF, file-key wrapping via /UE, /Perms integrity block), alternating
     classic-xref and xref-stream/ObjStm envelopes — so the encrypted-ObjStm
     read path (whole-stream decryption, member strings plaintext, XRef
     stream never encrypted) is exercised end to end. The reference opens
     these via pdfium's password support. Golden spans are
-    encryption-independent."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 4, seed=_FLAGSHIP_SEED, skew_every=0, envelope="encrypted-r6"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_encrypted_r6_spans"] = (extraction_encrypted_r6_spans, None)
-
-
-def extraction_inline_image_spans(spark, sf_dir):
-    """Same pipeline with every embedded image written INLINE (BI/ID/EI in
+    encryption-independent.""",
+    ),
+    (
+        "extraction_inline_image_spans", 6, "inline",
+        """Same pipeline with every embedded image written INLINE (BI/ID/EI in
     the content stream, PDF §8.9.7) instead of as an image XObject — the
     scanned-page-tile / small-logo form pdfium handles for the reference.
     Exercises the tokenizer's inline-image lift (pdfparse.InlineImage:
     abbreviated-key expansion, /L and computed-length payload ends) and the
     interpreter's CTM placement; media spans hash the still-encoded inline
-    payloads, so golden spans are placement-form-independent."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="inline"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_inline_image_spans"] = (extraction_inline_image_spans, None)
-
-
-def extraction_rotated_spans(spark, sf_dir):
-    """Same pipeline over /Rotate pages (PDF §7.7.3.3): every document is
+    payloads, so golden spans are placement-form-independent.""",
+    ),
+    (
+        "extraction_rotated_spans", 6, "rotated",
+        """Same pipeline over /Rotate pages (PDF §7.7.3.3): every document is
     STORED sideways or upside-down with the upright-correction /Rotate on
     the page-tree ROOT (inheritable — exercises the reader's attribute-
     inheritance walk), the exact form scanner output takes. The writer
@@ -4003,29 +3924,11 @@ def extraction_rotated_spans(spark, sf_dir):
     back bit-exactly on the dyadic corpus grid. Cycles all three angles
     (90/180/270) over classic and xref-stream envelopes; half the docs
     ALSO store a non-zero MediaBox origin (cropped/offset scans), so the
-    origin translation composes with the rotation in the same base CTM."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="rotated"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_rotated_spans"] = (extraction_rotated_spans, None)
-
-
-def extraction_damaged_spans(spark, sf_dir):
-    """Same pipeline over DAMAGED documents — the real-world salvage cases
+    origin translation composes with the rotation in the same base CTM.""",
+    ),
+    (
+        "extraction_damaged_spans", 6, "damaged",
+        """Same pipeline over DAMAGED documents — the real-world salvage cases
     the reference rides pdfium's RebuildCrossRef for: startxref pointing
     past EOF, a mangled xref-table keyword, the whole trailer+startxref
     tail truncated (no /Root pointer at all), and a broken startxref on an
@@ -4036,68 +3939,97 @@ def extraction_damaged_spans(spark, sf_dir):
     can't fake headers (pdfparse._reconstruct_xref). Object bodies are
     untouched by the corruption, so golden spans are damage-invariant —
     a 100 TB crawled corpus ALWAYS contains these files, and dropping
-    them silently would bias the extracted data."""
+    them silently would bias the extracted data.""",
+    ),
+    (
+        "extraction_ocg_spans", 12, "ocg",
+        """Same pipeline over LAYERED documents (optional content, §8.11):
+    every doc declares two OCGs — an always-on 'Annotations' layer and a
+    'Watermark' layer that the default viewer configuration HIDES on half
+    the corpus (/OCProperties /D /OFF). Content rides in /OC /OCn BDC…EMC
+    marked-content sequences resolved through the page's /Properties
+    resource; the interpreter keeps pen/graphics state moving through
+    hidden sequences but suppresses their words/images/vectors — what a
+    conforming viewer shows with default layer state, and what pdfium
+    rasterizes for the reference (FPDF_SetRenderOCGFlags default). Golden
+    spans contain the watermark text ONLY where the layer is on: a parser
+    that ignores /OCProperties extracts phantom 'DRAFT watermark' text on
+    half the docs and hash-diverges. Both xref envelopes, all three
+    content filters.""",
+    ),
+    (
+        "extraction_scanned_spans", 6, "scanned",
+        """Same pipeline over the SCANNED-document profile: every page is a
+    full-page scan image (CCITT G4 bilevel on even docs, grayscale DCT on
+    odd) underneath an INVISIBLE text layer (text rendering mode 3,
+    §9.3.6) — exactly what OCR post-processors (Acrobat, tesseract's PDF
+    output, scanner firmware) emit, and the single most common real-world
+    scanned-PDF shape. Extraction must return the invisible text plus the
+    scan as a media span (pdfium's text extraction includes Tr-3 text, so
+    the reference sees it); rasterization must NOT paint it (the parser
+    carries per-word Tr-3 flags and the renderer skips ink for them —
+    proven md5-exact in tests/test_scanned.py).""",
+    ),
+]
+
+
+def _spans_df(spark, docs, with_media_ref: bool = True) -> DataFrame:
+    """Run the extraction pipeline over ``docs`` and flatten its spans into
+    the golden-span columns."""
     from docprompt_spark import pipeline
 
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="damaged"
-    )
     result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
+    return pipeline.spans_exploded(result).select(
         "doc_id",
         F.col("seq").cast("int").alias("seq"),
         "kind",
         "text",
-        "media_ref",
+        *(["media_ref"] if with_media_ref else []),
         F.col("offset").cast("int").alias("offset"),
     )
 
 
-_REGISTRY["extraction_damaged_spans"] = (extraction_damaged_spans, None)
+def _golden_span_query(name: str, n_docs: int, envelope, doc: str) -> QueryFn:
+    def fn(spark, sf_dir):
+        from docprompt_spark import pipeline
+
+        docs = pipeline.corpus_df(
+            spark, n_docs, seed=_FLAGSHIP_SEED, skew_every=0, envelope=envelope
+        )
+        return _spans_df(spark, docs)
+
+    fn.__name__ = fn.__qualname__ = name
+    fn.__doc__ = doc
+    return fn
 
 
-def link_annotations(spark, sf_dir):
-    """Link-annotation extraction over INCREMENTALLY UPDATED documents
-    (§7.5.6 + §12.5): each corpus file carries an appended revision whose
-    redefined page object adds a /Link annotation with a /URI action —
-    the way stamping/review tools and link layers modify real PDFs
-    without rewriting them. The parser must chain /Prev across both xref
-    sections and resolve the NEWEST page object; a reader that takes the
-    original revision extracts zero links. URL extraction from document
-    corpora is also the crawl-graph input a training pipeline mines.
-    Arrow-batched mapInPandas, one row per annotation — no driver I/O."""
-    import pandas as pd
+for _name, _n_docs, _envelope, _doc in _GOLDEN_SPAN_QUERIES:
+    query(
+        _name,
+        functools.partial(_golden_spans_sql, _n_docs, _FLAGSHIP_SEED, _envelope),
+    )(_golden_span_query(_name, _n_docs, _envelope, _doc))
 
-    from docprompt_spark import pdfparse, pipeline
 
-    docs = pipeline.corpus_df(
-        spark, 8, seed=_FLAGSHIP_SEED, skew_every=0, envelope="incremental"
-    )
-    schema = (
-        "doc_id string, page_number int, subtype string, uri string,"
-        " x0 double, y0 double, x1 double, y1 double"
-    )
-    cols = ["doc_id", "page_number", "subtype", "uri", "x0", "y0", "x1", "y1"]
+def _pdf_rows(docs: DataFrame, schema: str, rows_of) -> DataFrame:
+    """The document-structure queries' shared loop: open each ``(doc_id,
+    pdf)`` row as a ``PdfFile`` and emit the tuples ``rows_of(doc_id, pf)``
+    yields, in ``schema``'s column order. Arrow-batched mapInPandas; at
+    scale a zero-shuffle map over the files."""
+    cols = [c.split()[0] for c in schema.split(",")]
 
     def fn(batches):
+        import pandas as pd
+
+        from docprompt_spark import pdfparse
+
         for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for i in range(len(pf.page_refs)):
-                    for a in pf.extract_page(i)["annots"]:
-                        r = a["rect"]
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "page_number": i + 1,
-                                "subtype": a["subtype"],
-                                "uri": a["uri"],
-                                "x0": r[0], "y0": r[1],
-                                "x1": r[2], "y1": r[3],
-                            }
-                        )
+            rows = [
+                r
+                for doc_id, pdf in zip(b["doc_id"], b["pdf"])
+                for r in rows_of(
+                    doc_id, pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
+                )
+            ]
             if rows:
                 yield pd.DataFrame(rows, columns=cols)
 
@@ -4127,65 +4059,38 @@ def _link_annotations_oracle_sql() -> str:
     )
 
 
-_REGISTRY["link_annotations"] = (link_annotations, None)
+@query("link_annotations", _link_annotations_oracle_sql)
+def link_annotations(spark, sf_dir):
+    """Link-annotation extraction over INCREMENTALLY UPDATED documents
+    (§7.5.6 + §12.5): each corpus file carries an appended revision whose
+    redefined page object adds a /Link annotation with a /URI action —
+    the way stamping/review tools and link layers modify real PDFs
+    without rewriting them. The parser must chain /Prev across both xref
+    sections and resolve the NEWEST page object; a reader that takes the
+    original revision extracts zero links. URL extraction from document
+    corpora is also the crawl-graph input a training pipeline mines.
+    Arrow-batched mapInPandas, one row per annotation — no driver I/O."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(
+        spark, 8, seed=_FLAGSHIP_SEED, skew_every=0, envelope="incremental"
+    )
+
+    def rows_of(doc_id, pf):
+        for i in range(len(pf.page_refs)):
+            for a in pf.extract_page(i)["annots"]:
+                r = a["rect"]
+                yield (doc_id, i + 1, a["subtype"], a["uri"], r[0], r[1], r[2], r[3])
+
+    return _pdf_rows(
+        docs,
+        "doc_id string, page_number int, subtype string, uri string,"
+        " x0 double, y0 double, x1 double, y1 double",
+        rows_of,
+    )
 
 
 _N_SIGNED = 9  # covers the signed envelope's %3 filter rotation
-
-
-def signature_fields(spark, sf_dir):
-    """Digital-signature extraction + STRUCTURAL verification (§12.8):
-    every corpus file carries an appended approval-signature revision
-    (/FT /Sig field, /SigFlags 3, sig dict with /ByteRange + /Contents).
-    Per signature the kernel recomputes the SHA-256 digest over the two
-    /ByteRange segments and compares it to /Contents (``digest_valid``),
-    and checks the ranges cover the whole file except exactly the
-    /Contents hex token (``covers_whole_file`` — a ByteRange that skips
-    other bytes authenticates nothing). This is the trust-triage layer a
-    document pipeline runs before ingesting signed corpora: pdfium
-    exposes the same surface (FPDF_GetSignatureObject /
-    FPDFSignatureObj_GetByteRange); CMS/X.509 certificate-chain
-    validation is declared out of scope. Arrow-batched mapInPandas; at
-    scale a zero-shuffle map over the files."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse, pipeline
-
-    docs = pipeline.corpus_df(
-        spark, _N_SIGNED, seed=_FLAGSHIP_SEED, skew_every=0,
-        envelope="signed",
-    )
-    schema = (
-        "doc_id string, field_name string, signer string,"
-        " sign_time string, subfilter string, digest_valid boolean,"
-        " covers_whole_file boolean"
-    )
-    cols = [
-        "doc_id", "field_name", "signer", "sign_time", "subfilter",
-        "digest_valid", "covers_whole_file",
-    ]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for s in pf.signatures():
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "field_name": s["field_name"],
-                            "signer": s["signer"],
-                            "sign_time": s["sign_time"],
-                            "subfilter": s["subfilter"],
-                            "digest_valid": s["digest_valid"],
-                            "covers_whole_file": s["covers_whole_file"],
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id", "pdf").mapInPandas(fn, schema=schema)
 
 
 def _signature_fields_oracle_sql() -> str:
@@ -4211,75 +4116,45 @@ def _signature_fields_oracle_sql() -> str:
     )
 
 
-_REGISTRY["signature_fields"] = (signature_fields, None)
+@query("signature_fields", _signature_fields_oracle_sql)
+def signature_fields(spark, sf_dir):
+    """Digital-signature extraction + STRUCTURAL verification (§12.8):
+    every corpus file carries an appended approval-signature revision
+    (/FT /Sig field, /SigFlags 3, sig dict with /ByteRange + /Contents).
+    Per signature the kernel recomputes the SHA-256 digest over the two
+    /ByteRange segments and compares it to /Contents (``digest_valid``),
+    and checks the ranges cover the whole file except exactly the
+    /Contents hex token (``covers_whole_file`` — a ByteRange that skips
+    other bytes authenticates nothing). This is the trust-triage layer a
+    document pipeline runs before ingesting signed corpora: pdfium
+    exposes the same surface (FPDF_GetSignatureObject /
+    FPDFSignatureObj_GetByteRange); CMS/X.509 certificate-chain
+    validation is declared out of scope. Arrow-batched mapInPandas; at
+    scale a zero-shuffle map over the files."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(
+        spark, _N_SIGNED, seed=_FLAGSHIP_SEED, skew_every=0,
+        envelope="signed",
+    )
+
+    def rows_of(doc_id, pf):
+        for s in pf.signatures():
+            yield (
+                doc_id, s["field_name"], s["signer"], s["sign_time"],
+                s["subfilter"], s["digest_valid"], s["covers_whole_file"],
+            )
+
+    return _pdf_rows(
+        docs,
+        "doc_id string, field_name string, signer string,"
+        " sign_time string, subfilter string, digest_valid boolean,"
+        " covers_whole_file boolean",
+        rows_of,
+    )
 
 
 _N_TAGGED = 6  # covers the tagged envelope's %2 xref / %3 filter rotations
-
-
-def tagged_reading_order(spark, sf_dir):
-    """Tagged-PDF logical structure extraction (§14.7-14.8): every show op
-    in a tagged document is a marked-content sequence (/P <</MCID n>> BDC
-    ... EMC) and the catalog's /StructTreeRoot holds one /StructElem per
-    text line whose /K arrays point back at those MCIDs — the
-    content-to-structure link screen readers, Acrobat reflow, and
-    accessibility checkers consume, and the explicit reading-order /
-    heading signal (H1 vs P) a document-understanding pipeline mines
-    instead of re-deriving layout geometrically. The kernel DFS-walks the
-    structure tree (pdfparse.structure_tree) and joins each element's
-    MCIDs against the word extractor's per-word ``mcid`` to recover
-    per-element text — proving writer → BDC/EMC tokenizer → tree walk →
-    MCID join end-to-end. Arrow-batched mapInPandas; one row per
-    structure element, document order carried as ``ord``."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse, pipeline
-
-    docs = pipeline.corpus_df(
-        spark, _N_TAGGED, seed=_FLAGSHIP_SEED, skew_every=0,
-        envelope="tagged",
-    )
-    schema = (
-        "doc_id string, ord int, level int, tag string,"
-        " page_number int, text string"
-    )
-    cols = ["doc_id", "ord", "level", "tag", "page_number", "text"]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                page_words: Dict[int, Dict[int, str]] = {}
-                for e in pf.structure_tree():
-                    text = ""
-                    if e["page_number"] > 0 and e["mcids"]:
-                        p = e["page_number"] - 1
-                        if p not in page_words:
-                            page_words[p] = {
-                                w["mcid"]: w["text"]
-                                for w in pf.extract_page(p)["words"]
-                                if "mcid" in w
-                            }
-                        text = " ".join(
-                            page_words[p][m]
-                            for m in e["mcids"]
-                            if m in page_words[p]
-                        )
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "ord": e["order"],
-                            "level": e["level"],
-                            "tag": e["tag"],
-                            "page_number": e["page_number"],
-                            "text": text,
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id", "pdf").mapInPandas(fn, schema=schema)
 
 
 def _tagged_reading_order_oracle_sql() -> str:
@@ -4306,7 +4181,51 @@ def _tagged_reading_order_oracle_sql() -> str:
     )
 
 
-_REGISTRY["tagged_reading_order"] = (tagged_reading_order, None)
+@query("tagged_reading_order", _tagged_reading_order_oracle_sql)
+def tagged_reading_order(spark, sf_dir):
+    """Tagged-PDF logical structure extraction (§14.7-14.8): every show op
+    in a tagged document is a marked-content sequence (/P <</MCID n>> BDC
+    ... EMC) and the catalog's /StructTreeRoot holds one /StructElem per
+    text line whose /K arrays point back at those MCIDs — the
+    content-to-structure link screen readers, Acrobat reflow, and
+    accessibility checkers consume, and the explicit reading-order /
+    heading signal (H1 vs P) a document-understanding pipeline mines
+    instead of re-deriving layout geometrically. The kernel DFS-walks the
+    structure tree (pdfparse.structure_tree) and joins each element's
+    MCIDs against the word extractor's per-word ``mcid`` to recover
+    per-element text — proving writer → BDC/EMC tokenizer → tree walk →
+    MCID join end-to-end. Arrow-batched mapInPandas; one row per
+    structure element, document order carried as ``ord``."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(
+        spark, _N_TAGGED, seed=_FLAGSHIP_SEED, skew_every=0,
+        envelope="tagged",
+    )
+
+    def rows_of(doc_id, pf):
+        page_words: Dict[int, Dict[int, str]] = {}
+        for e in pf.structure_tree():
+            text = ""
+            if e["page_number"] > 0 and e["mcids"]:
+                p = e["page_number"] - 1
+                if p not in page_words:
+                    page_words[p] = {
+                        w["mcid"]: w["text"]
+                        for w in pf.extract_page(p)["words"]
+                        if "mcid" in w
+                    }
+                text = " ".join(
+                    page_words[p][m] for m in e["mcids"] if m in page_words[p]
+                )
+            yield (doc_id, e["order"], e["level"], e["tag"], e["page_number"], text)
+
+    return _pdf_rows(
+        docs,
+        "doc_id string, ord int, level int, tag string,"
+        " page_number int, text string",
+        rows_of,
+    )
 
 
 _N_STRUCTURED = 12  # covers the structured envelope's %2/%3/%4 rotations
@@ -4319,72 +4238,6 @@ def _structured_corpus(spark):
         spark, _N_STRUCTURED, seed=_FLAGSHIP_SEED, skew_every=0,
         envelope="structured",
     ).select("doc_id", "pdf")
-
-
-def document_metadata(spark, sf_dir):
-    """Document metadata extraction (§14.3): trailer /Info dictionary
-    (title/author/subject/producer/creation date) plus the catalog's XMP
-    /Metadata packet, over the STRUCTURED corpus (both xref envelopes,
-    all three content filters, AES-128 on a quarter — metadata strings
-    are object-key-encrypted there, so parity proves string decryption
-    too). The D:YYYYMMDD creation date parses to a DATE column JVM-side;
-    xmp_title_match proves the XMP packet round-trips and agrees with
-    /Info. Metadata is the first corpus-selection signal a training
-    pipeline filters on (producer/date slices)."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse
-
-    schema = (
-        "doc_id string, title string, author string, subject string,"
-        " producer string, creation string, xmp_title string"
-    )
-    cols = [
-        "doc_id", "title", "author", "subject", "producer", "creation",
-        "xmp_title",
-    ]
-
-    def fn(batches):
-        import re
-
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                info = pf.doc_info()
-                xmp = pf.xmp_metadata() or ""
-                m = re.search(
-                    r'<rdf:li xml:lang="x-default">([^<]*)</rdf:li>', xmp
-                )
-                rows.append(
-                    {
-                        "doc_id": doc_id,
-                        "title": info["title"],
-                        "author": info["author"],
-                        "subject": info["subject"],
-                        "producer": info["producer"],
-                        "creation": info["creation"],
-                        "xmp_title": m.group(1) if m else None,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=cols)
-
-    raw = _structured_corpus(spark).mapInPandas(fn, schema=schema)
-    return raw.select(
-        "doc_id",
-        "title",
-        "author",
-        "subject",
-        "producer",
-        # parse D:YYYYMMDD → DateType JVM-side, emit ISO string (dates
-        # cross the DuckDB/Spark/Arrow boundary engine-dependently —
-        # string form is the established cross-engine convention here)
-        F.date_format(
-            F.to_date(F.substring("creation", 3, 8), "yyyyMMdd"),
-            "yyyy-MM-dd",
-        ).alias("created_date"),
-        (F.col("xmp_title") == F.col("title")).alias("xmp_title_match"),
-    )
 
 
 def _document_metadata_oracle_sql() -> str:
@@ -4410,46 +4263,49 @@ def _document_metadata_oracle_sql() -> str:
     )
 
 
-_REGISTRY["document_metadata"] = (document_metadata, None)
+@query("document_metadata", _document_metadata_oracle_sql)
+def document_metadata(spark, sf_dir):
+    """Document metadata extraction (§14.3): trailer /Info dictionary
+    (title/author/subject/producer/creation date) plus the catalog's XMP
+    /Metadata packet, over the STRUCTURED corpus (both xref envelopes,
+    all three content filters, AES-128 on a quarter — metadata strings
+    are object-key-encrypted there, so parity proves string decryption
+    too). The D:YYYYMMDD creation date parses to a DATE column JVM-side;
+    xmp_title_match proves the XMP packet round-trips and agrees with
+    /Info. Metadata is the first corpus-selection signal a training
+    pipeline filters on (producer/date slices)."""
+    import re
 
+    def rows_of(doc_id, pf):
+        info = pf.doc_info()
+        xmp = pf.xmp_metadata() or ""
+        m = re.search(r'<rdf:li xml:lang="x-default">([^<]*)</rdf:li>', xmp)
+        yield (
+            doc_id, info["title"], info["author"], info["subject"],
+            info["producer"], info["creation"], m.group(1) if m else None,
+        )
 
-def outline_entries(spark, sf_dir):
-    """Bookmark (/Outlines, §12.3.3) tree extraction: depth-first walk of
-    /First//Next sibling chains with nesting levels and /Dest page + y
-    targets — the navigation layer real producers attach, and the
-    section-structure signal a document-understanding pipeline mines for
-    chunking. One row per outline item, document order preserved as an
-    explicit ``ord`` column (order-insensitive gate; ord carries it)."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse
-
-    schema = (
-        "doc_id string, ord int, level int, title string,"
-        " page_number int, y double"
+    raw = _pdf_rows(
+        _structured_corpus(spark),
+        "doc_id string, title string, author string, subject string,"
+        " producer string, creation string, xmp_title string",
+        rows_of,
     )
-    cols = ["doc_id", "ord", "level", "title", "page_number", "y"]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for e in pf.outline_entries():
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "ord": e["order"],
-                            "level": e["level"],
-                            "title": e["title"],
-                            "page_number": e["page_number"],
-                            "y": e["y"],
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return _structured_corpus(spark).mapInPandas(fn, schema=schema)
+    return raw.select(
+        "doc_id",
+        "title",
+        "author",
+        "subject",
+        "producer",
+        # parse D:YYYYMMDD → DateType JVM-side, emit ISO string (dates
+        # cross the DuckDB/Spark/Arrow boundary engine-dependently —
+        # string form is the established cross-engine convention here)
+        F.date_format(
+            F.to_date(F.substring("creation", 3, 8), "yyyyMMdd"),
+            "yyyy-MM-dd",
+        ).alias("created_date"),
+        (F.col("xmp_title") == F.col("title")).alias("xmp_title_match"),
+    )
 
 
 def _outline_entries_oracle_sql() -> str:
@@ -4480,48 +4336,24 @@ def _outline_entries_oracle_sql() -> str:
     )
 
 
-_REGISTRY["outline_entries"] = (outline_entries, None)
+@query("outline_entries", _outline_entries_oracle_sql)
+def outline_entries(spark, sf_dir):
+    """Bookmark (/Outlines, §12.3.3) tree extraction: depth-first walk of
+    /First//Next sibling chains with nesting levels and /Dest page + y
+    targets — the navigation layer real producers attach, and the
+    section-structure signal a document-understanding pipeline mines for
+    chunking. One row per outline item, document order preserved as an
+    explicit ``ord`` column (order-insensitive gate; ord carries it)."""
+    def rows_of(doc_id, pf):
+        for e in pf.outline_entries():
+            yield (doc_id, e["order"], e["level"], e["title"], e["page_number"], e["y"])
 
-
-def form_appearance_texts(spark, sf_dir):
-    """Annotation appearance extraction (§12.5.5): each filled text/choice
-    widget's /AP /N stream — the Form XObject real viewers regenerate to
-    DISPLAY the value — run through the appearance algorithm (/BBox
-    through /Matrix, mapped onto /Rect) and interpreted; one row per
-    rendered widget with the drawn text. This is the on-page rendering
-    of form data (pdfium paints it under FPDF_ANNOT, which is what the
-    reference's OCR providers see); page text extraction intentionally
-    excludes it, matching pdfium's text API."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse
-
-    schema = (
-        "doc_id string, page_number int, field_name string, ap_text string"
+    return _pdf_rows(
+        _structured_corpus(spark),
+        "doc_id string, ord int, level int, title string,"
+        " page_number int, y double",
+        rows_of,
     )
-    cols = ["doc_id", "page_number", "field_name", "ap_text"]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for p in range(len(pf.page_refs)):
-                    for a in pf.annotation_appearances(p):
-                        if a["subtype"] != "Widget" or not a["text"]:
-                            continue
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "page_number": p + 1,
-                                "field_name": a["field_name"],
-                                "ap_text": a["text"],
-                            }
-                        )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return _structured_corpus(spark).mapInPandas(fn, schema=schema)
 
 
 def _form_appearance_texts_oracle_sql() -> str:
@@ -4545,46 +4377,27 @@ def _form_appearance_texts_oracle_sql() -> str:
     )
 
 
-_REGISTRY["form_appearance_texts"] = (form_appearance_texts, None)
+@query("form_appearance_texts", _form_appearance_texts_oracle_sql)
+def form_appearance_texts(spark, sf_dir):
+    """Annotation appearance extraction (§12.5.5): each filled text/choice
+    widget's /AP /N stream — the Form XObject real viewers regenerate to
+    DISPLAY the value — run through the appearance algorithm (/BBox
+    through /Matrix, mapped onto /Rect) and interpreted; one row per
+    rendered widget with the drawn text. This is the on-page rendering
+    of form data (pdfium paints it under FPDF_ANNOT, which is what the
+    reference's OCR providers see); page text extraction intentionally
+    excludes it, matching pdfium's text API."""
+    def rows_of(doc_id, pf):
+        for p in range(len(pf.page_refs)):
+            for a in pf.annotation_appearances(p):
+                if a["subtype"] == "Widget" and a["text"]:
+                    yield (doc_id, p + 1, a["field_name"], a["text"])
 
-
-def page_labels(spark, sf_dir):
-    """Page-label extraction (/PageLabels number tree, §12.4.2): the
-    'iv', 'C2-7' display numbering viewers show for front-matter /
-    chaptered documents, and the key a citation pipeline needs to map
-    physical page indices to the numbers humans (and bibliographies)
-    actually cite. The parser walks /Nums plus intermediate /Kids nodes
-    (the writer nests two /Limits kids whenever there are >=2 ranges, so
-    the number-TREE walk is exercised, not just flat /Nums), applies
-    each range's /S style (D, R/r roman, A/a letters) with /P prefix and
-    /St start. One row per (doc, page); label ground truth is computed
-    by an independent formatter in the corpus generator.
-
-    Reference: docprompt surfaces page numbering via its page-node
-    ordinals; the /PageLabels display-label layer is the PDF-native
-    generalization (pdfium CPDF_PageLabel, pikepdf PageLabels analogs).
-    """
-    import pandas as pd
-
-    from docprompt_spark import pdfparse
-
-    schema = "doc_id string, page_number int, label string"
-    cols = ["doc_id", "page_number", "label"]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for p, lbl in enumerate(pf.page_labels()):
-                    rows.append(
-                        {"doc_id": doc_id, "page_number": p + 1,
-                         "label": lbl}
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return _structured_corpus(spark).mapInPandas(fn, schema=schema)
+    return _pdf_rows(
+        _structured_corpus(spark),
+        "doc_id string, page_number int, field_name string, ap_text string",
+        rows_of,
+    )
 
 
 def _page_labels_oracle_sql() -> str:
@@ -4603,52 +4416,32 @@ def _page_labels_oracle_sql() -> str:
     )
 
 
-_REGISTRY["page_labels"] = (page_labels, None)
+@query("page_labels", _page_labels_oracle_sql)
+def page_labels(spark, sf_dir):
+    """Page-label extraction (/PageLabels number tree, §12.4.2): the
+    'iv', 'C2-7' display numbering viewers show for front-matter /
+    chaptered documents, and the key a citation pipeline needs to map
+    physical page indices to the numbers humans (and bibliographies)
+    actually cite. The parser walks /Nums plus intermediate /Kids nodes
+    (the writer nests two /Limits kids whenever there are >=2 ranges, so
+    the number-TREE walk is exercised, not just flat /Nums), applies
+    each range's /S style (D, R/r roman, A/a letters) with /P prefix and
+    /St start. One row per (doc, page); label ground truth is computed
+    by an independent formatter in the corpus generator.
 
+    Reference: docprompt surfaces page numbering via its page-node
+    ordinals; the /PageLabels display-label layer is the PDF-native
+    generalization (pdfium CPDF_PageLabel, pikepdf PageLabels analogs).
+    """
+    def rows_of(doc_id, pf):
+        for p, lbl in enumerate(pf.page_labels()):
+            yield (doc_id, p + 1, lbl)
 
-def form_field_values(spark, sf_dir):
-    """Filled-form extraction (AcroForm, §12.7): /Fields walked through
-    /Kids with '.'-joined partial names and /FT//V inheritance; terminal
-    widgets yield (fully-qualified name, type, value, page via /P,
-    /Rect). Covers text (/Tx string values), checkbox (/Btn name values
-    /Yes|/Off) and choice (/Ch with /Opt) fields — the intake-form data
-    layer document-processing pipelines exist to extract. Field values
-    are strings, so the AES-128 quarter of the corpus proves value
-    decryption."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse
-
-    schema = (
-        "doc_id string, field_name string, field_type string, value string,"
-        " page_number int, x0 double, y0 double, x1 double, y1 double"
+    return _pdf_rows(
+        _structured_corpus(spark),
+        "doc_id string, page_number int, label string",
+        rows_of,
     )
-    cols = [
-        "doc_id", "field_name", "field_type", "value", "page_number",
-        "x0", "y0", "x1", "y1",
-    ]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for f in pf.form_fields():
-                    r = f["rect"]
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "field_name": f["name"],
-                            "field_type": f["ftype"],
-                            "value": f["value"],
-                            "page_number": f["page_number"],
-                            "x0": r[0], "y0": r[1], "x1": r[2], "y1": r[3],
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return _structured_corpus(spark).mapInPandas(fn, schema=schema)
 
 
 def _form_field_values_oracle_sql() -> str:
@@ -4676,50 +4469,30 @@ def _form_field_values_oracle_sql() -> str:
     )
 
 
-_REGISTRY["form_field_values"] = (form_field_values, None)
+@query("form_field_values", _form_field_values_oracle_sql)
+def form_field_values(spark, sf_dir):
+    """Filled-form extraction (AcroForm, §12.7): /Fields walked through
+    /Kids with '.'-joined partial names and /FT//V inheritance; terminal
+    widgets yield (fully-qualified name, type, value, page via /P,
+    /Rect). Covers text (/Tx string values), checkbox (/Btn name values
+    /Yes|/Off) and choice (/Ch with /Opt) fields — the intake-form data
+    layer document-processing pipelines exist to extract. Field values
+    are strings, so the AES-128 quarter of the corpus proves value
+    decryption."""
+    def rows_of(doc_id, pf):
+        for f in pf.form_fields():
+            r = f["rect"]
+            yield (
+                doc_id, f["name"], f["ftype"], f["value"], f["page_number"],
+                r[0], r[1], r[2], r[3],
+            )
 
-
-def embedded_attachments(spark, sf_dir):
-    """Embedded-file attachments (§7.11.4) behind the /Names
-    /EmbeddedFiles name tree (incl. intermediate /Kids nodes): name,
-    declared MIME /Subtype, /Params /Size, the declared /CheckSum and
-    the md5 of the DECODED payload — their equality (both columns hash
-    into the gate) proves the Flate decode and, on the AES quarter, the
-    stream decryption byte-for-byte. Attachments are sidecar payloads
-    (source data, OCR JSON) real document stores carry inside the PDF."""
-    import pandas as pd
-
-    from docprompt_spark import pdfparse
-
-    schema = (
-        "doc_id string, att_name string, mime string, size_bytes int,"
-        " checksum string, payload_md5 string"
+    return _pdf_rows(
+        _structured_corpus(spark),
+        "doc_id string, field_name string, field_type string, value string,"
+        " page_number int, x0 double, y0 double, x1 double, y1 double",
+        rows_of,
     )
-    cols = [
-        "doc_id", "att_name", "mime", "size_bytes", "checksum",
-        "payload_md5",
-    ]
-
-    def fn(batches):
-        for b in batches:
-            rows = []
-            for doc_id, pdf in zip(b["doc_id"], b["pdf"]):
-                pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                for a in pf.attachments():
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "att_name": a["name"],
-                            "mime": a["mime"],
-                            "size_bytes": a["size"],
-                            "checksum": a["checksum"],
-                            "payload_md5": a["payload_md5"],
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return _structured_corpus(spark).mapInPandas(fn, schema=schema)
 
 
 def _embedded_attachments_oracle_sql() -> str:
@@ -4746,74 +4519,34 @@ def _embedded_attachments_oracle_sql() -> str:
     )
 
 
-_REGISTRY["embedded_attachments"] = (embedded_attachments, None)
+@query("embedded_attachments", _embedded_attachments_oracle_sql)
+def embedded_attachments(spark, sf_dir):
+    """Embedded-file attachments (§7.11.4) behind the /Names
+    /EmbeddedFiles name tree (incl. intermediate /Kids nodes): name,
+    declared MIME /Subtype, /Params /Size, the declared /CheckSum and
+    the md5 of the DECODED payload — their equality (both columns hash
+    into the gate) proves the Flate decode and, on the AES quarter, the
+    stream decryption byte-for-byte. Attachments are sidecar payloads
+    (source data, OCR JSON) real document stores carry inside the PDF."""
+    def rows_of(doc_id, pf):
+        for a in pf.attachments():
+            yield (
+                doc_id, a["name"], a["mime"], a["size"], a["checksum"],
+                a["payload_md5"],
+            )
 
-
-def extraction_ocg_spans(spark, sf_dir):
-    """Same pipeline over LAYERED documents (optional content, §8.11):
-    every doc declares two OCGs — an always-on 'Annotations' layer and a
-    'Watermark' layer that the default viewer configuration HIDES on half
-    the corpus (/OCProperties /D /OFF). Content rides in /OC /OCn BDC…EMC
-    marked-content sequences resolved through the page's /Properties
-    resource; the interpreter keeps pen/graphics state moving through
-    hidden sequences but suppresses their words/images/vectors — what a
-    conforming viewer shows with default layer state, and what pdfium
-    rasterizes for the reference (FPDF_SetRenderOCGFlags default). Golden
-    spans contain the watermark text ONLY where the layer is on: a parser
-    that ignores /OCProperties extracts phantom 'DRAFT watermark' text on
-    half the docs and hash-diverges. Both xref envelopes, all three
-    content filters."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 12, seed=_FLAGSHIP_SEED, skew_every=0, envelope="ocg"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
+    return _pdf_rows(
+        _structured_corpus(spark),
+        "doc_id string, att_name string, mime string, size_bytes int,"
+        " checksum string, payload_md5 string",
+        rows_of,
     )
 
 
-_REGISTRY["extraction_ocg_spans"] = (extraction_ocg_spans, None)
-
-
-def extraction_scanned_spans(spark, sf_dir):
-    """Same pipeline over the SCANNED-document profile: every page is a
-    full-page scan image (CCITT G4 bilevel on even docs, grayscale DCT on
-    odd) underneath an INVISIBLE text layer (text rendering mode 3,
-    §9.3.6) — exactly what OCR post-processors (Acrobat, tesseract's PDF
-    output, scanner firmware) emit, and the single most common real-world
-    scanned-PDF shape. Extraction must return the invisible text plus the
-    scan as a media span (pdfium's text extraction includes Tr-3 text, so
-    the reference sees it); rasterization must NOT paint it (the parser
-    carries per-word Tr-3 flags and the renderer skips ink for them —
-    proven md5-exact in tests/test_scanned.py)."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(
-        spark, 6, seed=_FLAGSHIP_SEED, skew_every=0, envelope="scanned"
-    )
-    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        "media_ref",
-        F.col("offset").cast("int").alias("offset"),
-    )
-
-
-_REGISTRY["extraction_scanned_spans"] = (extraction_scanned_spans, None)
-
-
+@query(
+    "extraction_recompressed_spans",
+    functools.partial(_golden_spans_sql, 6, _FLAGSHIP_SEED, with_media_ref=False),
+)
 def extraction_recompressed_spans(spark, sf_dir):
     """D6 (the reference's ghostscript recompress, `_exec/ghostscript.py:
     15-88` + trigger `tasks/ocr/gcp.py:504-506`) implemented from scratch:
@@ -4841,20 +4574,38 @@ def extraction_recompressed_spans(spark, sf_dir):
     rc_docs = docs.select("doc_id", "pdf", "n_pages").mapInPandas(
         _rc_batches, schema="doc_id string, pdf binary, n_pages int"
     )
-    result = pipeline.run_extraction(spark, rc_docs)
-    flat = pipeline.spans_exploded(result)
-    return flat.select(
-        "doc_id",
-        F.col("seq").cast("int").alias("seq"),
-        "kind",
-        "text",
-        F.col("offset").cast("int").alias("offset"),
+    return _spans_df(spark, rc_docs, with_media_ref=False)
+
+
+def _page_stats_oracle_sql() -> str:
+    """extraction_page_stats golden: per-doc page/word/line/block/media
+    counts from the generator's ground truth (12 docs, seed 7, skew 5)."""
+    from collections import defaultdict
+
+    from docprompt_spark.corpus import golden_page_layouts
+
+    agg = defaultdict(lambda: [0, 0, 0, 0, 0])
+    for doc_id, _pn, layout, imgs in golden_page_layouts(12, seed=7, skew_every=5):
+        a = agg[doc_id]
+        a[0] += 1
+        a[1] += sum(len(ln["words"]) for ln in layout["lines"])
+        a[2] += len(layout["lines"])
+        a[3] += len(layout["blocks"])
+        a[4] += len(imgs)
+    rows = [
+        f"({_sql_quote(d)},{a[0]},{a[1]},{a[2]},{a[3]},{a[4]})"
+        for d, a in sorted(agg.items())
+    ]
+    return (
+        "SELECT doc_id, CAST(n_pages AS BIGINT) AS n_pages,"
+        " CAST(n_words AS BIGINT) AS n_words, CAST(n_lines AS BIGINT) AS n_lines,"
+        " CAST(n_blocks AS BIGINT) AS n_blocks, CAST(n_media AS BIGINT) AS n_media"
+        " FROM (VALUES " + ",".join(rows) +
+        ") AS t(doc_id, n_pages, n_words, n_lines, n_blocks, n_media)"
     )
 
 
-_REGISTRY["extraction_recompressed_spans"] = (extraction_recompressed_spans, None)
-
-
+@query("extraction_page_stats", _page_stats_oracle_sql)
 def extraction_page_stats(spark, sf_dir):
     """Per-document page/word/line/block/media counts from the parse stage
     (rows-only check: stateful pipeline, not SQL-expressible)."""
@@ -4875,9 +4626,21 @@ def extraction_page_stats(spark, sf_dir):
     )
 
 
-_REGISTRY["extraction_page_stats"] = (extraction_page_stats, None)
+def _provenance_search_oracle_sql() -> str:
+    """provenance_search golden: derived in SQL from the flagship golden
+    spans (word spans containing each query term)."""
+    spans = _golden_spans_sql(_FLAGSHIP_DOCS, _FLAGSHIP_SEED)
+    return (
+        "WITH spans AS (" + spans + "),\n"
+        "words AS (SELECT doc_id, text, \"offset\" FROM spans WHERE kind = 'word'),\n"
+        "q AS (SELECT q FROM (VALUES ('an'), ('the'), ('qu')) AS t(q))\n"
+        "SELECT doc_id, q, count(*) AS n_hits,"
+        " CAST(min(\"offset\") AS INT) AS first_offset\n"
+        "FROM words JOIN q ON contains(words.text, q.q) GROUP BY doc_id, q"
+    )
 
 
+@query("provenance_search", _provenance_search_oracle_sql)
 def provenance_search(spark, sf_dir):
     """Provenance search (D20 tantivy + J2 bbox-join analog): broadcast a
     query table against extracted word spans; per (query, doc) hit counts
@@ -4895,9 +4658,6 @@ def provenance_search(spark, sf_dir):
     return hits.groupBy("doc_id", "q").agg(
         F.count("*").alias("n_hits"), F.min("offset").alias("first_offset")
     )
-
-
-_REGISTRY["provenance_search"] = (provenance_search, None)
 
 
 def _norm_tok(col):
@@ -4930,6 +4690,37 @@ def _phrase_queries(n_docs=None, seed=None):
     return out
 
 
+def _phrase_search_oracle_sql() -> str:
+    """Same inverted-index phrase alignment in DuckDB over the golden
+    spans VALUES table."""
+    spans = _golden_spans_sql(_FLAGSHIP_DOCS, _FLAGSHIP_SEED)
+    prows = []
+    for p in _phrase_queries():
+        toks = p.split(" ")
+        for pos, t in enumerate(toks):
+            prows.append(f"({_sql_quote(p)},{pos},{len(toks)},{_sql_quote(t)})")
+    return (
+        "WITH spans AS (" + spans + "),\n"
+        "words AS (SELECT doc_id, \"offset\",\n"
+        "  row_number() OVER (PARTITION BY doc_id ORDER BY \"offset\") - 1 AS widx,\n"
+        "  regexp_replace(lower(text), '[^\\p{L}\\p{N}]+', '', 'g') AS tok\n"
+        "  FROM spans WHERE kind = 'word'),\n"
+        "q AS (SELECT q, pos, klen,\n"
+        "  regexp_replace(lower(ptok), '[^\\p{L}\\p{N}]+', '', 'g') AS ptok\n"
+        "  FROM (VALUES " + ",".join(prows) + ") AS t(q, pos, klen, ptok)),\n"
+        "cand AS (SELECT w.doc_id, q.q, q.klen, w.widx - q.pos AS start_idx,\n"
+        "  q.pos, w.\"offset\" FROM words w JOIN q ON w.tok = q.ptok),\n"
+        "aligned AS (SELECT doc_id, q, start_idx,\n"
+        "  count(DISTINCT pos) AS npos, any_value(klen) AS klen,\n"
+        "  min(\"offset\") AS start_offset\n"
+        "  FROM cand GROUP BY doc_id, q, start_idx)\n"
+        "SELECT doc_id, q, count(*) AS n_hits,\n"
+        "  CAST(min(start_offset) AS INT) AS first_offset\n"
+        "FROM aligned WHERE npos = klen GROUP BY doc_id, q"
+    )
+
+
+@query("provenance_phrase_search", _phrase_search_oracle_sql)
 def provenance_phrase_search(spark, sf_dir):
     """D20 PHRASE search (reference provenance/search.py:96-106 builds
     tantivy ``content:"..."`` phrase queries; tests/test_search.py:44-55
@@ -4980,39 +4771,44 @@ def provenance_phrase_search(spark, sf_dir):
     )
 
 
-def _phrase_search_oracle_sql() -> str:
-    """Same inverted-index phrase alignment in DuckDB over the golden
-    spans VALUES table."""
-    spans = _golden_spans_sql(_FLAGSHIP_DOCS, _FLAGSHIP_SEED)
-    prows = []
-    for p in _phrase_queries():
-        toks = p.split(" ")
-        for pos, t in enumerate(toks):
-            prows.append(f"({_sql_quote(p)},{pos},{len(toks)},{_sql_quote(t)})")
+def _provenance_refined_oracle_sql() -> str:
+    """Driver-side golden for the refined search: the same deterministic
+    parse+refine kernels run once on the driver; the Spark job must
+    reproduce it exactly from the executors (validates the distributed
+    plumbing — partitioning, Arrow marshaling, py-files shipping — around
+    the kernel, the same pattern as the media_png_export oracle)."""
+    from docprompt_spark import kernels, pdfparse
+    from docprompt_spark.corpus import gen_corpus
+
+    rows = []
+    for d in gen_corpus(6, seed=17, skew_every=0):
+        words = [s["text"] for s in d["spans"] if s["kind"] == "word"][:3]
+        if len(words) < 2:
+            continue
+        q = " ".join(words)
+        for p in pdfparse.extract_pages(pdfparse.unwrap_pdf_bytes(d["pdf"])):
+            hit = kernels.refine_query_to_word_level(p["words"], q)
+            if hit is None:
+                continue
+            merged, matched = hit
+            rows.append(
+                f"({_sql_quote(d['doc_id'])},{p['page_number']},{_sql_quote(q)},"
+                f"{_sql_quote(merged['text'])},{merged['x0']!r},{merged['top']!r},"
+                f"{merged['x1']!r},{merged['bottom']!r},{len(matched)})"
+            )
+            break
     return (
-        "WITH spans AS (" + spans + "),\n"
-        "words AS (SELECT doc_id, \"offset\",\n"
-        "  row_number() OVER (PARTITION BY doc_id ORDER BY \"offset\") - 1 AS widx,\n"
-        "  regexp_replace(lower(text), '[^\\p{L}\\p{N}]+', '', 'g') AS tok\n"
-        "  FROM spans WHERE kind = 'word'),\n"
-        "q AS (SELECT q, pos, klen,\n"
-        "  regexp_replace(lower(ptok), '[^\\p{L}\\p{N}]+', '', 'g') AS ptok\n"
-        "  FROM (VALUES " + ",".join(prows) + ") AS t(q, pos, klen, ptok)),\n"
-        "cand AS (SELECT w.doc_id, q.q, q.klen, w.widx - q.pos AS start_idx,\n"
-        "  q.pos, w.\"offset\" FROM words w JOIN q ON w.tok = q.ptok),\n"
-        "aligned AS (SELECT doc_id, q, start_idx,\n"
-        "  count(DISTINCT pos) AS npos, any_value(klen) AS klen,\n"
-        "  min(\"offset\") AS start_offset\n"
-        "  FROM cand GROUP BY doc_id, q, start_idx)\n"
-        "SELECT doc_id, q, count(*) AS n_hits,\n"
-        "  CAST(min(start_offset) AS INT) AS first_offset\n"
-        "FROM aligned WHERE npos = klen GROUP BY doc_id, q"
+        "SELECT doc_id, CAST(page_number AS INT) AS page_number, query,"
+        " matched_text, CAST(x0 AS DOUBLE) AS x0, CAST(top AS DOUBLE) AS top,"
+        " CAST(x1 AS DOUBLE) AS x1, CAST(bottom AS DOUBLE) AS bottom,"
+        " CAST(n_words AS INT) AS n_words FROM (VALUES "
+        + ",".join(rows)
+        + ") AS t(doc_id, page_number, query, matched_text, x0, top, x1,"
+        " bottom, n_words)"
     )
 
 
-_REGISTRY["provenance_phrase_search"] = (provenance_phrase_search, None)
-
-
+@query("provenance_refined_search", _provenance_refined_oracle_sql)
 def provenance_refined_search(spark, sf_dir):
     """D19 refine_block_to_word_level: per-doc multi-word queries fuzzy-
     matched to parsed word boxes, DAG shortest-path refinement → merged
@@ -5078,46 +4874,34 @@ def provenance_refined_search(spark, sf_dir):
     return docs.repartition(8, "doc_id").mapInPandas(fn, schema=schema)
 
 
-def _provenance_refined_oracle_sql() -> str:
-    """Driver-side golden for the refined search: the same deterministic
-    parse+refine kernels run once on the driver; the Spark job must
-    reproduce it exactly from the executors (validates the distributed
-    plumbing — partitioning, Arrow marshaling, py-files shipping — around
-    the kernel, the same pattern as the media_png_export oracle)."""
-    from docprompt_spark import kernels, pdfparse
-    from docprompt_spark.corpus import gen_corpus
+def _textblock_lines_oracle_sql() -> str:
+    from docprompt_spark.corpus import golden_page_layouts
 
     rows = []
-    for d in gen_corpus(6, seed=17, skew_every=0):
-        words = [s["text"] for s in d["spans"] if s["kind"] == "word"][:3]
-        if len(words) < 2:
-            continue
-        q = " ".join(words)
-        for p in pdfparse.extract_pages(pdfparse.unwrap_pdf_bytes(d["pdf"])):
-            hit = kernels.refine_query_to_word_level(p["words"], q)
-            if hit is None:
-                continue
-            merged, matched = hit
+    for doc_id, page_number, layout, _imgs in golden_page_layouts(
+        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
+    ):
+        for li, ln in enumerate(layout["lines"]):
+            bb = ln["bbox"]
             rows.append(
-                f"({_sql_quote(d['doc_id'])},{p['page_number']},{_sql_quote(q)},"
-                f"{_sql_quote(merged['text'])},{merged['x0']!r},{merged['top']!r},"
-                f"{merged['x1']!r},{merged['bottom']!r},{len(matched)})"
+                f"({_sql_quote(doc_id)},{page_number},{li},{_sql_quote(ln['text'])},"
+                f"{ln['start']},{ln['start'] + len(ln['text'])},{len(ln['words'])},"
+                f"{round(bb[0], 5)},{round(bb[1], 5)},{round(bb[2], 5)},{round(bb[3], 5)})"
             )
-            break
+    values = ",\n".join(rows)
     return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number, query,"
-        " matched_text, CAST(x0 AS DOUBLE) AS x0, CAST(top AS DOUBLE) AS top,"
-        " CAST(x1 AS DOUBLE) AS x1, CAST(bottom AS DOUBLE) AS bottom,"
-        " CAST(n_words AS INT) AS n_words FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(doc_id, page_number, query, matched_text, x0, top, x1,"
-        " bottom, n_words)"
+        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
+        " CAST(line_idx AS INT) AS line_idx, text,"
+        " CAST(start_idx AS INT) AS start_idx, CAST(end_idx AS INT) AS end_idx,"
+        " CAST(n_words AS INT) AS n_words,"
+        " CAST(x0 AS DOUBLE) AS x0, CAST(top AS DOUBLE) AS top,"
+        " CAST(x1 AS DOUBLE) AS x1, CAST(bottom AS DOUBLE) AS bottom"
+        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number, line_idx,"
+        ' text, start_idx, end_idx, n_words, x0, top, x1, bottom)'
     )
 
 
-_REGISTRY["provenance_refined_search"] = (provenance_refined_search, None)
-
-
+@query("textblock_line_geometry", _textblock_lines_oracle_sql)
 def textblock_line_geometry(spark, sf_dir):
     """TextBlock hierarchy as a table (SURVEY §1.3 / reference
     OcrPageResult.line_level_blocks): parse the flagship corpus from bytes,
@@ -5150,51 +4934,6 @@ def textblock_line_geometry(spark, sf_dir):
     )
 
 
-def _textblock_lines_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
-
-    rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
-        for li, ln in enumerate(layout["lines"]):
-            bb = ln["bbox"]
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},{li},{_sql_quote(ln['text'])},"
-                f"{ln['start']},{ln['start'] + len(ln['text'])},{len(ln['words'])},"
-                f"{round(bb[0], 5)},{round(bb[1], 5)},{round(bb[2], 5)},{round(bb[3], 5)})"
-            )
-    values = ",\n".join(rows)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " CAST(line_idx AS INT) AS line_idx, text,"
-        " CAST(start_idx AS INT) AS start_idx, CAST(end_idx AS INT) AS end_idx,"
-        " CAST(n_words AS INT) AS n_words,"
-        " CAST(x0 AS DOUBLE) AS x0, CAST(top AS DOUBLE) AS top,"
-        " CAST(x1 AS DOUBLE) AS x1, CAST(bottom AS DOUBLE) AS bottom"
-        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number, line_idx,"
-        ' text, start_idx, end_idx, n_words, x0, top, x1, bottom)'
-    )
-
-
-def textblock_block_rollup(spark, sf_dir):
-    """Block-level blocks (derived segmentation) rolled up per page: counts,
-    line totals, combined bbox union — over the same hierarchy table."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(
-        pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
-    )
-    exploded = blocks.select("doc_id", "page_number", F.explode("block_blocks").alias("b"))
-    return exploded.groupBy("doc_id", F.col("page_number").cast("int").alias("page_number")).agg(
-        F.count("*").cast("int").alias("n_blocks"),
-        F.sum("b.n_lines").cast("int").alias("n_lines"),
-        F.round(F.min("b.top"), 5).alias("min_top"),
-        F.round(F.max("b.bottom"), 5).alias("max_bottom"),
-    )
-
-
 def _textblock_blocks_oracle_sql() -> str:
     from docprompt_spark.corpus import golden_page_layouts
 
@@ -5223,6 +4962,52 @@ def _textblock_blocks_oracle_sql() -> str:
     )
 
 
+@query("textblock_block_rollup", _textblock_blocks_oracle_sql)
+def textblock_block_rollup(spark, sf_dir):
+    """Block-level blocks (derived segmentation) rolled up per page: counts,
+    line totals, combined bbox union — over the same hierarchy table."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
+    blocks = pipeline.page_blocks(
+        pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
+    )
+    exploded = blocks.select("doc_id", "page_number", F.explode("block_blocks").alias("b"))
+    return exploded.groupBy("doc_id", F.col("page_number").cast("int").alias("page_number")).agg(
+        F.count("*").cast("int").alias("n_blocks"),
+        F.sum("b.n_lines").cast("int").alias("n_lines"),
+        F.round(F.min("b.top"), 5).alias("min_top"),
+        F.round(F.max("b.bottom"), 5).alias("max_bottom"),
+    )
+
+
+def _textblock_polys_oracle_sql() -> str:
+    from docprompt_spark.corpus import golden_page_layouts
+
+    rows = []
+    for doc_id, page_number, layout, _imgs in golden_page_layouts(
+        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
+    ):
+        for bi, b in enumerate(layout["blocks"]):
+            x0, top, x1, bottom = b["bbox"]
+            quad = [x0, top, x1, top, x1, bottom, x0, bottom]
+            rows.append(
+                f"({_sql_quote(doc_id)},{page_number},{bi},"
+                + ",".join(str(round(v, 5)) for v in quad)
+                + ")"
+            )
+    values = ",\n".join(rows)
+    cols = ["tl_x", "tl_y", "tr_x", "tr_y", "br_x", "br_y", "bl_x", "bl_y"]
+    casts = ", ".join(f"CAST({c} AS DOUBLE) AS {c}" for c in cols)
+    return (
+        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
+        " CAST(block_idx AS INT) AS block_idx, " + casts
+        + " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number,"
+        " block_idx, " + ", ".join(cols) + ")"
+    )
+
+
+@query("textblock_bounding_polys", _textblock_polys_oracle_sql)
 def textblock_bounding_polys(spark, sf_dir):
     """BoundingPoly carry-through (reference schema/layout.py:202-213):
     every block-level block's 4-vertex normalized quad — vertex order
@@ -5254,6 +5039,38 @@ def textblock_bounding_polys(spark, sf_dir):
     return exploded.select(*sel)
 
 
+def _block_type_dispatch_oracle_sql() -> str:
+    from docprompt_spark.corpus import golden_page_layouts
+
+    rows = []
+    for doc_id, page_number, layout, _imgs in golden_page_layouts(
+        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
+    ):
+        words = [w for ln in layout["lines"] for w in ln["words"]]
+        lines = layout["lines"]
+        splice_len = len(" ".join(w["text"] for w in sorted(words, key=lambda x: x["start"])))
+        if words:
+            rows.append(
+                f"({_sql_quote(doc_id)},{page_number},'word',{len(words)},"
+                f"{sum(len(w['text']) for w in words)},{splice_len})"
+            )
+        if lines:
+            rows.append(
+                f"({_sql_quote(doc_id)},{page_number},'line',{len(lines)},"
+                f"{sum(len(ln['text']) for ln in lines)},{splice_len})"
+            )
+    values = ",\n".join(rows)
+    return (
+        "SELECT doc_id, CAST(page_number AS INT) AS page_number, block_type,"
+        " CAST(n_blocks AS INT) AS n_blocks,"
+        " CAST(total_chars AS INT) AS total_chars,"
+        " CAST(word_splice_len AS INT) AS word_splice_len"
+        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number,"
+        " block_type, n_blocks, total_chars, word_splice_len)"
+    )
+
+
+@query("block_type_dispatch", _block_type_dispatch_oracle_sql)
 def block_type_dispatch(spark, sf_dir):
     """P7 block-type dispatch (reference tasks/ocr/amazon.py:91-105: route
     provider blocks by ``BlockType in (WORD, LINE)`` into typed lists and
@@ -5314,69 +5131,6 @@ def block_type_dispatch(spark, sf_dir):
     )
 
 
-def _block_type_dispatch_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
-
-    rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
-        words = [w for ln in layout["lines"] for w in ln["words"]]
-        lines = layout["lines"]
-        splice_len = len(" ".join(w["text"] for w in sorted(words, key=lambda x: x["start"])))
-        if words:
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},'word',{len(words)},"
-                f"{sum(len(w['text']) for w in words)},{splice_len})"
-            )
-        if lines:
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},'line',{len(lines)},"
-                f"{sum(len(ln['text']) for ln in lines)},{splice_len})"
-            )
-    values = ",\n".join(rows)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number, block_type,"
-        " CAST(n_blocks AS INT) AS n_blocks,"
-        " CAST(total_chars AS INT) AS total_chars,"
-        " CAST(word_splice_len AS INT) AS word_splice_len"
-        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number,"
-        " block_type, n_blocks, total_chars, word_splice_len)"
-    )
-
-
-def _textblock_polys_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
-
-    rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
-        for bi, b in enumerate(layout["blocks"]):
-            x0, top, x1, bottom = b["bbox"]
-            quad = [x0, top, x1, top, x1, bottom, x0, bottom]
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},{bi},"
-                + ",".join(str(round(v, 5)) for v in quad)
-                + ")"
-            )
-    values = ",\n".join(rows)
-    cols = ["tl_x", "tl_y", "tr_x", "tr_y", "br_x", "br_y", "bl_x", "bl_y"]
-    casts = ", ".join(f"CAST({c} AS DOUBLE) AS {c}" for c in cols)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " CAST(block_idx AS INT) AS block_idx, " + casts
-        + " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number,"
-        " block_idx, " + ", ".join(cols) + ")"
-    )
-
-
-_REGISTRY["textblock_line_geometry"] = (textblock_line_geometry, None)
-_REGISTRY["textblock_block_rollup"] = (textblock_block_rollup, None)
-_REGISTRY["textblock_bounding_polys"] = (textblock_bounding_polys, None)
-_REGISTRY["block_type_dispatch"] = (block_type_dispatch, None)
-
-
 _FIXTURE_OCR = "/root/reference/tests/fixtures/1_ocr.json"
 
 
@@ -5385,7 +5139,8 @@ def _fixture_blocks():
     (idx, top, bottom[, confidence])."""
     import json
 
-    d = json.load(open(_FIXTURE_OCR))["1"]
+    with open(_FIXTURE_OCR) as f:
+        d = json.load(f)["1"]
     words = [
         (i, b["bounding_box"]["top"], b["bounding_box"]["bottom"])
         for i, b in enumerate(d["word_level_blocks"])
@@ -5400,31 +5155,6 @@ def _fixture_blocks():
         for i, b in enumerate(d["line_level_blocks"])
     ]
     return words, lines
-
-
-def line_block_word_assignment(spark, sf_dir):
-    """J1 word_line_clusters_from_line_blocks (reference utils/layout.py:
-    67-110) + P3 confidence filter (layout.py:81-85), relationally, over the
-    reference's REAL fixture blocks: broadcast the (confidence >= 0.3) line
-    blocks against all words, compute vertical overlap, per-word argmax
-    (strict > 0, lowest line index wins ties — the reference's iteration
-    order), then per-line word counts. The per-word window partitions by
-    w_idx — fully parallel, no global sort; the line side is broadcast."""
-    words, lines = _fixture_blocks()
-    wdf = spark.createDataFrame(words, ["w_idx", "w_top", "w_bottom"])
-    ldf = F.broadcast(
-        spark.createDataFrame(lines, ["l_idx", "l_top", "l_bottom", "conf"]).filter(
-            F.col("conf") >= 0.3
-        )
-    )
-    ov = F.least("w_bottom", "l_bottom") - F.greatest("w_top", "l_top")
-    pairs = wdf.join(ldf, ov > 0).select("w_idx", "l_idx", ov.alias("ov"))
-    w = Window.partitionBy("w_idx").orderBy(F.desc("ov"), F.asc("l_idx"))
-    best = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return best.groupBy("l_idx").agg(
-        F.count("*").cast("long").alias("n_words"),
-        F.min("w_idx").cast("int").alias("first_word"),
-    )
 
 
 def _line_block_assignment_oracle_sql() -> str:
@@ -5454,193 +5184,57 @@ def _line_block_assignment_oracle_sql() -> str:
     """
 
 
-_REGISTRY["line_block_word_assignment"] = (line_block_word_assignment, None)
+@query("line_block_word_assignment", _line_block_assignment_oracle_sql)
+def line_block_word_assignment(spark, sf_dir):
+    """J1 word_line_clusters_from_line_blocks (reference utils/layout.py:
+    67-110) + P3 confidence filter (layout.py:81-85), relationally, over the
+    reference's REAL fixture blocks: broadcast the (confidence >= 0.3) line
+    blocks against all words, compute vertical overlap, per-word argmax
+    (strict > 0, lowest line index wins ties — the reference's iteration
+    order), then per-line word counts. The per-word window partitions by
+    w_idx — fully parallel, no global sort; the line side is broadcast."""
+    words, lines = _fixture_blocks()
+    wdf = spark.createDataFrame(words, ["w_idx", "w_top", "w_bottom"])
+    ldf = F.broadcast(
+        spark.createDataFrame(lines, ["l_idx", "l_top", "l_bottom", "conf"]).filter(
+            F.col("conf") >= 0.3
+        )
+    )
+    ov = F.least("w_bottom", "l_bottom") - F.greatest("w_top", "l_top")
+    pairs = wdf.join(ldf, ov > 0).select("w_idx", "l_idx", ov.alias("ov"))
+    w = Window.partitionBy("w_idx").orderBy(F.desc("ov"), F.asc("l_idx"))
+    best = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
+    return best.groupBy("l_idx").agg(
+        F.count("*").cast("long").alias("n_words"),
+        F.min("w_idx").cast("int").alias("first_word"),
+    )
 
 
 def queries() -> Dict[str, QueryFn]:
     return {name: _REGISTRY[name][0] for name in _ordered_names()}
 
 
-def _page_stats_oracle_sql() -> str:
-    """extraction_page_stats golden: per-doc page/word/line/block/media
-    counts from the generator's ground truth (12 docs, seed 7, skew 5)."""
-    from collections import defaultdict
-
-    from docprompt_spark.corpus import golden_page_layouts
-
-    agg = defaultdict(lambda: [0, 0, 0, 0, 0])
-    for doc_id, _pn, layout, imgs in golden_page_layouts(12, seed=7, skew_every=5):
-        a = agg[doc_id]
-        a[0] += 1
-        a[1] += sum(len(ln["words"]) for ln in layout["lines"])
-        a[2] += len(layout["lines"])
-        a[3] += len(layout["blocks"])
-        a[4] += len(imgs)
-    rows = [
-        f"({_sql_quote(d)},{a[0]},{a[1]},{a[2]},{a[3]},{a[4]})"
-        for d, a in sorted(agg.items())
-    ]
-    return (
-        "SELECT doc_id, CAST(n_pages AS BIGINT) AS n_pages,"
-        " CAST(n_words AS BIGINT) AS n_words, CAST(n_lines AS BIGINT) AS n_lines,"
-        " CAST(n_blocks AS BIGINT) AS n_blocks, CAST(n_media AS BIGINT) AS n_media"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, n_pages, n_words, n_lines, n_blocks, n_media)"
-    )
-
-
-def _media_codec_histogram_oracle_sql() -> str:
-    """Per-codec counts/bytes from the generator ground truth (36 docs,
-    seed 11), codec tags via corpus.writer_entry_codec == the pipeline's
-    classifier."""
-    from collections import defaultdict
-
-    from docprompt_spark.corpus import golden_page_layouts
-
-    agg = defaultdict(lambda: [0, 0])
-    for _d, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
-        for im in imgs:
-            agg[im["codec"]][0] += 1
-            agg[im["codec"]][1] += im["n_bytes"]
-    rows = [
-        f"({_sql_quote(c)},{n},{b})" for c, (n, b) in sorted(agg.items())
-    ]
-    return (
-        "SELECT codec, CAST(n_media AS BIGINT) AS n_media,"
-        " CAST(total_bytes AS BIGINT) AS total_bytes"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(codec, n_media, total_bytes)"
-    )
-
-
-def _media_inventory_oracle_sql() -> str:
-    """media_inventory golden from ground-truth images (36 docs, seed 11)."""
-    from collections import defaultdict
-
-    from docprompt_spark.corpus import golden_page_layouts
-
-    per_doc = defaultdict(list)
-    for doc_id, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
-        per_doc[doc_id].extend(imgs)
-    rows = []
-    for d, imgs in sorted(per_doc.items()):
-        if not imgs:
-            continue
-        refs = {im["media_ref"] for im in imgs}
-        total = sum(im["n_bytes"] for im in imgs)
-        rows.append(f"({_sql_quote(d)},{len(imgs)},{total},{len(refs)})")
-    return (
-        "SELECT doc_id, CAST(n_media AS BIGINT) AS n_media,"
-        " CAST(total_bytes AS BIGINT) AS total_bytes,"
-        " CAST(n_distinct AS BIGINT) AS n_distinct"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, n_media, total_bytes, n_distinct)"
-    )
-
-
-def _provenance_search_oracle_sql() -> str:
-    """provenance_search golden: derived in SQL from the flagship golden
-    spans (word spans containing each query term)."""
-    spans = _golden_spans_sql(_FLAGSHIP_DOCS, _FLAGSHIP_SEED)
-    return (
-        "WITH spans AS (" + spans + "),\n"
-        "words AS (SELECT doc_id, text, \"offset\" FROM spans WHERE kind = 'word'),\n"
-        "q AS (SELECT q FROM (VALUES ('an'), ('the'), ('qu')) AS t(q))\n"
-        "SELECT doc_id, q, count(*) AS n_hits,"
-        " CAST(min(\"offset\") AS INT) AS first_offset\n"
-        "FROM words JOIN q ON contains(words.text, q.q) GROUP BY doc_id, q"
-    )
-
-
-def _mime_sniff_oracle_sql() -> str:
-    """mime_sniff_stats golden: the corpus wraps pdf bytes by idx%4
-    (corpus._wrap) — 32 docs -> raw 8, gzip 8, base64 16."""
-    return (
-        "SELECT envelope, CAST(n AS BIGINT) AS n FROM (VALUES"
-        " ('raw', 8), ('gzip', 8), ('base64', 16)) AS t(envelope, n)"
-    )
-
-
 _ORACLE_SQL_CACHE: Dict[str, str] = {}
 
 
 def oracle_sql() -> Dict[str, str]:
-    """Oracle SQL per query. The generated VALUES oracles are expensive to
-    build (corpus gen incl. CFF authoring + AES-256/R6 KDF, driver-side
-    page renders), and pure — build once per process, return copies."""
-    if _ORACLE_SQL_CACHE:
-        return dict(_ORACLE_SQL_CACHE)
-    _ORACLE_SQL_CACHE.update(_build_oracle_sql())
-    return dict(_ORACLE_SQL_CACHE)
-
-
-def _build_oracle_sql() -> Dict[str, str]:
-    out = {name: sql for name, (_, sql) in _REGISTRY.items() if sql is not None}
-    out["extraction_spans_flat"] = _golden_spans_sql(_FLAGSHIP_DOCS, _FLAGSHIP_SEED)
-    out["line_block_word_assignment"] = _line_block_assignment_oracle_sql()
-    out["textblock_line_geometry"] = _textblock_lines_oracle_sql()
-    out["textblock_block_rollup"] = _textblock_blocks_oracle_sql()
-    out["textblock_bounding_polys"] = _textblock_polys_oracle_sql()
-    out["block_type_dispatch"] = _block_type_dispatch_oracle_sql()
-    out["extraction_page_stats"] = _page_stats_oracle_sql()
-    out["media_inventory"] = _media_inventory_oracle_sql()
-    out["media_codec_histogram"] = _media_codec_histogram_oracle_sql()
-    out["provenance_search"] = _provenance_search_oracle_sql()
-    out["mime_sniff_stats"] = _mime_sniff_oracle_sql()
-    out["media_image_features"] = _media_features_oracle_sql()
-    out["media_thumbnails"] = _media_thumbnails_oracle_sql()
-    out["media_frame_samples"] = _media_frames_oracle_sql()
-    out["media_png_export"] = _media_png_oracle_sql()
-    out["html_main_content"] = _html_main_oracle_sql()
-    out["html_boilerplate_stats"] = _html_stats_oracle_sql()
-    out["provenance_refined_search"] = _provenance_refined_oracle_sql()
-    out["audio_features"] = _audio_features_oracle_sql()
-    out["extraction_xrefstream_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="xrefstream"
-    )
-    out["media_page_rasters"] = _page_rasters_oracle_sql()
-    out["media_masked_rasters"] = _masked_rasters_oracle_sql()
-    out["provenance_phrase_search"] = _phrase_search_oracle_sql()
-    out["extraction_lzw_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="lzw"
-    )
-    out["extraction_cid_font_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="cidfont"
-    )
-    out["extraction_encrypted_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="encrypted"
-    )
-    out["extraction_ccitt_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="ccitt"
-    )
-    out["extraction_inline_image_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="inline"
-    )
-    out["extraction_encrypted_r6_spans"] = _golden_spans_sql(
-        4, _FLAGSHIP_SEED, envelope="encrypted-r6"
-    )
-    out["extraction_rotated_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="rotated"
-    )
-    out["extraction_ocg_spans"] = _golden_spans_sql(
-        12, _FLAGSHIP_SEED, envelope="ocg"
-    )
-    out["extraction_damaged_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="damaged"
-    )
-    out["link_annotations"] = _link_annotations_oracle_sql()
-    out["signature_fields"] = _signature_fields_oracle_sql()
-    out["tagged_reading_order"] = _tagged_reading_order_oracle_sql()
-    out["document_metadata"] = _document_metadata_oracle_sql()
-    out["outline_entries"] = _outline_entries_oracle_sql()
-    out["page_labels"] = _page_labels_oracle_sql()
-    out["form_appearance_texts"] = _form_appearance_texts_oracle_sql()
-    out["form_field_values"] = _form_field_values_oracle_sql()
-    out["embedded_attachments"] = _embedded_attachments_oracle_sql()
-    out["extraction_scanned_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, envelope="scanned"
-    )
-    out["extraction_recompressed_spans"] = _golden_spans_sql(
-        6, _FLAGSHIP_SEED, with_media_ref=False
-    )
-    out["ann_ivf_top5"] = _ivf_oracle_sql()
-    return {n: out[n] for n in _ordered_names() if n in out}
+    """Oracle SQL per query, in ``queries()`` order. The generated VALUES
+    oracles are expensive to build (corpus gen incl. CFF authoring +
+    AES-256/R6 KDF, driver-side page renders), and pure — each is built on
+    first use and cached per process. An oracle whose input file is missing
+    leaves only its own query out (reported on stderr); any other error
+    propagates."""
+    out = {}
+    for name in _ordered_names():
+        if name not in _ORACLE_SQL_CACHE:
+            oracle = _REGISTRY[name][1]
+            try:
+                _ORACLE_SQL_CACHE[name] = oracle() if callable(oracle) else oracle
+            except FileNotFoundError as e:
+                print(
+                    f"oracle_sql: {name} left out, missing {e.filename}",
+                    file=sys.stderr,
+                )
+                continue
+        out[name] = _ORACLE_SQL_CACHE[name]
+    return out

@@ -7,12 +7,14 @@ needs on Spark:
 
 * :func:`stream_extraction` — incremental document ingest: a file-source
   stream over the docs table, extraction per micro-batch via ``foreachBatch``
-  (correct because one row = one whole document: the per-doc window/groupBy
-  never spans micro-batches). Exactly-once OUTPUT: each micro-batch writes
-  its own ``batch_id=`` partition with dynamic partition overwrite, so a
-  batch re-run after a partial failure replaces its partition instead of
-  appending duplicates (the checkpoint's offset log guarantees the same
-  batch_id sees the same input rows on replay).
+  through the same no-checkpoint path as ``pipeline.run_extraction`` (correct
+  because one row = one whole document: neither the in-kernel assembly nor
+  the skew tail's per-doc window/groupBy spans micro-batches). Exactly-once
+  OUTPUT: each micro-batch writes its own ``batch_id=`` partition with
+  dynamic partition overwrite, so a batch re-run after a partial failure
+  replaces its partition instead of appending duplicates (the checkpoint's
+  offset log guarantees the same batch_id sees the same input rows on
+  replay).
 * :func:`windowed_event_counts` — watermark + tumbling-window aggregation
   over an event stream (late-data tolerant), the streaming analog of the
   sessionization operator family (W1).
@@ -48,11 +50,8 @@ def stream_extraction(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        result = pipeline.doc_spans(
-            pipeline.parse_pages(
-                pipeline.salt_page_buckets(batch_df, pages_per_bucket),
-                pages_per_bucket,
-            )
+        result = pipeline.run_extraction(
+            spark, batch_df, pages_per_bucket=pages_per_bucket
         )
         # idempotent replay: overwrite ONLY this batch's partition
         (

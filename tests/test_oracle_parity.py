@@ -9,6 +9,8 @@ import duckdb
 import pandas as pd
 import pytest
 
+from tests.conftest import query_params
+
 SF_DIR = os.environ.get("PARITY_SF_DIR", "/root/testdata/sf0.01")
 
 TABLES = [
@@ -64,7 +66,7 @@ def _assert_frames_equal(spark_pdf: pd.DataFrame, duck_pdf: pd.DataFrame, name: 
 def _all_query_names():
     import __spark_entry__ as entrymod
 
-    return sorted(entrymod.oracle_sql().keys())
+    return query_params(sorted(entrymod.queries()))
 
 
 @pytest.fixture(scope="module")
@@ -89,11 +91,94 @@ def test_every_query_has_an_oracle():
     """Round-2 close: the rows-only set is EMPTY — every registry query has
     a DuckDB-checkable oracle. Guard against regressions."""
     import __spark_entry__ as entrymod
+    from docprompt_spark import queries as q
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    rows_only = [n for n in qs if n not in oracles]
+    reg = q.registry()
+    rows_only = [n for n in entrymod.queries() if reg[n][1] is None]
     assert rows_only == [], rows_only
+
+
+def test_query_rejects_a_missing_oracle():
+    from docprompt_spark import queries as q
+
+    with pytest.raises(TypeError):
+        q.query("no_oracle", None)
+    assert "no_oracle" not in q.registry()
+
+
+def test_missing_oracle_input_leaves_out_only_its_query(monkeypatch, capsys, tmp_path):
+    """An oracle whose input file is missing drops its own query from
+    ``oracle_sql()``, names the file on stderr, and hides nothing else."""
+    from docprompt_spark import queries as q
+
+    name = "line_block_word_assignment"
+    missing = str(tmp_path / "absent" / "1_ocr.json")
+    monkeypatch.setattr(q, "_FIXTURE_OCR", missing)
+    monkeypatch.delitem(q._ORACLE_SQL_CACHE, name, raising=False)
+    oracles = q.oracle_sql()
+    assert list(oracles) == [n for n in q.queries() if n != name]
+    assert all(isinstance(sql, str) and sql for sql in oracles.values())
+    err = capsys.readouterr().err
+    assert name in err and missing in err
+
+
+def test_other_oracle_errors_propagate(monkeypatch):
+    from docprompt_spark import queries as q
+
+    def boom():
+        raise ValueError("corrupt fixture")
+
+    monkeypatch.setattr(q, "_fixture_blocks", boom)
+    monkeypatch.delitem(
+        q._ORACLE_SQL_CACHE, "line_block_word_assignment", raising=False
+    )
+    with pytest.raises(ValueError, match="corrupt fixture"):
+        q.oracle_sql()
+
+
+def _write_ocr_fixture(path):
+    """A small page-1 OCR fixture in the reference's 1_ocr.json shape: 10
+    words, 4 lines. Word 4 overlaps lines 1 and 2 by the same height (tie:
+    the lower line index wins), line 3 has confidence 0.2 (< 0.3, dropped)
+    and word 9 overlaps no kept line."""
+    import json
+
+    def box(top, bottom):
+        return {"bounding_box": {"top": top, "bottom": bottom}}
+
+    # coordinates in 1/32 page units, so equal overlaps are exactly equal
+    words = [(3, 5), (4, 6), (3, 6), (10, 12), (13, 15), (15, 17), (16, 18),
+             (15, 18), (20, 22), (26, 28)]
+    lines = [(3, 6, 0.95), (10, 14, 0.9), (14, 18, 0.85), (26, 28, 0.2)]
+    page = {
+        "word_level_blocks": [box(t / 32, b / 32) for t, b in words],
+        "line_level_blocks": [
+            dict(box(t / 32, b / 32), metadata={"confidence": c})
+            for t, b, c in lines
+        ],
+    }
+    path.write_text(json.dumps({"1": page}))
+
+
+def test_line_block_assignment_on_synthetic_fixture(spark, monkeypatch, tmp_path):
+    """J1 stays checked without the reference checkout: the query against
+    its own oracle over a synthetic fixture, plus the broadcast line side."""
+    from docprompt_spark import queries as q
+
+    fixture = tmp_path / "1_ocr.json"
+    _write_ocr_fixture(fixture)
+    monkeypatch.setattr(q, "_FIXTURE_OCR", str(fixture))
+    fn, oracle = q.registry()["line_block_word_assignment"]
+    df = fn(spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
+    spark_pdf = df.toPandas()
+    duck_pdf = duckdb.connect().execute(oracle()).df()
+    _assert_frames_equal(spark_pdf, duck_pdf, "line_block_word_assignment")
+    got = sorted(zip(spark_pdf.l_idx, spark_pdf.n_words, spark_pdf.first_word))
+    # line 0: words 0-2; line 1: words 3-4 (4 ties with line 2); line 2:
+    # words 5-7; word 8 overlaps no line, word 9 only the dropped line 3
+    assert got == [(0, 3, 0), (1, 2, 3), (2, 3, 5)]
 
 
 def test_entry_smoke(spark):

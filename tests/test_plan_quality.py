@@ -5,6 +5,10 @@ whole-stage codegen)."""
 import os
 
 import pyspark.sql.functions as F
+import pytest
+
+from docprompt_spark import queries as _queries
+from tests.conftest import needs_ref_ocr, query_params
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -61,18 +65,13 @@ def test_extraction_single_shuffle_after_parse(spark):
     assert "BatchEvalPython" not in plan
 
 
-def test_no_rowwise_python_udfs_anywhere(spark):
+@pytest.mark.parametrize("name", query_params(_queries.queries()))
+def test_no_rowwise_python_udfs_anywhere(spark, name):
     """Sweep the ENTIRE registry: no BatchEvalPython (row-at-a-time Python
     UDF) in any query's physical plan — Python only ever runs Arrow-batched
     (ArrowEvalPython / MapInPandas)."""
-    import __spark_entry__ as entry
-
-    offenders = []
-    for name, fn in entry.queries().items():
-        plan = _plan(fn(spark, SF_DIR))
-        if "BatchEvalPython" in plan:
-            offenders.append(name)
-    assert not offenders, offenders
+    plan = _plan(_queries.registry()[name][0](spark, SF_DIR))
+    assert "BatchEvalPython" not in plan, name
 
 
 def _top_level_bracket_groups(s: str):
@@ -107,26 +106,26 @@ def _is_global_window(line: str) -> bool:
     return True
 
 
-def test_no_unpartitioned_windows_anywhere(spark):
+@pytest.mark.parametrize("name", query_params(_queries.queries()))
+def test_no_unpartitioned_windows_anywhere(spark, name):
     """Round-1 verdict: five queries moved all rows to a single partition
     via global windows. Assert the whole registry stays clean: in the
     optimized plan a partitioned Window prints 3 top-level bracket groups
     ([exprs], [partitionSpec], [orderSpec]); a global one prints 2."""
-    import __spark_entry__ as entry
-
+    df = _queries.registry()[name][0](spark, SF_DIR)
+    lp = df._jdf.queryExecution().optimizedPlan().toString()
     offenders = []
-    for name, fn in entry.queries().items():
-        lp = fn(spark, SF_DIR)._jdf.queryExecution().optimizedPlan().toString()
-        for line in lp.splitlines():
-            ls = line.strip()
-            while ls[:2] in ("+-", ":-", ": ", "  "):
-                ls = ls[2:].strip()
-            if ls.startswith("Window "):
-                if _is_global_window(ls):
-                    offenders.append((name, ls[:90]))
-    assert not offenders, offenders
+    for line in lp.splitlines():
+        ls = line.strip()
+        while ls[:2] in ("+-", ":-", ": ", "  "):
+            ls = ls[2:].strip()
+        if ls.startswith("Window "):
+            if _is_global_window(ls):
+                offenders.append(ls[:90])
+    assert not offenders, (name, offenders)
 
 
+@needs_ref_ocr
 def test_line_block_assignment_broadcasts_lines(spark):
     from docprompt_spark import queries as q
 
