@@ -6,30 +6,35 @@ Spark shape (SURVEY.md §3.1 "Spark shape"):
       → explode page buckets (salting: explicit skew handling for huge docs,
         replacing the reference's greedy LPT bin-packing,
         /root/reference/docprompt/_pdfium.py:258-289)
-      → docs of <= SKEW_PAGE_THRESHOLD pages (the overwhelming majority):
-        mapInPandas(parse + layout + doc assembly) in one narrow kernel,
-        no post-parse shuffle               # Arrow-batched, no per-row Python UDFs
-      → skew tail only: repartition(doc_id, page_bucket)
-        → mapInPandas(parse + layout)
-        → window(page offsets) + groupBy(doc_id) ordered collect
+      → skew_route: docs of <= SKEW_PAGE_THRESHOLD pages stay narrow, only
+        the skew tail is repartitioned by (doc_id, page_bucket)
+      → narrow: mapInPandas(parse + layout + doc assembly), no post-parse
+        shuffle                          # Arrow-batched, no per-row Python UDFs
+      → tail: mapInPandas(parse + layout) → doc_spans (window + groupBy)
       → (doc_id, spans array<struct<kind,text,media_ref,offset>>)
+
+One parse kernel (_parse_kernel) owns the bucket loop, the GC guard, the
+extract_pages call and its timing, the on_error policy and the page layout,
+and feeds one of three emitters: page rows (parse_pages, the skew tail, the
+checkpoint path), block rows (page_blocks) or doc rows (the narrow side).
 
 Checkpoint/resume (reference FilesystemCache + anti-join resume,
 rasterizer.py:62-307): parsed page rows are appended to a parquet checkpoint
 table; a re-run anti-joins completed (doc_id, page_bucket) pairs and only
-parses the remainder. This path still assembles every doc, small or not,
-through the window + groupBy(doc_id) above. Per-partition lineage rows
-(partition id, doc/page/span counts, wall time, run id) are derived from the
-checkpointed pages.
+parses the remainder. This path still assembles every doc through
+doc_spans. Per-partition lineage rows (partition id, doc/page/span counts,
+wall time, run id) are derived from the checkpointed pages.
 """
 
 from __future__ import annotations
 
+import gc
 import time
 import uuid
 from typing import Iterator, Optional
 
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -121,7 +126,15 @@ BLOCKS_SCHEMA = StructType(
     ]
 )
 
+DOC_SPANS_SCHEMA = StructType(
+    [
+        StructField("doc_id", StringType(), False),
+        StructField("spans", ArrayType(SPAN_TYPE), True),
+    ]
+)
+
 DEFAULT_PAGES_PER_BUCKET = 16
+SKEW_PAGE_THRESHOLD = 4 * DEFAULT_PAGES_PER_BUCKET
 
 
 def salt_page_buckets(docs_df: DataFrame, pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET) -> DataFrame:
@@ -140,213 +153,176 @@ def salt_page_buckets(docs_df: DataFrame, pages_per_bucket: int = DEFAULT_PAGES_
     )
 
 
-def _parse_and_layout(pages_per_bucket: int, on_error: str):
-    """mapInPandas kernel: parse the bucket's pages and run layout, one call
-    per document-bucket, vectorized across the Arrow batch."""
+def _parse_kernel(pages_per_bucket: int, on_error: str, new_emitter):
+    """The mapInPandas parse kernel over (doc_id, pdf, page_bucket) rows.
+
+    Each bucket's pages are parsed and laid out, then handed to the task's
+    emitter as ``emit(doc_id, bucket, pages, parse_ms, partition_id)``;
+    ``pages`` is a list of (page, layout) pairs, or None for a bucket that
+    raised under ``on_error="skip"``. The emitter returns output rows. A
+    last call with doc_id None flushes rows it holds back."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        from pyspark import TaskContext
-
-        from docprompt_spark import kernels, pdfparse
+        from docprompt_spark import kernels, pdfparse  # import before gc off
 
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
+        emit = new_emitter()
         # the parse kernel allocates millions of small acyclic dicts per
         # task; cyclic-GC sweeps buy nothing here (refcounting frees
         # everything) and cost ~6% — disable for the task, restore after
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
-            yield from _parse_batches(batches, pid)
+            for pdf_batch in batches:
+                rows = []
+                for doc_id, blob, bucket in zip(
+                    pdf_batch["doc_id"], pdf_batch["pdf"], pdf_batch["page_bucket"]
+                ):
+                    t0 = time.perf_counter()
+                    lo = int(bucket) * pages_per_bucket
+                    try:
+                        pages = pdfparse.extract_pages(
+                            bytes(blob), lo, lo + pages_per_bucket,
+                            with_vectors=False,
+                        )
+                    except Exception:
+                        if on_error == "skip":
+                            pages = None
+                        else:
+                            raise
+                    ms = (time.perf_counter() - t0) * 1000.0
+                    if pages is not None:
+                        pages = [
+                            (p, kernels.build_page_layout(p["words"])) for p in pages
+                        ]
+                    rows += emit(doc_id, int(bucket), pages, ms, pid)
+                if rows:
+                    yield pd.DataFrame(rows)
+            rows = emit(None, -1, None, 0.0, pid)
+            if rows:
+                yield pd.DataFrame(rows)
         finally:
             if gc_was_enabled:
                 gc.enable()
             gc.collect()
 
-    def _parse_batches(batches, pid):
-        from docprompt_spark import kernels, pdfparse
-
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, blob, bucket in zip(
-                pdf_batch["doc_id"], pdf_batch["pdf"], pdf_batch["page_bucket"]
-            ):
-                t0 = time.perf_counter()
-                lo = int(bucket) * pages_per_bucket
-                hi = lo + pages_per_bucket
-                try:
-                    pages = pdfparse.extract_pages(
-                        bytes(blob), lo, hi, with_vectors=False
-                    )
-                except Exception:
-                    if on_error == "skip":
-                        continue
-                    raise
-                ms = (time.perf_counter() - t0) * 1000.0
-                for p in pages:
-                    layout = kernels.build_page_layout(p["words"])
-                    spans = kernels.assemble_page_spans(layout, p["images"])
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "page_bucket": int(bucket),
-                            "page_number": p["page_number"],
-                            "page_text_len": len(layout["page_text"]),
-                            "spans": spans,
-                            "n_words": sum(len(ln["words"]) for ln in layout["lines"]),
-                            "n_lines": len(layout["lines"]),
-                            "n_blocks": len(layout["blocks"]),
-                            "n_media": len(p["images"]),
-                            "parse_ms": ms / max(len(pages), 1),
-                            "partition_id": pid,
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-
     return fn
 
 
-SKEW_PAGE_THRESHOLD = 4 * DEFAULT_PAGES_PER_BUCKET
+def _page_emitter():
+    """PAGE_SCHEMA rows: one per parsed page, with page-local span offsets.
+    A failed bucket emits nothing."""
+    from docprompt_spark import kernels
 
-DOC_SPANS_SCHEMA = StructType(
-    [
-        StructField("doc_id", StringType(), False),
-        StructField("spans", ArrayType(SPAN_TYPE), True),
-    ]
-)
+    def emit(doc_id, bucket, pages, ms, pid):
+        return [
+            {
+                "doc_id": doc_id,
+                "page_bucket": bucket,
+                "page_number": p["page_number"],
+                "page_text_len": len(layout["page_text"]),
+                "spans": kernels.assemble_page_spans(layout, p["images"]),
+                "n_words": sum(len(ln["words"]) for ln in layout["lines"]),
+                "n_lines": len(layout["lines"]),
+                "n_blocks": len(layout["blocks"]),
+                "n_media": len(p["images"]),
+                "parse_ms": ms / len(pages),
+                "partition_id": pid,
+            }
+            for p, layout in pages or ()
+        ]
+
+    return emit
 
 
-def _parse_and_assemble(pages_per_bucket: int, on_error: str):
-    """Small-doc kernel: parse a doc's buckets AND assemble its document-
-    level span sequence in one pass, emitting finished (doc_id, spans)
-    rows.
+def _block_emitter():
+    """BLOCKS_SCHEMA rows: the TextBlock hierarchy, one row per parsed page.
+    A failed bucket emits nothing."""
 
-    All buckets of a document are consecutive within one partition
-    (salt_page_buckets explodes in place and the narrow path never
-    shuffles), so cumulative page offsets are computable locally — the
-    doc_id exchange + window + ordered collect that doc_spans() performs
-    become unnecessary for the overwhelming small-doc majority. At 100 TB
-    this removes the one shuffle that carried every span's text. Offsets
-    and ordering are bit-identical to doc_spans(): page_start = Σ
-    (page_text_len + 1) over preceding pages in page_number order."""
+    def emit(doc_id, bucket, pages, ms, pid):
+        return [
+            _layout_to_block_row(doc_id, p["page_number"], layout)
+            for p, layout in pages or ()
+        ]
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
+    return emit
 
-        from docprompt_spark import kernels, pdfparse  # import before gc off
 
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            yield from _assemble_batches(batches)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-            gc.collect()
+def _doc_emitter():
+    """DOC_SPANS_SCHEMA rows: each document's span sequence, assembled in
+    the kernel. A document's buckets are consecutive within one narrow
+    partition (salt_page_buckets explodes in place), so its pages collect
+    until the next doc_id arrives; kernels.assemble_doc_spans then gives
+    the offsets and order of doc_spans() without its doc_id exchange. A
+    document with a failed bucket is dropped whole: emitting the rest
+    would shift every later offset."""
+    from docprompt_spark import kernels
 
-    def _assemble_batches(batches):
-        from docprompt_spark import kernels, pdfparse
+    cur_doc, cur_pages, failed = None, [], False
 
-        cur_doc = None
-        cur_pages: list = []  # (page_number, page_text_len, spans)
+    def emit(doc_id, bucket, pages, ms, pid):
+        nonlocal cur_doc, cur_pages, failed
+        rows = []
+        if doc_id != cur_doc:
+            if cur_pages and not failed:
+                rows.append(
+                    {"doc_id": cur_doc, "spans": kernels.assemble_doc_spans(cur_pages)}
+                )
+            cur_doc, cur_pages, failed = doc_id, [], False
+        if pages is None:
+            failed = True
+        elif not failed:
+            cur_pages += [
+                {
+                    "page_number": p["page_number"],
+                    "page_text": layout["page_text"],
+                    "spans": kernels.assemble_page_spans(layout, p["images"]),
+                }
+                for p, layout in pages
+            ]
+        return rows
 
-        def flush():
-            nonlocal cur_doc, cur_pages
-            row = None
-            if cur_pages:
-                cur_pages.sort(key=lambda p: p[0])
-                spans: list = []
-                off = 0
-                for _pn, plen, pspans in cur_pages:
-                    if off:
-                        for s in pspans:
-                            s2 = dict(s)
-                            s2["offset"] = s2["offset"] + off
-                            spans.append(s2)
-                    else:
-                        spans.extend(pspans)
-                    off += plen + 1
-                row = {"doc_id": cur_doc, "spans": spans}
-            cur_doc, cur_pages = None, []
-            return row
+    return emit
 
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, blob, bucket in zip(
-                pdf_batch["doc_id"], pdf_batch["pdf"], pdf_batch["page_bucket"]
-            ):
-                if doc_id != cur_doc:
-                    r = flush()
-                    if r is not None:
-                        rows.append(r)
-                    cur_doc = doc_id
-                lo = int(bucket) * pages_per_bucket
-                try:
-                    pages = pdfparse.extract_pages(
-                        bytes(blob), lo, lo + pages_per_bucket,
-                        with_vectors=False,
-                    )
-                except Exception:
-                    if on_error == "skip":
-                        continue
-                    raise
-                for p in pages:
-                    layout = kernels.build_page_layout(p["words"])
-                    pspans = kernels.assemble_page_spans(layout, p["images"])
-                    cur_pages.append(
-                        (p["page_number"], len(layout["page_text"]), pspans)
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-        r = flush()
-        if r is not None:
-            yield pd.DataFrame([r])
 
-    return fn
+def skew_route(buckets_df: DataFrame):
+    """The one skew router: bucket rows → (narrow, tail) frames of
+    (doc_id, pdf, page_bucket). Docs of <= SKEW_PAGE_THRESHOLD pages (the
+    overwhelming majority) keep the input partitioning: at 100 TB you never
+    shuffle raw document bytes. Skew-tail docs repartition by (doc_id,
+    page_bucket), so a 5000-page book fans out across the cluster instead
+    of pinning one task. The threshold is read at call time."""
+    from docprompt_spark.shipping import ensure_py_files
+
+    spark = buckets_df.sparkSession
+    ensure_py_files(spark)
+    cols = ["doc_id", "pdf", "page_bucket"]
+    n_pages = F.col("n_pages")
+    narrow = buckets_df.filter(n_pages <= SKEW_PAGE_THRESHOLD).select(*cols)
+    tail = buckets_df.filter(n_pages > SKEW_PAGE_THRESHOLD).select(*cols)
+    # 4 waves of small tasks on the skew path: straggler/tail variance
+    # dominates at high core counts (measured: 4x beats 2x and 8x)
+    nparts = spark.sparkContext.defaultParallelism * 4
+    return narrow, tail.repartition(nparts, "doc_id", "page_bucket")
+
+
+def _route_and_map(buckets_df: DataFrame, fn, schema) -> DataFrame:
+    """Map one kernel over both sides of skew_route and union them."""
+    narrow, tail = skew_route(buckets_df)
+    return narrow.mapInPandas(fn, schema=schema).unionAll(
+        tail.mapInPandas(fn, schema=schema)
+    )
 
 
 def parse_pages(
     buckets_df: DataFrame,
     pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET,
     on_error: str = "fail",
-    parallelism: Optional[int] = None,
-    skew_page_threshold: int = SKEW_PAGE_THRESHOLD,
 ) -> DataFrame:
-    """Salted bucket rows → page rows, with differentiated skew handling.
-
-    Small documents (the overwhelming majority) parse NARROWLY on the input
-    partitioning — zero shuffle; at 100 TB you never want to shuffle raw
-    document bytes. Only skew-tail documents (n_pages > threshold, whose
-    buckets would otherwise serialize inside one input split) are exploded
-    and repartitioned by (doc_id, page_bucket) so a 5000-page book fans out
-    across the cluster instead of pinning one task.
-    """
-    fn = _parse_and_layout(pages_per_bucket, on_error)
-    return _route_and_map(
-        buckets_df, fn, PAGE_SCHEMA, parallelism, skew_page_threshold
-    )
-
-
-def _route_and_map(buckets_df, fn, schema, parallelism, skew_page_threshold):
-    """Differentiated skew routing shared by the span and block pipelines:
-    small docs map narrowly (zero shuffle), only skew-tail docs repartition."""
-    from docprompt_spark.shipping import ensure_py_files
-
-    spark = buckets_df.sparkSession
-    ensure_py_files(spark)
-    cols = ["doc_id", "pdf", "page_bucket"]
-    small = buckets_df.filter(F.col("n_pages") <= skew_page_threshold).select(*cols)
-    big = buckets_df.filter(F.col("n_pages") > skew_page_threshold).select(*cols)
-    # 4 waves of small tasks on the skew path: straggler/tail variance
-    # dominates at high core counts (measured: 4x beats 2x and 8x)
-    nparts = parallelism or spark.sparkContext.defaultParallelism * 4
-    big = big.repartition(nparts, "doc_id", "page_bucket")
-    return small.mapInPandas(fn, schema=schema).unionAll(
-        big.mapInPandas(fn, schema=schema)
-    )
+    """Salted bucket rows → PAGE_SCHEMA page rows, routed by skew_route."""
+    fn = _parse_kernel(pages_per_bucket, on_error, _page_emitter)
+    return _route_and_map(buckets_df, fn, PAGE_SCHEMA)
 
 
 def _layout_to_block_row(doc_id: str, page_number: int, layout: dict) -> dict:
@@ -396,68 +372,19 @@ def _layout_to_block_row(doc_id: str, page_number: int, layout: dict) -> dict:
     }
 
 
-def _parse_to_blocks(pages_per_bucket: int, on_error: str):
-    """mapInPandas kernel emitting the TextBlock hierarchy per page."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import gc
-
-        from docprompt_spark import kernels, pdfparse  # import before gc off
-
-        gc_was_enabled = gc.isenabled()
-        gc.disable()
-        try:
-            yield from _block_batches(batches)
-        finally:
-            if gc_was_enabled:
-                gc.enable()
-            gc.collect()
-
-    def _block_batches(batches):
-        from docprompt_spark import kernels, pdfparse
-
-        for pdf_batch in batches:
-            rows = []
-            for doc_id, blob, bucket in zip(
-                pdf_batch["doc_id"], pdf_batch["pdf"], pdf_batch["page_bucket"]
-            ):
-                lo = int(bucket) * pages_per_bucket
-                try:
-                    pages = pdfparse.extract_pages(
-                        bytes(blob), lo, lo + pages_per_bucket, with_vectors=False
-                    )
-                except Exception:
-                    if on_error == "skip":
-                        continue
-                    raise
-                for p in pages:
-                    layout = kernels.build_page_layout(p["words"])
-                    rows.append(
-                        _layout_to_block_row(doc_id, p["page_number"], layout)
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return fn
-
-
 def page_blocks(
     buckets_df: DataFrame,
     pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET,
     on_error: str = "fail",
-    parallelism: Optional[int] = None,
-    skew_page_threshold: int = SKEW_PAGE_THRESHOLD,
 ) -> DataFrame:
     """The TextBlock hierarchy as a TABLE: per page, arrays of word/line/
     block-level blocks with normalized bboxes and page-level text spans
     (start/end char offsets) — the relational form of the reference's
     OcrPageResult (tasks/ocr/result.py word/line/block_level_blocks), which
-    provenance search consumes (provenance/search.py:42-82). Same
-    differentiated skew routing as parse_pages."""
-    fn = _parse_to_blocks(pages_per_bucket, on_error)
-    return _route_and_map(
-        buckets_df, fn, BLOCKS_SCHEMA, parallelism, skew_page_threshold
-    )
+    provenance search consumes (provenance/search.py:42-82). Routed by
+    skew_route, like parse_pages."""
+    fn = _parse_kernel(pages_per_bucket, on_error, _block_emitter)
+    return _route_and_map(buckets_df, fn, BLOCKS_SCHEMA)
 
 
 def doc_spans(pages_df: DataFrame) -> DataFrame:
@@ -511,30 +438,26 @@ def run_extraction(
     freshly parsed pages are appended to ``{dir}/pages``, and per-partition
     lineage rows to ``{dir}/lineage``. Output is rebuilt from the checkpoint
     table, so a resumed run yields byte-identical spans.
+
+    ``on_error="skip"`` drops a small doc with any failed bucket; the skew
+    tail and the checkpoint path drop only the failed buckets.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     buckets = salt_page_buckets(docs_df, pages_per_bucket)
 
     if checkpoint_dir is None:
-        # Small docs (the overwhelming majority): parse + doc assembly in
-        # ONE narrow kernel — zero post-parse shuffle (the former plan
-        # shipped every span through a doc_id exchange + window). Only the
-        # skew tail (n_pages > threshold) still fans out page buckets
-        # across the cluster and reassembles via doc_spans().
-        from docprompt_spark.shipping import ensure_py_files
-
-        ensure_py_files(spark)
-        cols = ["doc_id", "pdf", "page_bucket"]
-        small = buckets.filter(
-            F.col("n_pages") <= SKEW_PAGE_THRESHOLD
-        ).select(*cols)
-        big = buckets.filter(F.col("n_pages") > SKEW_PAGE_THRESHOLD)
-        assembled = small.mapInPandas(
-            _parse_and_assemble(pages_per_bucket, on_error), DOC_SPANS_SCHEMA
+        # Narrow side (the overwhelming majority): parse + doc assembly in
+        # ONE kernel — zero post-parse shuffle. Only the skew tail fans out
+        # page buckets across the cluster and reassembles via doc_spans().
+        narrow, tail = skew_route(buckets)
+        docs = narrow.mapInPandas(
+            _parse_kernel(pages_per_bucket, on_error, _doc_emitter),
+            DOC_SPANS_SCHEMA,
         )
-        return assembled.unionByName(
-            doc_spans(parse_pages(big, pages_per_bucket, on_error))
+        pages = tail.mapInPandas(
+            _parse_kernel(pages_per_bucket, on_error, _page_emitter), PAGE_SCHEMA
         )
+        return docs.unionByName(doc_spans(pages))
 
     pages_path = f"{checkpoint_dir}/pages"
     lineage_path = f"{checkpoint_dir}/lineage"

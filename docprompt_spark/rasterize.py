@@ -809,19 +809,16 @@ def page_raster_table(
     docs_df: DataFrame,
     dpi: int = DEFAULT_DPI,
     pages_per_bucket: int = 16,
-    parallelism: Optional[int] = None,
 ) -> DataFrame:
     """(doc_id, pdf, n_pages) -> per-page raster digests, rendered in the
-    same salted/size-balanced ``mapInPandas`` shape as the text parse
-    (pipeline.parse_pages): narrow for small docs, repartitioned for the
-    skew tail. One pass over the bytes; only digests leave the kernel."""
+    same salted ``mapInPandas`` shape as the text parse and routed by
+    pipeline.skew_route: narrow for small docs, repartitioned for the skew
+    tail. The render kernel parses through ``PdfFile`` itself, with image
+    data and the embedded glyph pool. One pass over the bytes; only
+    digests leave the kernel."""
     from docprompt_spark import pipeline
 
     buckets = pipeline.salt_page_buckets(docs_df, pages_per_bucket)
     return pipeline._route_and_map(
-        buckets,
-        _render_kernel(pages_per_bucket, dpi),
-        RASTER_SCHEMA,
-        parallelism,
-        pipeline.SKEW_PAGE_THRESHOLD,
+        buckets, _render_kernel(pages_per_bucket, dpi), RASTER_SCHEMA
     )

@@ -29,6 +29,37 @@ def test_on_error_skip_drops_corrupt_doc(spark):
         pipeline.run_extraction(spark, both, on_error="fail").count()
 
 
+def test_on_error_skip_drops_doc_with_failed_middle_bucket(spark):
+    """The document is the skip unit: a 61-page doc whose middle bucket
+    fails must not come out with the other buckets' spans at shifted
+    offsets. The good doc after it in the same partition still comes out
+    exact."""
+    from docprompt_spark import corpus
+
+    book = corpus.gen_doc(25, seed=42, skew_every=25)
+    good = corpus.gen_doc(1, seed=42, skew_every=25)
+    raw = pdfparse.unwrap_pdf_bytes(bytes(book["pdf"]))
+    # page 20's content stream claims a filter its bytes lack: bucket 1
+    # (pages 17-32) raises zlib.error, buckets 0 and 2 parse
+    bad = raw.replace(b"<<  /Length 2610 >>", b"<</Length 2610/Filter/FlateDecode>>")
+    assert bad != raw and book["n_pages"] == 61
+    docs = spark.createDataFrame(
+        [
+            (book["doc_id"], bytearray(bad), book["n_pages"]),
+            (good["doc_id"], bytearray(good["pdf"]), good["n_pages"]),
+        ],
+        schema="doc_id string, pdf binary, n_pages int",
+    ).coalesce(1)
+    out = pipeline.run_extraction(spark, docs, on_error="skip").collect()
+    assert [r["doc_id"] for r in out] == [good["doc_id"]]
+    assert [tuple(s) for s in out[0]["spans"]] == [
+        (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in good["spans"]
+    ]
+
+    with pytest.raises(Exception):
+        pipeline.run_extraction(spark, docs, on_error="fail").count()
+
+
 def test_unwrap_rejects_garbage():
     with pytest.raises(ValueError):
         pdfparse.unwrap_pdf_bytes(b"\x00\x01\x02 garbage")

@@ -28,13 +28,18 @@ def _collect_spans(df):
     }
 
 
-def test_span_sequence_equality(spark, docs_df):
+def test_span_sequence_equality(spark, docs_df, monkeypatch):
+    """Golden spans from both sides of the skew router. At the default
+    threshold every corpus doc (<= 64 pages) is assembled in the narrow
+    kernel; at threshold 16 the 61-page book doc-42-00000025 takes the
+    repartition → page emitter → doc_spans branch instead."""
     golden = _collect_spans(docs_df.select("doc_id", "spans"))
-    result = pipeline.run_extraction(spark, docs_df)
-    got = _collect_spans(result)
-    assert set(got) == set(golden)
-    for doc_id in golden:
-        assert got[doc_id] == golden[doc_id], f"span mismatch for {doc_id}"
+    for threshold in (pipeline.SKEW_PAGE_THRESHOLD, 16):
+        monkeypatch.setattr(pipeline, "SKEW_PAGE_THRESHOLD", threshold)
+        got = _collect_spans(pipeline.run_extraction(spark, docs_df))
+        assert set(got) == set(golden)
+        for doc_id in golden:
+            assert got[doc_id] == golden[doc_id], f"span mismatch for {doc_id}"
 
 
 def test_salting_spreads_skew_doc(spark, docs_df):

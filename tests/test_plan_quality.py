@@ -53,15 +53,26 @@ def test_q1_partial_aggregation(spark):
 
 
 def test_extraction_single_shuffle_after_parse(spark):
-    """The parse stage output flows into doc assembly with exactly the
-    planned exchanges: one repartition of work units + one hash partitioning
-    by doc_id (window + groupBy reuse the same partitioning)."""
+    """The no-checkpoint plan routes once: exactly two MapInPandas nodes.
+    The narrow doc kernel reads the scan with no exchange below it and
+    emits finished (doc_id, spans) rows. The page kernel sits directly
+    above the skew tail's REPARTITION_BY_NUM exchange; its rows are hashed
+    by doc_id once for doc_spans (window + groupBy reuse that partitioning)."""
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, 3, seed=5, skew_every=0)
     result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
     plan = _plan(result)
-    assert plan.count("Exchange") <= 3  # repartition + doc_id hash (+AQE reads)
+    lines = plan.splitlines()
+    maps = [i for i, ln in enumerate(lines) if "MapInPandas" in ln]
+    assert len(maps) == 2, plan
+    narrow, tail = sorted(maps, key=lambda i: "REPARTITION_BY_NUM" in lines[i + 1])
+    assert "REPARTITION_BY_NUM" in lines[tail + 1], plan
+    assert "page_text_len#" in lines[tail], plan
+    assert "page_text_len#" not in lines[narrow] and "spans#" in lines[narrow], plan
+    scan = next(i for i in range(narrow, len(lines)) if "Scan" in lines[i])
+    assert not any("Exchange" in ln for ln in lines[narrow:scan]), plan
+    assert plan.count("Exchange") == 2  # tail repartition + doc_id hash
     assert "BatchEvalPython" not in plan
 
 
