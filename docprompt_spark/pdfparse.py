@@ -126,18 +126,24 @@ def _a85_decode(data: bytes) -> bytes:
     """ASCII85Decode (§7.4.3): 5 chars '!'..'u' -> 4 bytes base-85
     big-endian; 'z' = four zero bytes (group start only); whitespace
     skipped; '~>' terminates; a partial group of n chars pads with 'u'
-    and keeps n-1 bytes."""
+    and keeps n-1 bytes. A final group of one character is an error."""
     i = data.find(b"<~")
     body = data[i + 2 :] if i == 0 else data
     j = body.find(b"~>")
     if j >= 0:
         body = body[:j]
+    body = body.translate(None, b" \t\n\r\x0c\x00")
+    # 'z' stands alone at a group start (a85decode rejects it elsewhere),
+    # so the other characters form 5-char groups plus the final one
+    if (len(body) - body.count(b"z")) % 5 == 1:
+        raise ValueError("ASCII85Decode: final group of one character")
     # stdlib a85decode implements the identical Adobe semantics ('z' only
     # at group start, trailing group padded with 'u' keeping n-1 bytes,
     # ValueError on stray chars) with a struct-batched group loop — 1.6x
     # the per-char loop, verified byte-identical on randomized and edge
-    # inputs incl. injected whitespace/NUL
-    return base64.a85decode(body, ignorechars=b" \t\n\r\x0c\x00")
+    # inputs incl. injected whitespace/NUL — except that it silently drops
+    # a final one-char group, hence the check above
+    return base64.a85decode(body, ignorechars=b"")
 
 
 def _a85_encode(data: bytes) -> bytes:

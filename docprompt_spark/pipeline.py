@@ -7,11 +7,23 @@ Spark shape (SURVEY.md §3.1 "Spark shape"):
         replacing the reference's greedy LPT bin-packing,
         /root/reference/docprompt/_pdfium.py:258-289)
       → skew_route: docs of <= SKEW_PAGE_THRESHOLD pages stay narrow, only
-        the skew tail is repartitioned by (doc_id, page_bucket)
+        the skew tail is repartitioned by (doc_id, page_bucket); a tail
+        exists only when some doc is over the threshold
       → narrow: mapInPandas(parse + layout + doc assembly), no post-parse
         shuffle                          # Arrow-batched, no per-row Python UDFs
-      → tail: mapInPandas(parse + layout) → doc_spans (window + groupBy)
+      → tail, if any: mapInPandas(parse + layout) → doc_spans (window +
+        groupBy)
       → (doc_id, spans array<struct<kind,text,media_ref,offset>>)
+
+Whether a tail exists is decided by a probe job that runs in the JVM only
+(tail.isEmpty(); on parquet it reads only n_pages). The job is worth it:
+every Python task pays a fixed start-up before its UDF runs, whatever its
+row count, and an empty tail mapped anyway runs one such task per
+repartition slot. AQE cannot drop them: empty-relation propagation stops
+at MapInPandas, and a REPARTITION_BY_NUM shuffle is never coalesced. An
+input that is an uncached Python-generated frame, such as the recompress
+pre-map of queries.extraction_recompressed_spans, is evaluated once more
+by the probe.
 
 One parse kernel (_parse_kernel) owns the bucket loop, the GC guard, the
 extract_pages call and its timing, the on_error policy and the page layout,
@@ -288,11 +300,19 @@ def _doc_emitter():
 
 def skew_route(buckets_df: DataFrame):
     """The one skew router: bucket rows → (narrow, tail) frames of
-    (doc_id, pdf, page_bucket). Docs of <= SKEW_PAGE_THRESHOLD pages (the
+    (doc_id, pdf, page_bucket), with tail None when no doc is over
+    SKEW_PAGE_THRESHOLD pages. Docs of <= SKEW_PAGE_THRESHOLD pages (the
     overwhelming majority) keep the input partitioning: at 100 TB you never
     shuffle raw document bytes. Skew-tail docs repartition by (doc_id,
     page_bucket), so a 5000-page book fans out across the cluster instead
-    of pinning one task. The threshold is read at call time."""
+    of pinning one task. The threshold is read at call time.
+
+    Whether a tail exists is decided by a probe job, tail.isEmpty(), that
+    runs in the JVM only and on parquet reads only n_pages. It is worth a
+    job because an empty tail mapped anyway costs one Python task per
+    repartition slot, each paying the fixed Python-task start-up, which
+    AQE cannot avoid (see the module docstring). An uncached
+    Python-generated input is evaluated once more by the probe."""
     from docprompt_spark.shipping import ensure_py_files
 
     spark = buckets_df.sparkSession
@@ -301,6 +321,8 @@ def skew_route(buckets_df: DataFrame):
     n_pages = F.col("n_pages")
     narrow = buckets_df.filter(n_pages <= SKEW_PAGE_THRESHOLD).select(*cols)
     tail = buckets_df.filter(n_pages > SKEW_PAGE_THRESHOLD).select(*cols)
+    if tail.isEmpty():
+        return narrow, None
     # 4 waves of small tasks on the skew path: straggler/tail variance
     # dominates at high core counts (measured: 4x beats 2x and 8x)
     nparts = spark.sparkContext.defaultParallelism * 4
@@ -308,11 +330,10 @@ def skew_route(buckets_df: DataFrame):
 
 
 def _route_and_map(buckets_df: DataFrame, fn, schema) -> DataFrame:
-    """Map one kernel over both sides of skew_route and union them."""
+    """Map one kernel over each side of skew_route that exists; union them."""
     narrow, tail = skew_route(buckets_df)
-    return narrow.mapInPandas(fn, schema=schema).unionAll(
-        tail.mapInPandas(fn, schema=schema)
-    )
+    out = narrow.mapInPandas(fn, schema=schema)
+    return out if tail is None else out.unionAll(tail.mapInPandas(fn, schema=schema))
 
 
 def parse_pages(
@@ -454,6 +475,8 @@ def run_extraction(
             _parse_kernel(pages_per_bucket, on_error, _doc_emitter),
             DOC_SPANS_SCHEMA,
         )
+        if tail is None:
+            return docs
         pages = tail.mapInPandas(
             _parse_kernel(pages_per_bucket, on_error, _page_emitter), PAGE_SCHEMA
         )

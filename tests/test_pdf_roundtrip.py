@@ -244,6 +244,11 @@ def test_ascii85_and_runlength_filters():
         assert _rle_decode(_rle_encode(data)) == data
     assert _a85_decode(b"9jqo^BlbD-BleB1DJ+*+F(f,q~>") == b"Man is distinguished"
     assert _a85_decode(b"z~>") == b"\x00\x00\x00\x00"
+    # §7.4.3: a final partial group of one character is an error (the
+    # stdlib decoder would return b"" for b"!")
+    for lone in (b"!~>", b"<~9jqo^ \n!~>", b"z!"):
+        with pytest.raises(ValueError):
+            _a85_decode(lone)
 
     d = corpus.gen_doc(3, seed=42, skew_every=0)
     raw = pdfparse.unwrap_pdf_bytes(d["pdf"])

@@ -29,12 +29,14 @@ def _collect_spans(df):
 
 
 def test_span_sequence_equality(spark, docs_df, monkeypatch):
-    """Golden spans from both sides of the skew router. At the default
+    """Golden spans for all three routing shapes. At the default
     threshold every corpus doc (<= 64 pages) is assembled in the narrow
-    kernel; at threshold 16 the 61-page book doc-42-00000025 takes the
-    repartition → page emitter → doc_spans branch instead."""
+    kernel and there is no tail; at threshold 16 the 61-page book
+    doc-42-00000025 takes the repartition → page emitter → doc_spans
+    branch instead; at threshold 0 every doc does and the narrow side is
+    empty."""
     golden = _collect_spans(docs_df.select("doc_id", "spans"))
-    for threshold in (pipeline.SKEW_PAGE_THRESHOLD, 16):
+    for threshold in (pipeline.SKEW_PAGE_THRESHOLD, 16, 0):
         monkeypatch.setattr(pipeline, "SKEW_PAGE_THRESHOLD", threshold)
         got = _collect_spans(pipeline.run_extraction(spark, docs_df))
         assert set(got) == set(golden)

@@ -52,14 +52,34 @@ def test_q1_partial_aggregation(spark):
     assert "HashAggregate" in plan  # hash-based, codegen-eligible (not sort agg)
 
 
-def test_extraction_single_shuffle_after_parse(spark):
-    """The no-checkpoint plan routes once: exactly two MapInPandas nodes.
+def _map_count(plan: str) -> int:
+    return sum("MapInPandas" in ln for ln in plan.splitlines())
+
+
+def test_extraction_no_tail_maps_only_narrow_side(spark):
+    """No doc is over the skew threshold, so skew_route returns no tail:
+    the plan is the narrow doc kernel alone, with no exchange anywhere."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(spark, 3, seed=5, skew_every=0)
+    result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
+    plan = _plan(result)
+    assert _map_count(plan) == 1, plan
+    assert "spans#" in plan and "page_text_len#" not in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "BatchEvalPython" not in plan
+
+
+def test_extraction_single_shuffle_after_parse(spark, monkeypatch):
+    """With a skew tail (threshold 0 sends every doc to it) the
+    no-checkpoint plan routes once: exactly two MapInPandas nodes.
     The narrow doc kernel reads the scan with no exchange below it and
     emits finished (doc_id, spans) rows. The page kernel sits directly
     above the skew tail's REPARTITION_BY_NUM exchange; its rows are hashed
     by doc_id once for doc_spans (window + groupBy reuse that partitioning)."""
     from docprompt_spark import pipeline
 
+    monkeypatch.setattr(pipeline, "SKEW_PAGE_THRESHOLD", 0)
     docs = pipeline.corpus_df(spark, 3, seed=5, skew_every=0)
     result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
     plan = _plan(result)
@@ -74,6 +94,53 @@ def test_extraction_single_shuffle_after_parse(spark):
     assert not any("Exchange" in ln for ln in lines[narrow:scan]), plan
     assert plan.count("Exchange") == 2  # tail repartition + doc_id hash
     assert "BatchEvalPython" not in plan
+
+
+@pytest.mark.parametrize("fn", ["parse_pages", "page_blocks"])
+def test_router_maps_tail_only_when_present(spark, monkeypatch, fn):
+    """parse_pages and page_blocks map one kernel per side that exists:
+    one MapInPandas with no tail, two when threshold 0 forces one."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(spark, 3, seed=5, skew_every=0)
+    buckets = pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
+    for threshold, n_maps in ((pipeline.SKEW_PAGE_THRESHOLD, 1), (0, 2)):
+        monkeypatch.setattr(pipeline, "SKEW_PAGE_THRESHOLD", threshold)
+        plan = _plan(getattr(pipeline, fn)(buckets))
+        assert _map_count(plan) == n_maps, (threshold, plan)
+        assert ("REPARTITION_BY_NUM" in plan) == (n_maps == 2), plan
+
+
+def test_skew_probe_runs_in_jvm_reading_only_n_pages(spark, tmp_path, monkeypatch):
+    """skew_route decides whether a tail exists with tail.isEmpty(). On a
+    parquet corpus with no tail docs that probe runs no Python and scans
+    only n_pages: it must never read the pdf bytes."""
+    import re
+
+    from docprompt_spark import pipeline
+
+    path = str(tmp_path / "docs")
+    pipeline.corpus_df(spark, 3, seed=5, skew_every=0).write.parquet(path)
+    docs = spark.read.parquet(path).select("doc_id", "pdf", "n_pages")
+    probed = []
+    is_empty = type(docs).isEmpty
+
+    def spy(df):
+        empty = is_empty(df)
+        # Dataset.isEmpty executes select().limit(1)
+        probed.append((_plan(df.select().limit(1)), empty))
+        return empty
+
+    monkeypatch.setattr(type(docs), "isEmpty", spy)
+    pipeline.run_extraction(spark, docs)
+    assert len(probed) == 1
+    plan, empty = probed[0]
+    assert empty
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan, plan
+    assert re.findall(r"ReadSchema: (struct<[^>]*>)", plan) == [
+        "struct<n_pages:int>"
+    ], plan
 
 
 @pytest.mark.parametrize("name", query_params(_queries.queries()))

@@ -14,11 +14,20 @@ def _spans_map(df):
     }
 
 
-def test_checkpoint_resume_exact(spark, tmp_path):
-    ckpt = str(tmp_path / "ckpt")
+def test_checkpoint_resume_exact(spark, tmp_path, monkeypatch):
+    """Checkpoint = no-checkpoint equality at the default skew threshold
+    (no tail) and at threshold 0 (every doc in the tail, the narrow side
+    empty)."""
     docs = pipeline.corpus_df(spark, 12, seed=7, skew_every=0)
     docs.persist().count()
+    outputs = []
+    for threshold in (pipeline.SKEW_PAGE_THRESHOLD, 0):
+        monkeypatch.setattr(pipeline, "SKEW_PAGE_THRESHOLD", threshold)
+        outputs.append(_resume_exact(spark, docs, str(tmp_path / f"ckpt{threshold}")))
+    assert outputs[0] == outputs[1]
 
+
+def _resume_exact(spark, docs, ckpt):
     # reference output: single uninterrupted run, no checkpointing
     expected = _spans_map(pipeline.run_extraction(spark, docs))
 
@@ -49,6 +58,7 @@ def test_checkpoint_resume_exact(spark, tmp_path):
     result3 = pipeline.run_extraction(spark, docs, checkpoint_dir=ckpt, run_id="run3")
     assert _spans_map(result3) == expected
     assert spark.read.parquet(f"{ckpt}/pages").count() == before
+    return expected
 
 
 def test_cache_proportion_progress_metric(spark, tmp_path):
