@@ -454,18 +454,13 @@ def eexec_decrypt(data: bytes, r: int = _EEXEC_R, skip: int = 4) -> bytes:
     it into a prefix sum — the whole keystream vectorizes into a handful of
     wrap-around uint16 numpy passes (8x the per-byte loop, verified
     byte-identical on randomized inputs incl. the charstring key/skip
-    variants). The scalar loop is kept as the no-numpy fallback."""
+    variants). Only the low 16 bits of the key ``r`` take part."""
+    import numpy as np
+
+    r &= 0xFFFF
     n = len(data)
     if n == 0:
         return b""
-    try:
-        import numpy as np
-    except ImportError:
-        out = bytearray()
-        for c in data:
-            out.append((c ^ (r >> 8)) & 0xFF)
-            r = ((c + r) * _C1 + _C2) & 0xFFFF
-        return bytes(out[skip:])
     c8 = np.frombuffer(data, np.uint8)
     c = c8.astype(np.uint16)
     a = c * np.uint16(_C1) + np.uint16(_C2)  # a_k = C1*c_k + C2 (mod 2^16)

@@ -238,89 +238,50 @@ def _codec_of(xo_dict, resolve, payload=None) -> str:
     return "unknown"
 
 
-def media_table(docs_df: DataFrame, pages_per_bucket: int = 16) -> DataFrame:
-    """Extract the media sidecar table from document PDFs (image XObjects),
-    salted/partitioned exactly like the text parse stage."""
+def media_table(docs_df: DataFrame) -> DataFrame:
+    """Extract the media sidecar table from (doc_id, pdf, n_pages) doc rows:
+    one row per image the content interpreter paints (image XObjects, also
+    inside form XObjects, and BI/ID/EI inline images; hidden optional
+    content excluded). That is the image list media spans come from, so
+    each media span joins exactly one row. Salted and routed by
+    pipeline.skew_route, like the other per-page tables."""
     from docprompt_spark import pipeline
-    from docprompt_spark.shipping import ensure_py_files
-
-    ensure_py_files(docs_df.sparkSession)
-    buckets = pipeline.salt_page_buckets(docs_df, pages_per_bucket)
-    pruned = buckets.select("doc_id", "pdf", "page_bucket").repartition(
-        buckets.sparkSession.sparkContext.defaultParallelism * 2,
-        "doc_id",
-        "page_bucket",
-    )
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from docprompt_spark import pdfparse
+        from docprompt_spark.pipeline import PAGES_PER_BUCKET
 
         for batch in batches:
             rows = []
             for doc_id, blob, bucket in zip(
                 batch["doc_id"], batch["pdf"], batch["page_bucket"]
             ):
-                lo = int(bucket) * pages_per_bucket
-                pf = pdfparse.PdfFile(bytes(blob))
-                hi = min(lo + pages_per_bucket, pf.page_count)
-                for i in range(lo, hi):
-                    page = pf.resolve(pf.page_refs[i])
-                    resources = pf._inherited(page, "Resources") or {}
-                    xobjs = pf.resolve(resources.get("XObject", {})) or {}
-                    for _name, ref in xobjs.items():
-                        xo = pf.resolve(ref)
-                        if xo.dict.get("Subtype") != "Image":
-                            continue
-                        payload = xo.raw
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "page_number": i + 1,
-                                "media_ref": hashlib.md5(payload).hexdigest(),
-                                "media_kind": "image",
-                                "codec": _codec_of(xo.dict, pf.resolve, payload),
-                                "payload": payload,
-                                "width": int(pf.resolve(xo.dict.get("Width", 0))),
-                                "height": int(pf.resolve(xo.dict.get("Height", 0))),
-                                "n_bytes": len(payload),
-                                "palette": indexed_palette(xo.dict, pf.resolve),
-                            }
-                        )
-                    # BI/ID/EI inline images live in the content stream, not
-                    # the XObject resources — same media_ref contract
-                    contents = pf.resolve(page.get("Contents"))
-                    if contents is None:
-                        continue
-                    if isinstance(contents, list):
-                        cdata = b"\n".join(
-                            pf.resolve(c).data(pf.resolve) for c in contents
-                        )
-                    else:
-                        cdata = contents.data(pf.resolve)
-                    for ii in pdfparse.inline_images(cdata):
-                        rows.append(
-                            {
-                                "doc_id": doc_id,
-                                "page_number": i + 1,
-                                "media_ref": hashlib.md5(ii.raw).hexdigest(),
-                                "media_kind": "image",
-                                "codec": _codec_of(ii.dict, pf.resolve),
-                                "payload": ii.raw,
-                                "width": int(ii.dict.get("Width", 0) or 0),
-                                "height": int(ii.dict.get("Height", 0) or 0),
-                                "n_bytes": len(ii.raw),
-                                # inline /CS [/I ...] expands to full names
-                                # at tokenize time, so the same extractor
-                                # applies
-                                "palette": indexed_palette(
-                                    ii.dict, pf.resolve
-                                ),
-                            }
-                        )
+                lo = int(bucket) * PAGES_PER_BUCKET
+                pages = pdfparse.extract_pages(
+                    bytes(blob), lo, lo + PAGES_PER_BUCKET,
+                    with_image_data=True, with_vectors=False,
+                )
+                rows += [
+                    {
+                        "doc_id": doc_id,
+                        "page_number": p["page_number"],
+                        "media_ref": im["media_ref"],
+                        "media_kind": "image",
+                        "codec": im["codec"],
+                        "payload": im["payload"],
+                        "width": im["px_w"],
+                        "height": im["px_h"],
+                        "n_bytes": len(im["payload"]),
+                        "palette": im["palette"],
+                    }
+                    for p in pages
+                    for im in p["images"]
+                ]
             if rows:
                 yield pd.DataFrame(rows)
 
-    return pruned.mapInPandas(extract, schema=MEDIA_SCHEMA)
+    buckets = pipeline.salt_page_buckets(docs_df)
+    return pipeline._route_and_map(buckets, extract, MEDIA_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

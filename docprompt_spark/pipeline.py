@@ -3,9 +3,9 @@
 Spark shape (SURVEY.md §3.1 "Spark shape"):
 
     docs(doc_id, pdf, n_pages)
-      → explode page buckets (salting: explicit skew handling for huge docs,
-        replacing the reference's greedy LPT bin-packing,
-        /root/reference/docprompt/_pdfium.py:258-289)
+      → explode page buckets of PAGES_PER_BUCKET pages (salting: explicit
+        skew handling for huge docs, replacing the reference's greedy LPT
+        bin-packing, /root/reference/docprompt/_pdfium.py:258-289)
       → skew_route: docs of <= SKEW_PAGE_THRESHOLD pages stay narrow, only
         the skew tail is repartitioned by (doc_id, page_bucket); a tail
         exists only when some doc is over the threshold
@@ -24,6 +24,12 @@ at MapInPandas, and a REPARTITION_BY_NUM shuffle is never coalesced. An
 input that is an uncached Python-generated frame, such as the recompress
 pre-map of queries.extraction_recompressed_spans, is evaluated once more
 by the probe.
+
+Every per-page table (parse_pages, page_blocks, rasterize.page_raster_table,
+multimodal.media_table) takes doc rows, salts them itself and maps its
+kernel through the same router (_route_and_map). The bucket size is one
+constant, PAGES_PER_BUCKET, not an option: the salting and the kernel that
+parses a bucket must agree on it, and it is part of the checkpoint key.
 
 One parse kernel (_parse_kernel) owns the bucket loop, the GC guard, the
 extract_pages call and its timing, the on_error policy and the page layout,
@@ -145,11 +151,13 @@ DOC_SPANS_SCHEMA = StructType(
     ]
 )
 
-DEFAULT_PAGES_PER_BUCKET = 16
-SKEW_PAGE_THRESHOLD = 4 * DEFAULT_PAGES_PER_BUCKET
+# The one bucket size: the salting explode and every kernel that parses a
+# bucket read it, and it is part of the checkpoint key (doc_id, page_bucket)
+PAGES_PER_BUCKET = 16
+SKEW_PAGE_THRESHOLD = 4 * PAGES_PER_BUCKET
 
 
-def salt_page_buckets(docs_df: DataFrame, pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET) -> DataFrame:
+def salt_page_buckets(docs_df: DataFrame) -> DataFrame:
     """Explode each document into (doc_id, page_bucket) work units.
 
     A 5000-page document becomes ~312 independent tasks instead of one
@@ -158,14 +166,14 @@ def salt_page_buckets(docs_df: DataFrame, pages_per_bucket: int = DEFAULT_PAGES_
     bucket here is the sandbox stand-in.
     """
     n_buckets = F.greatest(
-        F.lit(1), F.ceil(F.col("n_pages") / F.lit(pages_per_bucket))
+        F.lit(1), F.ceil(F.col("n_pages") / F.lit(PAGES_PER_BUCKET))
     ).cast("int")
     return docs_df.withColumn(
         "page_bucket", F.explode(F.sequence(F.lit(0), n_buckets - F.lit(1)))
     )
 
 
-def _parse_kernel(pages_per_bucket: int, on_error: str, new_emitter):
+def _parse_kernel(on_error: str, new_emitter):
     """The mapInPandas parse kernel over (doc_id, pdf, page_bucket) rows.
 
     Each bucket's pages are parsed and laid out, then handed to the task's
@@ -192,10 +200,10 @@ def _parse_kernel(pages_per_bucket: int, on_error: str, new_emitter):
                     pdf_batch["doc_id"], pdf_batch["pdf"], pdf_batch["page_bucket"]
                 ):
                     t0 = time.perf_counter()
-                    lo = int(bucket) * pages_per_bucket
+                    lo = int(bucket) * PAGES_PER_BUCKET
                     try:
                         pages = pdfparse.extract_pages(
-                            bytes(blob), lo, lo + pages_per_bucket,
+                            bytes(blob), lo, lo + PAGES_PER_BUCKET,
                             with_vectors=False,
                         )
                     except Exception:
@@ -336,14 +344,11 @@ def _route_and_map(buckets_df: DataFrame, fn, schema) -> DataFrame:
     return out if tail is None else out.unionAll(tail.mapInPandas(fn, schema=schema))
 
 
-def parse_pages(
-    buckets_df: DataFrame,
-    pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET,
-    on_error: str = "fail",
-) -> DataFrame:
-    """Salted bucket rows → PAGE_SCHEMA page rows, routed by skew_route."""
-    fn = _parse_kernel(pages_per_bucket, on_error, _page_emitter)
-    return _route_and_map(buckets_df, fn, PAGE_SCHEMA)
+def parse_pages(docs_df: DataFrame, on_error: str = "fail") -> DataFrame:
+    """(doc_id, pdf, n_pages) doc rows → PAGE_SCHEMA page rows, salted
+    here and routed by skew_route."""
+    fn = _parse_kernel(on_error, _page_emitter)
+    return _route_and_map(salt_page_buckets(docs_df), fn, PAGE_SCHEMA)
 
 
 def _layout_to_block_row(doc_id: str, page_number: int, layout: dict) -> dict:
@@ -393,19 +398,15 @@ def _layout_to_block_row(doc_id: str, page_number: int, layout: dict) -> dict:
     }
 
 
-def page_blocks(
-    buckets_df: DataFrame,
-    pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET,
-    on_error: str = "fail",
-) -> DataFrame:
+def page_blocks(docs_df: DataFrame, on_error: str = "fail") -> DataFrame:
     """The TextBlock hierarchy as a TABLE: per page, arrays of word/line/
     block-level blocks with normalized bboxes and page-level text spans
     (start/end char offsets) — the relational form of the reference's
     OcrPageResult (tasks/ocr/result.py word/line/block_level_blocks), which
-    provenance search consumes (provenance/search.py:42-82). Routed by
-    skew_route, like parse_pages."""
-    fn = _parse_kernel(pages_per_bucket, on_error, _block_emitter)
-    return _route_and_map(buckets_df, fn, BLOCKS_SCHEMA)
+    provenance search consumes (provenance/search.py:42-82). Takes doc
+    rows, salted here and routed by skew_route, like parse_pages."""
+    fn = _parse_kernel(on_error, _block_emitter)
+    return _route_and_map(salt_page_buckets(docs_df), fn, BLOCKS_SCHEMA)
 
 
 def doc_spans(pages_df: DataFrame) -> DataFrame:
@@ -449,7 +450,6 @@ def run_extraction(
     docs_df: DataFrame,
     checkpoint_dir: Optional[str] = None,
     run_id: Optional[str] = None,
-    pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET,
     on_error: str = "fail",
 ) -> DataFrame:
     """End-to-end extraction with optional checkpoint/resume + lineage.
@@ -464,7 +464,7 @@ def run_extraction(
     tail and the checkpoint path drop only the failed buckets.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    buckets = salt_page_buckets(docs_df, pages_per_bucket)
+    buckets = salt_page_buckets(docs_df)
 
     if checkpoint_dir is None:
         # Narrow side (the overwhelming majority): parse + doc assembly in
@@ -472,14 +472,11 @@ def run_extraction(
         # page buckets across the cluster and reassembles via doc_spans().
         narrow, tail = skew_route(buckets)
         docs = narrow.mapInPandas(
-            _parse_kernel(pages_per_bucket, on_error, _doc_emitter),
-            DOC_SPANS_SCHEMA,
+            _parse_kernel(on_error, _doc_emitter), DOC_SPANS_SCHEMA
         )
         if tail is None:
             return docs
-        pages = tail.mapInPandas(
-            _parse_kernel(pages_per_bucket, on_error, _page_emitter), PAGE_SCHEMA
-        )
+        pages = tail.mapInPandas(_parse_kernel(on_error, _page_emitter), PAGE_SCHEMA)
         return docs.unionByName(doc_spans(pages))
 
     pages_path = f"{checkpoint_dir}/pages"
@@ -490,9 +487,9 @@ def run_extraction(
     except Exception:  # first run: no checkpoint yet
         todo = buckets
 
-    new_pages = parse_pages(todo, pages_per_bucket, on_error).withColumn(
-        "run_id", F.lit(run_id)
-    )
+    new_pages = _route_and_map(
+        todo, _parse_kernel(on_error, _page_emitter), PAGE_SCHEMA
+    ).withColumn("run_id", F.lit(run_id))
     new_pages.write.mode("append").parquet(pages_path)
 
     all_pages = spark.read.parquet(pages_path)
@@ -518,21 +515,14 @@ def run_extraction(
     return doc_spans(all_pages)
 
 
-def cache_proportion(
-    spark: SparkSession,
-    docs_df: DataFrame,
-    checkpoint_dir: str,
-    pages_per_bucket: int = DEFAULT_PAGES_PER_BUCKET,
-) -> float:
+def cache_proportion(spark: SparkSession, docs_df: DataFrame, checkpoint_dir: str) -> float:
     """A8 ``cache_proportion`` (reference rasterizer.py:299-303): the
     fraction of the corpus's (doc_id, page_bucket) work units already
     present in the checkpoint table — the progress metric a resumed run
     reports before deciding how much work remains. 0.0 when no checkpoint
     exists yet; computed with one distinct + one semi-join count, no
     driver-side iteration."""
-    buckets = salt_page_buckets(docs_df, pages_per_bucket).select(
-        "doc_id", "page_bucket"
-    )
+    buckets = salt_page_buckets(docs_df).select("doc_id", "page_bucket")
     total = buckets.count()
     if total == 0:
         return 0.0

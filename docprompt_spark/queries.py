@@ -4612,8 +4612,7 @@ def extraction_page_stats(spark, sf_dir):
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, 12, seed=7, skew_every=5)
-    buckets = pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
-    pages = pipeline.parse_pages(buckets)
+    pages = pipeline.parse_pages(docs.select("doc_id", "pdf", "n_pages"))
     return (
         pages.groupBy("doc_id")
         .agg(
@@ -4911,9 +4910,7 @@ def textblock_line_geometry(spark, sf_dir):
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(
-        pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
-    )
+    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
     lines = blocks.select(
         "doc_id",
         "page_number",
@@ -4969,9 +4966,7 @@ def textblock_block_rollup(spark, sf_dir):
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(
-        pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
-    )
+    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
     exploded = blocks.select("doc_id", "page_number", F.explode("block_blocks").alias("b"))
     return exploded.groupBy("doc_id", F.col("page_number").cast("int").alias("page_number")).agg(
         F.count("*").cast("int").alias("n_blocks"),
@@ -5019,9 +5014,7 @@ def textblock_bounding_polys(spark, sf_dir):
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(
-        pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
-    )
+    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
     exploded = blocks.select(
         "doc_id",
         "page_number",
@@ -5081,9 +5074,7 @@ def block_type_dispatch(spark, sf_dir):
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(
-        pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
-    )
+    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
     words = blocks.select(
         "doc_id", "page_number", F.lit("word").alias("block_type"),
         F.explode("word_blocks").alias("b"),

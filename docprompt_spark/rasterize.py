@@ -726,21 +726,22 @@ RASTER_SCHEMA = StructType(
 )
 
 
-def _render_kernel(pages_per_bucket: int, dpi: int):
+def _render_kernel(dpi: int):
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         import pandas as pd
 
         from docprompt_spark import kernels, multimodal, pdfparse
+        from docprompt_spark.pipeline import PAGES_PER_BUCKET
 
         for batch in batches:
             rows = []
             for doc_id, blob, bucket in zip(
                 batch["doc_id"], batch["pdf"], batch["page_bucket"]
             ):
-                lo = int(bucket) * pages_per_bucket
+                lo = int(bucket) * PAGES_PER_BUCKET
                 pf = pdfparse.PdfFile(bytes(blob))
                 glyphs = pf.glyph_outline_pool()  # embedded CFF outlines
-                hi = min(lo + pages_per_bucket, pf.page_count)
+                hi = min(lo + PAGES_PER_BUCKET, pf.page_count)
                 pages = []
                 for i in range(lo, hi):
                     pg = pf.extract_page(i, with_image_data=True)
@@ -805,11 +806,7 @@ def _render_kernel(pages_per_bucket: int, dpi: int):
     return fn
 
 
-def page_raster_table(
-    docs_df: DataFrame,
-    dpi: int = DEFAULT_DPI,
-    pages_per_bucket: int = 16,
-) -> DataFrame:
+def page_raster_table(docs_df: DataFrame, dpi: int = DEFAULT_DPI) -> DataFrame:
     """(doc_id, pdf, n_pages) -> per-page raster digests, rendered in the
     same salted ``mapInPandas`` shape as the text parse and routed by
     pipeline.skew_route: narrow for small docs, repartitioned for the skew
@@ -818,7 +815,5 @@ def page_raster_table(
     digests leave the kernel."""
     from docprompt_spark import pipeline
 
-    buckets = pipeline.salt_page_buckets(docs_df, pages_per_bucket)
-    return pipeline._route_and_map(
-        buckets, _render_kernel(pages_per_bucket, dpi), RASTER_SCHEMA
-    )
+    buckets = pipeline.salt_page_buckets(docs_df)
+    return pipeline._route_and_map(buckets, _render_kernel(dpi), RASTER_SCHEMA)

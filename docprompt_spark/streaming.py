@@ -33,7 +33,6 @@ def stream_extraction(
     input_dir: str,
     output_dir: str,
     checkpoint_dir: str,
-    pages_per_bucket: int = 16,
     available_now: bool = True,
 ):
     """Continuously extract span sequences from documents arriving as parquet
@@ -50,9 +49,7 @@ def stream_extraction(
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        result = pipeline.run_extraction(
-            spark, batch_df, pages_per_bucket=pages_per_bucket
-        )
+        result = pipeline.run_extraction(spark, batch_df)
         # idempotent replay: overwrite ONLY this batch's partition
         (
             result.withColumn("batch_id", F.lit(batch_id))

@@ -7,12 +7,13 @@
         jobs/extract_job.py \
         --input  <parquet dir: (doc_id, pdf, n_pages)> \
         --output <parquet dir: (doc_id, spans)> \
-        [--checkpoint <dir>] [--run-id <id>] [--pages-per-bucket 16] \
+        [--checkpoint <dir>] [--run-id <id>] \
         [--shuffle-partitions N] [--explain]
 
 Designed for multi-executor clusters: the job carries no driver-side state
-beyond the plan; skew salting, checkpoint/resume and lineage live in
-docprompt_spark.pipeline. Build the zip with jobs/make_package.py.
+beyond the plan; skew salting (fixed 16-page buckets,
+pipeline.PAGES_PER_BUCKET, which the checkpoint keys on), checkpoint/resume
+and lineage live in docprompt_spark.pipeline. Build the zip with jobs/make_package.py.
 """
 
 from __future__ import annotations
@@ -35,7 +36,6 @@ def main() -> None:
     )
     ap.add_argument("--checkpoint", default=None)
     ap.add_argument("--run-id", default=None)
-    ap.add_argument("--pages-per-bucket", type=int, default=16)
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     ap.add_argument("--explain", action="store_true")
     args = ap.parse_args()
@@ -57,11 +57,7 @@ def main() -> None:
 
     docs = spark.read.parquet(args.input).select("doc_id", "pdf", "n_pages")
     result = pipeline.run_extraction(
-        spark,
-        docs,
-        checkpoint_dir=args.checkpoint,
-        run_id=args.run_id,
-        pages_per_bucket=args.pages_per_bucket,
+        spark, docs, checkpoint_dir=args.checkpoint, run_id=args.run_id
     )
     if args.explain:
         result.explain("formatted")

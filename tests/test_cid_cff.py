@@ -8,6 +8,7 @@ per-FD Private widths) -> rasterize, with golden spans/rasters
 form-INVARIANT vs the metrics-only CIDFontType2 descendant."""
 
 import hashlib
+import warnings
 
 from docprompt_spark import cff, fontgen, kernels, pdfparse, pdfwrite, rasterize
 
@@ -182,9 +183,14 @@ def test_eexec_decrypt_vectorized_matches_scalar():
         return bytes(out[skip:])
 
     rng = random.Random(7)
-    for r0, skip in ((55665, 4), (4330, 4), (4330, 0), (55665, 2)):
-        for n in (0, 1, 2, 3, 17, 256, 4097):
-            data = bytes(rng.randrange(256) for _ in range(n))
-            assert cff.eexec_decrypt(data, r=r0, skip=skip) == scalar(
-                data, r0, skip
-            ), (r0, skip, n)
+    keys = ((55665, 4), (4330, 4), (4330, 0), (55665, 2))
+    # a key over 16 bits acts as its low 16 bits, with no numpy overflow
+    keys += tuple((r0 + 65536, skip) for r0, skip in keys)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        for r0, skip in keys:
+            for n in (0, 1, 2, 3, 17, 256, 4097):
+                data = bytes(rng.randrange(256) for _ in range(n))
+                assert cff.eexec_decrypt(data, r=r0, skip=skip) == scalar(
+                    data, r0, skip
+                ), (r0, skip, n)

@@ -16,8 +16,17 @@ def media(spark):
     return docs, m
 
 
-def test_media_table_matches_extraction_media_spans(spark, media):
+@pytest.mark.parametrize(
+    "envelope", [None, "inline", "ocg", "scanned"], ids=lambda e: e or "default"
+)
+def test_media_table_matches_extraction_media_spans(spark, media, envelope):
+    """Media spans and media_table rows come from the same image list. The
+    envelopes are where a separate image walk could part from it: BI/ID/EI
+    inline images, hidden optional content and full-page scans."""
     docs, m = media
+    if envelope is not None:
+        docs = pipeline.corpus_df(spark, 12, seed=11, skew_every=0, envelope=envelope)
+        m = multimodal.media_table(docs.select("doc_id", "pdf", "n_pages"))
     result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
     spans_media = (
         pipeline.spans_exploded(result)
@@ -27,7 +36,9 @@ def test_media_table_matches_extraction_media_spans(spark, media):
     # every media span joins to exactly one media payload row (content-addressed)
     joined = spans_media.join(m, ["doc_id", "media_ref"], "left")
     assert joined.filter(F.col("payload").isNull()).count() == 0
-    assert spans_media.count() == m.count()
+    n_spans = spans_media.count()
+    assert n_spans > 0
+    assert joined.count() == n_spans == m.count()
 
 
 def test_media_payload_content_addressed(media):

@@ -45,7 +45,7 @@ def test_span_sequence_equality(spark, docs_df, monkeypatch):
 
 
 def test_salting_spreads_skew_doc(spark, docs_df):
-    buckets = pipeline.salt_page_buckets(docs_df, pages_per_bucket=8)
+    buckets = pipeline.salt_page_buckets(docs_df)
     per_doc = {
         r["doc_id"]: r["n"]
         for r in buckets.groupBy("doc_id").count().withColumnRenamed("count", "n").collect()

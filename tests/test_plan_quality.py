@@ -7,6 +7,7 @@ import os
 import pyspark.sql.functions as F
 import pytest
 
+from docprompt_spark import multimodal, pipeline, rasterize
 from docprompt_spark import queries as _queries
 from tests.conftest import needs_ref_ocr, query_params
 
@@ -96,19 +97,28 @@ def test_extraction_single_shuffle_after_parse(spark, monkeypatch):
     assert "BatchEvalPython" not in plan
 
 
-@pytest.mark.parametrize("fn", ["parse_pages", "page_blocks"])
-def test_router_maps_tail_only_when_present(spark, monkeypatch, fn):
-    """parse_pages and page_blocks map one kernel per side that exists:
-    one MapInPandas with no tail, two when threshold 0 forces one."""
-    from docprompt_spark import pipeline
-
+@pytest.mark.parametrize(
+    "table",
+    [
+        pipeline.parse_pages,
+        pipeline.page_blocks,
+        multimodal.media_table,
+        rasterize.page_raster_table,
+    ],
+    ids=lambda table: table.__name__,
+)
+def test_router_maps_tail_only_when_present(spark, monkeypatch, table):
+    """Every per-page table takes doc rows and maps one kernel per side of
+    the router that exists: one MapInPandas with no tail, two when
+    threshold 0 forces one."""
     docs = pipeline.corpus_df(spark, 3, seed=5, skew_every=0)
-    buckets = pipeline.salt_page_buckets(docs.select("doc_id", "pdf", "n_pages"))
+    docs = docs.select("doc_id", "pdf", "n_pages")
     for threshold, n_maps in ((pipeline.SKEW_PAGE_THRESHOLD, 1), (0, 2)):
         monkeypatch.setattr(pipeline, "SKEW_PAGE_THRESHOLD", threshold)
-        plan = _plan(getattr(pipeline, fn)(buckets))
+        plan = _plan(table(docs))
         assert _map_count(plan) == n_maps, (threshold, plan)
         assert ("REPARTITION_BY_NUM" in plan) == (n_maps == 2), plan
+        assert n_maps == 2 or "Exchange" not in plan, plan
 
 
 def test_skew_probe_runs_in_jvm_reading_only_n_pages(spark, tmp_path, monkeypatch):
