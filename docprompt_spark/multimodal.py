@@ -28,7 +28,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -38,6 +37,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from docprompt_spark.shipping import map_rows
 
 MEDIA_SCHEMA = StructType(
     [
@@ -284,18 +285,6 @@ def media_table(docs_df: DataFrame) -> DataFrame:
     return pipeline._route_and_map(buckets, extract, MEDIA_SCHEMA)
 
 
-# ---------------------------------------------------------------------------
-# Codec stub
-# ---------------------------------------------------------------------------
-
-try:  # optional: only used to cross-check codecs when present
-    from PIL import Image  # noqa: F401
-
-    _HAVE_PIL = True
-except ImportError:
-    _HAVE_PIL = False
-
-
 def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:
     """Deterministic fallback 'pixels' for CORRUPT payloads only — every
     shipped codec (raw/Flate/LZW/PNG/JPEG incl. progressive/CCITT/JBIG2/
@@ -519,6 +508,21 @@ def decode_or_stub(
 # Vectorized media kernels (Arrow batch in/out)
 # ---------------------------------------------------------------------------
 
+# thumbnail grid of resize_thumbnails; frame size and count of frame_sample
+THUMB_W = THUMB_H = 8
+FRAME_BYTES = 64
+MAX_FRAMES = 4
+
+_DECODE_COLS = ("media_ref", "payload", "width", "height", "codec", "palette")
+
+
+def _decode_f64(payload, w, h, codec, pal) -> np.ndarray:
+    """decode_or_stub over one media row's columns, as float64 pixels."""
+    return decode_or_stub(
+        bytes(payload), w, h, codec, palette=None if pal is None else bytes(pal)
+    ).astype(np.float64)
+
+
 FEATURE_SCHEMA = StructType(
     [
         StructField("media_ref", StringType(), False),
@@ -532,32 +536,12 @@ FEATURE_SCHEMA = StructType(
 def image_features(media_df: DataFrame) -> DataFrame:
     """Decode (stub) → per-image intensity/edge features."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for ref, payload, w, h, codec, pal in zip(
-                batch["media_ref"], batch["payload"], batch["width"],
-                batch["height"], batch["codec"], batch["palette"],
-            ):
-                px = decode_or_stub(
-                    bytes(payload), w, h, codec,
-                    palette=None if pal is None else bytes(pal),
-                ).astype(np.float64)
-                gx = np.abs(np.diff(px, axis=1)).mean() if px.shape[1] > 1 else 0.0
-                out.append(
-                    {
-                        "media_ref": ref,
-                        "mean_intensity": float(px.mean()),
-                        "std_intensity": float(px.std()),
-                        "edge_density": float(gx),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def rows_of(ref, payload, w, h, codec, pal):
+        px = _decode_f64(payload, w, h, codec, pal)
+        gx = np.abs(np.diff(px, axis=1)).mean() if px.shape[1] > 1 else 0.0
+        yield (ref, float(px.mean()), float(px.std()), float(gx))
 
-    return media_df.select(
-        "media_ref", "payload", "width", "height", "codec", "palette"
-    ).mapInPandas(fn, schema=FEATURE_SCHEMA)
+    return map_rows(media_df.select(*_DECODE_COLS), rows_of, FEATURE_SCHEMA)
 
 
 RESIZE_SCHEMA = StructType(
@@ -570,38 +554,23 @@ RESIZE_SCHEMA = StructType(
 )
 
 
-def resize_thumbnails(media_df: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
-    """Decode (stub) → box-downsample to out_w×out_h (rasterize.py:69-116
+def resize_thumbnails(media_df: DataFrame) -> DataFrame:
+    """Decode (stub) → box-downsample to THUMB_W×THUMB_H (rasterize.py:69-116
     analog); emits the thumbnail as a numeric array column."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for ref, payload, w, h, codec, pal in zip(
-                batch["media_ref"], batch["payload"], batch["width"],
-                batch["height"], batch["codec"], batch["palette"],
-            ):
-                px = decode_or_stub(
-                    bytes(payload), w, h, codec,
-                    palette=None if pal is None else bytes(pal),
-                ).astype(np.float64)
-                ys = np.linspace(0, px.shape[0], out_h + 1).astype(int)
-                xs = np.linspace(0, px.shape[1], out_w + 1).astype(int)
-                thumb = [
-                    float(px[ys[i] : max(ys[i + 1], ys[i] + 1),
-                             xs[j] : max(xs[j + 1], xs[j] + 1)].mean())
-                    for i in range(out_h)
-                    for j in range(out_w)
-                ]
-                out.append(
-                    {"media_ref": ref, "out_w": out_w, "out_h": out_h, "thumb": thumb}
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def rows_of(ref, payload, w, h, codec, pal):
+        px = _decode_f64(payload, w, h, codec, pal)
+        ys = np.linspace(0, px.shape[0], THUMB_H + 1).astype(int)
+        xs = np.linspace(0, px.shape[1], THUMB_W + 1).astype(int)
+        thumb = [
+            float(px[ys[i] : max(ys[i + 1], ys[i] + 1),
+                     xs[j] : max(xs[j + 1], xs[j] + 1)].mean())
+            for i in range(THUMB_H)
+            for j in range(THUMB_W)
+        ]
+        yield (ref, THUMB_W, THUMB_H, thumb)
 
-    return media_df.select(
-        "media_ref", "payload", "width", "height", "codec", "palette"
-    ).mapInPandas(fn, schema=RESIZE_SCHEMA)
+    return map_rows(media_df.select(*_DECODE_COLS), rows_of, RESIZE_SCHEMA)
 
 
 FRAME_SCHEMA = StructType(
@@ -614,28 +583,17 @@ FRAME_SCHEMA = StructType(
 )
 
 
-def frame_sample(media_df: DataFrame, every_n_bytes: int = 64, max_frames: int = 4) -> DataFrame:
+def frame_sample(media_df: DataFrame) -> DataFrame:
     """Video-style frame sampling stub: treat the payload as a byte stream of
-    fixed-size 'frames' and sample every k-th — the mapInPandas fan-out shape
-    (one input row → many frame rows) a real ffmpeg-backed sampler uses."""
+    FRAME_BYTES-byte 'frames' and keep the first MAX_FRAMES — the
+    mapInPandas fan-out shape (one input row → many frame rows) a real
+    ffmpeg-backed sampler uses."""
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            out = []
-            for ref, payload in zip(batch["media_ref"], batch["payload"]):
-                data = bytes(payload)
-                n_frames = min(max(len(data) // every_n_bytes, 1), max_frames)
-                for k in range(n_frames):
-                    frame = data[k * every_n_bytes : (k + 1) * every_n_bytes]
-                    out.append(
-                        {
-                            "media_ref": ref,
-                            "frame_idx": k,
-                            "frame_hash": hashlib.md5(frame).hexdigest(),
-                            "frame_bytes": len(frame),
-                        }
-                    )
-            if out:
-                yield pd.DataFrame(out)
+    def rows_of(ref, payload):
+        data = bytes(payload)
+        n_frames = min(max(len(data) // FRAME_BYTES, 1), MAX_FRAMES)
+        for k in range(n_frames):
+            frame = data[k * FRAME_BYTES : (k + 1) * FRAME_BYTES]
+            yield (ref, k, hashlib.md5(frame).hexdigest(), len(frame))
 
-    return media_df.select("media_ref", "payload").mapInPandas(fn, schema=FRAME_SCHEMA)
+    return map_rows(media_df.select("media_ref", "payload"), rows_of, FRAME_SCHEMA)

@@ -586,7 +586,6 @@ def corpus_df_distributed(
     seed: int = 42,
     skew_every: int = 47,
     envelope: str = None,
-    parallelism: Optional[int] = None,
 ) -> DataFrame:
     """Corpus generated ON THE EXECUTORS (``gen_doc`` is a pure function of
     ``(idx, seed)``): the driver ships only the index range. This is the
@@ -594,30 +593,14 @@ def corpus_df_distributed(
     byte through the driver and is only appropriate for oracle-scale
     fixtures. Used by bench.py to materialize its cached corpus in
     parallel."""
-    from docprompt_spark.shipping import ensure_py_files
+    from docprompt_spark.corpus import gen_doc
+    from docprompt_spark.shipping import map_rows
 
-    ensure_py_files(spark)
-    nparts = parallelism or spark.sparkContext.defaultParallelism * 2
+    nparts = spark.sparkContext.defaultParallelism * 2
     idx_df = spark.range(n_docs).repartition(nparts)
 
-    def fn(batches):
-        from docprompt_spark.corpus import gen_doc
+    def rows_of(idx):
+        d = gen_doc(int(idx), seed=seed, skew_every=skew_every, envelope=envelope)
+        yield (d["doc_id"], bytes(d["pdf"]), d["n_pages"], d["spans"])
 
-        for b in batches:
-            rows = []
-            for idx in b["id"]:
-                d = gen_doc(
-                    int(idx), seed=seed, skew_every=skew_every, envelope=envelope
-                )
-                rows.append(
-                    {
-                        "doc_id": d["doc_id"],
-                        "pdf": bytes(d["pdf"]),
-                        "n_pages": d["n_pages"],
-                        "spans": d["spans"],
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return idx_df.mapInPandas(fn, schema=DOCS_SCHEMA)
+    return map_rows(idx_df, rows_of, DOCS_SCHEMA)

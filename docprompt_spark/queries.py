@@ -29,6 +29,8 @@ from typing import Callable, Dict, Tuple, Union
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from docprompt_spark.shipping import map_rows
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 Oracle = Union[str, Callable[[], str]]
 _REGISTRY: Dict[str, Tuple[QueryFn, Oracle]] = {}
@@ -3392,32 +3394,13 @@ def html_main_content(spark, sf_dir):
     span emission (kind, text, media_ref, offset). Runs Arrow-batched in
     mapInPandas; oracle = the corpus generator's STRUCTURAL golden spans
     (asserted against the extractor at generation time)."""
-    import pandas as pd
+    from docprompt_spark.html_extract import extract_main_content
 
-    from docprompt_spark.shipping import ensure_py_files
-
-    ensure_py_files(spark)
     docs = _html_corpus_df(spark).repartition(8, "doc_id")
 
-    def fn(batches):
-        from docprompt_spark.html_extract import extract_main_content
-
-        for batch in batches:
-            rows = []
-            for doc_id, html_src in zip(batch["doc_id"], batch["html"]):
-                for seq, s in enumerate(extract_main_content(html_src)):
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "seq": seq,
-                            "kind": s["kind"],
-                            "text": s["text"],
-                            "media_ref": s["media_ref"],
-                            "offset": s["offset"],
-                        }
-                    )
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_of(doc_id, html_src):
+        for seq, s in enumerate(extract_main_content(html_src)):
+            yield (doc_id, seq, s["kind"], s["text"], s["media_ref"], s["offset"])
 
     from pyspark.sql.types import (
         IntegerType,
@@ -3436,7 +3419,7 @@ def html_main_content(spark, sf_dir):
             StructField("offset", IntegerType(), False),
         ]
     )
-    return docs.mapInPandas(fn, schema=schema)
+    return map_rows(docs, rows_of, schema)
 
 
 def _html_stats_oracle_sql() -> str:
@@ -3466,42 +3449,23 @@ def html_boilerplate_stats(spark, sf_dir):
     """Per-document boilerplate statistics (content vs dropped blocks, word
     totals, media counts) over the HTML corpus; oracle = structural ground
     truth from the generator."""
-    import pandas as pd
+    from docprompt_spark.html_extract import boilerplate_stats
 
-    from docprompt_spark.shipping import ensure_py_files
-
-    ensure_py_files(spark)
     docs = _html_corpus_df(spark).repartition(8, "doc_id")
+    stats = ["n_blocks", "n_content_blocks", "n_boilerplate_blocks",
+             "content_words", "n_media"]
 
-    def fn(batches):
-        from docprompt_spark.html_extract import boilerplate_stats
-
-        for batch in batches:
-            rows = []
-            for doc_id, html_src in zip(batch["doc_id"], batch["html"]):
-                st = boilerplate_stats(html_src)
-                st["doc_id"] = doc_id
-                rows.append(st)
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_of(doc_id, html_src):
+        st = boilerplate_stats(html_src)
+        yield (doc_id, *(st[k] for k in stats))
 
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
     schema = StructType(
-        [
-            StructField("n_blocks", IntegerType(), False),
-            StructField("n_content_blocks", IntegerType(), False),
-            StructField("n_boilerplate_blocks", IntegerType(), False),
-            StructField("content_words", IntegerType(), False),
-            StructField("boilerplate_words", IntegerType(), False),
-            StructField("n_media", IntegerType(), False),
-            StructField("doc_id", StringType(), False),
-        ]
+        [StructField("doc_id", StringType(), False)]
+        + [StructField(k, IntegerType(), False) for k in stats]
     )
-    return docs.mapInPandas(fn, schema=schema).select(
-        "doc_id", "n_blocks", "n_content_blocks", "n_boilerplate_blocks",
-        "content_words", "n_media",
-    )
+    return map_rows(docs, rows_of, schema)
 
 
 def _audio_corpus():
@@ -3552,32 +3516,23 @@ def audio_features(spark, sf_dir):
     external libs) → duration / RMS / zero-crossing-rate features per clip,
     Arrow-batched; oracle = the same features computed driver-side from the
     deterministic corpus."""
-    import pandas as pd
+    from docprompt_spark import wav
 
-    from docprompt_spark.shipping import ensure_py_files
-
-    ensure_py_files(spark)
     docs = spark.createDataFrame(
         [(a, bytearray(b)) for a, b in _audio_corpus()], ["audio_id", "payload"]
     ).repartition(4, "audio_id")
+    feats = ["sample_rate", "n_samples", "duration_sec", "rms", "peak",
+             "zero_crossing_rate"]
 
-    def fn(batches):
-        from docprompt_spark import wav
-
-        for batch in batches:
-            rows = []
-            for aid, payload in zip(batch["audio_id"], batch["payload"]):
-                f = wav.features(bytes(payload))
-                f["audio_id"] = aid
-                rows.append(f)
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_of(aid, payload):
+        f = wav.features(bytes(payload))
+        yield (aid, *(f[k] for k in feats))
 
     schema = (
-        "sample_rate int, n_samples int, duration_sec double, rms double,"
-        " peak double, zero_crossing_rate double, audio_id string"
+        "audio_id string, sample_rate int, n_samples int, duration_sec double,"
+        " rms double, peak double, zero_crossing_rate double"
     )
-    out = docs.mapInPandas(fn, schema=schema)
+    out = map_rows(docs, rows_of, schema)
     return out.select(
         "audio_id", "sample_rate", "n_samples",
         F.round("duration_sec", 5).alias("duration_sec"),
@@ -3619,32 +3574,16 @@ def media_png_export(spark, sf_dir):
 
     media = _corpus_media(spark)
 
-    def fn(batches):
-        import pandas as pd
-
-        for batch in batches:
-            out = []
-            for ref, payload, w, h, codec, pal in zip(
-                batch["media_ref"], batch["payload"], batch["width"],
-                batch["height"], batch["codec"], batch["palette"],
-            ):
-                try:
-                    px = multimodal.decode_image(
-                        bytes(payload), w, h, codec,
-                        palette=None if pal is None else bytes(pal),
-                    )
-                except NotImplementedError:
-                    continue
-                data = _png.encode(px)
-                out.append(
-                    {
-                        "media_ref": ref,
-                        "png_md5": _hl.md5(data).hexdigest(),
-                        "png_bytes": len(data),
-                    }
-                )
-            if out:
-                yield pd.DataFrame(out)
+    def rows_of(ref, payload, w, h, codec, pal):
+        try:
+            px = multimodal.decode_image(
+                bytes(payload), w, h, codec,
+                palette=None if pal is None else bytes(pal),
+            )
+        except NotImplementedError:
+            return
+        data = _png.encode(px)
+        yield (ref, _hl.md5(data).hexdigest(), len(data))
 
     from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
@@ -3655,9 +3594,10 @@ def media_png_export(spark, sf_dir):
             StructField("png_bytes", IntegerType(), False),
         ]
     )
-    return media.select(
-        "media_ref", "payload", "width", "height", "codec", "palette"
-    ).mapInPandas(fn, schema=schema)
+    return map_rows(
+        media.select("media_ref", "payload", "width", "height", "codec", "palette"),
+        rows_of, schema,
+    )
 
 
 def _golden_raster_rows(n_docs=16, seed=11):
@@ -4011,29 +3951,17 @@ for _name, _n_docs, _envelope, _doc in _GOLDEN_SPAN_QUERIES:
 
 
 def _pdf_rows(docs: DataFrame, schema: str, rows_of) -> DataFrame:
-    """The document-structure queries' shared loop: open each ``(doc_id,
-    pdf)`` row as a ``PdfFile`` and emit the tuples ``rows_of(doc_id, pf)``
-    yields, in ``schema``'s column order. Arrow-batched mapInPandas; at
-    scale a zero-shuffle map over the files."""
-    cols = [c.split()[0] for c in schema.split(",")]
+    """The document-structure queries' adapter over ``shipping.map_rows``:
+    open each ``(doc_id, pdf)`` row as a ``PdfFile`` and emit the tuples
+    ``rows_of(doc_id, pf)`` yields, in ``schema``'s column order. At scale
+    a zero-shuffle map over the files."""
+    from docprompt_spark import pdfparse
 
-    def fn(batches):
-        import pandas as pd
+    def open_rows(doc_id, pdf):
+        pf = pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
+        return rows_of(doc_id, pf)
 
-        from docprompt_spark import pdfparse
-
-        for b in batches:
-            rows = [
-                r
-                for doc_id, pdf in zip(b["doc_id"], b["pdf"])
-                for r in rows_of(
-                    doc_id, pdfparse.PdfFile(pdfparse.unwrap_pdf_bytes(bytes(pdf)))
-                )
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-
-    return docs.select("doc_id", "pdf").mapInPandas(fn, schema=schema)
+    return map_rows(docs.select("doc_id", "pdf"), open_rows, schema)
 
 
 def _link_annotations_oracle_sql() -> str:
@@ -4557,22 +4485,16 @@ def extraction_recompressed_spans(spark, sf_dir):
     recompression exactly — the oracle is the generator's golden spans
     (non-circular), projected without ``media_ref`` since that column
     hashes the encoded payload recompression legitimately rewrites."""
-    from docprompt_spark import pipeline
+    from docprompt_spark import pdfparse, pipeline, recompress
 
-    def _rc_batches(batches):
-        from docprompt_spark import pdfparse, recompress
-
-        for batch in batches:
-            batch["pdf"] = batch["pdf"].map(
-                lambda b: recompress.recompress_pdf(
-                    pdfparse.unwrap_pdf_bytes(bytes(b)), "jpeg"
-                )
-            )
-            yield batch
+    def recompressed(doc_id, pdf, n_pages):
+        rc = recompress.recompress_pdf(pdfparse.unwrap_pdf_bytes(bytes(pdf)), "jpeg")
+        yield (doc_id, rc, n_pages)
 
     docs = pipeline.corpus_df(spark, 6, seed=_FLAGSHIP_SEED, skew_every=0)
-    rc_docs = docs.select("doc_id", "pdf", "n_pages").mapInPandas(
-        _rc_batches, schema="doc_id string, pdf binary, n_pages int"
+    rc_docs = map_rows(
+        docs.select("doc_id", "pdf", "n_pages"), recompressed,
+        "doc_id string, pdf binary, n_pages int",
     )
     return _spans_df(spark, rc_docs, with_media_ref=False)
 
@@ -4816,13 +4738,9 @@ def provenance_refined_search(spark, sf_dir):
     Scale pattern (r2 verdict fix): queries are a broadcast TABLE joined
     onto the docs, not a Python closure — at 100 TB the query set is its
     own table and the kernel reads it as a column."""
-    import pandas as pd
-
-    from docprompt_spark import pipeline
+    from docprompt_spark import kernels, pdfparse, pipeline
     from docprompt_spark.corpus import gen_corpus
-    from docprompt_spark.shipping import ensure_py_files
 
-    ensure_py_files(spark)
     qrows = []
     for d in gen_corpus(6, seed=17, skew_every=0):
         words = [s["text"] for s in d["spans"] if s["kind"] == "word"][:3]
@@ -4836,41 +4754,22 @@ def provenance_refined_search(spark, sf_dir):
         .join(F.broadcast(queries_df), "doc_id")
     )
 
-    def fn(batches):
-        from docprompt_spark import kernels, pdfparse
-
-        for batch in batches:
-            rows = []
-            for doc_id, blob, q in zip(
-                batch["doc_id"], batch["pdf"], batch["query"]
-            ):
-                for p in pdfparse.extract_pages(bytes(blob)):
-                    hit = kernels.refine_query_to_word_level(p["words"], q)
-                    if hit is None:
-                        continue
-                    merged, matched = hit
-                    rows.append(
-                        {
-                            "doc_id": doc_id,
-                            "page_number": p["page_number"],
-                            "query": q,
-                            "matched_text": merged["text"],
-                            "x0": merged["x0"],
-                            "top": merged["top"],
-                            "x1": merged["x1"],
-                            "bottom": merged["bottom"],
-                            "n_words": len(matched),
-                        }
-                    )
-                    break
-            if rows:
-                yield pd.DataFrame(rows)
+    def rows_of(doc_id, blob, q):
+        for p in pdfparse.extract_pages(bytes(blob)):
+            hit = kernels.refine_query_to_word_level(p["words"], q)
+            if hit is not None:
+                merged, matched = hit
+                yield (
+                    doc_id, p["page_number"], q, merged["text"], merged["x0"],
+                    merged["top"], merged["x1"], merged["bottom"], len(matched),
+                )
+                return
 
     schema = (
         "doc_id string, page_number int, query string, matched_text string,"
         " x0 double, top double, x1 double, bottom double, n_words int"
     )
-    return docs.repartition(8, "doc_id").mapInPandas(fn, schema=schema)
+    return map_rows(docs.repartition(8, "doc_id"), rows_of, schema)
 
 
 def _textblock_lines_oracle_sql() -> str:

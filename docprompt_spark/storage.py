@@ -11,8 +11,8 @@ the same three sidecar members the reference writes:
 
 The reference wraps fsspec for driver-side CRUD; at 10^12 documents the
 writes must happen ON THE EXECUTORS, so the distributed form
-(:func:`write_sidecars_df`) runs the same layout inside
-``df.foreachPartition`` — no bytes ever pass through the driver — while
+(:func:`write_sidecars_df`) runs the same layout inside a
+``shipping.map_rows`` kernel — no bytes ever pass through the driver — while
 the scalar helpers stay byte-compatible for single-document use and for
 reading any sidecar the distributed writer produced.
 
@@ -112,9 +112,7 @@ def delete_sidecar(base_path: str, file_hash: str) -> bool:
     return False
 
 
-def write_sidecars_df(
-    docs_df: DataFrame, base_path: str, compress: bool = False
-) -> DataFrame:
+def write_sidecars_df(docs_df: DataFrame, base_path: str) -> DataFrame:
     """Distributed sidecar writer: every partition writes its own rows'
     sidecars directly (executor-side I/O, driver sees only the manifest).
     ``docs_df`` needs ``doc_id`` and ``pdf`` columns; ``n_pages`` (when
@@ -123,36 +121,22 @@ def write_sidecars_df(
     tables."""
     from pyspark.sql.types import StringType, StructField, StructType
 
+    from docprompt_spark.shipping import map_rows
+
     schema = StructType(
         [
             StructField("doc_id", StringType(), False),
             StructField("file_hash", StringType(), False),
         ]
     )
-    cols = docs_df.columns
+    cols = [c for c in ("doc_id", "pdf", "n_pages") if c in docs_df.columns]
 
-    def fn(it):
-        import pandas as pd
+    def rows_of(doc_id, pdf, n_pages=None):
+        meta = {"doc_id": str(doc_id)}
+        if n_pages is not None:
+            meta["n_pages"] = int(n_pages)
+        pdf = bytes(pdf)
+        write_sidecar(base_path, pdf, metadata=meta)
+        yield (str(doc_id), file_hash_of(pdf))
 
-        for batch in it:
-            rows = []
-            for _, row in batch.iterrows():
-                pdf = bytes(row["pdf"])
-                meta = {"doc_id": str(row["doc_id"])}
-                if "n_pages" in cols:
-                    meta["n_pages"] = int(row["n_pages"])
-                paths = write_sidecar(
-                    base_path, pdf, metadata=meta, compress=compress
-                )
-                rows.append(
-                    {
-                        "doc_id": str(row["doc_id"]),
-                        "file_hash": os.path.basename(
-                            os.path.dirname(paths["pdf"])
-                        ),
-                    }
-                )
-            if rows:
-                yield pd.DataFrame(rows)
-
-    return docs_df.mapInPandas(fn, schema=schema)
+    return map_rows(docs_df.select(*cols), rows_of, schema)

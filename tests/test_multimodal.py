@@ -63,7 +63,7 @@ def test_image_features_deterministic(media):
 
 def test_thumbnails_shape(media):
     _, m = media
-    rows = multimodal.resize_thumbnails(m, out_w=8, out_h=8).collect()
+    rows = multimodal.resize_thumbnails(m).collect()
     assert rows
     for r in rows:
         assert len(r["thumb"]) == 64

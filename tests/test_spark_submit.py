@@ -1,12 +1,16 @@
-"""Ship-shape check: the job runs via real `spark-submit --py-files` with the
+"""Ship-shape checks: the job runs via real `spark-submit --py-files` with the
 zip built by jobs/make_package.py — executors import docprompt_spark from the
-archive, not from the repo checkout (north rule packaging requirement)."""
+archive, not from the repo checkout (north rule packaging requirement) — and
+a session started outside the repo ships the package itself before its first
+Python kernel."""
 
 import os
 import subprocess
 import sys
+import textwrap
 
 import pyspark.sql.functions as F
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -63,3 +67,62 @@ def test_spark_submit_py_files(spark, tmp_path):
         for r in result.collect()
     }
     assert got == golden
+
+
+# Each case's body runs in a fresh session as its FIRST Python kernel and
+# prints the row count it got.
+_FIRST_KERNEL_CASES = {
+    "page_labels": (
+        """
+        import __spark_entry__ as e
+        print(e.queries()["page_labels"](spark, "").count())
+        """,
+        22,
+    ),
+    "image_features": (
+        """
+        from docprompt_spark import multimodal
+        media = spark.createDataFrame(
+            [("m0", bytearray(range(12)), 4, 3, "gray8", None)],
+            "media_ref string, payload binary, width int, height int,"
+            " codec string, palette binary",
+        )
+        print(multimodal.image_features(media).count())
+        """,
+        1,
+    ),
+    "write_sidecars_df": (
+        """
+        from docprompt_spark import pipeline, storage
+        docs = pipeline.corpus_df(spark, 2, seed=23, skew_every=0)
+        print(storage.write_sidecars_df(docs, "sidecars").count())
+        """,
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FIRST_KERNEL_CASES))
+def test_first_python_kernel_ships_package(tmp_path, case):
+    """A session whose workers start outside the repo, with PYTHONPATH
+    unset, can import docprompt_spark only from the zip the package ships
+    itself; a kernel that skips shipping fails with ModuleNotFoundError."""
+    body, want = _FIRST_KERNEL_CASES[case]
+    script = (
+        f"import sys\nsys.path.insert(0, {REPO!r})\n"
+        "from docprompt_spark.session import get_spark\n"
+        "spark = get_spark(master='local[2]', shuffle_partitions=2)\n"
+        + textwrap.dedent(body)
+    )
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert proc.stdout.split()[-1] == str(want)
