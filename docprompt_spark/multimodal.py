@@ -244,23 +244,20 @@ def media_table(docs_df: DataFrame) -> DataFrame:
     one row per image the content interpreter paints (image XObjects, also
     inside form XObjects, and BI/ID/EI inline images; hidden optional
     content excluded). That is the image list media spans come from, so
-    each media span joins exactly one row. Salted and routed by
-    pipeline.skew_route, like the other per-page tables."""
+    each media span joins exactly one row. Routed by pipeline.skew_route,
+    like the other per-page tables."""
     from docprompt_spark import pipeline
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from docprompt_spark import pdfparse
-        from docprompt_spark.pipeline import PAGES_PER_BUCKET
+        from docprompt_spark.shipping import pin_zip_importers
 
+        pin_zip_importers()
         for batch in batches:
             rows = []
-            for doc_id, blob, bucket in zip(
-                batch["doc_id"], batch["pdf"], batch["page_bucket"]
-            ):
-                lo = int(bucket) * PAGES_PER_BUCKET
+            for doc_id, blob, lo, hi in pipeline.page_ranges(batch):
                 pages = pdfparse.extract_pages(
-                    bytes(blob), lo, lo + PAGES_PER_BUCKET,
-                    with_image_data=True, with_vectors=False,
+                    blob, lo, hi, with_image_data=True, with_vectors=False
                 )
                 rows += [
                     {
@@ -281,8 +278,7 @@ def media_table(docs_df: DataFrame) -> DataFrame:
             if rows:
                 yield pd.DataFrame(rows)
 
-    buckets = pipeline.salt_page_buckets(docs_df)
-    return pipeline._route_and_map(buckets, extract, MEDIA_SCHEMA)
+    return pipeline._route_and_map(docs_df, extract, MEDIA_SCHEMA)
 
 
 def _fake_decode(payload: bytes, width: int, height: int) -> np.ndarray:

@@ -3,17 +3,25 @@
 Spark shape (SURVEY.md §3.1 "Spark shape"):
 
     docs(doc_id, pdf, n_pages)
-      → explode page buckets of PAGES_PER_BUCKET pages (salting: explicit
-        skew handling for huge docs, replacing the reference's greedy LPT
-        bin-packing, /root/reference/docprompt/_pdfium.py:258-289)
-      → skew_route: docs of <= SKEW_PAGE_THRESHOLD pages stay narrow, only
-        the skew tail is repartitioned by (doc_id, page_bucket); a tail
-        exists only when some doc is over the threshold
-      → narrow: mapInPandas(parse + layout + doc assembly), no post-parse
-        shuffle                          # Arrow-batched, no per-row Python UDFs
-      → tail, if any: mapInPandas(parse + layout) → doc_spans (window +
-        groupBy)
+      → skew_route: docs of <= SKEW_PAGE_THRESHOLD pages stay narrow, as
+        (doc_id, pdf) rows in the input partitioning; only the skew tail is
+        exploded into page buckets of PAGES_PER_BUCKET pages (salting:
+        explicit skew handling for huge docs, replacing the reference's
+        greedy LPT bin-packing, reference docprompt/_pdfium.py:258-289)
+        and repartitioned by (doc_id, page_bucket); a tail exists only when
+        some doc is over the threshold
+      → narrow: mapInPandas(parse + layout + doc assembly), one work unit
+        per doc, parsed whole with one PdfFile; no post-parse shuffle
+                                         # Arrow-batched, no per-row Python UDFs
+      → tail, if any: mapInPandas(parse + layout) per bucket → doc_spans
+        (window + groupBy)
       → (doc_id, spans array<struct<kind,text,media_ref,offset>>)
+
+A narrow doc is one unit because everything a bucket costs beyond its
+pages (re-opening the PDF, re-walking the page tree, reloading fonts) buys
+nothing below the threshold, and because its pages then never depend on
+n_pages: a doc whose n_pages understates its page tree still comes out
+whole. The tail still trusts n_pages for its bucket count.
 
 Whether a tail exists is decided by a probe job that runs in the JVM only
 (tail.isEmpty(); on parquet it reads only n_pages). The job is worth it:
@@ -26,22 +34,27 @@ pre-map of queries.extraction_recompressed_spans, is evaluated once more
 by the probe.
 
 Every per-page table (parse_pages, page_blocks, rasterize.page_raster_table,
-multimodal.media_table) takes doc rows, salts them itself and maps its
-kernel through the same router (_route_and_map). The bucket size is one
-constant, PAGES_PER_BUCKET, not an option: the salting and the kernel that
-parses a bucket must agree on it, and it is part of the checkpoint key.
+multimodal.media_table) takes doc rows and maps its kernel through the same
+router (_route_and_map); page_ranges turns a routed batch into page ranges,
+a whole doc or a bucket. The bucket size is one constant, PAGES_PER_BUCKET,
+not an option: the salting and the kernel that parses a bucket must agree
+on it, and it is part of the checkpoint key. Per-page emitters stamp every
+page with page_bucket = (page_number - 1) // PAGES_PER_BUCKET, so page rows
+carry that key whichever side parsed them.
 
-One parse kernel (_parse_kernel) owns the bucket loop, the GC guard, the
+One parse kernel (_parse_kernel) owns the unit loop, the GC guard, the
 extract_pages call and its timing, the on_error policy and the page layout,
 and feeds one of three emitters: page rows (parse_pages, the skew tail, the
 checkpoint path), block rows (page_blocks) or doc rows (the narrow side).
 
 Checkpoint/resume (reference FilesystemCache + anti-join resume,
 rasterizer.py:62-307): parsed page rows are appended to a parquet checkpoint
-table; a re-run anti-joins completed (doc_id, page_bucket) pairs and only
-parses the remainder. This path still assembles every doc through
-doc_spans. Per-partition lineage rows (partition id, doc/page/span counts,
-wall time, run id) are derived from the checkpointed pages.
+table; a re-run anti-joins narrow docs that have checkpointed pages on
+doc_id, and tail buckets on (doc_id, page_bucket), and only parses the
+remainder. A narrow doc's pages are written by one task, so they land
+together. This path still assembles every doc through doc_spans.
+Per-partition lineage rows (partition id, doc/page/span counts, wall time,
+run id) are derived from the checkpointed pages.
 """
 
 from __future__ import annotations
@@ -151,8 +164,9 @@ DOC_SPANS_SCHEMA = StructType(
     ]
 )
 
-# The one bucket size: the salting explode and every kernel that parses a
-# bucket read it, and it is part of the checkpoint key (doc_id, page_bucket)
+# The one bucket size: the salting explode, page_ranges and the per-page
+# emitters' page_bucket stamp read it, and it is part of the checkpoint key
+# (doc_id, page_bucket)
 PAGES_PER_BUCKET = 16
 SKEW_PAGE_THRESHOLD = 4 * PAGES_PER_BUCKET
 
@@ -173,39 +187,49 @@ def salt_page_buckets(docs_df: DataFrame) -> DataFrame:
     )
 
 
-def _parse_kernel(on_error: str, new_emitter):
-    """The mapInPandas parse kernel over (doc_id, pdf, page_bucket) rows.
+def page_ranges(batch: pd.DataFrame):
+    """The work units of one routed batch as (doc_id, pdf bytes, lo, hi)
+    page ranges, 0-based and half-open: a narrow batch (no page_bucket
+    column) holds whole documents, lo 0 and hi None; a tail batch holds
+    PAGES_PER_BUCKET-page buckets."""
+    if "page_bucket" not in batch:
+        for doc_id, blob in zip(batch["doc_id"], batch["pdf"]):
+            yield doc_id, bytes(blob), 0, None
+        return
+    for doc_id, blob, bucket in zip(batch["doc_id"], batch["pdf"], batch["page_bucket"]):
+        lo = int(bucket) * PAGES_PER_BUCKET
+        yield doc_id, bytes(blob), lo, lo + PAGES_PER_BUCKET
 
-    Each bucket's pages are parsed and laid out, then handed to the task's
-    emitter as ``emit(doc_id, bucket, pages, parse_ms, partition_id)``;
-    ``pages`` is a list of (page, layout) pairs, or None for a bucket that
-    raised under ``on_error="skip"``. The emitter returns output rows. A
-    last call with doc_id None flushes rows it holds back."""
+
+def _parse_kernel(on_error: str, emit):
+    """The mapInPandas parse kernel over routed rows (see page_ranges).
+
+    Each work unit's pages are parsed and laid out, then handed to
+    ``emit(doc_id, pages, parse_ms, partition_id)``; ``pages`` is a list
+    of (page, layout) pairs, or None for a unit that raised under
+    ``on_error="skip"``. The emitter returns output rows."""
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from docprompt_spark import kernels, pdfparse  # import before gc off
+        from docprompt_spark.shipping import pin_zip_importers
 
+        pin_zip_importers()
         tc = TaskContext.get()
         pid = tc.partitionId() if tc is not None else -1
-        emit = new_emitter()
         # the parse kernel allocates millions of small acyclic dicts per
         # task; cyclic-GC sweeps buy nothing here (refcounting frees
-        # everything) and cost ~6% — disable for the task, restore after
+        # everything) and cost ~6% — disable for the task, restore after.
+        # What the task leaves is all in generation 0, so collecting that
+        # generation alone is enough, and spares a sweep of the whole heap
         gc_was_enabled = gc.isenabled()
         gc.disable()
         try:
             for pdf_batch in batches:
                 rows = []
-                for doc_id, blob, bucket in zip(
-                    pdf_batch["doc_id"], pdf_batch["pdf"], pdf_batch["page_bucket"]
-                ):
+                for doc_id, blob, lo, hi in page_ranges(pdf_batch):
                     t0 = time.perf_counter()
-                    lo = int(bucket) * PAGES_PER_BUCKET
                     try:
-                        pages = pdfparse.extract_pages(
-                            bytes(blob), lo, lo + PAGES_PER_BUCKET,
-                            with_vectors=False,
-                        )
+                        pages = pdfparse.extract_pages(blob, lo, hi, with_vectors=False)
                     except Exception:
                         if on_error == "skip":
                             pages = None
@@ -216,104 +240,90 @@ def _parse_kernel(on_error: str, new_emitter):
                         pages = [
                             (p, kernels.build_page_layout(p["words"])) for p in pages
                         ]
-                    rows += emit(doc_id, int(bucket), pages, ms, pid)
+                    rows += emit(doc_id, pages, ms, pid)
                 if rows:
                     yield pd.DataFrame(rows)
-            rows = emit(None, -1, None, 0.0, pid)
-            if rows:
-                yield pd.DataFrame(rows)
         finally:
             if gc_was_enabled:
                 gc.enable()
-            gc.collect()
+            gc.collect(0)
 
     return fn
 
 
-def _page_emitter():
-    """PAGE_SCHEMA rows: one per parsed page, with page-local span offsets.
-    A failed bucket emits nothing."""
+def _emit_pages(doc_id, pages, ms, pid):
+    """PAGE_SCHEMA rows: one per parsed page, with page-local span offsets
+    and the page's bucket, (page_number - 1) // PAGES_PER_BUCKET, whether
+    it came from a whole doc or a bucket. A failed unit emits nothing."""
     from docprompt_spark import kernels
 
-    def emit(doc_id, bucket, pages, ms, pid):
-        return [
-            {
-                "doc_id": doc_id,
-                "page_bucket": bucket,
-                "page_number": p["page_number"],
-                "page_text_len": len(layout["page_text"]),
-                "spans": kernels.assemble_page_spans(layout, p["images"]),
-                "n_words": sum(len(ln["words"]) for ln in layout["lines"]),
-                "n_lines": len(layout["lines"]),
-                "n_blocks": len(layout["blocks"]),
-                "n_media": len(p["images"]),
-                "parse_ms": ms / len(pages),
-                "partition_id": pid,
-            }
-            for p, layout in pages or ()
-        ]
-
-    return emit
+    return [
+        {
+            "doc_id": doc_id,
+            "page_bucket": (p["page_number"] - 1) // PAGES_PER_BUCKET,
+            "page_number": p["page_number"],
+            "page_text_len": len(layout["page_text"]),
+            "spans": kernels.assemble_page_spans(layout, p["images"]),
+            "n_words": sum(len(ln["words"]) for ln in layout["lines"]),
+            "n_lines": len(layout["lines"]),
+            "n_blocks": len(layout["blocks"]),
+            "n_media": len(p["images"]),
+            "parse_ms": ms / len(pages),
+            "partition_id": pid,
+        }
+        for p, layout in pages or ()
+    ]
 
 
-def _block_emitter():
+def _emit_blocks(doc_id, pages, ms, pid):
     """BLOCKS_SCHEMA rows: the TextBlock hierarchy, one row per parsed page.
-    A failed bucket emits nothing."""
-
-    def emit(doc_id, bucket, pages, ms, pid):
-        return [
-            _layout_to_block_row(doc_id, p["page_number"], layout)
-            for p, layout in pages or ()
-        ]
-
-    return emit
+    A failed unit emits nothing."""
+    return [
+        _layout_to_block_row(doc_id, p["page_number"], layout)
+        for p, layout in pages or ()
+    ]
 
 
-def _doc_emitter():
-    """DOC_SPANS_SCHEMA rows: each document's span sequence, assembled in
-    the kernel. A document's buckets are consecutive within one narrow
-    partition (salt_page_buckets explodes in place), so its pages collect
-    until the next doc_id arrives; kernels.assemble_doc_spans then gives
-    the offsets and order of doc_spans() without its doc_id exchange. A
-    document with a failed bucket is dropped whole: emitting the rest
-    would shift every later offset."""
+def _emit_doc(doc_id, pages, ms, pid):
+    """DOC_SPANS_SCHEMA rows for the narrow side, whose units are whole
+    documents: kernels.assemble_doc_spans gives the offsets and order of
+    doc_spans() without its doc_id exchange. A document that failed to
+    parse, or has no pages, emits nothing."""
     from docprompt_spark import kernels
 
-    cur_doc, cur_pages, failed = None, [], False
-
-    def emit(doc_id, bucket, pages, ms, pid):
-        nonlocal cur_doc, cur_pages, failed
-        rows = []
-        if doc_id != cur_doc:
-            if cur_pages and not failed:
-                rows.append(
-                    {"doc_id": cur_doc, "spans": kernels.assemble_doc_spans(cur_pages)}
-                )
-            cur_doc, cur_pages, failed = doc_id, [], False
-        if pages is None:
-            failed = True
-        elif not failed:
-            cur_pages += [
-                {
-                    "page_number": p["page_number"],
-                    "page_text": layout["page_text"],
-                    "spans": kernels.assemble_page_spans(layout, p["images"]),
-                }
-                for p, layout in pages
-            ]
-        return rows
-
-    return emit
+    if not pages:
+        return []
+    doc_pages = [
+        {
+            "page_number": p["page_number"],
+            "page_text": layout["page_text"],
+            "spans": kernels.assemble_page_spans(layout, p["images"]),
+        }
+        for p, layout in pages
+    ]
+    return [{"doc_id": doc_id, "spans": kernels.assemble_doc_spans(doc_pages)}]
 
 
-def skew_route(buckets_df: DataFrame):
-    """The one skew router: bucket rows → (narrow, tail) frames of
-    (doc_id, pdf, page_bucket), with tail None when no doc is over
-    SKEW_PAGE_THRESHOLD pages. Docs of <= SKEW_PAGE_THRESHOLD pages (the
-    overwhelming majority) keep the input partitioning: at 100 TB you never
-    shuffle raw document bytes. Skew-tail docs repartition by (doc_id,
-    page_bucket), so a 5000-page book fans out across the cluster instead
-    of pinning one task. The threshold is read at call time.
+def skew_route(docs_df: DataFrame, done: Optional[DataFrame] = None):
+    """The one skew router: doc rows (doc_id, pdf, n_pages) → (narrow,
+    tail) frames, with tail None when no doc is over SKEW_PAGE_THRESHOLD
+    pages. The threshold is read at call time.
+
+    narrow: (doc_id, pdf) rows of the docs of <= SKEW_PAGE_THRESHOLD pages
+    (the overwhelming majority), in the input partitioning: at 100 TB you
+    never shuffle raw document bytes. Each is one work unit, parsed whole
+    with one PdfFile, so its pages never depend on n_pages.
+
+    tail: (doc_id, pdf, page_bucket) rows, the docs over the threshold
+    salted into PAGES_PER_BUCKET-page buckets (salt_page_buckets) and
+    repartitioned by (doc_id, page_bucket), so a 5000-page book fans out
+    across the cluster instead of pinning one task. Per-page emitters
+    stamp every page with its bucket, so page rows carry the same
+    (doc_id, page_bucket) key on both sides.
+
+    ``done``, on the checkpoint path, holds the (doc_id, page_bucket)
+    pairs already checkpointed: a narrow doc with any checkpointed page is
+    done (one task wrote all its pages), a tail bucket only if it is.
 
     Whether a tail exists is decided by a probe job, tail.isEmpty(), that
     runs in the JVM only and on parquet reads only n_pages. It is worth a
@@ -323,12 +333,15 @@ def skew_route(buckets_df: DataFrame):
     Python-generated input is evaluated once more by the probe."""
     from docprompt_spark.shipping import ensure_py_files
 
-    spark = buckets_df.sparkSession
+    spark = docs_df.sparkSession
     ensure_py_files(spark)
-    cols = ["doc_id", "pdf", "page_bucket"]
     n_pages = F.col("n_pages")
-    narrow = buckets_df.filter(n_pages <= SKEW_PAGE_THRESHOLD).select(*cols)
-    tail = buckets_df.filter(n_pages > SKEW_PAGE_THRESHOLD).select(*cols)
+    narrow = docs_df.filter(n_pages <= SKEW_PAGE_THRESHOLD).select("doc_id", "pdf")
+    tail = salt_page_buckets(docs_df.filter(n_pages > SKEW_PAGE_THRESHOLD))
+    tail = tail.select("doc_id", "pdf", "page_bucket")
+    if done is not None:
+        narrow = narrow.join(done.select("doc_id"), "doc_id", "left_anti")
+        tail = tail.join(done, ["doc_id", "page_bucket"], "left_anti")
     if tail.isEmpty():
         return narrow, None
     # 4 waves of small tasks on the skew path: straggler/tail variance
@@ -337,18 +350,17 @@ def skew_route(buckets_df: DataFrame):
     return narrow, tail.repartition(nparts, "doc_id", "page_bucket")
 
 
-def _route_and_map(buckets_df: DataFrame, fn, schema) -> DataFrame:
+def _route_and_map(docs_df: DataFrame, fn, schema, done=None) -> DataFrame:
     """Map one kernel over each side of skew_route that exists; union them."""
-    narrow, tail = skew_route(buckets_df)
+    narrow, tail = skew_route(docs_df, done)
     out = narrow.mapInPandas(fn, schema=schema)
     return out if tail is None else out.unionAll(tail.mapInPandas(fn, schema=schema))
 
 
 def parse_pages(docs_df: DataFrame, on_error: str = "fail") -> DataFrame:
-    """(doc_id, pdf, n_pages) doc rows → PAGE_SCHEMA page rows, salted
-    here and routed by skew_route."""
-    fn = _parse_kernel(on_error, _page_emitter)
-    return _route_and_map(salt_page_buckets(docs_df), fn, PAGE_SCHEMA)
+    """(doc_id, pdf, n_pages) doc rows → PAGE_SCHEMA page rows, routed by
+    skew_route."""
+    return _route_and_map(docs_df, _parse_kernel(on_error, _emit_pages), PAGE_SCHEMA)
 
 
 def _layout_to_block_row(doc_id: str, page_number: int, layout: dict) -> dict:
@@ -404,9 +416,8 @@ def page_blocks(docs_df: DataFrame, on_error: str = "fail") -> DataFrame:
     (start/end char offsets) — the relational form of the reference's
     OcrPageResult (tasks/ocr/result.py word/line/block_level_blocks), which
     provenance search consumes (provenance/search.py:42-82). Takes doc
-    rows, salted here and routed by skew_route, like parse_pages."""
-    fn = _parse_kernel(on_error, _block_emitter)
-    return _route_and_map(salt_page_buckets(docs_df), fn, BLOCKS_SCHEMA)
+    rows, routed by skew_route like parse_pages."""
+    return _route_and_map(docs_df, _parse_kernel(on_error, _emit_blocks), BLOCKS_SCHEMA)
 
 
 def doc_spans(pages_df: DataFrame) -> DataFrame:
@@ -454,41 +465,38 @@ def run_extraction(
 ) -> DataFrame:
     """End-to-end extraction with optional checkpoint/resume + lineage.
 
-    With ``checkpoint_dir``: completed (doc_id, page_bucket) pairs are
-    anti-joined away (exact resume, reference rasterizer.py:291-297 J4),
-    freshly parsed pages are appended to ``{dir}/pages``, and per-partition
-    lineage rows to ``{dir}/lineage``. Output is rebuilt from the checkpoint
-    table, so a resumed run yields byte-identical spans.
+    With ``checkpoint_dir``: completed work units are anti-joined away
+    (exact resume, reference rasterizer.py:291-297 J4): narrow docs by
+    doc_id, tail buckets by (doc_id, page_bucket). Freshly parsed pages are
+    appended to ``{dir}/pages``, and per-partition lineage rows to
+    ``{dir}/lineage``. Output is rebuilt from the checkpoint table, so a
+    resumed run yields byte-identical spans.
 
-    ``on_error="skip"`` drops a small doc with any failed bucket; the skew
-    tail and the checkpoint path drop only the failed buckets.
+    ``on_error="skip"`` drops a narrow doc that fails to parse; the skew
+    tail drops only the failed buckets.
     """
     run_id = run_id or uuid.uuid4().hex[:12]
-    buckets = salt_page_buckets(docs_df)
 
     if checkpoint_dir is None:
         # Narrow side (the overwhelming majority): parse + doc assembly in
         # ONE kernel — zero post-parse shuffle. Only the skew tail fans out
         # page buckets across the cluster and reassembles via doc_spans().
-        narrow, tail = skew_route(buckets)
-        docs = narrow.mapInPandas(
-            _parse_kernel(on_error, _doc_emitter), DOC_SPANS_SCHEMA
-        )
+        narrow, tail = skew_route(docs_df)
+        docs = narrow.mapInPandas(_parse_kernel(on_error, _emit_doc), DOC_SPANS_SCHEMA)
         if tail is None:
             return docs
-        pages = tail.mapInPandas(_parse_kernel(on_error, _page_emitter), PAGE_SCHEMA)
+        pages = tail.mapInPandas(_parse_kernel(on_error, _emit_pages), PAGE_SCHEMA)
         return docs.unionByName(doc_spans(pages))
 
     pages_path = f"{checkpoint_dir}/pages"
     lineage_path = f"{checkpoint_dir}/lineage"
     try:
         done = spark.read.parquet(pages_path).select("doc_id", "page_bucket").distinct()
-        todo = buckets.join(done, ["doc_id", "page_bucket"], "left_anti")
     except Exception:  # first run: no checkpoint yet
-        todo = buckets
+        done = None
 
     new_pages = _route_and_map(
-        todo, _parse_kernel(on_error, _page_emitter), PAGE_SCHEMA
+        docs_df, _parse_kernel(on_error, _emit_pages), PAGE_SCHEMA, done
     ).withColumn("run_id", F.lit(run_id))
     new_pages.write.mode("append").parquet(pages_path)
 

@@ -731,17 +731,16 @@ def _render_kernel(dpi: int):
         import pandas as pd
 
         from docprompt_spark import kernels, multimodal, pdfparse
-        from docprompt_spark.pipeline import PAGES_PER_BUCKET
+        from docprompt_spark.pipeline import page_ranges
+        from docprompt_spark.shipping import pin_zip_importers
 
+        pin_zip_importers()
         for batch in batches:
             rows = []
-            for doc_id, blob, bucket in zip(
-                batch["doc_id"], batch["pdf"], batch["page_bucket"]
-            ):
-                lo = int(bucket) * PAGES_PER_BUCKET
-                pf = pdfparse.PdfFile(bytes(blob))
+            for doc_id, blob, lo, hi in page_ranges(batch):
+                pf = pdfparse.PdfFile(blob)
                 glyphs = pf.glyph_outline_pool()  # embedded CFF outlines
-                hi = min(lo + PAGES_PER_BUCKET, pf.page_count)
+                hi = pf.page_count if hi is None else min(hi, pf.page_count)
                 pages = []
                 for i in range(lo, hi):
                     pg = pf.extract_page(i, with_image_data=True)
@@ -808,12 +807,11 @@ def _render_kernel(dpi: int):
 
 def page_raster_table(docs_df: DataFrame, dpi: int = DEFAULT_DPI) -> DataFrame:
     """(doc_id, pdf, n_pages) -> per-page raster digests, rendered in the
-    same salted ``mapInPandas`` shape as the text parse and routed by
-    pipeline.skew_route: narrow for small docs, repartitioned for the skew
-    tail. The render kernel parses through ``PdfFile`` itself, with image
-    data and the embedded glyph pool. One pass over the bytes; only
-    digests leave the kernel."""
+    same ``mapInPandas`` shape as the text parse and routed by
+    pipeline.skew_route: whole small docs narrow, page buckets of the skew
+    tail repartitioned. The render kernel parses through ``PdfFile``
+    itself, with image data and the embedded glyph pool. One pass over the
+    bytes; only digests leave the kernel."""
     from docprompt_spark import pipeline
 
-    buckets = pipeline.salt_page_buckets(docs_df)
-    return pipeline._route_and_map(buckets, _render_kernel(dpi), RASTER_SCHEMA)
+    return pipeline._route_and_map(docs_df, _render_kernel(dpi), RASTER_SCHEMA)

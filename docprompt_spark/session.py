@@ -42,7 +42,8 @@ def get_spark(
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.optimizer.nestedSchemaPruning.enabled", "true")
         # fat binary doc tables: split scans finer so the narrow (no-shuffle)
-        # parse path gets full parallelism from input splits
+        # parse path gets full parallelism from input splits; see the
+        # minPartitionNum rule below
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
         .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
@@ -54,5 +55,18 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()
+    # The split rule: a scan splits at max(openCostInBytes, input bytes /
+    # minPartitionNum), capped by maxPartitionBytes. Asking for ~4 splits
+    # per slot cuts a small input down to the 1 MB open-cost floor, where
+    # each file of one row group (the corpus writers' shape) becomes a
+    # split of its own, instead of the default parallelism packing the
+    # largest files into one straggler split. Large inputs still split at
+    # 8 MB. More tasks than slots lets fast slots take more of them; it
+    # pays because a Python task's fixed start-up is small once the
+    # worker's zip importers are pinned (shipping.pin_zip_importers).
+    spark.conf.set(
+        "spark.sql.files.minPartitionNum",
+        str(4 * spark.sparkContext.defaultParallelism),
+    )
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -5,17 +5,30 @@ The grading driver (and any real user) may construct a SparkSession from a
 working directory that is not this repo; executor Python workers then can't
 import the package (driver-side sys.path edits don't propagate). Python
 kernels enter Spark only through :func:`map_rows` (per-row kernels) or
-``pipeline.skew_route`` (the per-page bucket kernels), and each calls
+``pipeline.skew_route`` (the parse, render and media kernels), and each calls
 :func:`ensure_py_files` first — it zips the package once (content-addressed
 under /tmp) and `sc.addPyFile`s it, which is also exactly what
 `spark-submit --py-files dist/docprompt_spark.zip` does for cluster
-deployment (jobs/make_package.py)."""
+deployment (jobs/make_package.py).
+
+Every Python kernel also starts with the worker prologue
+:func:`pin_zip_importers`. PySpark calls ``importlib.invalidate_caches()``
+before each task, and on Python 3.11 that makes every zipimporter on the
+worker's ``sys.path`` re-read its archive's directory: the package zip,
+pyspark.zip, py4j, the spark-core jar (~5k entries) and the stdlib zip.
+That is most of the fixed cost of a Python task. The prologue swaps each
+plain zipimporter for one whose ``invalidate_caches`` does nothing, so
+only a worker's first task pays it. That is safe because an archive does
+not change while a worker lives, and a re-shipped package arrives under a
+new path, which gets a fresh importer of its own."""
 
 from __future__ import annotations
 
 import hashlib
 import os
+import sys
 import zipfile
+import zipimport
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
 _SHIPPED: set = set()
@@ -69,6 +82,23 @@ def ensure_py_files(spark) -> None:
     _SHIPPED.add(key)
 
 
+class _PinnedZipImporter(zipimport.zipimporter):
+    """A zipimporter that keeps the archive directory it has read."""
+
+    def invalidate_caches(self):
+        pass
+
+
+def pin_zip_importers() -> None:
+    """The worker prologue: pin every plain zipimporter in
+    ``sys.path_importer_cache`` (see the module docstring). Idempotent; a
+    new importer reads the directory its predecessor left cached."""
+    cache = sys.path_importer_cache
+    for path, finder in list(cache.items()):
+        if type(finder) is zipimport.zipimporter:
+            cache[path] = _PinnedZipImporter(path)
+
+
 def map_rows(df, rows_of, schema):
     """The per-row Python kernel: ship the package, then map every row of
     ``df`` through ``rows_of(*values)``, values in ``df``'s column order,
@@ -82,6 +112,7 @@ def map_rows(df, rows_of, schema):
     def fn(batches):
         import pandas as pd
 
+        pin_zip_importers()
         for b in batches:
             rows = [r for vals in zip(*(b[c] for c in cols)) for r in rows_of(*vals)]
             if rows:

@@ -99,3 +99,24 @@ def test_bx_ex_compatibility_sections_and_unknown_ops():
         page_w=612.0, page_h=792.0,
     )
     assert [w["text"] for w in words] == ["kept", "also"]
+
+
+def test_narrow_doc_parsed_whole_when_n_pages_understates(spark, tmp_path):
+    """A narrow doc is one work unit parsed whole, so its pages do not
+    depend on n_pages: a 61-page book that claims one page still comes out
+    with every golden span, with and without a checkpoint, and
+    page_blocks gives a row for each of its 61 pages."""
+    from docprompt_spark import corpus
+
+    book = corpus.gen_doc(25, seed=42, skew_every=25)
+    assert book["n_pages"] == 61
+    docs = spark.createDataFrame(
+        [(book["doc_id"], bytearray(book["pdf"]), 1)],
+        schema="doc_id string, pdf binary, n_pages int",
+    )
+    golden = [(s["kind"], s["text"], s["media_ref"], s["offset"]) for s in book["spans"]]
+    for ckpt in (None, str(tmp_path / "ckpt")):
+        out = pipeline.run_extraction(spark, docs, checkpoint_dir=ckpt).collect()
+        assert [r["doc_id"] for r in out] == [book["doc_id"]], ckpt
+        assert [tuple(s) for s in out[0]["spans"]] == golden, ckpt
+    assert pipeline.page_blocks(docs).count() == 61

@@ -59,7 +59,8 @@ def _map_count(plan: str) -> int:
 
 def test_extraction_no_tail_maps_only_narrow_side(spark):
     """No doc is over the skew threshold, so skew_route returns no tail:
-    the plan is the narrow doc kernel alone, with no exchange anywhere."""
+    the plan is the narrow doc kernel alone, with no exchange anywhere and
+    no salting explode (Generate): narrow docs are mapped as doc rows."""
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(spark, 3, seed=5, skew_every=0)
@@ -68,7 +69,29 @@ def test_extraction_no_tail_maps_only_narrow_side(spark):
     assert _map_count(plan) == 1, plan
     assert "spans#" in plan and "page_text_len#" not in plan, plan
     assert "Exchange" not in plan, plan
+    assert "Generate" not in plan, plan
     assert "BatchEvalPython" not in plan
+
+
+def test_small_corpus_reads_one_scan_split_per_file(spark, tmp_path):
+    """get_spark's split rule: a small parquet corpus of one-row-group
+    files reads as one scan partition per file, even with more files than
+    slots, where the default rule packs several files into one split. The
+    parse stage then gets one task per file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from docprompt_spark.corpus import gen_corpus
+
+    n_files = 2 * spark.sparkContext.defaultParallelism
+    path = tmp_path / "docs"
+    path.mkdir()
+    for i, d in enumerate(gen_corpus(n_files, seed=5, skew_every=0)):
+        row = {"doc_id": [d["doc_id"]], "pdf": [bytes(d["pdf"])], "n_pages": [d["n_pages"]]}
+        pq.write_table(pa.table(row), str(path / f"part-{i:05d}.parquet"))
+    assert all(pq.ParquetFile(str(f)).num_row_groups == 1 for f in path.iterdir())
+    scan = spark.read.parquet(str(path))
+    assert scan.rdd.getNumPartitions() == n_files
 
 
 def test_extraction_single_shuffle_after_parse(spark, monkeypatch):

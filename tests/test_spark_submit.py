@@ -126,3 +126,70 @@ def test_first_python_kernel_ships_package(tmp_path, case):
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     assert proc.stdout.split()[-1] == str(want)
+
+
+_PIN_SCRIPT = """
+import os, sys, zipfile, zipimport
+sys.path.insert(0, {repo!r})
+from docprompt_spark import shipping
+from docprompt_spark.session import get_spark
+spark = get_spark(master="local[2]", shuffle_partitions=2)
+
+
+def importers(i):
+    # runs after map_rows' own prologue: a second call must keep every
+    # importer object, and no plain zipimporter may be left
+    from docprompt_spark import shipping
+    before = dict(sys.path_importer_cache)
+    shipping.pin_zip_importers()
+    same = all(sys.path_importer_cache.get(k) is v for k, v in before.items())
+    pinned = sum(isinstance(v, shipping._PinnedZipImporter) for v in before.values())
+    plain = sum(type(v) is zipimport.zipimporter for v in before.values())
+    yield (os.getpid(), pinned, plain, same)
+
+
+def run(rows_of, schema):
+    df = spark.range(4, numPartitions=2)
+    return shipping.map_rows(df, rows_of, schema).collect()
+
+
+first = run(importers, "pid int, pinned int, plain int, same boolean")
+print("pin", all(r.pinned >= 1 and r.plain == 0 and r.same for r in first))
+
+extra = os.path.join(os.getcwd(), "extra_v2.zip")
+with zipfile.ZipFile(extra, "w") as zf:
+    zf.writestr("pin_probe_mod.py", "VALUE = 42\\n")
+spark.sparkContext.addPyFile(extra)
+
+
+def probe(i):
+    import pin_probe_mod
+    yield (os.getpid(), pin_probe_mod.VALUE)
+
+
+second = run(probe, "pid int, value int")
+print("import", all(r.value == 42 for r in second))
+print("reused", bool({{r.pid for r in first}} & {{r.pid for r in second}}))
+"""
+
+
+def test_pinned_worker_imports_newly_shipped_zip(tmp_path):
+    """The worker prologue pins each zipimporter's directory, so PySpark's
+    per-task importlib.invalidate_caches() no longer re-reads every
+    archive. A zip shipped later arrives under a new path: a worker that
+    is already pinned must still import a module from it. The prologue is
+    idempotent: a second call leaves the same importer objects."""
+    env = dict(os.environ)
+    env.pop("PYTHONPATH", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", _PIN_SCRIPT.format(repo=REPO)],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        cwd=str(tmp_path),
+        env=env,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    lines = proc.stdout.splitlines()
+    for want in ("pin True", "import True", "reused True"):
+        assert want in lines, proc.stdout
