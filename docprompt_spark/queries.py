@@ -9,9 +9,12 @@ operator: dedup, similarity search, text analysis) to
 * a DuckDB oracle SQL over the pre-registered views (``region nation
   customer supplier part orders lineitem events documents embeddings``),
   declared with the query: either the SQL string itself or a zero-argument
-  function that returns it. Those functions embed generated ground truth as
-  VALUES tables (spans, media, document structure) and run only when
-  ``oracle_sql()`` first asks for them.
+  function that returns it. Those functions embed generated ground truth
+  (spans, media, document structure) as VALUES tables and run only when
+  ``oracle_sql()`` first asks for them. Each computes Python rows and hands
+  them to ``_values_sql`` with a Spark DDL column string, which sets the
+  DuckDB column types; a query whose Spark side maps rows through
+  ``map_rows`` declares its columns with the same module-level string.
 
 Cross-engine determinism rules used throughout:
 * money aggregates: exact DECIMAL sums, then ``round(cast(.. as double), 2)``
@@ -23,6 +26,7 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import functools
+import itertools
 import sys
 from typing import Callable, Dict, Tuple, Union
 
@@ -193,6 +197,39 @@ def _h60(col, salt: str = ""):
 def _h60_sql(expr: str, salt: str = "") -> str:
     inner = f"'{salt}' || {expr}" if salt else expr
     return f"(('0x' || substr(md5({inner}), 1, 15))::BIGINT)"
+
+
+_DUCK_TYPES = {
+    "string": "VARCHAR",
+    "int": "INTEGER",
+    "bigint": "BIGINT",
+    "double": "DOUBLE",
+    "boolean": "BOOLEAN",
+}
+
+
+def _values_sql(cols: str, rows) -> str:
+    """``rows`` (Python tuples) as a typed DuckDB VALUES table whose columns
+    are declared by ``cols``, a Spark DDL string such as ``"doc_id string,
+    page_number int, x0 double"`` — the same string a query's Spark side
+    can hand to ``map_rows``. ``None`` is NULL, a ``str`` a quoted literal,
+    anything else its ``str()``: a float's shortest round-trip repr, which
+    the DOUBLE cast reads back exactly."""
+
+    def lit(v) -> str:
+        if v is None:
+            return "NULL"
+        if isinstance(v, str):
+            return "'" + v.replace("'", "''") + "'"
+        return str(v)
+
+    names, types = zip(*(c.split() for c in cols.split(",")))
+    ids = [f'"{n}"' for n in names]
+    sel = ", ".join(
+        f"CAST({i} AS {_DUCK_TYPES[t]}) AS {i}" for i, t in zip(ids, types)
+    )
+    values = ",\n".join("(" + ",".join(map(lit, r)) + ")" for r in rows)
+    return f"SELECT {sel} FROM (VALUES\n{values}\n) AS t({', '.join(ids)})"
 
 
 # ===========================================================================
@@ -1271,21 +1308,20 @@ def _spread(df, mult: int = 2):
     of text), never the payloads. Partition count derives from
     defaultParallelism — scale-adaptive, not a local constant.
 
-    Conditional on the input's ACTUAL scan parallelism: when the source
-    already yields >= defaultParallelism partitions (any real multi-split
-    corpus — at 100 TB the documents table is thousands of splits), the
+    Conditional on the input's size: when the optimizer's estimate reaches
+    defaultParallelism full splits (``spark.sql.files.maxPartitionBytes``
+    each — any real multi-split corpus; at 100 TB the documents table is
+    thousands of splits), the scan already spreads the rows and the
     repartition would be a pure full-table shuffle for nothing, so it is
-    skipped. The guard reads getNumPartitions() off the planned RDD —
-    for SCAN-LEVEL plans that is driver-side planning only, no job.
-
-    ONLY call this on scan-level inputs (no upstream exchange): with AQE
-    enabled, .rdd on a post-shuffle plan MATERIALIZES its query stages
-    eagerly — the upstream shuffles would execute once at "planning" time
-    and again in the real job. Post-shuffle stages are already
-    distributed; if one ever needs re-spreading, use a direct
-    repartition() (see the simhash sigs site)."""
-    sc = df.sparkSession.sparkContext
-    if df.rdd.getNumPartitions() >= sc.defaultParallelism:
+    skipped. The split COUNT cannot decide this: a small file of one row
+    group is cut into several scan splits of which only one holds rows.
+    The estimate is driver-side planning only — no job, no stage
+    materialized, whatever the input's upstream plan."""
+    spark = df.sparkSession
+    sc = spark.sparkContext
+    split_bytes = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    if size >= sc.defaultParallelism * split_bytes:
         return df
     return df.repartition(sc.defaultParallelism * mult)
 
@@ -1962,8 +1998,8 @@ def simhash_neardup_pairs(spark, sf_dir):
     # cores — measured 2x at sfsynth1.0 (5.15s vs 9.91s without; costs
     # ~0.8s of fixed exchange at sf0.1 — the right trade at the measured
     # scale, and the shuffled payload is O(#distinct sigs), not O(docs)).
-    # Deliberately NOT the guarded _spread: .rdd under AQE materializes
-    # query stages for post-shuffle plans (see _spread docstring).
+    # Deliberately NOT the guarded _spread: this spread is wanted whatever
+    # the size estimate of the post-shuffle input says.
     sc_ = spark.sparkContext
     sigs = grp.select("simhash").repartition(sc_.defaultParallelism * 2)
     banded = sigs.select(
@@ -3013,9 +3049,8 @@ def self_exclusion_twins(spark, sf_dir):
 def _mime_sniff_oracle_sql() -> str:
     """mime_sniff_stats golden: the corpus wraps pdf bytes by idx%4
     (corpus._wrap) — 32 docs -> raw 8, gzip 8, base64 16."""
-    return (
-        "SELECT envelope, CAST(n AS BIGINT) AS n FROM (VALUES"
-        " ('raw', 8), ('gzip', 8), ('base64', 16)) AS t(envelope, n)"
+    return _values_sql(
+        "envelope string, n bigint", [("raw", 8), ("gzip", 8), ("base64", 16)]
     )
 
 
@@ -3177,19 +3212,16 @@ def _media_inventory_oracle_sql() -> str:
     per_doc = defaultdict(list)
     for doc_id, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
         per_doc[doc_id].extend(imgs)
-    rows = []
-    for d, imgs in sorted(per_doc.items()):
-        if not imgs:
-            continue
-        refs = {im["media_ref"] for im in imgs}
-        total = sum(im["n_bytes"] for im in imgs)
-        rows.append(f"({_sql_quote(d)},{len(imgs)},{total},{len(refs)})")
-    return (
-        "SELECT doc_id, CAST(n_media AS BIGINT) AS n_media,"
-        " CAST(total_bytes AS BIGINT) AS total_bytes,"
-        " CAST(n_distinct AS BIGINT) AS n_distinct"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, n_media, total_bytes, n_distinct)"
+    return _values_sql(
+        "doc_id string, n_media bigint, total_bytes bigint, n_distinct bigint",
+        (
+            (
+                d, len(imgs), sum(im["n_bytes"] for im in imgs),
+                len({im["media_ref"] for im in imgs}),
+            )
+            for d, imgs in sorted(per_doc.items())
+            if imgs
+        ),
     )
 
 
@@ -3218,13 +3250,9 @@ def _media_codec_histogram_oracle_sql() -> str:
         for im in imgs:
             agg[im["codec"]][0] += 1
             agg[im["codec"]][1] += im["n_bytes"]
-    rows = [
-        f"({_sql_quote(c)},{n},{b})" for c, (n, b) in sorted(agg.items())
-    ]
-    return (
-        "SELECT codec, CAST(n_media AS BIGINT) AS n_media,"
-        " CAST(total_bytes AS BIGINT) AS total_bytes"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(codec, n_media, total_bytes)"
+    return _values_sql(
+        "codec string, n_media bigint, total_bytes bigint",
+        ((c, n, b) for c, (n, b) in sorted(agg.items())),
     )
 
 
@@ -3243,26 +3271,29 @@ def media_codec_histogram(spark, sf_dir):
     )
 
 
+def _golden_pixels():
+    """(media_ref, gray8 pixel array) of each distinct ground-truth image,
+    in media_ref order."""
+    import numpy as np
+
+    for ref, im in sorted(_golden_media().items()):
+        yield ref, np.frombuffer(im["samples"], dtype=np.uint8).reshape(
+            im["px_h"], im["px_w"]
+        )
+
+
 def _media_features_oracle_sql() -> str:
     import numpy as np
 
     rows = []
-    for ref, im in sorted(_golden_media().items()):
-        px = (
-            np.frombuffer(im["samples"], dtype=np.uint8)
-            .reshape(im["px_h"], im["px_w"])
-            .astype(np.float64)
-        )
+    for ref, px in _golden_pixels():
+        px = px.astype(np.float64)
         gx = float(np.abs(np.diff(px, axis=1)).mean()) if px.shape[1] > 1 else 0.0
-        rows.append(
-            f"({_sql_quote(ref)},{_r5(px.mean())},{_r5(px.std())},{_r5(gx)})"
-        )
-    return (
-        "SELECT media_ref, CAST(mean_intensity AS DOUBLE) AS mean_intensity,"
-        " CAST(std_intensity AS DOUBLE) AS std_intensity,"
-        " CAST(edge_density AS DOUBLE) AS edge_density FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(media_ref, mean_intensity, std_intensity, edge_density)"
+        rows.append((ref, _r5(px.mean()), _r5(px.std()), _r5(gx)))
+    return _values_sql(
+        "media_ref string, mean_intensity double, std_intensity double,"
+        " edge_density double",
+        rows,
     )
 
 
@@ -3287,12 +3318,8 @@ def _media_thumbnails_oracle_sql(out_w=8, out_h=8) -> str:
     import numpy as np
 
     rows = []
-    for ref, im in sorted(_golden_media().items()):
-        px = (
-            np.frombuffer(im["samples"], dtype=np.uint8)
-            .reshape(im["px_h"], im["px_w"])
-            .astype(np.float64)
-        )
+    for ref, px in _golden_pixels():
+        px = px.astype(np.float64)
         ys = np.linspace(0, px.shape[0], out_h + 1).astype(int)
         xs = np.linspace(0, px.shape[1], out_w + 1).astype(int)
         k = 0
@@ -3304,14 +3331,9 @@ def _media_thumbnails_oracle_sql(out_w=8, out_h=8) -> str:
                         xs[j] : max(xs[j + 1], xs[j] + 1),
                     ].mean()
                 )
-                rows.append(f"({_sql_quote(ref)},{k},{_r5(v)})")
+                rows.append((ref, k, _r5(v)))
                 k += 1
-    return (
-        "SELECT media_ref, CAST(cell_idx AS INT) AS cell_idx,"
-        " CAST(value AS DOUBLE) AS value FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(media_ref, cell_idx, value)"
-    )
+    return _values_sql("media_ref string, cell_idx int, value double", rows)
 
 
 @query("media_thumbnails", _media_thumbnails_oracle_sql)
@@ -3337,14 +3359,10 @@ def _media_frames_oracle_sql(every_n_bytes=64, max_frames=4) -> str:
         n_frames = min(max(len(data) // every_n_bytes, 1), max_frames)
         for k in range(n_frames):
             frame = data[k * every_n_bytes : (k + 1) * every_n_bytes]
-            rows.append(
-                f"({_sql_quote(ref)},{k},'{_hl.md5(frame).hexdigest()}',{len(frame)})"
-            )
-    return (
-        "SELECT media_ref, CAST(frame_idx AS INT) AS frame_idx, frame_hash,"
-        " CAST(frame_bytes AS INT) AS frame_bytes FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(media_ref, frame_idx, frame_hash, frame_bytes)"
+            rows.append((ref, k, _hl.md5(frame).hexdigest(), len(frame)))
+    return _values_sql(
+        "media_ref string, frame_idx int, frame_hash string, frame_bytes int",
+        rows,
     )
 
 
@@ -3360,6 +3378,12 @@ def media_frame_samples(spark, sf_dir):
 _HTML_DOCS = 12
 _HTML_SEED = 42
 
+# The span columns every extraction query emits, HTML and PDF alike.
+_SPAN_COLS = (
+    "doc_id string, seq int, kind string, text string, media_ref string,"
+    " offset int"
+)
+
 
 def _html_corpus_df(spark):
     from docprompt_spark.html_corpus import gen_html_corpus
@@ -3368,21 +3392,18 @@ def _html_corpus_df(spark):
     return spark.createDataFrame(rows, ["doc_id", "html"])
 
 
+def _spans_rows(docs):
+    """Golden span rows of generated ``docs``, in ``_SPAN_COLS`` order."""
+    for d in docs:
+        for seq, s in enumerate(d["spans"]):
+            yield (d["doc_id"], seq, s["kind"], s["text"], s["media_ref"], s["offset"])
+
+
 def _html_main_oracle_sql() -> str:
     from docprompt_spark.html_corpus import gen_html_corpus
 
-    rows = []
-    for d in gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED):
-        for seq, s in enumerate(d["spans"]):
-            rows.append(
-                f"({_sql_quote(d['doc_id'])},{seq},{_sql_quote(s['kind'])},"
-                f"{_sql_quote(s['text'])},{_sql_quote(s['media_ref'])},{s['offset']})"
-            )
-    return (
-        'SELECT doc_id, CAST(seq AS INT) AS seq, kind, text, media_ref,'
-        ' CAST("offset" AS INT) AS "offset" FROM (VALUES\n'
-        + ",\n".join(rows)
-        + '\n) AS t(doc_id, seq, kind, text, media_ref, "offset")'
+    return _values_sql(
+        _SPAN_COLS, _spans_rows(gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED))
     )
 
 
@@ -3402,45 +3423,25 @@ def html_main_content(spark, sf_dir):
         for seq, s in enumerate(extract_main_content(html_src)):
             yield (doc_id, seq, s["kind"], s["text"], s["media_ref"], s["offset"])
 
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
+    return map_rows(docs, rows_of, _SPAN_COLS)
 
-    schema = StructType(
-        [
-            StructField("doc_id", StringType(), False),
-            StructField("seq", IntegerType(), False),
-            StructField("kind", StringType(), False),
-            StructField("text", StringType(), True),
-            StructField("media_ref", StringType(), True),
-            StructField("offset", IntegerType(), False),
-        ]
-    )
-    return map_rows(docs, rows_of, schema)
+
+_HTML_STATS = (
+    "n_blocks", "n_content_blocks", "n_boilerplate_blocks", "content_words",
+    "n_media",
+)
+_HTML_STATS_COLS = "doc_id string, " + ", ".join(f"{k} int" for k in _HTML_STATS)
 
 
 def _html_stats_oracle_sql() -> str:
     from docprompt_spark.html_corpus import gen_html_corpus
 
-    rows = []
-    for d in gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED):
-        st = d["stats"]
-        rows.append(
-            f"({_sql_quote(d['doc_id'])},{st['n_blocks']},{st['n_content_blocks']},"
-            f"{st['n_boilerplate_blocks']},{st['content_words']},{st['n_media']})"
-        )
-    return (
-        "SELECT doc_id, CAST(n_blocks AS INT) AS n_blocks,"
-        " CAST(n_content_blocks AS INT) AS n_content_blocks,"
-        " CAST(n_boilerplate_blocks AS INT) AS n_boilerplate_blocks,"
-        " CAST(content_words AS INT) AS content_words,"
-        " CAST(n_media AS INT) AS n_media FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(doc_id, n_blocks, n_content_blocks, n_boilerplate_blocks,"
-        " content_words, n_media)"
+    return _values_sql(
+        _HTML_STATS_COLS,
+        (
+            (d["doc_id"], *(d["stats"][k] for k in _HTML_STATS))
+            for d in gen_html_corpus(_HTML_DOCS, seed=_HTML_SEED)
+        ),
     )
 
 
@@ -3452,20 +3453,12 @@ def html_boilerplate_stats(spark, sf_dir):
     from docprompt_spark.html_extract import boilerplate_stats
 
     docs = _html_corpus_df(spark).repartition(8, "doc_id")
-    stats = ["n_blocks", "n_content_blocks", "n_boilerplate_blocks",
-             "content_words", "n_media"]
 
     def rows_of(doc_id, html_src):
         st = boilerplate_stats(html_src)
-        yield (doc_id, *(st[k] for k in stats))
+        yield (doc_id, *(st[k] for k in _HTML_STATS))
 
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    schema = StructType(
-        [StructField("doc_id", StringType(), False)]
-        + [StructField(k, IntegerType(), False) for k in stats]
-    )
-    return map_rows(docs, rows_of, schema)
+    return map_rows(docs, rows_of, _HTML_STATS_COLS)
 
 
 def _audio_corpus():
@@ -3488,6 +3481,12 @@ def _audio_corpus():
     return out
 
 
+_AUDIO_FEATS = ("duration_sec", "rms", "peak", "zero_crossing_rate")
+_AUDIO_COLS = "audio_id string, sample_rate int, n_samples int, " + ", ".join(
+    f"{k} double" for k in _AUDIO_FEATS
+)
+
+
 def _audio_features_oracle_sql() -> str:
     from docprompt_spark import wav
 
@@ -3495,19 +3494,9 @@ def _audio_features_oracle_sql() -> str:
     for aid, payload in _audio_corpus():
         f = wav.features(payload)
         rows.append(
-            f"({_sql_quote(aid)},{f['sample_rate']},{f['n_samples']},"
-            f"{_r5(f['duration_sec'])},{_r5(f['rms'])},{_r5(f['peak'])},"
-            f"{_r5(f['zero_crossing_rate'])})"
+            (aid, f["sample_rate"], f["n_samples"], *(_r5(f[k]) for k in _AUDIO_FEATS))
         )
-    return (
-        "SELECT audio_id, CAST(sample_rate AS INT) AS sample_rate,"
-        " CAST(n_samples AS INT) AS n_samples,"
-        " CAST(duration_sec AS DOUBLE) AS duration_sec,"
-        " CAST(rms AS DOUBLE) AS rms, CAST(peak AS DOUBLE) AS peak,"
-        " CAST(zero_crossing_rate AS DOUBLE) AS zero_crossing_rate"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(audio_id, sample_rate,"
-        " n_samples, duration_sec, rms, peak, zero_crossing_rate)"
-    )
+    return _values_sql(_AUDIO_COLS, rows)
 
 
 @query("audio_features", _audio_features_oracle_sql)
@@ -3521,45 +3510,31 @@ def audio_features(spark, sf_dir):
     docs = spark.createDataFrame(
         [(a, bytearray(b)) for a, b in _audio_corpus()], ["audio_id", "payload"]
     ).repartition(4, "audio_id")
-    feats = ["sample_rate", "n_samples", "duration_sec", "rms", "peak",
-             "zero_crossing_rate"]
 
     def rows_of(aid, payload):
         f = wav.features(bytes(payload))
-        yield (aid, *(f[k] for k in feats))
+        yield (aid, f["sample_rate"], f["n_samples"], *(f[k] for k in _AUDIO_FEATS))
 
-    schema = (
-        "audio_id string, sample_rate int, n_samples int, duration_sec double,"
-        " rms double, peak double, zero_crossing_rate double"
-    )
-    out = map_rows(docs, rows_of, schema)
+    out = map_rows(docs, rows_of, _AUDIO_COLS)
     return out.select(
         "audio_id", "sample_rate", "n_samples",
-        F.round("duration_sec", 5).alias("duration_sec"),
-        F.round("rms", 5).alias("rms"),
-        F.round("peak", 5).alias("peak"),
-        F.round("zero_crossing_rate", 5).alias("zero_crossing_rate"),
+        *(F.round(k, 5).alias(k) for k in _AUDIO_FEATS),
     )
+
+
+_PNG_COLS = "media_ref string, png_md5 string, png_bytes int"
 
 
 def _media_png_oracle_sql() -> str:
     import hashlib as _hl
 
-    import numpy as np
-
     from docprompt_spark import png as _png
 
     rows = []
-    for ref, im in sorted(_golden_media().items()):
-        px = np.frombuffer(im["samples"], dtype=np.uint8).reshape(
-            im["px_h"], im["px_w"]
-        )
+    for ref, px in _golden_pixels():
         data = _png.encode(px)
-        rows.append(f"({_sql_quote(ref)},'{_hl.md5(data).hexdigest()}',{len(data)})")
-    return (
-        "SELECT media_ref, png_md5, CAST(png_bytes AS INT) AS png_bytes"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(media_ref, png_md5, png_bytes)"
-    )
+        rows.append((ref, _hl.md5(data).hexdigest(), len(data)))
+    return _values_sql(_PNG_COLS, rows)
 
 
 @query("media_png_export", _media_png_oracle_sql)
@@ -3585,18 +3560,9 @@ def media_png_export(spark, sf_dir):
         data = _png.encode(px)
         yield (ref, _hl.md5(data).hexdigest(), len(data))
 
-    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
-
-    schema = StructType(
-        [
-            StructField("media_ref", StringType(), False),
-            StructField("png_md5", StringType(), False),
-            StructField("png_bytes", IntegerType(), False),
-        ]
-    )
     return map_rows(
         media.select("media_ref", "payload", "width", "height", "codec", "palette"),
-        rows_of, schema,
+        rows_of, _PNG_COLS,
     )
 
 
@@ -3659,16 +3625,10 @@ def _golden_raster_rows(n_docs=16, seed=11):
 
 
 def _page_rasters_oracle_sql() -> str:
-    rows = [
-        f"({_sql_quote(d)},{pn},{w},{h},'{rm}',{ni})"
-        for d, pn, w, h, rm, ni, _mm, _nm in _golden_raster_rows()
-    ]
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " CAST(w_px AS INT) AS w_px, CAST(h_px AS INT) AS h_px,"
-        " raster_md5, CAST(n_images AS INT) AS n_images"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, page_number, w_px, h_px, raster_md5, n_images)"
+    return _values_sql(
+        "doc_id string, page_number int, w_px int, h_px int, raster_md5 string,"
+        " n_images int",
+        (r[:6] for r in _golden_raster_rows()),
     )
 
 
@@ -3689,15 +3649,9 @@ def media_page_rasters(spark, sf_dir):
 
 
 def _masked_rasters_oracle_sql() -> str:
-    rows = [
-        f"({_sql_quote(d)},{pn},'{mm}',{nm})"
-        for d, pn, _w, _h, _rm, _ni, mm, nm in _golden_raster_rows()
-    ]
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " masked_md5, CAST(n_masked AS INT) AS n_masked"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, page_number, masked_md5, n_masked)"
+    return _values_sql(
+        "doc_id string, page_number int, masked_md5 string, n_masked int",
+        ((d, pn, mm, nm) for d, pn, _w, _h, _rm, _ni, mm, nm in _golden_raster_rows()),
     )
 
 
@@ -3724,43 +3678,14 @@ _FLAGSHIP_DOCS = 8
 _FLAGSHIP_SEED = 123
 
 
-def _sql_quote(v) -> str:
-    if v is None:
-        return "NULL"
-    if isinstance(v, str):
-        return "'" + v.replace("'", "''") + "'"
-    return str(v)
-
-
-def _golden_spans_sql(
-    n_docs: int, seed: int, envelope: str = None, with_media_ref: bool = True
-) -> str:
+def _golden_spans_sql(n_docs: int, seed: int, envelope: str = None) -> str:
     """Golden spans of a deterministic corpus, embedded as a VALUES table —
-    DuckDB-checkable ground truth for the full parse+layout pipeline.
-
-    ``with_media_ref=False`` drops the payload-hash column: the oracle for
-    pipelines that legitimately rewrite stream payloads (recompression)
-    while preserving the span sequence."""
+    DuckDB-checkable ground truth for the full parse+layout pipeline."""
     from docprompt_spark.corpus import gen_corpus
 
-    rows = []
-    for d in gen_corpus(n_docs, seed=seed, skew_every=0, envelope=envelope):
-        for seq, s in enumerate(d["spans"]):
-            mr = (
-                f"{_sql_quote(s['media_ref'])}," if with_media_ref else ""
-            )
-            rows.append(
-                f"({_sql_quote(d['doc_id'])},{seq},{_sql_quote(s['kind'])},"
-                f"{_sql_quote(s['text'])},{mr}{s['offset']})"
-            )
-    values = ",\n".join(rows)
-    mr_sel = "media_ref," if with_media_ref else ""
-    mr_col = "media_ref," if with_media_ref else ""
-    return (
-        f'SELECT doc_id, CAST(seq AS INT) AS seq, kind, text, {mr_sel}'
-        ' CAST("offset" AS INT) AS "offset" FROM (VALUES\n'
-        + values
-        + f'\n) AS t(doc_id, seq, kind, text, {mr_col} "offset")'
+    return _values_sql(
+        _SPAN_COLS,
+        _spans_rows(gen_corpus(n_docs, seed=seed, skew_every=0, envelope=envelope)),
     )
 
 
@@ -3913,7 +3838,7 @@ _GOLDEN_SPAN_QUERIES = [
 ]
 
 
-def _spans_df(spark, docs, with_media_ref: bool = True) -> DataFrame:
+def _spans_df(spark, docs) -> DataFrame:
     """Run the extraction pipeline over ``docs`` and flatten its spans into
     the golden-span columns."""
     from docprompt_spark import pipeline
@@ -3924,7 +3849,7 @@ def _spans_df(spark, docs, with_media_ref: bool = True) -> DataFrame:
         F.col("seq").cast("int").alias("seq"),
         "kind",
         "text",
-        *(["media_ref"] if with_media_ref else []),
+        "media_ref",
         F.col("offset").cast("int").alias("offset"),
     )
 
@@ -3964,6 +3889,13 @@ def _pdf_rows(docs: DataFrame, schema: str, rows_of) -> DataFrame:
     return map_rows(docs.select("doc_id", "pdf"), open_rows, schema)
 
 
+_N_LINKED = 8
+_LINK_COLS = (
+    "doc_id string, page_number int, subtype string, uri string,"
+    " x0 double, y0 double, x1 double, y1 double"
+)
+
+
 def _link_annotations_oracle_sql() -> str:
     """VALUES golden from the shared generator formula (corpus
     _link_annotation_gt): every incremental-envelope doc carries exactly
@@ -3971,20 +3903,11 @@ def _link_annotations_oracle_sql() -> str:
     from docprompt_spark.corpus import _link_annotation_gt
 
     rows = []
-    for idx in range(8):
+    for idx in range(_N_LINKED):
         doc_id = f"doc-{_FLAGSHIP_SEED}-{idx:08d}"
-        uri, (x0, y0, x1, y1) = _link_annotation_gt(doc_id, idx)
-        rows.append(
-            f"({_sql_quote(doc_id)},1,'Link',{_sql_quote(uri)},"
-            f"{x0!r},{y0!r},{x1!r},{y1!r})"
-        )
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number, subtype,"
-        " uri, CAST(x0 AS DOUBLE) AS x0, CAST(y0 AS DOUBLE) AS y0,"
-        " CAST(x1 AS DOUBLE) AS x1, CAST(y1 AS DOUBLE) AS y1"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, page_number, subtype, uri, x0, y0, x1, y1)"
-    )
+        uri, rect = _link_annotation_gt(doc_id, idx)
+        rows.append((doc_id, 1, "Link", uri, *rect))
+    return _values_sql(_LINK_COLS, rows)
 
 
 @query("link_annotations", _link_annotations_oracle_sql)
@@ -4001,7 +3924,7 @@ def link_annotations(spark, sf_dir):
     from docprompt_spark import pipeline
 
     docs = pipeline.corpus_df(
-        spark, 8, seed=_FLAGSHIP_SEED, skew_every=0, envelope="incremental"
+        spark, _N_LINKED, seed=_FLAGSHIP_SEED, skew_every=0, envelope="incremental"
     )
 
     def rows_of(doc_id, pf):
@@ -4010,15 +3933,14 @@ def link_annotations(spark, sf_dir):
                 r = a["rect"]
                 yield (doc_id, i + 1, a["subtype"], a["uri"], r[0], r[1], r[2], r[3])
 
-    return _pdf_rows(
-        docs,
-        "doc_id string, page_number int, subtype string, uri string,"
-        " x0 double, y0 double, x1 double, y1 double",
-        rows_of,
-    )
+    return _pdf_rows(docs, _LINK_COLS, rows_of)
 
 
 _N_SIGNED = 9  # covers the signed envelope's %3 filter rotation
+_SIGNATURE_COLS = (
+    "doc_id string, field_name string, signer string, sign_time string,"
+    " subfilter string, digest_valid boolean, covers_whole_file boolean"
+)
 
 
 def _signature_fields_oracle_sql() -> str:
@@ -4031,17 +3953,8 @@ def _signature_fields_oracle_sql() -> str:
     for idx in range(_N_SIGNED):
         doc_id = f"doc-{_FLAGSHIP_SEED}-{idx:08d}"
         signer, sign_time = _signature_gt(doc_id, idx)
-        rows.append(
-            f"({_sql_quote(doc_id)},'Sig1',{_sql_quote(signer)},"
-            f"{_sql_quote(sign_time)},'sha256.digest',TRUE,TRUE)"
-        )
-    return (
-        "SELECT doc_id, field_name, signer, sign_time, subfilter,"
-        " digest_valid, covers_whole_file"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, field_name, signer, sign_time, subfilter,"
-        " digest_valid, covers_whole_file)"
-    )
+        rows.append((doc_id, "Sig1", signer, sign_time, "sha256.digest", True, True))
+    return _values_sql(_SIGNATURE_COLS, rows)
 
 
 @query("signature_fields", _signature_fields_oracle_sql)
@@ -4073,16 +3986,13 @@ def signature_fields(spark, sf_dir):
                 s["subfilter"], s["digest_valid"], s["covers_whole_file"],
             )
 
-    return _pdf_rows(
-        docs,
-        "doc_id string, field_name string, signer string,"
-        " sign_time string, subfilter string, digest_valid boolean,"
-        " covers_whole_file boolean",
-        rows_of,
-    )
+    return _pdf_rows(docs, _SIGNATURE_COLS, rows_of)
 
 
 _N_TAGGED = 6  # covers the tagged envelope's %2 xref / %3 filter rotations
+_TAGGED_COLS = (
+    "doc_id string, ord int, level int, tag string, page_number int, text string"
+)
 
 
 def _tagged_reading_order_oracle_sql() -> str:
@@ -4095,18 +4005,8 @@ def _tagged_reading_order_oracle_sql() -> str:
     rows = []
     for idx in range(_N_TAGGED):
         doc_id, gt = _tagged_structure_gt(idx, _FLAGSHIP_SEED)
-        for order, level, tag, page_number, text in gt:
-            rows.append(
-                f"({_sql_quote(doc_id)},{order},{level},'{tag}',"
-                f"{page_number},{_sql_quote(text)})"
-            )
-    return (
-        "SELECT doc_id, CAST(ord AS INT) AS ord,"
-        " CAST(level AS INT) AS level, tag,"
-        " CAST(page_number AS INT) AS page_number, text"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, ord, level, tag, page_number, text)"
-    )
+        rows.extend((doc_id, *elem) for elem in gt)
+    return _values_sql(_TAGGED_COLS, rows)
 
 
 @query("tagged_reading_order", _tagged_reading_order_oracle_sql)
@@ -4148,12 +4048,7 @@ def tagged_reading_order(spark, sf_dir):
                 )
             yield (doc_id, e["order"], e["level"], e["tag"], e["page_number"], text)
 
-    return _pdf_rows(
-        docs,
-        "doc_id string, ord int, level int, tag string,"
-        " page_number int, text string",
-        rows_of,
-    )
+    return _pdf_rows(docs, _TAGGED_COLS, rows_of)
 
 
 _N_STRUCTURED = 12  # covers the structured envelope's %2/%3/%4 rotations
@@ -4168,26 +4063,28 @@ def _structured_corpus(spark):
     ).select("doc_id", "pdf")
 
 
-def _document_metadata_oracle_sql() -> str:
+def _structure_gt():
+    """(doc_id, ground truth) of each structured-corpus document, from the
+    generator's formula (corpus._doc_structure_gt)."""
     from docprompt_spark.corpus import _doc_structure_gt, _gen_doc_pages
 
-    rows = []
     for idx in range(_N_STRUCTURED):
         doc_id, pages = _gen_doc_pages(idx, _FLAGSHIP_SEED, 0)
-        gt = _doc_structure_gt(doc_id, idx, len(pages))
-        c = gt["info"]["creation"]
-        rows.append(
-            f"({_sql_quote(doc_id)},{_sql_quote(doc_id)},"
-            f"{_sql_quote(gt['info']['author'])},"
-            f"{_sql_quote(gt['info']['subject'])},"
-            f"{_sql_quote(gt['info']['producer'])},"
-            f"'{c[2:6]}-{c[6:8]}-{c[8:10]}',TRUE)"
-        )
-    return (
-        "SELECT doc_id, title, author, subject, producer,"
-        " created_date, xmp_title_match"
-        " FROM (VALUES " + ",".join(rows) + ") AS t(doc_id, title, author,"
-        " subject, producer, created_date, xmp_title_match)"
+        yield doc_id, _doc_structure_gt(doc_id, idx, len(pages))
+
+
+def _document_metadata_oracle_sql() -> str:
+    rows = []
+    for doc_id, gt in _structure_gt():
+        info, c = gt["info"], gt["info"]["creation"]
+        rows.append((
+            doc_id, doc_id, info["author"], info["subject"], info["producer"],
+            f"{c[2:6]}-{c[6:8]}-{c[8:10]}", True,
+        ))
+    return _values_sql(
+        "doc_id string, title string, author string, subject string,"
+        " producer string, created_date string, xmp_title_match boolean",
+        rows,
     )
 
 
@@ -4236,31 +4133,24 @@ def document_metadata(spark, sf_dir):
     )
 
 
+_OUTLINE_COLS = (
+    "doc_id string, ord int, level int, title string, page_number int, y double"
+)
+
+
 def _outline_entries_oracle_sql() -> str:
-    from docprompt_spark.corpus import _doc_structure_gt, _gen_doc_pages
+    def flat(doc_id, items, level, order):
+        for it in items:
+            yield (doc_id, next(order), level, it["title"], it["page"] + 1, it["y"])
+            yield from flat(doc_id, it["kids"], level + 1, order)
 
-    rows = []
-    for idx in range(_N_STRUCTURED):
-        doc_id, pages = _gen_doc_pages(idx, _FLAGSHIP_SEED, 0)
-        gt = _doc_structure_gt(doc_id, idx, len(pages))
-        order = [0]
-
-        def flat(items, level):
-            for it in items:
-                rows.append(
-                    f"({_sql_quote(doc_id)},{order[0]},{level},"
-                    f"{_sql_quote(it['title'])},{it['page'] + 1},"
-                    f"{it['y']!r})"
-                )
-                order[0] += 1
-                flat(it["kids"], level + 1)
-
-        flat(gt["outlines"], 0)
-    return (
-        "SELECT doc_id, CAST(ord AS INT) AS ord, CAST(level AS INT) AS"
-        " level, title, CAST(page_number AS INT) AS page_number,"
-        " CAST(y AS DOUBLE) AS y FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, ord, level, title, page_number, y)"
+    return _values_sql(
+        _OUTLINE_COLS,
+        (
+            row
+            for doc_id, gt in _structure_gt()
+            for row in flat(doc_id, gt["outlines"], 0, itertools.count())
+        ),
     )
 
 
@@ -4276,32 +4166,21 @@ def outline_entries(spark, sf_dir):
         for e in pf.outline_entries():
             yield (doc_id, e["order"], e["level"], e["title"], e["page_number"], e["y"])
 
-    return _pdf_rows(
-        _structured_corpus(spark),
-        "doc_id string, ord int, level int, title string,"
-        " page_number int, y double",
-        rows_of,
-    )
+    return _pdf_rows(_structured_corpus(spark), _OUTLINE_COLS, rows_of)
+
+
+_APPEARANCE_COLS = "doc_id string, page_number int, field_name string, ap_text string"
 
 
 def _form_appearance_texts_oracle_sql() -> str:
-    from docprompt_spark.corpus import _doc_structure_gt, _gen_doc_pages
-
-    rows = []
-    for idx in range(_N_STRUCTURED):
-        doc_id, pages = _gen_doc_pages(idx, _FLAGSHIP_SEED, 0)
-        gt = _doc_structure_gt(doc_id, idx, len(pages))
-        for f in gt["fields"]:
-            if f["ftype"] in ("Tx", "Ch") and f["value"]:
-                rows.append(
-                    f"({_sql_quote(doc_id)},{f['page'] + 1},"
-                    f"{_sql_quote(f['name'].split('.')[-1])},"
-                    f"{_sql_quote(f['value'])})"
-                )
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " field_name, ap_text FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, page_number, field_name, ap_text)"
+    return _values_sql(
+        _APPEARANCE_COLS,
+        (
+            (doc_id, f["page"] + 1, f["name"].split(".")[-1], f["value"])
+            for doc_id, gt in _structure_gt()
+            for f in gt["fields"]
+            if f["ftype"] in ("Tx", "Ch") and f["value"]
+        ),
     )
 
 
@@ -4321,26 +4200,20 @@ def form_appearance_texts(spark, sf_dir):
                 if a["subtype"] == "Widget" and a["text"]:
                     yield (doc_id, p + 1, a["field_name"], a["text"])
 
-    return _pdf_rows(
-        _structured_corpus(spark),
-        "doc_id string, page_number int, field_name string, ap_text string",
-        rows_of,
-    )
+    return _pdf_rows(_structured_corpus(spark), _APPEARANCE_COLS, rows_of)
+
+
+_LABEL_COLS = "doc_id string, page_number int, label string"
 
 
 def _page_labels_oracle_sql() -> str:
-    from docprompt_spark.corpus import _doc_structure_gt, _gen_doc_pages
-
-    rows = []
-    for idx in range(_N_STRUCTURED):
-        doc_id, pages = _gen_doc_pages(idx, _FLAGSHIP_SEED, 0)
-        gt = _doc_structure_gt(doc_id, idx, len(pages))
-        for p, lbl in enumerate(gt["page_label_strings"]):
-            rows.append(f"({_sql_quote(doc_id)},{p + 1},{_sql_quote(lbl)})")
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number, label"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, page_number, label)"
+    return _values_sql(
+        _LABEL_COLS,
+        (
+            (doc_id, p + 1, lbl)
+            for doc_id, gt in _structure_gt()
+            for p, lbl in enumerate(gt["page_label_strings"])
+        ),
     )
 
 
@@ -4365,35 +4238,23 @@ def page_labels(spark, sf_dir):
         for p, lbl in enumerate(pf.page_labels()):
             yield (doc_id, p + 1, lbl)
 
-    return _pdf_rows(
-        _structured_corpus(spark),
-        "doc_id string, page_number int, label string",
-        rows_of,
-    )
+    return _pdf_rows(_structured_corpus(spark), _LABEL_COLS, rows_of)
+
+
+_FIELD_COLS = (
+    "doc_id string, field_name string, field_type string, value string,"
+    " page_number int, x0 double, y0 double, x1 double, y1 double"
+)
 
 
 def _form_field_values_oracle_sql() -> str:
-    from docprompt_spark.corpus import _doc_structure_gt, _gen_doc_pages
-
-    rows = []
-    for idx in range(_N_STRUCTURED):
-        doc_id, pages = _gen_doc_pages(idx, _FLAGSHIP_SEED, 0)
-        gt = _doc_structure_gt(doc_id, idx, len(pages))
-        for f in gt["fields"]:
-            x0, y0, x1, y1 = f["rect"]
-            rows.append(
-                f"({_sql_quote(doc_id)},{_sql_quote(f['name'])},"
-                f"{_sql_quote(f['ftype'])},{_sql_quote(f['value'])},"
-                f"{f['page'] + 1},{x0!r},{y0!r},{x1!r},{y1!r})"
-            )
-    return (
-        "SELECT doc_id, field_name, field_type, value,"
-        " CAST(page_number AS INT) AS page_number,"
-        " CAST(x0 AS DOUBLE) AS x0, CAST(y0 AS DOUBLE) AS y0,"
-        " CAST(x1 AS DOUBLE) AS x1, CAST(y1 AS DOUBLE) AS y1"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, field_name, field_type, value, page_number,"
-        " x0, y0, x1, y1)"
+    return _values_sql(
+        _FIELD_COLS,
+        (
+            (doc_id, f["name"], f["ftype"], f["value"], f["page"] + 1, *f["rect"])
+            for doc_id, gt in _structure_gt()
+            for f in gt["fields"]
+        ),
     )
 
 
@@ -4415,36 +4276,24 @@ def form_field_values(spark, sf_dir):
                 r[0], r[1], r[2], r[3],
             )
 
-    return _pdf_rows(
-        _structured_corpus(spark),
-        "doc_id string, field_name string, field_type string, value string,"
-        " page_number int, x0 double, y0 double, x1 double, y1 double",
-        rows_of,
-    )
+    return _pdf_rows(_structured_corpus(spark), _FIELD_COLS, rows_of)
+
+
+_ATTACHMENT_COLS = (
+    "doc_id string, att_name string, mime string, size_bytes int,"
+    " checksum string, payload_md5 string"
+)
 
 
 def _embedded_attachments_oracle_sql() -> str:
     import hashlib as _hl
 
-    from docprompt_spark.corpus import _doc_structure_gt, _gen_doc_pages
-
     rows = []
-    for idx in range(_N_STRUCTURED):
-        doc_id, pages = _gen_doc_pages(idx, _FLAGSHIP_SEED, 0)
-        gt = _doc_structure_gt(doc_id, idx, len(pages))
+    for doc_id, gt in _structure_gt():
         for a in gt["attachments"]:
             md5 = _hl.md5(a["data"]).hexdigest()
-            rows.append(
-                f"({_sql_quote(doc_id)},{_sql_quote(a['name'])},"
-                f"{_sql_quote(a['mime'])},{len(a['data'])},"
-                f"{_sql_quote(md5)},{_sql_quote(md5)})"
-            )
-    return (
-        "SELECT doc_id, att_name, mime, CAST(size_bytes AS INT) AS"
-        " size_bytes, checksum, payload_md5 FROM (VALUES " + ",".join(rows)
-        + ") AS t(doc_id, att_name, mime, size_bytes, checksum,"
-        " payload_md5)"
-    )
+            rows.append((doc_id, a["name"], a["mime"], len(a["data"]), md5, md5))
+    return _values_sql(_ATTACHMENT_COLS, rows)
 
 
 @query("embedded_attachments", _embedded_attachments_oracle_sql)
@@ -4463,17 +4312,12 @@ def embedded_attachments(spark, sf_dir):
                 a["payload_md5"],
             )
 
-    return _pdf_rows(
-        _structured_corpus(spark),
-        "doc_id string, att_name string, mime string, size_bytes int,"
-        " checksum string, payload_md5 string",
-        rows_of,
-    )
+    return _pdf_rows(_structured_corpus(spark), _ATTACHMENT_COLS, rows_of)
 
 
 @query(
     "extraction_recompressed_spans",
-    functools.partial(_golden_spans_sql, 6, _FLAGSHIP_SEED, with_media_ref=False),
+    lambda: f"SELECT * EXCLUDE (media_ref) FROM ({_golden_spans_sql(6, _FLAGSHIP_SEED)})",
 )
 def extraction_recompressed_spans(spark, sf_dir):
     """D6 (the reference's ghostscript recompress, `_exec/ghostscript.py:
@@ -4496,7 +4340,7 @@ def extraction_recompressed_spans(spark, sf_dir):
         docs.select("doc_id", "pdf", "n_pages"), recompressed,
         "doc_id string, pdf binary, n_pages int",
     )
-    return _spans_df(spark, rc_docs, with_media_ref=False)
+    return _spans_df(spark, rc_docs).drop("media_ref")
 
 
 def _page_stats_oracle_sql() -> str:
@@ -4514,16 +4358,10 @@ def _page_stats_oracle_sql() -> str:
         a[2] += len(layout["lines"])
         a[3] += len(layout["blocks"])
         a[4] += len(imgs)
-    rows = [
-        f"({_sql_quote(d)},{a[0]},{a[1]},{a[2]},{a[3]},{a[4]})"
-        for d, a in sorted(agg.items())
-    ]
-    return (
-        "SELECT doc_id, CAST(n_pages AS BIGINT) AS n_pages,"
-        " CAST(n_words AS BIGINT) AS n_words, CAST(n_lines AS BIGINT) AS n_lines,"
-        " CAST(n_blocks AS BIGINT) AS n_blocks, CAST(n_media AS BIGINT) AS n_media"
-        " FROM (VALUES " + ",".join(rows) +
-        ") AS t(doc_id, n_pages, n_words, n_lines, n_blocks, n_media)"
+    return _values_sql(
+        "doc_id string, n_pages bigint, n_words bigint, n_lines bigint,"
+        " n_blocks bigint, n_media bigint",
+        ((d, *a) for d, a in sorted(agg.items())),
     )
 
 
@@ -4547,6 +4385,9 @@ def extraction_page_stats(spark, sf_dir):
     )
 
 
+_SEARCH_TERMS = [("an",), ("the",), ("qu",)]
+
+
 def _provenance_search_oracle_sql() -> str:
     """provenance_search golden: derived in SQL from the flagship golden
     spans (word spans containing each query term)."""
@@ -4554,7 +4395,7 @@ def _provenance_search_oracle_sql() -> str:
     return (
         "WITH spans AS (" + spans + "),\n"
         "words AS (SELECT doc_id, text, \"offset\" FROM spans WHERE kind = 'word'),\n"
-        "q AS (SELECT q FROM (VALUES ('an'), ('the'), ('qu')) AS t(q))\n"
+        "q AS (" + _values_sql("q string", _SEARCH_TERMS) + ")\n"
         "SELECT doc_id, q, count(*) AS n_hits,"
         " CAST(min(\"offset\") AS INT) AS first_offset\n"
         "FROM words JOIN q ON contains(words.text, q.q) GROUP BY doc_id, q"
@@ -4572,9 +4413,7 @@ def provenance_search(spark, sf_dir):
     docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
     result = pipeline.run_extraction(spark, docs.select("doc_id", "pdf", "n_pages"))
     words = pipeline.spans_exploded(result).filter(F.col("kind") == "word")
-    queries_df = F.broadcast(
-        spark.createDataFrame([("an",), ("the",), ("qu",)], ["q"])
-    )
+    queries_df = F.broadcast(spark.createDataFrame(_SEARCH_TERMS, ["q"]))
     hits = words.join(queries_df, F.col("text").contains(F.col("q")))
     return hits.groupBy("doc_id", "q").agg(
         F.count("*").alias("n_hits"), F.min("offset").alias("first_offset")
@@ -4611,15 +4450,22 @@ def _phrase_queries(n_docs=None, seed=None):
     return out
 
 
+_PHRASE_COLS = "q string, pos int, klen int, ptok string"
+
+
+def _phrase_rows():
+    """Each phrase query exploded to ``_PHRASE_COLS`` rows: the phrase, the
+    position and raw text of each of its tokens, and its token count."""
+    for p in _phrase_queries():
+        toks = p.split(" ")
+        for pos, t in enumerate(toks):
+            yield (p, pos, len(toks), t)
+
+
 def _phrase_search_oracle_sql() -> str:
     """Same inverted-index phrase alignment in DuckDB over the golden
     spans VALUES table."""
     spans = _golden_spans_sql(_FLAGSHIP_DOCS, _FLAGSHIP_SEED)
-    prows = []
-    for p in _phrase_queries():
-        toks = p.split(" ")
-        for pos, t in enumerate(toks):
-            prows.append(f"({_sql_quote(p)},{pos},{len(toks)},{_sql_quote(t)})")
     return (
         "WITH spans AS (" + spans + "),\n"
         "words AS (SELECT doc_id, \"offset\",\n"
@@ -4628,7 +4474,7 @@ def _phrase_search_oracle_sql() -> str:
         "  FROM spans WHERE kind = 'word'),\n"
         "q AS (SELECT q, pos, klen,\n"
         "  regexp_replace(lower(ptok), '[^\\p{L}\\p{N}]+', '', 'g') AS ptok\n"
-        "  FROM (VALUES " + ",".join(prows) + ") AS t(q, pos, klen, ptok)),\n"
+        "  FROM (" + _values_sql(_PHRASE_COLS, _phrase_rows()) + ")),\n"
         "cand AS (SELECT w.doc_id, q.q, q.klen, w.widx - q.pos AS start_idx,\n"
         "  q.pos, w.\"offset\" FROM words w JOIN q ON w.tok = q.ptok),\n"
         "aligned AS (SELECT doc_id, q, start_idx,\n"
@@ -4667,12 +4513,7 @@ def provenance_phrase_search(spark, sf_dir):
         )
         .select("doc_id", "widx", "offset", _norm_tok(F.col("text")).alias("tok"))
     )
-    prows = []
-    for p in _phrase_queries():
-        toks = p.split(" ")
-        for pos, t in enumerate(toks):
-            prows.append((p, pos, len(toks), t))
-    phrase_df = spark.createDataFrame(prows, ["q", "pos", "klen", "ptok"]).withColumn(
+    phrase_df = spark.createDataFrame(list(_phrase_rows()), _PHRASE_COLS).withColumn(
         "ptok", _norm_tok(F.col("ptok"))
     )
     cand = words.join(
@@ -4692,6 +4533,25 @@ def provenance_phrase_search(spark, sf_dir):
     )
 
 
+_REFINED_COLS = (
+    "doc_id string, page_number int, query string, matched_text string,"
+    " x0 double, top double, x1 double, bottom double, n_words int"
+)
+
+
+def _refine_queries():
+    """(generated doc, query) pairs of the refined search: each seed-17
+    document's first three words, for documents with at least two."""
+    from docprompt_spark.corpus import gen_corpus
+
+    out = []
+    for d in gen_corpus(6, seed=17, skew_every=0):
+        words = [s["text"] for s in d["spans"] if s["kind"] == "word"][:3]
+        if len(words) >= 2:
+            out.append((d, " ".join(words)))
+    return out
+
+
 def _provenance_refined_oracle_sql() -> str:
     """Driver-side golden for the refined search: the same deterministic
     parse+refine kernels run once on the driver; the Spark job must
@@ -4699,34 +4559,20 @@ def _provenance_refined_oracle_sql() -> str:
     plumbing — partitioning, Arrow marshaling, py-files shipping — around
     the kernel, the same pattern as the media_png_export oracle)."""
     from docprompt_spark import kernels, pdfparse
-    from docprompt_spark.corpus import gen_corpus
 
     rows = []
-    for d in gen_corpus(6, seed=17, skew_every=0):
-        words = [s["text"] for s in d["spans"] if s["kind"] == "word"][:3]
-        if len(words) < 2:
-            continue
-        q = " ".join(words)
+    for d, q in _refine_queries():
         for p in pdfparse.extract_pages(pdfparse.unwrap_pdf_bytes(d["pdf"])):
             hit = kernels.refine_query_to_word_level(p["words"], q)
             if hit is None:
                 continue
             merged, matched = hit
-            rows.append(
-                f"({_sql_quote(d['doc_id'])},{p['page_number']},{_sql_quote(q)},"
-                f"{_sql_quote(merged['text'])},{merged['x0']!r},{merged['top']!r},"
-                f"{merged['x1']!r},{merged['bottom']!r},{len(matched)})"
-            )
+            rows.append((
+                d["doc_id"], p["page_number"], q, merged["text"], merged["x0"],
+                merged["top"], merged["x1"], merged["bottom"], len(matched),
+            ))
             break
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number, query,"
-        " matched_text, CAST(x0 AS DOUBLE) AS x0, CAST(top AS DOUBLE) AS top,"
-        " CAST(x1 AS DOUBLE) AS x1, CAST(bottom AS DOUBLE) AS bottom,"
-        " CAST(n_words AS INT) AS n_words FROM (VALUES "
-        + ",".join(rows)
-        + ") AS t(doc_id, page_number, query, matched_text, x0, top, x1,"
-        " bottom, n_words)"
-    )
+    return _values_sql(_REFINED_COLS, rows)
 
 
 @query("provenance_refined_search", _provenance_refined_oracle_sql)
@@ -4739,14 +4585,10 @@ def provenance_refined_search(spark, sf_dir):
     onto the docs, not a Python closure — at 100 TB the query set is its
     own table and the kernel reads it as a column."""
     from docprompt_spark import kernels, pdfparse, pipeline
-    from docprompt_spark.corpus import gen_corpus
 
-    qrows = []
-    for d in gen_corpus(6, seed=17, skew_every=0):
-        words = [s["text"] for s in d["spans"] if s["kind"] == "word"][:3]
-        if len(words) >= 2:
-            qrows.append((d["doc_id"], " ".join(words)))
-    queries_df = spark.createDataFrame(qrows, ["doc_id", "query"])
+    queries_df = spark.createDataFrame(
+        [(d["doc_id"], q) for d, q in _refine_queries()], ["doc_id", "query"]
+    )
 
     docs = (
         pipeline.corpus_df(spark, 6, seed=17, skew_every=0)
@@ -4765,37 +4607,40 @@ def provenance_refined_search(spark, sf_dir):
                 )
                 return
 
-    schema = (
-        "doc_id string, page_number int, query string, matched_text string,"
-        " x0 double, top double, x1 double, bottom double, n_words int"
-    )
-    return map_rows(docs.repartition(8, "doc_id"), rows_of, schema)
+    return map_rows(docs.repartition(8, "doc_id"), rows_of, _REFINED_COLS)
+
+
+def _flagship_layouts():
+    """(doc_id, page_number, layout, images) ground truth of the flagship
+    corpus, page by page."""
+    from docprompt_spark.corpus import golden_page_layouts
+
+    return golden_page_layouts(_FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
+
+
+def _flagship_blocks(spark) -> DataFrame:
+    """The flagship corpus parsed into per-page text blocks
+    (``pipeline.page_blocks``)."""
+    from docprompt_spark import pipeline
+
+    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
+    return pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
 
 
 def _textblock_lines_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
-
-    rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
-        for li, ln in enumerate(layout["lines"]):
-            bb = ln["bbox"]
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},{li},{_sql_quote(ln['text'])},"
-                f"{ln['start']},{ln['start'] + len(ln['text'])},{len(ln['words'])},"
-                f"{round(bb[0], 5)},{round(bb[1], 5)},{round(bb[2], 5)},{round(bb[3], 5)})"
+    return _values_sql(
+        "doc_id string, page_number int, line_idx int, text string,"
+        " start_idx int, end_idx int, n_words int,"
+        " x0 double, top double, x1 double, bottom double",
+        (
+            (
+                doc_id, page_number, li, ln["text"], ln["start"],
+                ln["start"] + len(ln["text"]), len(ln["words"]),
+                *(round(v, 5) for v in ln["bbox"]),
             )
-    values = ",\n".join(rows)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " CAST(line_idx AS INT) AS line_idx, text,"
-        " CAST(start_idx AS INT) AS start_idx, CAST(end_idx AS INT) AS end_idx,"
-        " CAST(n_words AS INT) AS n_words,"
-        " CAST(x0 AS DOUBLE) AS x0, CAST(top AS DOUBLE) AS top,"
-        " CAST(x1 AS DOUBLE) AS x1, CAST(bottom AS DOUBLE) AS bottom"
-        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number, line_idx,"
-        ' text, start_idx, end_idx, n_words, x0, top, x1, bottom)'
+            for doc_id, page_number, layout, _imgs in _flagship_layouts()
+            for li, ln in enumerate(layout["lines"])
+        ),
     )
 
 
@@ -4806,10 +4651,7 @@ def textblock_line_geometry(spark, sf_dir):
     emit per-page line blocks with page-level text spans (start/end) and
     normalized bbox geometry. Oracle: golden layouts recomputed from the
     generator's ground-truth words, embedded as VALUES."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
+    blocks = _flagship_blocks(spark)
     lines = blocks.select(
         "doc_id",
         "page_number",
@@ -4831,30 +4673,20 @@ def textblock_line_geometry(spark, sf_dir):
 
 
 def _textblock_blocks_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
-
     rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
+    for doc_id, page_number, layout, _imgs in _flagship_layouts():
         blocks = layout["blocks"]
-        if not blocks:
-            continue
-        n_lines = sum(len(b["line_idx"]) for b in blocks)
-        min_top = round(min(b["bbox"][1] for b in blocks), 5)
-        max_bottom = round(max(b["bbox"][3] for b in blocks), 5)
-        rows.append(
-            f"({_sql_quote(doc_id)},{page_number},{len(blocks)},{n_lines},"
-            f"{min_top},{max_bottom})"
-        )
-    values = ",\n".join(rows)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " CAST(n_blocks AS INT) AS n_blocks, CAST(n_lines AS INT) AS n_lines,"
-        " CAST(min_top AS DOUBLE) AS min_top,"
-        " CAST(max_bottom AS DOUBLE) AS max_bottom"
-        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number, n_blocks,"
-        " n_lines, min_top, max_bottom)"
+        if blocks:
+            rows.append((
+                doc_id, page_number, len(blocks),
+                sum(len(b["line_idx"]) for b in blocks),
+                round(min(b["bbox"][1] for b in blocks), 5),
+                round(max(b["bbox"][3] for b in blocks), 5),
+            ))
+    return _values_sql(
+        "doc_id string, page_number int, n_blocks int, n_lines int,"
+        " min_top double, max_bottom double",
+        rows,
     )
 
 
@@ -4862,10 +4694,7 @@ def _textblock_blocks_oracle_sql() -> str:
 def textblock_block_rollup(spark, sf_dir):
     """Block-level blocks (derived segmentation) rolled up per page: counts,
     line totals, combined bbox union — over the same hierarchy table."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
+    blocks = _flagship_blocks(spark)
     exploded = blocks.select("doc_id", "page_number", F.explode("block_blocks").alias("b"))
     return exploded.groupBy("doc_id", F.col("page_number").cast("int").alias("page_number")).agg(
         F.count("*").cast("int").alias("n_blocks"),
@@ -4875,29 +4704,20 @@ def textblock_block_rollup(spark, sf_dir):
     )
 
 
-def _textblock_polys_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
+_POLY_NAMES = ("tl_x", "tl_y", "tr_x", "tr_y", "br_x", "br_y", "bl_x", "bl_y")
 
+
+def _textblock_polys_oracle_sql() -> str:
     rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
+    for doc_id, page_number, layout, _imgs in _flagship_layouts():
         for bi, b in enumerate(layout["blocks"]):
             x0, top, x1, bottom = b["bbox"]
             quad = [x0, top, x1, top, x1, bottom, x0, bottom]
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},{bi},"
-                + ",".join(str(round(v, 5)) for v in quad)
-                + ")"
-            )
-    values = ",\n".join(rows)
-    cols = ["tl_x", "tl_y", "tr_x", "tr_y", "br_x", "br_y", "bl_x", "bl_y"]
-    casts = ", ".join(f"CAST({c} AS DOUBLE) AS {c}" for c in cols)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number,"
-        " CAST(block_idx AS INT) AS block_idx, " + casts
-        + " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number,"
-        " block_idx, " + ", ".join(cols) + ")"
+            rows.append((doc_id, page_number, bi, *(round(v, 5) for v in quad)))
+    return _values_sql(
+        "doc_id string, page_number int, block_idx int, "
+        + ", ".join(f"{c} double" for c in _POLY_NAMES),
+        rows,
     )
 
 
@@ -4910,10 +4730,7 @@ def textblock_bounding_polys(spark, sf_dir):
     the provenance surface as a first-class column, not a derived bbox.
     Oracle: golden layouts, the quad recomputed from ground-truth
     geometry."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
+    blocks = _flagship_blocks(spark)
     exploded = blocks.select(
         "doc_id",
         "page_number",
@@ -4924,41 +4741,28 @@ def textblock_bounding_polys(spark, sf_dir):
         F.col("page_number").cast("int").alias("page_number"),
         F.col("block_idx").cast("int").alias("block_idx"),
     ]
-    names = ["tl_x", "tl_y", "tr_x", "tr_y", "br_x", "br_y", "bl_x", "bl_y"]
-    for i, nm in enumerate(names):
+    for i, nm in enumerate(_POLY_NAMES):
         # round(v, 5): the reference's json_encoders precision (layout.py:35)
         sel.append(F.round(F.col("b.poly").getItem(i), 5).alias(nm))
     return exploded.select(*sel)
 
 
 def _block_type_dispatch_oracle_sql() -> str:
-    from docprompt_spark.corpus import golden_page_layouts
-
     rows = []
-    for doc_id, page_number, layout, _imgs in golden_page_layouts(
-        _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0
-    ):
+    for doc_id, page_number, layout, _imgs in _flagship_layouts():
         words = [w for ln in layout["lines"] for w in ln["words"]]
         lines = layout["lines"]
         splice_len = len(" ".join(w["text"] for w in sorted(words, key=lambda x: x["start"])))
-        if words:
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},'word',{len(words)},"
-                f"{sum(len(w['text']) for w in words)},{splice_len})"
-            )
-        if lines:
-            rows.append(
-                f"({_sql_quote(doc_id)},{page_number},'line',{len(lines)},"
-                f"{sum(len(ln['text']) for ln in lines)},{splice_len})"
-            )
-    values = ",\n".join(rows)
-    return (
-        "SELECT doc_id, CAST(page_number AS INT) AS page_number, block_type,"
-        " CAST(n_blocks AS INT) AS n_blocks,"
-        " CAST(total_chars AS INT) AS total_chars,"
-        " CAST(word_splice_len AS INT) AS word_splice_len"
-        " FROM (VALUES\n" + values + "\n) AS t(doc_id, page_number,"
-        " block_type, n_blocks, total_chars, word_splice_len)"
+        for block_type, blocks in (("word", words), ("line", lines)):
+            if blocks:
+                n_chars = sum(len(b["text"]) for b in blocks)
+                rows.append(
+                    (doc_id, page_number, block_type, len(blocks), n_chars, splice_len)
+                )
+    return _values_sql(
+        "doc_id string, page_number int, block_type string, n_blocks int,"
+        " total_chars int, word_splice_len int",
+        rows,
     )
 
 
@@ -4970,10 +4774,7 @@ def block_type_dispatch(spark, sf_dir):
     under a block_type discriminator, filter to (word, line) exactly like
     the reference, and the WORD branch rebuilds page text. Oracle: golden
     layouts."""
-    from docprompt_spark import pipeline
-
-    docs = pipeline.corpus_df(spark, _FLAGSHIP_DOCS, seed=_FLAGSHIP_SEED, skew_every=0)
-    blocks = pipeline.page_blocks(docs.select("doc_id", "pdf", "n_pages"))
+    blocks = _flagship_blocks(spark)
     words = blocks.select(
         "doc_id", "page_number", F.lit("word").alias("block_type"),
         F.explode("word_blocks").alias("b"),
@@ -5049,16 +4850,11 @@ def _fixture_blocks():
 
 def _line_block_assignment_oracle_sql() -> str:
     words, lines = _fixture_blocks()
-    wvals = ",".join(f"({i},{t},{b})" for i, t, b in words)
-    lvals = ",".join(f"({i},{t},{b},{c})" for i, t, b, c in lines)
+    wsql = _values_sql("w_idx int, w_top double, w_bottom double", words)
+    lsql = _values_sql("l_idx int, l_top double, l_bottom double, conf double", lines)
     return f"""
-    WITH w AS (SELECT w_idx, CAST(w_top AS DOUBLE) AS w_top,
-                      CAST(w_bottom AS DOUBLE) AS w_bottom
-               FROM (VALUES {wvals}) AS t(w_idx, w_top, w_bottom)),
-    l AS (SELECT l_idx, CAST(l_top AS DOUBLE) AS l_top,
-                 CAST(l_bottom AS DOUBLE) AS l_bottom
-          FROM (VALUES {lvals}) AS t(l_idx, l_top, l_bottom, conf)
-          WHERE conf >= 0.3),
+    WITH w AS ({wsql}),
+    l AS (SELECT * FROM ({lsql}) WHERE conf >= 0.3),
     pairs AS (
       SELECT w_idx, l_idx,
              least(w_bottom, l_bottom) - greatest(w_top, l_top) AS ov

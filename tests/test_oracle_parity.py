@@ -98,6 +98,32 @@ def test_every_query_has_an_oracle():
     assert rows_only == [], rows_only
 
 
+def test_values_sql_renders_literals_exactly():
+    """The VALUES builder every generated oracle uses: quotes, NULL,
+    booleans, floats that must round-trip bit-exactly, a reserved-word
+    column name, and one DuckDB type per declared Spark type."""
+    from docprompt_spark import queries as q
+
+    rows = [
+        ("it's", None, True, 0.1, 7, 2**40),
+        (None, "x", False, 1e-05, -3, None),
+        ("''", "", None, 169.515625, 0, 1),
+    ]
+    sql = q._values_sql(
+        "s string, offset string, b boolean, d double, i int, n bigint", rows
+    )
+    con = duckdb.connect()
+    rel = con.sql(sql)
+    assert rel.columns == ["s", "offset", "b", "d", "i", "n"]
+    assert [str(t) for t in rel.types] == [
+        "VARCHAR", "VARCHAR", "BOOLEAN", "DOUBLE", "INTEGER", "BIGINT"
+    ]
+    got = rel.fetchall()
+    assert got == rows
+    assert [type(r[3]) for r in got] == [float] * 3
+    assert [r[2] for r in got] == [True, False, None]
+
+
 def test_query_rejects_a_missing_oracle():
     from docprompt_spark import queries as q
 

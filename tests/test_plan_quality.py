@@ -94,6 +94,41 @@ def test_small_corpus_reads_one_scan_split_per_file(spark, tmp_path):
     assert scan.rdd.getNumPartitions() == n_files
 
 
+def test_spread_decides_by_size_not_split_count(spark, tmp_path):
+    """queries._spread round-robins a documents table whose rows sit in
+    one scan split. A file of one row group just over defaultParallelism MB
+    reads as at least defaultParallelism splits under get_spark's split
+    rule, but only one of them holds rows, so the split count must not
+    decide. A table estimated at defaultParallelism full splits or more is
+    left as it is."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    dp = spark.sparkContext.defaultParallelism
+    n = (dp + 2) * 1024  # 1 KB of incompressible text per row
+    rng = np.random.default_rng(0)
+    path = str(tmp_path / "documents.parquet")
+    table = pa.table({
+        "doc_id": np.arange(n, dtype=np.int64),
+        "text": [rng.bytes(512).hex() for _ in range(n)],
+    })
+    pq.write_table(table, path, row_group_size=n, compression="none",
+                   use_dictionary=False)
+    assert pq.ParquetFile(path).num_row_groups == 1
+    docs = spark.read.parquet(path).select("doc_id", "text")
+    assert docs.rdd.getNumPartitions() >= dp
+    assert "RoundRobinPartitioning" in _plan(_queries._spread(docs))
+
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(2**20))  # (dp + 2) MB is over dp full splits
+    try:
+        assert "Exchange" not in _plan(_queries._spread(docs))
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_extraction_single_shuffle_after_parse(spark, monkeypatch):
     """With a skew tail (threshold 0 sends every doc to it) the
     no-checkpoint plan routes once: exactly two MapInPandas nodes.
