@@ -25,6 +25,7 @@ oracle, which guarantees bit-identical output across both paths.
 
 from __future__ import annotations
 
+from operator import itemgetter
 from typing import Dict, List, Optional, Sequence, Tuple
 
 # ---------------------------------------------------------------------------
@@ -67,11 +68,12 @@ def norm_word_bbox(
     """
     asc = size * ascent_pm / 1000.0
     desc = size * descent_pm / 1000.0  # negative
-    x0 = x / page_w
-    x1 = (x + width) / page_w
-    top = (page_h - (baseline + asc)) / page_h
-    bottom = (page_h - (baseline + desc)) / page_h
-    return (round5(x0), round5(top), round5(x1), round5(bottom))
+    return (
+        round(x / page_w, 5),
+        round((page_h - (baseline + asc)) / page_h, 5),
+        round((x + width) / page_w, 5),
+        round((page_h - (baseline + desc)) / page_h, 5),
+    )
 
 
 def norm_rect_bbox(
@@ -234,27 +236,34 @@ def cluster_words_into_lines(
     Stable-sort by (top, x0); break when y-overlap ratio vs the last word in
     the current line is below the threshold; re-sort each line by x0 (stable).
     """
-    sorted_words = sorted(words, key=lambda w: (w["top"], w["x0"]))
     lines: List[List[dict]] = []
     current: List[dict] = []
-    for w in sorted_words:
-        if not current:
-            current.append(w)
-            continue
-        last = current[-1]
-        overlap = min(w["bottom"], last["bottom"]) - max(w["top"], last["top"])
-        total = max(w["bottom"], last["bottom"]) - min(w["top"], last["top"])
-        ratio = overlap / total if total else 0.0
-        if ratio >= minimum_y_overlap_threshold:
-            current.append(w)
+    lt = lb = 0.0  # top and bottom of the last word of ``current``
+    # min(a, b) / max(a, b) spelled out as conditionals that pick the same
+    # operand the builtins do
+    for w in sorted(words, key=_TOP_X0):
+        t, b = w["top"], w["bottom"]
+        if current:
+            overlap = (lb if lb < b else b) - (lt if lt > t else t)
+            total = (lb if lb > b else b) - (lt if lt < t else t)
+            ratio = overlap / total if total else 0.0
+            if ratio >= minimum_y_overlap_threshold:
+                current.append(w)
+            else:
+                lines.append(current)
+                current = [w]
         else:
-            lines.append(current)
-            current = [w]
+            current.append(w)
+        lt, lb = t, b
     if current:
         lines.append(current)
     for line in lines:
-        line.sort(key=lambda w: w["x0"])
+        line.sort(key=_X0)
     return lines
+
+
+_TOP_X0 = itemgetter("top", "x0")
+_X0 = itemgetter("x0")
 
 
 def _mean(values: Sequence[float]) -> float:
@@ -273,18 +282,23 @@ def construct_word_line(
     Python banker's ``round`` is intentional — the reference uses it
     (layout.py:220) and both our oracle and UDF paths share this function.
     """
-    line = ""
+    pieces: List[str] = []
     starts: List[int] = []
+    n = 0  # length of the line so far
     min_spaces = 1 if include_extra_space else 0
     for w in words:
         cleaned = w["text"].replace("\n", " ")
-        left = w["x0"] - x_shift
-        x_dist = left / x_density
-        num_spaces = max(min(min_spaces, len(line)), int(round(x_dist)) - len(line))
-        line += " " * num_spaces
-        starts.append(len(line))
-        line += cleaned
-    return line, starts
+        num_spaces = int(round((w["x0"] - x_shift) / x_density)) - n
+        floor = min_spaces if min_spaces < n else n
+        if num_spaces < floor:
+            num_spaces = floor
+        if num_spaces > 0:
+            pieces.append(" " * num_spaces)
+            n += num_spaces
+        starts.append(n)
+        pieces.append(cleaned)
+        n += len(cleaned)
+    return "".join(pieces), starts
 
 
 def build_page_layout(
@@ -329,9 +343,15 @@ def build_page_layout(
     else:
         line_clusters = cluster_words_into_lines(words)
 
-    line_heights = [
-        _mean([abs(w["bottom"] - w["top"]) for w in lw]) if lw else 0.0
+    # per line: the words' edges, in cluster order
+    edges = [
+        ([w["x0"] for w in lw], [w["top"] for w in lw], [w["x1"] for w in lw],
+         [w["bottom"] for w in lw])
         for lw in line_clusters
+    ]
+    line_heights = [
+        _mean([abs(b - t) for t, b in zip(tops, bottoms)]) if tops else 0.0
+        for _x0s, tops, _x1s, bottoms in edges
     ]
     average_line_height = _mean(line_heights) or 0.02
 
@@ -341,13 +361,12 @@ def build_page_layout(
     pos = 0
     top_line = 0.0
     lines_out: List[dict] = []
-    for i, lw in enumerate(line_clusters):
-        cluster_y = _mean([w["top"] for w in lw])
-        distance_from_top = cluster_y - top_line
-        line_distance = int(round(distance_from_top / average_line_height))
-        num_newlines = 0 if i == 0 else max(min(line_distance, 4), 1)
-        pieces.extend(["\n"] * num_newlines)
-        pos += num_newlines
+    for i, (lw, (x0s, tops, x1s, bottoms)) in enumerate(zip(line_clusters, edges)):
+        line_distance = int(round((_mean(tops) - top_line) / average_line_height))
+        if i:
+            num_newlines = 1 if line_distance < 1 else (4 if line_distance > 4 else line_distance)
+            pieces.append("\n" * num_newlines)
+            pos += num_newlines
 
         text, starts = construct_word_line(
             lw,
@@ -355,27 +374,29 @@ def build_page_layout(
             include_extra_space=include_extra_space,
             x_shift=x_shift,
         )
-        line_bbox = bbox_combine([(w["x0"], w["top"], w["x1"], w["bottom"]) for w in lw])
+        # min/max over the words pick the same operand bbox_combine's
+        # pairwise fold does
+        top, bottom = min(tops), max(bottoms)
         lines_out.append(
             {
                 "text": text,
                 "start": pos,
-                "bbox": tuple(round5(v) for v in line_bbox),
-                "top": min(w["top"] for w in lw),
-                "bottom": max(w["bottom"] for w in lw),
+                "bbox": (round(min(x0s), 5), round(top, 5), round(max(x1s), 5), round(bottom, 5)),
+                "top": top,
+                "bottom": bottom,
                 "words": [
                     {
                         "text": w["text"].replace("\n", " "),
                         "start": pos + s,
-                        "bbox": (w["x0"], w["top"], w["x1"], w["bottom"]),
+                        "bbox": (x0, t, x1, b),
                     }
-                    for w, s in zip(lw, starts)
+                    for w, s, x0, t, x1, b in zip(lw, starts, x0s, tops, x1s, bottoms)
                 ],
             }
         )
         pieces.append(text)
         pos += len(text)
-        top_line = _mean([w["bottom"] for w in lw])
+        top_line = _mean(bottoms)
 
     page_text = "".join(pieces)
 

@@ -10,70 +10,88 @@ Clear. MSB-first bit packing.
 
 from __future__ import annotations
 
+import numpy as np
+
 CLEAR = 256
 EOD = 257
 
+# a fresh code table; Clear and EOD hold no string
+_BASE = [bytes([i]) for i in range(256)] + [None, None]
+# bit weights of one code, MSB first, per code width
+_WEIGHTS = {w: 1 << np.arange(w - 1, -1, -1, dtype=np.uint16) for w in range(9, 13)}
+# codes unpacked per batch: bounds the bit array of a large stream
+_BATCH = 4096
+
+
+def _codes(data: bytes, bit: int, width: int, count: int) -> list:
+    """``count`` MSB-first codes of ``width`` bits starting at ``bit``."""
+    lo, skip = bit >> 3, bit & 7
+    nbytes = (skip + count * width + 7) >> 3
+    bits = np.unpackbits(np.frombuffer(data, np.uint8, nbytes, lo))
+    return (bits[skip : skip + count * width].reshape(count, width) @ _WEIGHTS[width]).tolist()
+
 
 def decode(data: bytes, early_change: int = 1) -> bytes:
-    """LZW-decode ``data`` (raises ValueError on malformed streams)."""
+    """LZW-decode ``data`` (raises ValueError on malformed streams).
+
+    Every code after the first of a table adds one entry, so the code
+    width is known ahead for a whole run of codes: each run is unpacked in
+    one vectorized step and only the table walk runs per code."""
     out = bytearray()
-    base = [bytes([i]) for i in range(256)] + [b"", b""]
-    table = list(base)
-    tsize = 258
-    width = 9
-    limit = (1 << 9) - early_change
-    mask = (1 << 9) - 1
-    prev: bytes = b""
-    acc = 0
-    nbits = 0
-    pos = 0
-    n = len(data)
-    append = table.append
-    while True:
-        while nbits < width:
-            if pos >= n:
+    total = len(data) * 8
+    bit = 0
+    while True:  # one code table: from the start, then after each Clear
+        table = list(_BASE)
+        append = table.append
+        tsize = 258
+        width = 9
+        limit = (1 << 9) - early_change
+        prev = None
+        while True:  # one batch of codes of one width
+            count = min((total - bit) // width, _BATCH)
+            if width < 12:
+                count = min(count, limit - tsize + (prev is None))
+            if count <= 0:
                 return bytes(out)  # missing EOD: tolerate (real PDFs do)
-            acc = (acc << 8) | data[pos]
-            pos += 1
-            nbits += 8
-        nbits -= width
-        code = (acc >> nbits) & mask
-        # truncate consumed bits: without this acc accumulates the entire
-        # stream prefix as an ever-growing bigint and every shift becomes
-        # O(stream), making decode quadratic (11x measured on 100 KB
-        # streams); the mask leaves the <width live bits untouched
-        acc &= (1 << nbits) - 1
-        if code == EOD:
-            return bytes(out)
-        if code == CLEAR:
-            table = list(base)
-            append = table.append
-            tsize = 258
-            width = 9
-            limit = (1 << 9) - early_change
-            mask = (1 << 9) - 1
-            prev = b""
-            continue
-        if prev == b"":
-            if code >= tsize:
-                raise ValueError("LZW: first code not in table")
-            entry = table[code]
-        elif code < tsize:
-            entry = table[code]
-            append(prev + entry[:1])
-            tsize += 1
-        elif code == tsize:
-            entry = prev + prev[:1]  # KwKwK case
-            append(entry)
-            tsize += 1
-        else:
-            raise ValueError("LZW: code out of range")
-        out += entry
-        prev = entry
-        if tsize >= limit and width < 12:
-            width += 1
-            limit = (1 << width) - early_change
-            mask = (1 << width) - 1
+            codes = iter(_codes(data, bit, width, count))
+            if prev is None:
+                code = next(codes)
+                if code == CLEAR:
+                    bit += width
+                    break
+                if code == EOD:
+                    return bytes(out)
+                if code >= tsize:
+                    raise ValueError("LZW: first code not in table")
+                prev = table[code]
+                out += prev
+                count -= 1
+                bit += width
+            first = tsize
+            for code in codes:
+                if code < tsize:
+                    entry = table[code]
+                    if entry is None:  # Clear or EOD
+                        break
+                    append(prev + entry[:1])
+                elif code == tsize:
+                    entry = prev + prev[:1]  # KwKwK case
+                    append(entry)
+                else:
+                    raise ValueError("LZW: code out of range")
+                tsize += 1
+                out += entry
+                prev = entry
+            else:
+                bit += count * width
+                if tsize >= limit and width < 12:
+                    width += 1
+                    limit = (1 << width) - early_change
+                continue
+            if code == EOD:
+                return bytes(out)
+            bit += (tsize - first + 1) * width
+            break
 
 
 def encode(data: bytes, early_change: int = 1) -> bytes:
@@ -90,7 +108,9 @@ def encode(data: bytes, early_change: int = 1) -> bytes:
         while nbits >= 8:
             nbits -= 8
             out.append((acc >> nbits) & 0xFF)
-        acc &= (1 << nbits) - 1  # same quadratic-growth guard as decode
+        # keep only the live bits: a growing accumulator makes every shift
+        # O(stream) and encoding quadratic
+        acc &= (1 << nbits) - 1
 
     table = {bytes([i]): i for i in range(256)}
     next_code = 258

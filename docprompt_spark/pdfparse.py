@@ -30,8 +30,10 @@ import re
 import zlib
 from typing import Any, Dict, List, Optional, Tuple
 
+import numpy as np
+
 from docprompt_spark import cff
-from docprompt_spark.kernels import norm_rect_bbox, norm_word_bbox
+from docprompt_spark.kernels import norm_rect_bbox
 
 # Chunks on the same baseline closer than this (in em units of the pending
 # word's effective size) are the same word split for kerning; gaps at or
@@ -137,13 +139,24 @@ def _a85_decode(data: bytes) -> bytes:
     # so the other characters form 5-char groups plus the final one
     if (len(body) - body.count(b"z")) % 5 == 1:
         raise ValueError("ASCII85Decode: final group of one character")
-    # stdlib a85decode implements the identical Adobe semantics ('z' only
-    # at group start, trailing group padded with 'u' keeping n-1 bytes,
-    # ValueError on stray chars) with a struct-batched group loop — 1.6x
-    # the per-char loop, verified byte-identical on randomized and edge
-    # inputs incl. injected whitespace/NUL — except that it silently drops
-    # a final one-char group, hence the check above
-    return base64.a85decode(body, ignorechars=b"")
+    pad = -len(body) % 5
+    digits = np.frombuffer(body + b"u" * pad, np.uint8)
+    if b"z" in body or (len(body) and (digits.min() < 0x21 or digits.max() > 0x75)):
+        # stdlib a85decode implements the identical Adobe semantics ('z'
+        # only at group start, trailing group padded with 'u' keeping n-1
+        # bytes, ValueError on stray chars) — except that it silently
+        # drops a final one-char group, hence the check above
+        return base64.a85decode(body, ignorechars=b"")
+    # only '!'..'u': every 5-char group at once, the final one padded
+    # with 'u' as above
+    groups = (digits.reshape(-1, 5).astype(np.uint64) - 0x21) @ _A85_WEIGHTS
+    if len(groups) and groups.max() > 0xFFFFFFFF:
+        raise ValueError("Ascii85 overflow")
+    out = groups.astype(">u4").tobytes()
+    return out[: len(out) - pad]
+
+
+_A85_WEIGHTS = 85 ** np.arange(4, -1, -1, dtype=np.uint64)
 
 
 def _a85_encode(data: bytes) -> bytes:
@@ -421,6 +434,10 @@ class _Lexer:
         raise ValueError("unterminated string")
 
     def _read_hex_string(self) -> bytes:
+        m = _HEX_STR_RE.match(self.data, self.pos)
+        if m is not None:  # hex digits and whitespace only
+            self.pos = m.end()
+            return _hex_string(m[1])
         d = self.data
         self.pos += 1
         out = bytearray()
@@ -444,6 +461,22 @@ class HexString(bytes):
     """Marks strings written as <...> (2-byte CID codes for Type0 fonts)."""
 
 
+_HEX_STR_RE = re.compile(rb"<([0-9A-Fa-f\0\t\n\f\r ]*)>")
+
+
+def _hex_string(body: bytes) -> HexString:
+    """The string of a ``<...>`` body of hex digits and whitespace; an odd
+    final digit is padded with 0 (§7.3.4.3)."""
+    digits = body.translate(None, _WS)
+    if len(digits) % 2:
+        digits += b"0"
+    return HexString(binascii.unhexlify(digits))
+
+
+# the rest of an array that holds only numbers: each whitespace-separated
+# run is one number token of the object lexer (NUL, which bytes.split does
+# not split on, takes the token path)
+_NUM_ARRAY_RE = re.compile(rb"([0-9+.\-\t\n\f\r ]*)\]")
 _REF_TAIL_RE = re.compile(rb"[\0\t\n\f\r ]+(\d+)[\0\t\n\f\r ]+R(?![^\0\t\n\f\r ()<>\[\]{}/%])")
 
 
@@ -465,6 +498,11 @@ def _parse_from_token(lex: _Lexer, tok: Any) -> Any:
                 raise ValueError(f"bad dict key {key!r}")
             d[str(key)] = _parse_object(lex)
     if structural and tok == b"[":
+        # numbers only (/Widths, /W runs, /MediaBox): one match, no refs
+        m = _NUM_ARRAY_RE.match(lex.data, lex.pos)
+        if m is not None:
+            lex.pos = m.end()
+            return [float(t) if b"." in t else int(t) for t in m[1].split()]
         arr = []
         while True:
             t = lex.read_token()
@@ -2014,104 +2052,118 @@ def _ii_data_len(d: dict) -> Optional[int]:
     return ((w * bpc * ncomp + 7) // 8) * h
 
 
+# One match per content token, one group per token class; the token loop
+# dispatches on ``m.lastindex``. The whitespace/comment prefix is possessive:
+# once nothing matches after it, the match fails instead of backtracking
+# into the last comment and lifting its tail characters out as a token.
 _CS_RE = re.compile(
-    rb"(?:%[^\r\n]*|[\0\t\n\f\r ])*"
-    rb"(\[|\]|<<|>>|\("
-    rb"|<[0-9A-Fa-f\0\t\n\f\r ]*>"
-    rb"|/[^\0\t\n\f\r ()<>\[\]{}/%]*"
-    rb"|[+-]?(?:\d+\.\d*|\.\d+|\d+)"
-    rb"|[^\0\t\n\f\r ()<>\[\]{}/%]+)"
+    rb"(?:%[^\r\n]*|[\0\t\n\f\r ])*+"
+    rb"(?:([+-]?(?:\d+\.\d*|\.\d+))"  # 1 real
+    rb"|([+-]?\d+)"  # 2 integer
+    rb"|([^\0\t\n\f\r ()<>\[\]{}/%+\-.\d][^\0\t\n\f\r ()<>\[\]{}/%]*)"  # 3 operator
+    rb"|\(([^()\\]*)\)"  # 4 literal string without escapes or nesting
+    rb"|/([^\0\t\n\f\r ()<>\[\]{}/%]*)"  # 5 name
+    rb"|(\[|\]|<<|>>)"  # 6 structural marker
+    rb"|<([0-9A-Fa-f\0\t\n\f\r ]*)>"  # 7 hex string
+    rb"|(\()"  # 8 literal string for the escape-aware reader
+    rb"|([+\-.][^\0\t\n\f\r ()<>\[\]{}/%]*))"  # 9 sign or dot that starts no number
 )
 
-_HEX_WS = b"\0\t\n\f\r "
+# shared Op instances for the standard operators (PDF 32000-1 Annex A);
+# BI and ID stay out: the token loop handles them
+_OPS = {
+    o: Op(o)
+    for o in (
+        b"b b* B B* BDC BMC BT BX c cm CS cs d d0 d1 Do DP EI EMC ET EX f F f* "
+        b"G g gs h i j J K k l m M MP n q Q re RG rg ri s S SC sc SCN scn sh "
+        b"T* Tc Td TD Tf Tj TJ TL Tm Tr Ts Tw Tz v w W W* y ' \" true false null"
+    ).split()
+}
+
+
+def _lift_inline_image(data: bytes, pos: int, ii_toks: List[Any]):
+    """(InlineImage, end) for the BI dict tokens ``ii_toks`` whose ``ID``
+    ends at ``pos``: the binary payload is sliced out here, since it would
+    derail the tokenizer."""
+    n = len(data)
+    d = _ii_expand(ii_toks)
+    if pos < n and data[pos] in _WS:
+        pos += 1  # exactly one whitespace after ID (spec)
+    ln = _ii_data_len(d)
+    if ln is not None:
+        raw = data[pos : pos + ln]
+        pos += ln
+        m_ei = _II_EI_RE.search(data, pos - 1)
+        return InlineImage(d, raw), (m_ei.end() if m_ei else n)
+    m_ei = _II_EI_RE.search(data, pos)
+    if m_ei is None:
+        return InlineImage(d, data[pos:]), n
+    return InlineImage(d, data[pos : m_ei.start()]), m_ei.end()
 
 
 def _tokenize_content(data: bytes) -> List[Any]:
-    """Typed token LIST: int/float, Name, LitString, HexString, or Op/bytes
-    structural markers — same token types as the generic lexer. Returns a
-    list (not a generator): one C-level append loop beats per-token frame
-    switching by ~25% on the content-stream hot path."""
-    pos = 0
-    n = len(data)
-    lex = None
+    """Typed token LIST: int/float, Name, LitString, HexString, InlineImage,
+    or Op/bytes structural markers — same token types as the generic
+    lexer. Returns a list (not a generator): one C-level append loop beats
+    per-token frame switching on the content-stream hot path.
+
+    Tokenization stops at the first byte no token class matches (a lone
+    ``)`` or ``{``). The tokens between ``BI`` and ``ID`` go through the
+    same classifier and become the inline image's dict."""
     out: List[Any] = []
     append = out.append
-    match = _CS_RE.match
-    while pos < n:
-        m = match(data, pos)
-        if m is None or m.group(1) is None:
-            break
-        tok = m.group(1)
-        pos = m.end()
-        c = tok[0]
-        if 0x30 <= c <= 0x39 or c in (0x2B, 0x2D, 0x2E):  # number (commonest)
-            append(float(tok) if b"." in tok else int(tok))
-        elif c == 0x28:  # ( literal string: escape-aware fallback reader
-            if lex is None:
-                lex = _Lexer(data)
-            lex.pos = pos - 1
+    ops_get = _OPS.get
+    pos = 0
+    bi = -1  # index in ``out`` where a pending BI dict starts
+    while True:
+        m = None
+        for m in iter(_CS_RE.scanner(data, pos).match, None):
+            k = m.lastindex
+            if k == 2:
+                append(int(m[2]))
+            elif k == 3:
+                tok = m[3]
+                op = ops_get(tok)
+                if op is not None:
+                    append(op)
+                elif tok == b"BI" and bi < 0:
+                    bi = len(out)
+                elif tok == b"ID" and bi >= 0:
+                    break
+                else:
+                    append(Op(tok))
+            elif k == 1:
+                append(float(m[1]))
+            elif k == 4:
+                append(LitString(m[4]))
+            elif k == 5:
+                append(Name(m[5], "latin-1"))
+            elif k == 6:
+                append(m[6])
+            elif k == 7:
+                append(_hex_string(m[7]))
+            elif k == 8:
+                break  # the scanner restarts after the escape-aware reader
+            else:
+                raise ValueError(f"malformed number {m[9]!r}")
+        else:
+            # no token class matches here: the stream ends, unless a
+            # pending BI dict ran into this point (its image is lifted here)
+            if bi < 0:
+                return out
+            k = 0
+        if k == 8:
+            lex = _Lexer(data, m.start(8))
             append(lex._read_literal_string())
             pos = lex.pos
-        elif c == 0x2F:  # /Name
-            append(Name(tok[1:].decode("latin-1")))
-        elif c == 0x3C:  # <...> hex string or <<
-            if tok == b"<<":
-                append(b"<<")
-            else:
-                digits = tok[1:-1].translate(None, _HEX_WS)
-                if len(digits) % 2:
-                    digits += b"0"
-                append(HexString(bytes.fromhex(digits.decode("ascii"))))
-        elif tok in (b"[", b"]", b">>"):
-            append(tok)
-        elif tok == b"BI":
-            # inline image: collect the dict tokens up to ID, then lift the
-            # binary payload out here — it would derail the lexer otherwise
-            ii_toks: List[Any] = []
-            while pos < n:
-                m = match(data, pos)
-                if m is None or m.group(1) is None:
-                    break
-                t2 = m.group(1)
-                pos = m.end()
-                if t2 == b"ID":
-                    break
-                c2 = t2[0]
-                if 0x30 <= c2 <= 0x39 or c2 in (0x2B, 0x2D, 0x2E):
-                    ii_toks.append(float(t2) if b"." in t2 else int(t2))
-                elif c2 == 0x2F:
-                    ii_toks.append(Name(t2[1:].decode("latin-1")))
-                elif c2 == 0x3C and t2 != b"<<":
-                    # <hex> string (e.g. an inline /Indexed palette table)
-                    digits = t2[1:-1].translate(None, _HEX_WS)
-                    if len(digits) % 2:
-                        digits += b"0"
-                    ii_toks.append(HexString(bytes.fromhex(digits.decode("ascii"))))
-                elif t2 in (b"<<", b">>", b"[", b"]"):
-                    ii_toks.append(t2)
-                else:
-                    ii_toks.append(Op(t2))
-            d = _ii_expand(ii_toks)
-            if pos < n and data[pos] in _WS:
-                pos += 1  # exactly one whitespace after ID (spec)
-            ln = _ii_data_len(d)
-            if ln is not None:
-                raw = data[pos : pos + ln]
-                pos += ln
-                m_ei = _II_EI_RE.search(data, pos - 1)
-                pos = m_ei.end() if m_ei else n
-            else:
-                m_ei = _II_EI_RE.search(data, pos)
-                if m_ei is None:
-                    raw = data[pos:]
-                    pos = n
-                else:
-                    raw = data[pos : m_ei.start()]
-                    pos = m_ei.end()
-            append(InlineImage(d, raw))
-        else:
-            append(Op(tok))
-    return out
+            continue
+        # ID ended the pending BI dict, or the stream did
+        if m is not None:
+            pos = m.end()
+        img, pos = _lift_inline_image(data, pos, out[bi:])
+        del out[bi:]
+        append(img)
+        bi = -1
 
 
 def _type3_glyph_outline(data: bytes, fm: List[float]):
@@ -2604,53 +2656,39 @@ def _interpret_content(
     # the same baseline and the horizontal gap is below MERGE_GAP_EM
     # (word-separating gaps are >= ~0.19 em — real space widths — while
     # kerning gaps are <= ~0.1 em; measured bimodal on the reference fixture).
-    pend: Optional[dict] = None
+    # A list, so a merge extends it in place:
+    # [text, x, baseline, width, size, scale, ascent, descent, inv, mcid]
+    pend: Optional[list] = None
 
     def finalize_pend() -> None:
+        # kernels.norm_word_bbox's float expressions, inlined: this runs
+        # once per word
         nonlocal pend
         if pend is not None:
-            bbox = norm_word_bbox(
-                pend["x"], pend["y"], pend["w"], pend["size"],
-                pend["asc"], pend["desc"], page_w, page_h,
-            )
-            w = {
-                "text": pend["text"],
-                "inv": bool(pend.get("inv")),
-                "x0": bbox[0], "top": bbox[1],
-                "x1": bbox[2], "bottom": bbox[3],
+            text, x, y, w, sz, _sc, asc, desc, inv, mcid = pend
+            word = {
+                "text": text,
+                "inv": inv,
+                "x0": round(x / page_w, 5),
+                "top": round((page_h - (y + sz * asc / 1000.0)) / page_h, 5),
+                "x1": round((x + w) / page_w, 5),
+                "bottom": round((page_h - (y + sz * desc / 1000.0)) / page_h, 5),
             }
-            if pend.get("mcid") is not None:
+            if mcid is not None:
                 # marked-content id (tagged PDFs only): keeps untagged
                 # word dicts byte-identical for the golden-parity tests
-                w["mcid"] = pend["mcid"]
-            words.append(w)
+                word["mcid"] = mcid
+            words.append(word)
             pend = None
 
-    def emit_chunk(chunk: dict, close: bool) -> None:
-        """Merge ``chunk`` into the pending word or flush-and-replace.
+    def word_out(text: str, t0: float, t1: float, close: bool) -> None:
+        """Emit the glyph run ``text`` that spans text-space pen positions
+        [t0, t1) of the current show op: merge it into the pending word or
+        flush-and-replace.
 
         ``close=True`` (explicit space glyph hit) finalizes immediately —
         a space is a definite word boundary even in condensed fonts whose
         space width is below the merge threshold.
-        """
-        nonlocal pend
-        if pend is not None:
-            em = pend["size"] * pend["scale"] or 1.0
-            gap = (chunk["x"] - (pend["x"] + pend["w"])) / em
-            if abs(chunk["y"] - pend["y"]) < 1e-9 and -0.5 <= gap < MERGE_GAP_EM:
-                pend["text"] += chunk["text"]
-                pend["w"] = (chunk["x"] + chunk["w"]) - pend["x"]
-            else:
-                finalize_pend()
-                pend = chunk
-        else:
-            pend = chunk
-        if close:
-            finalize_pend()
-
-    def show(segments: List[Any]) -> None:
-        """One show op; glyph-by-glyph advance in the writer's float-op order
-        (pdfwrite.advance_width) so positions match the golden fixtures.
 
         Word bboxes: x0 from the device-space pen at word start, width from
         the text-space advance times the horizontal scale — the exact float
@@ -2658,130 +2696,107 @@ def _interpret_content(
         kernels.norm_word_bbox), guaranteeing bit-identical round-trip for
         unmerged words.
         """
+        nonlocal pend
+        if oc_hidden:
+            # optional-content-hidden text: pen advanced, nothing emitted;
+            # never merge a visible pending word across it
+            finalize_pend()
+            return
+        # full text rendering matrix = Tm x CTM (§9.4.4). The untransformed
+        # case keeps the historical float expressions (golden-parity-bound);
+        # otherwise the composed trm drives either the axis-aligned general
+        # path (rotated text on a /Rotate page composes back to horizontal)
+        # or the quad fallback.
+        untransformed = ctm is _ID or ctm == _ID
+        if untransformed and tm[1] == 0.0 and tm[2] == 0.0:
+            sc = tm[0]
+            x = tm[4] + sc * t0 if t0 else tm[4]
+            w = (t1 - t0) * sc
+            y, sz = tm[5], size
+            if rise != 0.0:  # Ts baseline shift (§9.3.7)
+                y = tm[5] + rise * tm[3]
+        else:
+            trm = tm if untransformed else _mat_mul(tm, ctm)
+            if trm[1] == 0.0 and trm[2] == 0.0 and trm[0] > 0.0 and trm[3] > 0.0:
+                # e.g. 90-degree Tm under a 90-degree /Rotate page, or
+                # a scale+translate Form XObject CTM: still horizontal
+                x = trm[0] * t0 + trm[4]
+                y = trm[1] * t0 + trm[5]
+                w = trm[0] * (t1 - t0)
+                sz, sc = size * trm[3], trm[0]
+                if rise != 0.0:
+                    y = y + rise * trm[3]
+            else:
+                # genuinely rotated/flipped final orientation: emit a
+                # standalone word with the bbox of the transformed quad
+                # (reference providers emit rotated 4-vertex polys the
+                # same way, schema/layout.py BoundingPoly)
+                finalize_pend()
+                asc = size * font["ascent"] / 1000.0
+                desc = size * font["descent"] / 1000.0
+                if rise != 0.0:  # Ts shifts the quad in text space
+                    asc = asc + rise
+                    desc = desc + rise
+                xs, ys = [], []
+                for tx_c, ty_c in ((t0, desc), (t1, desc), (t1, asc), (t0, asc)):
+                    xs.append(trm[0] * tx_c + trm[2] * ty_c + trm[4])
+                    ys.append(trm[1] * tx_c + trm[3] * ty_c + trm[5])
+                wq = {
+                    "text": text,
+                    "inv": tr_mode == 3,
+                    "x0": round(min(xs) / page_w, 5),
+                    "top": round((page_h - max(ys)) / page_h, 5),
+                    "x1": round(max(xs) / page_w, 5),
+                    "bottom": round((page_h - min(ys)) / page_h, 5),
+                }
+                if cur_mcid is not None:
+                    wq["mcid"] = cur_mcid
+                words.append(wq)
+                return
+        if pend is not None:
+            gap = (x - (pend[1] + pend[3])) / (pend[4] * pend[5] or 1.0)
+            if abs(y - pend[2]) < 1e-9 and -0.5 <= gap < MERGE_GAP_EM:
+                pend[0] += text
+                pend[3] = (x + w) - pend[1]
+                if close:
+                    finalize_pend()
+                return
+            finalize_pend()
+        pend = [
+            text, x, y, w, sz, sc, font["ascent"], font["descent"],
+            tr_mode == 3, cur_mcid,
+        ]
+        if close:
+            finalize_pend()
+
+    def show(segments) -> None:
+        """One show op; glyph-by-glyph advance in the writer's float-op order
+        (pdfwrite.advance_width) so positions match the golden fixtures."""
         nonlocal tx
         assert font is not None
-        e_x, e_y = tm[4], tm[5]
-        scale_x = tm[0]
         widths_get = font["widths"].get
         dw = font["dw"]
-        cur_text: List[str] = []
-        start_tx = tx
-
-        # full text rendering matrix = Tm x CTM (§9.4.4). tm_plain keeps
-        # the historical float expressions (golden-parity-bound) for the
-        # untransformed case; otherwise the composed trm drives either the
-        # axis-aligned general path (rotated text on a /Rotate page
-        # composes back to horizontal) or the quad fallback.
-        tm_plain = ctm is _ID or ctm == _ID
-        trm = tm if tm_plain else _mat_mul(tm, ctm)
-        tm_axis = tm[1] == 0.0 and tm[2] == 0.0
-        trm_horiz = (
-            trm[1] == 0.0 and trm[2] == 0.0 and trm[0] > 0.0 and trm[3] > 0.0
-        )
-
-        def chunk_out(close: bool) -> None:
-            nonlocal cur_text, start_tx
-            if cur_text and oc_hidden:
-                # optional-content-hidden text: pen advanced, nothing
-                # emitted; never merge a visible pending word across it
-                finalize_pend()
-                cur_text = []
-                start_tx = tx
-                return
-            if cur_text:
-                if tm_plain and tm_axis:
-                    x_dev = e_x + scale_x * start_tx if start_tx else e_x
-                    width = (tx - start_tx) * scale_x
-                    y_dev, sz, sc = e_y, size, scale_x
-                    if rise != 0.0:  # Ts baseline shift (§9.3.7)
-                        y_dev = e_y + rise * tm[3]
-                elif trm_horiz:
-                    # e.g. 90-degree Tm under a 90-degree /Rotate page, or
-                    # a scale+translate Form XObject CTM: still horizontal
-                    x_dev = trm[0] * start_tx + trm[4]
-                    y_dev = trm[1] * start_tx + trm[5]
-                    width = trm[0] * (tx - start_tx)
-                    sz, sc = size * trm[3], trm[0]
-                    if rise != 0.0:
-                        y_dev = y_dev + rise * trm[3]
-                else:
-                    # genuinely rotated/flipped final orientation: emit a
-                    # standalone word with the bbox of the transformed quad
-                    # (reference providers emit rotated 4-vertex polys the
-                    # same way, schema/layout.py BoundingPoly)
-                    finalize_pend()
-                    asc = size * font["ascent"] / 1000.0
-                    desc = size * font["descent"] / 1000.0
-                    if rise != 0.0:  # Ts shifts the quad in text space
-                        asc = asc + rise
-                        desc = desc + rise
-                    xs, ys = [], []
-                    for tx_c, ty_c in (
-                        (start_tx, desc), (tx, desc),
-                        (tx, asc), (start_tx, asc),
-                    ):
-                        xs.append(trm[0] * tx_c + trm[2] * ty_c + trm[4])
-                        ys.append(trm[1] * tx_c + trm[3] * ty_c + trm[5])
-                    from docprompt_spark.kernels import round5
-
-                    wq = {
-                        "text": "".join(cur_text),
-                        "inv": tr_mode == 3,
-                        "x0": round5(min(xs) / page_w),
-                        "top": round5((page_h - max(ys)) / page_h),
-                        "x1": round5(max(xs) / page_w),
-                        "bottom": round5((page_h - min(ys)) / page_h),
-                    }
-                    if cur_mcid is not None:
-                        wq["mcid"] = cur_mcid
-                    words.append(wq)
-                    cur_text = []
-                    start_tx = tx
-                    return
-                emit_chunk(
-                    {
-                        "inv": tr_mode == 3,
-                        "text": "".join(cur_text),
-                        "x": x_dev, "y": y_dev, "w": width,
-                        "size": sz, "scale": sc,
-                        "asc": font["ascent"], "desc": font["descent"],
-                        "mcid": cur_mcid,
-                    },
-                    close,
-                )
-            elif close:
-                finalize_pend()
-            cur_text = []
-            start_tx = tx
-
+        is_t0 = font["type0"]
         # text-state displacement (§9.4.4): w0/1000*Tfs + Tc (+Tw for
         # byte-32 in simple fonts), all scaled by Th — the justified /
         # letter-spaced / condensed forms. plain_ts keeps the historical
         # single-expression float path bit-identical when state is default.
         plain_ts = char_sp == 0.0 and word_sp == 0.0 and hscale == 1.0
-        is_t0 = font["type0"]
-
-        def adv(code: int) -> float:
-            w0 = widths_get(code, dw) * size / 1000.0
-            if plain_ts:
-                return w0
-            extra = char_sp + (
-                word_sp if code == 32 and not is_t0 else 0.0
-            )
-            return (w0 + extra) * hscale
-
+        t = t0 = tx  # pen now / at the start of the current run
+        run: List[str] = []
         for seg in segments:
             if isinstance(seg, (int, float)):
                 # A large forward TJ adjustment (>= merge threshold) is
                 # word-separating whitespace without a space glyph.
-                if cur_text and (-seg / 1000.0) >= MERGE_GAP_EM:
-                    chunk_out(False)
+                if run and (-seg / 1000.0) >= MERGE_GAP_EM:
+                    word_out("".join(run), t0, t, False)
+                    run = []
                 adj = -seg / 1000.0 * size
-                tx += adj if plain_ts else adj * hscale
-                if not cur_text:
-                    start_tx = tx
+                t += adj if plain_ts else adj * hscale
+                if not run:
+                    t0 = t
                 continue
-            if font["type0"]:
+            if is_t0:
                 codes = [
                     (seg[i] << 8) | seg[i + 1] for i in range(0, len(seg) - 1, 2)
                 ]
@@ -2793,40 +2808,60 @@ def _interpret_content(
                     chars = [gm.get(c) or chr(c) for c in codes]
                 else:  # common case: latin-1-safe font, no remapping
                     chars = seg.decode("latin-1")
-            if plain_ts:  # hot path: default text state, inline advance
-                for code, ch in zip(codes, chars):
-                    if ch == " ":
-                        chunk_out(True)
-                        tx += widths_get(code, dw) * size / 1000.0
-                        start_tx = tx
+            if " " not in chars:  # no word boundary inside: one run
+                if chars:
+                    if not run:
+                        t0 = t
+                    run.extend(chars)
+                if plain_ts:
+                    for code in codes:
+                        t += widths_get(code, dw) * size / 1000.0
+                else:
+                    for code in codes:
+                        t += (
+                            widths_get(code, dw) * size / 1000.0
+                            + (char_sp + (word_sp if code == 32 and not is_t0 else 0.0))
+                        ) * hscale
+                continue
+            for code, ch in zip(codes, chars):
+                if plain_ts:  # default text state
+                    adv = widths_get(code, dw) * size / 1000.0
+                else:
+                    adv = (
+                        widths_get(code, dw) * size / 1000.0
+                        + (char_sp + (word_sp if code == 32 and not is_t0 else 0.0))
+                    ) * hscale
+                if ch == " ":
+                    if run:
+                        word_out("".join(run), t0, t, True)
+                        run = []
                     else:
-                        if not cur_text:
-                            start_tx = tx
-                        cur_text.append(ch)
-                        tx += widths_get(code, dw) * size / 1000.0
-            else:
-                for code, ch in zip(codes, chars):
-                    if ch == " ":
-                        chunk_out(True)
-                        tx += adv(code)
-                        start_tx = tx
-                    else:
-                        if not cur_text:
-                            start_tx = tx
-                        cur_text.append(ch)
-                        tx += adv(code)
-        chunk_out(False)
+                        finalize_pend()
+                    t += adv
+                    t0 = t
+                else:
+                    if not run:
+                        t0 = t
+                    run.append(ch)
+                    t += adv
+        if run:
+            word_out("".join(run), t0, t, False)
+        tx = t
 
+    push = stack.append
     for tok in tokens:
-        if not isinstance(tok, Op):
-            if type(tok) is bytes and tok == b"[":
+        tt = type(tok)
+        if tt is not Op:
+            if tt is not bytes and tt is not InlineImage:  # an operand
+                push(tok)
+            elif tok == b"[":
                 arr: List[Any] = []
                 for t in tokens:
                     if type(t) is bytes and t == b"]":
                         break
                     arr.append(t)
-                stack.append(arr)
-            elif type(tok) is bytes and tok == b"<<":
+                push(arr)
+            elif tok == b"<<":
                 # inline property-list dict (BDC operands, §14.6.2):
                 # collect depth-1 name/value pairs. NB: a fresh local —
                 # the old skip loop shadowed the form-recursion `depth`
@@ -2849,8 +2884,8 @@ def _interpret_content(
                         j += 2
                     else:
                         j += 1
-                stack.append(pdict)
-            elif type(tok) is InlineImage:
+                push(pdict)
+            elif tt is InlineImage:
                 if oc_hidden:
                     continue
                 # BI/ID/EI image: painted in unit image space scaled by the
@@ -2871,8 +2906,8 @@ def _interpret_content(
                     img["codec"] = _codec_of(tok.dict, resolve, tok.raw)
                     img["palette"] = indexed_palette(tok.dict, resolve)
                 images.append(img)
-            else:
-                stack.append(tok)
+            else:  # a stray ']' or '>>'
+                push(tok)
             continue
         op = tok
         if not with_vectors and op in _VECTOR_OPS:
@@ -2889,7 +2924,7 @@ def _interpret_content(
             show([stack[-1]])
             stack.clear()
         elif op == b"Tm":
-            m = tuple(float(v) for v in stack[-6:])
+            m = tuple(map(float, stack[-6:]))
             begin_line(m)
             stack.clear()
         elif op == b"Td":
@@ -2897,7 +2932,7 @@ def _interpret_content(
             begin_line(_line_displace(tlm, dx, dy))
             stack.clear()
         elif op == b"TJ":
-            show(list(stack[-1]))
+            show(stack[-1])
             stack.clear()
         elif op in (b"BDC", b"BMC"):
             # marked-content sequence (§14.6): BDC's property list may
@@ -2940,7 +2975,7 @@ def _interpret_content(
                  char_sp, word_sp, hscale, rise, dash,
                  blend_m) = gs_stack.pop()
         elif op == b"cm":
-            m = tuple(float(v) for v in stack[-6:])
+            m = tuple(map(float, stack[-6:]))
             ctm = _mat_mul(m, ctm)
             stack.clear()
         elif op == b"BT":

@@ -28,6 +28,7 @@ from __future__ import annotations
 import functools
 import itertools
 import sys
+from types import MappingProxyType
 from typing import Callable, Dict, Tuple, Union
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -3191,13 +3192,27 @@ def _r5(x: float) -> float:
     return float(Decimal(repr(float(x))).quantize(Decimal("0.00001"), ROUND_HALF_UP))
 
 
+@functools.lru_cache(maxsize=None)
+def _golden_media_pages(n_docs=36, seed=11) -> tuple:
+    """``(doc_id, images)`` of every page of the media query corpus, from
+    the generator's ground truth, built once per process and shared by the
+    media oracles. Each image is a read-only mapping, so no oracle can
+    change another's ground truth."""
+    from docprompt_spark.corpus import golden_page_layouts
+
+    return tuple(
+        (doc_id, tuple(MappingProxyType(im) for im in imgs))
+        for doc_id, _pn, _layout, imgs in golden_page_layouts(
+            n_docs, seed=seed, skew_every=0
+        )
+    )
+
+
 def _golden_media(n_docs=36, seed=11):
     """(media_ref, payload, samples, px_w, px_h) ground truth for the media
     query corpus — one entry per distinct media_ref."""
-    from docprompt_spark.corpus import golden_page_layouts
-
     seen = {}
-    for _doc, _pn, _layout, imgs in golden_page_layouts(n_docs, seed=seed, skew_every=0):
+    for _doc, imgs in _golden_media_pages(n_docs, seed):
         for im in imgs:
             seen.setdefault(im["media_ref"], im)
     return seen
@@ -3207,10 +3222,8 @@ def _media_inventory_oracle_sql() -> str:
     """media_inventory golden from ground-truth images (36 docs, seed 11)."""
     from collections import defaultdict
 
-    from docprompt_spark.corpus import golden_page_layouts
-
     per_doc = defaultdict(list)
-    for doc_id, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
+    for doc_id, imgs in _golden_media_pages():
         per_doc[doc_id].extend(imgs)
     return _values_sql(
         "doc_id string, n_media bigint, total_bytes bigint, n_distinct bigint",
@@ -3243,10 +3256,8 @@ def _media_codec_histogram_oracle_sql() -> str:
     classifier."""
     from collections import defaultdict
 
-    from docprompt_spark.corpus import golden_page_layouts
-
     agg = defaultdict(lambda: [0, 0])
-    for _d, _pn, _layout, imgs in golden_page_layouts(36, seed=11, skew_every=0):
+    for _d, imgs in _golden_media_pages():
         for im in imgs:
             agg[im["codec"]][0] += 1
             agg[im["codec"]][1] += im["n_bytes"]
@@ -3566,9 +3577,12 @@ def media_png_export(spark, sf_dir):
     )
 
 
-def _golden_raster_rows(n_docs=16, seed=11):
+@functools.lru_cache(maxsize=None)
+def _golden_raster_rows(n_docs=16, seed=11) -> tuple:
     """Ground-truth raster digests: the shared renderer over the
-    generator's golden layouts + decoded image samples (never the parser)."""
+    generator's golden layouts + decoded image samples (never the parser).
+    Rendered once per process; the page-raster and masked-raster oracles
+    share the rows, which are tuples."""
     import hashlib as _hl
 
     import numpy as np
@@ -3621,7 +3635,7 @@ def _golden_raster_rows(n_docs=16, seed=11):
                 len(wds),
             )
         )
-    return rows
+    return tuple(rows)
 
 
 def _page_rasters_oracle_sql() -> str:
@@ -3678,10 +3692,26 @@ _FLAGSHIP_DOCS = 8
 _FLAGSHIP_SEED = 123
 
 
+# Envelopes whose generated documents carry the plain corpus's golden spans
+# at their query's ``n_docs``, so their oracle is built from the plain
+# corpus: encrypted-r6's own generation (an AES-256 key derivation per
+# document) is the costliest oracle build of all. Every other envelope's
+# corpus differs from the plain one on some document (the plain generator
+# adds tiling patterns and letter spacing to eligible documents), so it
+# keeps its own generation. The envelope's golden-span query parses its
+# own documents, so its oracle parity test fails if this claim breaks.
+_PLAIN_SPAN_ENVELOPES = frozenset({"encrypted-r6"})
+
+
+@functools.lru_cache(maxsize=None)
 def _golden_spans_sql(n_docs: int, seed: int, envelope: str = None) -> str:
     """Golden spans of a deterministic corpus, embedded as a VALUES table —
-    DuckDB-checkable ground truth for the full parse+layout pipeline."""
+    DuckDB-checkable ground truth for the full parse+layout pipeline. Built
+    once per process for each ``(n_docs, seed, envelope)``."""
     from docprompt_spark.corpus import gen_corpus
+
+    if envelope in _PLAIN_SPAN_ENVELOPES:
+        return _golden_spans_sql(n_docs, seed)
 
     return _values_sql(
         _SPAN_COLS,

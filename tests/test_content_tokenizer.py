@@ -76,13 +76,13 @@ CASES = [
     ]),
     # comments: inside and trailing
     ("comment-mid", b"q % note\nQ", [_op(b"q"), _op(b"Q")]),
-    # a comment at the end of the stream: the match backtracks into the
-    # comment once nothing follows it, so its last character leaks out as
-    # a token
+    # a comment at the end of the stream yields no token: no character of
+    # it leaks out (an unterminated one, or one before a lone ')', neither)
     ("comment-trailing", b"1 0 0 1 5 6 cm % tail\n", [
         ("int", 1), ("int", 0), ("int", 0), ("int", 1), ("int", 5), ("int", 6), _op(b"cm"),
-        _op(b"l"),
     ]),
+    ("comment-at-eof", b"q % it's Q", [_op(b"q")]),
+    ("comment-before-stop", b"q % 5 Q\n)", [_op(b"q")]),
     # a lone ')' or '{' ends tokenization
     ("stop-rparen", b"q ) Q", [_op(b"q")]),
     ("stop-brace", b"q { Q", [_op(b"q")]),
@@ -139,3 +139,38 @@ def test_tokenize_content_table(data, want):
     assert got == want
     # Name == str and the float/int split: compare the classes too
     assert [g[0] for g in got] == [w[0] for w in want]
+
+
+
+def _value(v):
+    if isinstance(v, list):
+        return [_value(x) for x in v]
+    if isinstance(v, pdfparse.Ref):
+        return ("Ref", v.num, v.gen)
+    return (type(v).__name__, v)
+
+
+ARRAY_CASES = [
+    (b"[0 0 612 792]", [("int", 0), ("int", 0), ("int", 612), ("int", 792)]),
+    (b"[ ]", []),
+    (b"[1.5 -2 +3 .5 4.]", [
+        ("float", 1.5), ("int", -2), ("int", 3), ("float", 0.5), ("float", 4.0),
+    ]),
+    (b"[1\x002]", [("int", 1), ("int", 2)]),  # NUL separates tokens too
+    (b"[1\t\r\n\x0c2]", [("int", 1), ("int", 2)]),
+    (b"[1 [2 3] 4]", [("int", 1), [("int", 2), ("int", 3)], ("int", 4)]),
+    (b"[1 0 R 2]", [("Ref", 1, 0), ("int", 2)]),
+    (b"[32 /space /A]", [("int", 32), _n("space"), _n("A")]),
+]
+
+
+@pytest.mark.parametrize("data,want", ARRAY_CASES)
+def test_object_lexer_arrays(data, want):
+    """Arrays of the object lexer: number-only arrays (``/Widths``,
+    ``/MediaBox``) and every other array read to the same typed values."""
+    assert _value(pdfparse._parse_object(pdfparse._Lexer(data))) == want
+
+
+def test_object_lexer_malformed_number_in_array_raises():
+    with pytest.raises(ValueError):
+        pdfparse._parse_object(pdfparse._Lexer(b"[1 2-3]"))

@@ -127,3 +127,87 @@ def test_large_stream_roundtrip_masked_accumulator():
     assert lzw.decode(lzw.encode(big)) == big
     runs = b"".join(bytes([b]) * rng.randrange(1, 60) for b in range(256)) * 3
     assert lzw.decode(lzw.encode(runs)) == runs
+
+
+def _reference_decode(data: bytes, early_change: int = 1) -> bytes:
+    """The scalar decoder: one code per loop step, bits read a byte at a
+    time. ``lzw.decode`` unpacks a run of codes at once and must return
+    what this returns, and raise where this raises."""
+    out = bytearray()
+    base = [bytes([i]) for i in range(256)] + [b"", b""]
+    table, tsize, width = list(base), 258, 9
+    limit, mask = (1 << 9) - early_change, (1 << 9) - 1
+    prev, acc, nbits, pos = b"", 0, 0, 0
+    while True:
+        while nbits < width:
+            if pos >= len(data):
+                return bytes(out)
+            acc = (acc << 8) | data[pos]
+            pos += 1
+            nbits += 8
+        nbits -= width
+        code = (acc >> nbits) & mask
+        acc &= (1 << nbits) - 1
+        if code == lzw.EOD:
+            return bytes(out)
+        if code == lzw.CLEAR:
+            table, tsize, width = list(base), 258, 9
+            limit, mask = (1 << 9) - early_change, (1 << 9) - 1
+            prev = b""
+            continue
+        if prev == b"":
+            if code >= tsize:
+                raise ValueError("LZW: first code not in table")
+            entry = table[code]
+        elif code < tsize:
+            entry = table[code]
+            table.append(prev + entry[:1])
+            tsize += 1
+        elif code == tsize:
+            entry = prev + prev[:1]
+            table.append(entry)
+            tsize += 1
+        else:
+            raise ValueError("LZW: code out of range")
+        out += entry
+        prev = entry
+        if tsize >= limit and width < 12:
+            width += 1
+            limit, mask = (1 << width) - early_change, (1 << width) - 1
+
+
+def _outcome(fn, *args):
+    try:
+        return fn(*args)
+    except ValueError as e:
+        return ("ValueError", str(e))
+
+
+def test_decode_matches_scalar_reference():
+    """Valid streams across every code width and several Clears, cut at
+    random byte offsets (no EOD), with random bytes flipped (codes out of
+    range), with both EarlyChange values, and with a Clear and an EOD
+    landing in the middle of a run of same-width codes."""
+    rng = random.Random(11)
+    streams = []
+    for size in (0, 1, 40, 300, 700, 1500, 3000, 9000, 20000):
+        data = bytes(rng.choice(b"abcdefgh ") for _ in range(size))
+        streams.append(lzw.encode(data))
+    streams.append(lzw.encode(bytes(rng.randrange(256) for _ in range(12000))))
+    cases = list(streams)
+    for enc in streams:
+        for _ in range(6):
+            cut = rng.randrange(len(enc) + 1)
+            cases.append(enc[:cut])
+            flipped = bytearray(enc)
+            if flipped:
+                flipped[rng.randrange(len(flipped))] ^= 1 << rng.randrange(8)
+            cases.append(bytes(flipped))
+    cases.append(_pack([256, 65, 66, 258, 256, 67, 68, 259, 257, 69]))
+    cases.append(_pack([256, 65, 66, 257, 67]))
+    cases.append(_pack([256, 256, 65, 256, 257]))
+    for data in cases:
+        for early in (1, 0):
+            assert _outcome(lzw.decode, data, early) == _outcome(
+                _reference_decode, data, early
+            )

@@ -229,6 +229,7 @@ def test_ascii85_and_runlength_filters():
     cascade and 'z' shorthand) and RunLengthDecode (§7.4.5) round-trip;
     the default corpus rotates a85 content streams (idx%4==3) and half
     the structured XMP packets ride RunLength."""
+    import base64
     import random
 
     from docprompt_spark import corpus, pdfparse
@@ -249,6 +250,28 @@ def test_ascii85_and_runlength_filters():
     for lone in (b"!~>", b"<~9jqo^ \n!~>", b"z!"):
         with pytest.raises(ValueError):
             _a85_decode(lone)
+
+    # the group-at-once decode against the stdlib's per-character one, on
+    # bodies with whitespace, 'z' (at and inside a group), stray and
+    # overflowing characters, and every final-group length
+    def reference(data):
+        body = data.translate(None, b" \t\n\r\x0c\x00")
+        if (len(body) - body.count(b"z")) % 5 == 1:
+            raise ValueError("final group of one character")
+        return base64.a85decode(body, ignorechars=b"")
+
+    def outcome(fn, data):
+        try:
+            return fn(data)
+        except ValueError:
+            return ValueError
+
+    for _ in range(3000):
+        n = rng.randrange(30)
+        body = bytes(rng.choice(b"!#0AZafsu\x00 \nuz~v") for _ in range(n))
+        assert outcome(_a85_decode, body) == outcome(reference, body), body
+    for body in (b"s8W-!", b's8W-"', b"uuuuu", b"!!!!!!!", b"", b"!!z!!!"):
+        assert outcome(_a85_decode, body) == outcome(reference, body), body
 
     d = corpus.gen_doc(3, seed=42, skew_every=0)
     raw = pdfparse.unwrap_pdf_bytes(d["pdf"])
