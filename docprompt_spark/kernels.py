@@ -374,8 +374,8 @@ def build_page_layout(
             include_extra_space=include_extra_space,
             x_shift=x_shift,
         )
-        # min/max over the words pick the same operand bbox_combine's
-        # pairwise fold does
+        # the words' extreme edges: builtin min/max pick the same operands
+        # as bbox_combine's pairwise fold, so the bbox is bit-identical
         top, bottom = min(tops), max(bottoms)
         lines_out.append(
             {

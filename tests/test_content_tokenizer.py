@@ -1,6 +1,7 @@
 """Content-stream tokenizer pinned token for token: each case lists the
 exact (type, value) sequence ``pdfparse._tokenize_content`` returns, so a
-rewrite of the tokenizer cannot change a token's class or value unseen."""
+rewrite of the tokenizer cannot change a token's class or value unseen.
+The object lexer's arrays are pinned the same way."""
 
 import pytest
 
@@ -82,6 +83,8 @@ CASES = [
         ("int", 1), ("int", 0), ("int", 0), ("int", 1), ("int", 5), ("int", 6), _op(b"cm"),
     ]),
     ("comment-at-eof", b"q % it's Q", [_op(b"q")]),
+    # a leaked "'" operator would show from an empty operand stack
+    ("comment-ends-in-quote", b"q Q % say 'hi'\n", [_op(b"q"), _op(b"Q")]),
     ("comment-before-stop", b"q % 5 Q\n)", [_op(b"q")]),
     # a lone ')' or '{' ends tokenization
     ("stop-rparen", b"q ) Q", [_op(b"q")]),
