@@ -174,13 +174,16 @@ def _codec_of(xo_dict, resolve, payload=None) -> str:
         return "jpx" + flags()
     gray8 = cs == "DeviceGray" and bpc == 8
     # PNG/TIFF predictor on the image stream (what pdf optimizers emit):
-    # rides the tag as ;pN;cW so the decode stage can undo it standalone
+    # rides the tag as ;pN;cW so the decode stage can undo it standalone;
+    # LZW's /EarlyChange 0 rides as ;e0
     pred = ""
     if filts in (["FlateDecode"], ["LZWDecode"]):
         dp = resolve(xo_dict.get("DecodeParms", xo_dict.get("DP"))) or {}
         pn = int(resolve(dp.get("Predictor", 1)) or 1)
         if pn > 1:
             pred = f";p{pn};c{int(resolve(dp.get('Columns', 1)) or 1)}"
+        if filts == ["LZWDecode"] and resolve(dp.get("EarlyChange")) == 0:
+            pred += ";e0"
     if indexed and bpc == 8:
         # 8-bit palette indices over an RGB lookup table (GIF-heritage
         # images); decode needs the palette (MEDIA_SCHEMA palette column)
@@ -318,6 +321,7 @@ def decode_image(
 
     base, *parts = codec.split(";")
     invert = "d10" in parts
+    early = 0 if "e0" in parts else 1
     cols = rows = pred = None
     for p in parts:
         if p.startswith("c") and p[1:].isdigit():
@@ -391,7 +395,7 @@ def decode_image(
         elif base == "lzw-rgb8":
             from docprompt_spark import lzw as _lzw
 
-            raw = _unpredict(_lzw.decode(bytes(payload)), colors=3)
+            raw = _unpredict(_lzw.decode(bytes(payload), early), colors=3)
         else:
             raw = payload
         rgb = np.frombuffer(raw, dtype=np.uint8)[: width * height * 3].reshape(
@@ -412,7 +416,7 @@ def decode_image(
     elif base == "lzw-gray8":
         from docprompt_spark import lzw as _lzw
 
-        raw = _lzw.decode(bytes(payload))
+        raw = _lzw.decode(bytes(payload), early)
         px = np.frombuffer(raw, dtype=np.uint8)[: width * height].reshape(
             height, width
         )

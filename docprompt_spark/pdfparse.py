@@ -107,9 +107,8 @@ class Stream:
                 from docprompt_spark import lzw
 
                 pd_ = resolve(p) or {}
-                raw = lzw.decode(
-                    raw, int(resolve(pd_.get("EarlyChange", 1)) or 1)
-                )
+                early = 0 if resolve(pd_.get("EarlyChange")) == 0 else 1
+                raw = lzw.decode(raw, early)
                 raw = _apply_predictor(raw, pd_, resolve)
             elif f == "ASCIIHexDecode":
                 raw = binascii.unhexlify(
@@ -288,101 +287,97 @@ class LitString(bytes):
 
 
 _WS = b"\x00\t\n\x0c\r "
-_DELIM = b"()<>[]{}/%"
 
-# Master token regex for the object lexer (same shape as _CS_RE for content
-# streams): one C-level match replaces the per-char skip_ws + scan loops.
-# Group alternatives mirror read_token's historical dispatch exactly; literal
-# strings, hex strings and #-escaped names fall back to the char-loop readers.
-_OBJ_TOK_RE = re.compile(
-    rb"(?:%[^\r\n]*|[\0\t\n\f\r ])*"
-    rb"(<<|>>|\[|\]"
-    rb"|/[^\0\t\n\f\r ()<>\[\]{}/%]*"
-    rb"|[0-9+.\-][0-9.+-]*"
-    rb"|[^\0\t\n\f\r ()<>\[\]{}/%]+"
-    rb"|.)",
-    re.DOTALL,
+# whitespace and comments before a token; possessive, so that once no
+# token follows, the match fails instead of backtracking into the last
+# comment and lifting its tail characters out as a token
+_WS_PAT = rb"(?:%[^\r\n]*|[\0\t\n\f\r ])*+"
+_WS_RE = re.compile(_WS_PAT)
+
+# The one PDF token grammar (§7.2), for objects and content streams alike:
+# one match per token, one group per token class; _Lexer.read_token and
+# _tokenize_content dispatch on ``m.lastindex``. No group matches a lone
+# ``)`` ``{`` ``}`` ``>``, or a ``<`` that opens no hex string.
+_CS_RE = re.compile(
+    _WS_PAT
+    + rb"(?:([+-]?(?:\d+\.\d*|\.\d+))"  # 1 real
+    rb"|([+-]?\d+)"  # 2 integer
+    rb"|([^\0\t\n\f\r ()<>\[\]{}/%+\-.\d][^\0\t\n\f\r ()<>\[\]{}/%]*)"  # 3 operator
+    rb"|\(([^()\\]*)\)"  # 4 literal string without escapes or nesting
+    rb"|/([^\0\t\n\f\r ()<>\[\]{}/%]*)"  # 5 name
+    rb"|(\[|\]|<<|>>)"  # 6 structural marker
+    rb"|<([0-9A-Fa-f\0\t\n\f\r ]*)>"  # 7 hex string
+    rb"|(\()"  # 8 literal string for the escape-aware reader
+    rb"|([+\-.][^\0\t\n\f\r ()<>\[\]{}/%]*))"  # 9 sign or dot that starts no number
 )
+
+_NAME_ESC_RE = re.compile(rb"#([0-9A-Fa-f]{2})")
+
+
+def _escaped_name(body: bytes) -> Name:
+    """The name of a ``/`` token body that holds ``#``: each ``#`` plus two
+    hex digits is that byte (§7.3.5); any other ``#`` is kept as it is."""
+    return Name(
+        _NAME_ESC_RE.sub(lambda m: binascii.unhexlify(m[1]), body), "latin-1"
+    )
 
 
 class _Lexer:
-    """Tokenizer over PDF syntax, used for both objects & content streams."""
+    """Reads the tokens of objects, xref tables and object streams from
+    ``pos`` on; content streams go through _tokenize_content."""
 
     def __init__(self, data: bytes, pos: int = 0) -> None:
         self.data = data
         self.pos = pos
 
     def skip_ws(self) -> None:
-        d, n = self.data, len(self.data)
-        while self.pos < n:
-            c = d[self.pos]
-            if c in _WS:
-                self.pos += 1
-            elif c == 0x25:  # % comment
-                while self.pos < n and d[self.pos] not in b"\r\n":
-                    self.pos += 1
-            else:
-                return
-
-    def peek(self) -> int:
-        return self.data[self.pos]
+        self.pos = _WS_RE.match(self.data, self.pos).end()
 
     def read_token(self) -> Any:
-        """Next syntactic token: returns python values, Name, Ref markers
-        handled by the parser above; operators come back as bytes.
-
-        One _OBJ_TOK_RE match per token (C-level scan) with the historical
-        char-loop readers kept as fallbacks for literal strings, hex
-        strings, and #-escaped names — token-for-token identical output."""
-        m = _OBJ_TOK_RE.match(self.data, self.pos)
-        if m is None:  # only at end-of-data (ws/comment tail included)
-            raise EOFError
-        tok = m.group(1)
+        """Next token, typed as _tokenize_content types it: int/float,
+        Name, LitString, HexString, Op for keywords (obj, R, true, ...),
+        plain bytes for ``<<`` ``>>`` ``[`` ``]``. Raises EOFError at the
+        end of the data, ValueError where no token starts."""
+        m = _CS_RE.match(self.data, self.pos)
+        if m is None:
+            self.skip_ws()
+            if self.pos == len(self.data):
+                raise EOFError
+            raise ValueError(f"no PDF token at offset {self.pos}")
         self.pos = m.end()
-        c = tok[0]
-        if c == 0x2F:  # /Name
-            if 0x23 in tok:  # #xx escape: rare — char-loop fallback
-                self.pos = m.start(1)
-                return self._read_name()
-            return Name(tok[1:].decode("latin-1"))
-        if 0x30 <= c <= 0x39 or c in (0x2B, 0x2D, 0x2E):  # number
-            return float(tok) if 0x2E in tok else int(tok)
-        if tok in (b"<<", b">>", b"[", b"]"):
-            return tok
-        if c == 0x28:  # ( literal string: escape-aware reader
-            self.pos = m.start(1)
+        k = m.lastindex
+        if k == 2:
+            return int(m[2])
+        if k == 5:
+            tok = m[5]
+            return Name(tok, "latin-1") if 0x23 not in tok else _escaped_name(tok)
+        if k == 6:
+            return m[6]
+        if k == 3:
+            return Op(m[3])
+        if k == 1:
+            return float(m[1])
+        if k == 4:
+            return LitString(m[4])
+        if k == 7:
+            return _hex_string(m[7])
+        if k == 8:
+            self.pos = m.start(8)
             return self._read_literal_string()
-        if c == 0x3C:  # lone '<': hex string
-            self.pos = m.start(1)
-            return self._read_hex_string()
-        if len(tok) == 1 and c in b")>{}":  # lone delimiter
-            return tok
-        return Op(tok)
+        raise ValueError(f"malformed number {m[9]!r}")
 
-    def _read_name(self) -> Name:
-        d = self.data
-        self.pos += 1
-        start = self.pos
-        out = bytearray()
-        while self.pos < len(d) and d[self.pos] not in _WS and d[self.pos] not in _DELIM:
-            if d[self.pos] == 0x23 and self.pos + 2 < len(d):  # #xx
-                out += bytes([int(d[self.pos + 1 : self.pos + 3], 16)])
-                self.pos += 3
-            else:
-                out.append(d[self.pos])
-                self.pos += 1
-        return Name(out.decode("latin-1"))
-
-    def _read_number(self):
-        d = self.data
-        start = self.pos
-        self.pos += 1
-        while self.pos < len(d) and (d[self.pos] in b"0123456789.+-"):
-            self.pos += 1
-        tok = d[start : self.pos]
-        if b"." in tok:
-            return float(tok)
-        return int(tok)
+    def stream_data_start(self) -> int:
+        """After an object's dict: the offset of its stream data when the
+        ``stream`` keyword and its end of line (CRLF or LF, §7.3.8.1)
+        follow, else -1. Either way the lexer moves past the whitespace."""
+        self.skip_ws()
+        d, p = self.data, self.pos
+        if d[p : p + 6] != b"stream":
+            return -1
+        p += 6
+        if d[p : p + 2] == b"\r\n":
+            return p + 2
+        return p + 1 if d[p : p + 1] == b"\n" else p
 
     def _read_literal_string(self) -> bytes:
         d = self.data
@@ -433,35 +428,9 @@ class _Lexer:
                 self.pos += 1
         raise ValueError("unterminated string")
 
-    def _read_hex_string(self) -> bytes:
-        m = _HEX_STR_RE.match(self.data, self.pos)
-        if m is not None:  # hex digits and whitespace only
-            self.pos = m.end()
-            return _hex_string(m[1])
-        d = self.data
-        self.pos += 1
-        out = bytearray()
-        digits = bytearray()
-        while self.pos < len(d):
-            c = d[self.pos]
-            self.pos += 1
-            if c == 0x3E:
-                break
-            if c in _WS:
-                continue
-            digits.append(c)
-        if len(digits) % 2:
-            digits.append(0x30)
-        for i in range(0, len(digits), 2):
-            out.append(int(digits[i : i + 2], 16))
-        return HexString(bytes(out))
-
 
 class HexString(bytes):
     """Marks strings written as <...> (2-byte CID codes for Type0 fonts)."""
-
-
-_HEX_STR_RE = re.compile(rb"<([0-9A-Fa-f\0\t\n\f\r ]*)>")
 
 
 def _hex_string(body: bytes) -> HexString:
@@ -604,9 +573,7 @@ class PdfFile:
         if self.data[lex.pos : lex.pos + 4] != b"xref":
             return self._parse_xref_stream(off)
         lex.pos += 4
-        lex.skip_ws()
         while True:
-            save = lex.pos
             tok = lex.read_token()
             if tok == b"trailer":
                 trailer = _parse_object(lex)
@@ -625,7 +592,6 @@ class PdfFile:
                 num = start + i
                 if kind == b"n" and num not in self.xref:
                     self.xref[num] = obj_off
-            lex.skip_ws()
 
     def _parse_xref_stream(self, off: int) -> int:
         """Cross-reference STREAM section (PDF 1.5+, spec §7.5.8): a stream
@@ -639,19 +605,14 @@ class PdfFile:
         if kw != b"obj":
             raise ValueError(f"expected xref table or xref stream at {off}")
         d = _parse_object(lex)
-        lex.skip_ws()
-        if self.data[lex.pos : lex.pos + 6] != b"stream":
+        start = lex.stream_data_start()
+        if start < 0:
             raise ValueError(f"xref stream object {int(onum)} has no stream")
-        lex.pos += 6
-        if self.data[lex.pos : lex.pos + 2] == b"\r\n":
-            lex.pos += 2
-        elif self.data[lex.pos : lex.pos + 1] == b"\n":
-            lex.pos += 1
         # /Length may be an indirect ref into THIS xref section being built;
         # writers virtually never do that for xref streams, but resolve
         # defensively via the raw int when possible.
         length = self.resolve(d["Length"])
-        stream = Stream(d, self.data[lex.pos : lex.pos + int(length)])
+        stream = Stream(d, self.data[start : start + int(length)])
         payload = stream.data(self.resolve)
 
         w = [int(self.resolve(v)) for v in self.resolve(d.get("W", [1, 2, 1]))]
@@ -701,20 +662,15 @@ class PdfFile:
             if lex.read_token() != b"obj":
                 return None
             obj = _parse_object(lex)
-            lex.skip_ws()
-            if self.data[lex.pos : lex.pos + 6] != b"stream":
+            start = lex.stream_data_start()
+            if start < 0:
                 return lex.pos
-            lex.pos += 6
-            if self.data[lex.pos : lex.pos + 2] == b"\r\n":
-                lex.pos += 2
-            elif self.data[lex.pos : lex.pos + 1] == b"\n":
-                lex.pos += 1
             length = obj.get("Length") if isinstance(obj, dict) else None
             if isinstance(length, (int, float)):
-                return lex.pos + int(length)
+                return start + int(length)
             # /Length is an indirect ref we can't resolve mid-rebuild (or
             # garbage): fall back to the endstream keyword, like pdfium
-            e = self.data.find(b"endstream", lex.pos)
+            e = self.data.find(b"endstream", start)
             return e if e >= 0 else None
         except Exception:
             return None
@@ -836,17 +792,14 @@ class PdfFile:
                 return self.get_object(num)
             raise ValueError(f"bad object header at {off}")
         obj = _parse_object(lex)
-        lex.skip_ws()
-        if self.data[lex.pos : lex.pos + 6] == b"stream":
-            lex.pos += 6
-            if self.data[lex.pos : lex.pos + 2] == b"\r\n":
-                lex.pos += 2
-            elif self.data[lex.pos : lex.pos + 1] == b"\n":
-                lex.pos += 1
+        start = lex.stream_data_start()
+        if start >= 0:
             length = self.resolve(obj["Length"])
-            raw = self.data[lex.pos : lex.pos + int(length)]
-            obj = Stream(obj, raw)
-        if self._crypt is not None:
+            obj = Stream(obj, self.data[start : start + int(length)])
+        # a cross-reference stream is never encrypted (§7.6.1)
+        if self._crypt is not None and not (
+            start >= 0 and obj.dict.get("Type") == "XRef"
+        ):
             obj = self._decrypt_obj(obj, num, int(gen))
         self._cache[num] = obj
         return obj
@@ -2052,23 +2005,6 @@ def _ii_data_len(d: dict) -> Optional[int]:
     return ((w * bpc * ncomp + 7) // 8) * h
 
 
-# One match per content token, one group per token class; the token loop
-# dispatches on ``m.lastindex``. The whitespace/comment prefix is possessive:
-# once nothing matches after it, the match fails instead of backtracking
-# into the last comment and lifting its tail characters out as a token.
-_CS_RE = re.compile(
-    rb"(?:%[^\r\n]*|[\0\t\n\f\r ])*+"
-    rb"(?:([+-]?(?:\d+\.\d*|\.\d+))"  # 1 real
-    rb"|([+-]?\d+)"  # 2 integer
-    rb"|([^\0\t\n\f\r ()<>\[\]{}/%+\-.\d][^\0\t\n\f\r ()<>\[\]{}/%]*)"  # 3 operator
-    rb"|\(([^()\\]*)\)"  # 4 literal string without escapes or nesting
-    rb"|/([^\0\t\n\f\r ()<>\[\]{}/%]*)"  # 5 name
-    rb"|(\[|\]|<<|>>)"  # 6 structural marker
-    rb"|<([0-9A-Fa-f\0\t\n\f\r ]*)>"  # 7 hex string
-    rb"|(\()"  # 8 literal string for the escape-aware reader
-    rb"|([+\-.][^\0\t\n\f\r ()<>\[\]{}/%]*))"  # 9 sign or dot that starts no number
-)
-
 # shared Op instances for the standard operators (PDF 32000-1 Annex A);
 # BI and ID stay out: the token loop handles them
 _OPS = {
@@ -2103,8 +2039,8 @@ def _lift_inline_image(data: bytes, pos: int, ii_toks: List[Any]):
 
 def _tokenize_content(data: bytes) -> List[Any]:
     """Typed token LIST: int/float, Name, LitString, HexString, InlineImage,
-    or Op/bytes structural markers — same token types as the generic
-    lexer. Returns a list (not a generator): one C-level append loop beats
+    or Op/bytes structural markers — the types _Lexer.read_token returns
+    for the same grammar. Returns a list (not a generator): one C-level append loop beats
     per-token frame switching on the content-stream hot path.
 
     Tokenization stops at the first byte no token class matches (a lone
@@ -2137,7 +2073,8 @@ def _tokenize_content(data: bytes) -> List[Any]:
             elif k == 4:
                 append(LitString(m[4]))
             elif k == 5:
-                append(Name(m[5], "latin-1"))
+                tok = m[5]
+                append(Name(tok, "latin-1") if 0x23 not in tok else _escaped_name(tok))
             elif k == 6:
                 append(m[6])
             elif k == 7:

@@ -791,6 +791,7 @@ def write_pdf(
                 f"/Type /XObject /Subtype /Image /Width {im['width']}"
                 f" /Height {im['height']}"
             )
+            cs_fn = None
             if im.get("imagemask"):
                 # stencil masks carry no ColorSpace (spec §8.9.6.2)
                 entries += " /ImageMask true /BitsPerComponent 1"
@@ -828,10 +829,21 @@ def write_pdf(
                             "[/CalRGB << /WhitePoint [0.9505 1 1.089]"
                             " /Gamma [2.2 2.2 2.2] >>]"
                         )
-                entries += (
-                    f" /ColorSpace {cs_ser}"
-                    f" /BitsPerComponent {im.get('bpc', 8)}"
-                )
+                if (
+                    handler is not None
+                    and cs_ser.startswith("[/Indexed")
+                    and "<" in cs_ser
+                ):
+                    # the /Indexed lookup string sits in a STREAM dict, so
+                    # it encrypts with the image stream's key (§7.6.2)
+                    head, _, table = cs_ser.partition("<")
+                    table = bytes.fromhex(table.rstrip(">]"))
+                    cs_fn = lambda num, head=head, table=table: (
+                        f" /ColorSpace {head}<{handler.encrypt(table, num).hex()}>]"
+                    )
+                else:
+                    entries += f" /ColorSpace {cs_ser}"
+                entries += f" /BitsPerComponent {im.get('bpc', 8)}"
             if im.get("decode"):
                 entries += f" /Decode {im['decode']}"
             if im.get("filter"):
@@ -854,7 +866,9 @@ def write_pdf(
                     compress=False,
                 )
                 entries += f" /SMask {sm_num} 0 R"
-            im_num = b.add_stream(entries, im["data"], compress=False)
+            im_num = b.add_stream(
+                entries, im["data"], compress=False, dict_entries_fn=cs_fn
+            )
             xobj_entries.append(f"/Im{i} {im_num} 0 R")
         fonts = f"/F1 {f1} 0 R"
         if f2 is not None:

@@ -1,7 +1,10 @@
 """Content-stream tokenizer pinned token for token: each case lists the
 exact (type, value) sequence ``pdfparse._tokenize_content`` returns, so a
 rewrite of the tokenizer cannot change a token's class or value unseen.
-The object lexer's arrays are pinned the same way."""
+The object lexer reads the same grammar: it must return the same typed
+tokens, and its arrays are pinned the same way."""
+
+import random
 
 import pytest
 
@@ -43,11 +46,12 @@ CASES = [
     ("num-then-op", b"12abc", [("int", 12), _op(b"abc")]),
     ("num-two-floats", b"1.2.3", [("float", 1.2), ("float", 0.3)]),
     ("num-before-delim", b"3[4]", [("int", 3), _s(b"["), ("int", 4), _s(b"]")]),
-    # names: empty, adjacent, no #-decoding in content streams
+    # names: empty, adjacent, #xx escapes (§7.3.5)
     ("name-plain", b"/F1 12 Tf", [_n("F1"), ("int", 12), _op(b"Tf")]),
     ("name-empty", b"/ /A", [_n(""), _n("A")]),
     ("name-adjacent", b"/A/B(x)", [_n("A"), _n("B"), _lit(b"x")]),
-    ("name-hash-kept", b"/a#20b", [_n("a#20b")]),
+    ("name-hash-decoded", b"/a#20b", [_n("a b")]),
+    ("name-hash-not-hex", b"/a#2 /b#zz /c#", [_n("a#2"), _n("b#zz"), _n("c#")]),
     # literal strings
     ("lit-empty", b"() Tj", [_lit(b""), _op(b"Tj")]),
     ("lit-plain", b"(Hello World)Tj", [_lit(b"Hello World"), _op(b"Tj")]),
@@ -177,3 +181,112 @@ def test_object_lexer_arrays(data, want):
 def test_object_lexer_malformed_number_in_array_raises():
     with pytest.raises(ValueError):
         pdfparse._parse_object(pdfparse._Lexer(b"[1 2-3]"))
+
+
+def _lexer_tokens(data):
+    """_Lexer.read_token until the data ends, or until no token starts
+    (where _tokenize_content stops)."""
+    lex = pdfparse._Lexer(data)
+    out = []
+    while True:
+        start = lex.pos
+        try:
+            out.append(lex.read_token())
+        except EOFError:
+            return out
+        except ValueError:
+            if pdfparse._CS_RE.match(data, start) is None:
+                return out
+            raise
+
+
+def _outcome(tokenize, data):
+    try:
+        return [_typed(t) for t in tokenize(data)]
+    except Exception as e:  # both readers must fail alike
+        return type(e).__name__
+
+
+# the content cases without BI and without a byte where no token starts
+_LEXER_CASES = [c for c in CASES if "stop" not in c[0] and not c[0].startswith("bi-")]
+
+
+@pytest.mark.parametrize(
+    "data,want", [c[1:] for c in _LEXER_CASES], ids=[c[0] for c in _LEXER_CASES]
+)
+def test_object_lexer_reads_content_cases(data, want):
+    got = [_typed(t) for t in _lexer_tokens(data)]
+    assert got == want
+    assert [g[0] for g in got] == [w[0] for w in want]
+
+
+# fragments over the PDF token alphabet, valid and malformed: numbers,
+# lone signs and dots, names with good and bad #xx escapes, keywords,
+# strings with escapes (and unterminated), hex strings (and bad ones),
+# markers, whitespace, comments, and the bytes where no token starts
+_FRAGMENTS = [
+    b"0", b"-7", b"+4", b"12", b"1.5", b"-.5", b"3.", b"+", b"-", b".",
+    b"/A", b"/", b"/a#20b", b"/F#31", b"/x#", b"/x#4", b"/x#zz", b"/#41#42",
+    b"Tj", b"q", b"R", b"obj", b"true", b"null", b"'", b'"', b"T*", b"ID",
+    b"\x80\xff", b"()", b"(a)", b"(a(b)c)", b"(a\\)b)", b"(\\101)",
+    b"(ab\\\ncd)", b"(open", b"<>", b"<48 65>", b"<414>", b"<4G>", b"<",
+    b"<<", b">>", b"[", b"]", b" ", b"\n", b"\r\n", b"\x00", b"\t",
+    b"% c\n", b"%x", b")", b"{", b"}", b">",
+]
+_CHARS = b"0123456789+-.#/()<>[]{}% \n\r\t\x00abTjR\\"
+
+
+def _random_inputs(n, seed):
+    rng = random.Random(seed)
+    for i in range(n):
+        if i % 2:
+            yield bytes(rng.choice(_CHARS) for _ in range(rng.randint(1, 16)))
+        else:
+            sep = rng.choice([b"", b" "])
+            k = rng.randint(1, 10)
+            yield sep.join(rng.choice(_FRAGMENTS) for _ in range(k))
+
+
+def test_both_readers_agree_on_random_token_strings():
+    """One grammar: over 4,000 seeded strings the object lexer and the
+    content tokenizer return the same typed tokens, stop at the same
+    byte, and raise alike."""
+    seen = set()
+    for data in _random_inputs(4000, seed=20261019):
+        want = _outcome(pdfparse._tokenize_content, data)
+        assert _outcome(_lexer_tokens, data) == want, data
+        seen.add(want if isinstance(want, str) else "tokens")
+    assert seen >= {"tokens", "ValueError"}
+
+
+def test_hash_escaped_font_name_selects_the_font():
+    """A content stream may write its font name with #xx escapes
+    (§7.3.5): ``/F#31`` is ``/F1``, so the page reads the same words."""
+    from docprompt_spark import pdfwrite
+
+    pages = [{"width": 612.0, "height": 792.0, "images": [],
+              "text_ops": [{"font": "F1", "size": 10.0, "x": 72.0,
+                            "y": 700.0, "mode": "Tm",
+                            "segments": ["alpha beta"]}]}]
+    pdf = pdfwrite.write_pdf(pages, doc_title="t")
+    pf = pdfparse.PdfFile(pdf)
+    ref = pf.resolve(pf.page_refs[0])["Contents"]
+    body = pf.get_object(ref.num).raw
+    assert body.count(b"/F1 10 Tf") == 1
+    body = body.replace(b"/F1 10 Tf", b"/F#31 10 Tf")
+    # an incremental update (§7.5.6) redefines the content stream
+    obj = b"%d 0 obj\n<< /Length %d >>\nstream\n%s\nendstream\nendobj\n" % (
+        ref.num, len(body), body,
+    )
+    xref_at = len(pdf) + len(obj)
+    tail = (
+        b"xref\n%d 1\n%010d 00000 n \ntrailer\n"
+        b"<< /Size %d /Root %d 0 R /Prev %d >>\nstartxref\n%d\n%%%%EOF\n"
+        % (ref.num, len(pdf), pf.trailer["Size"], pf.trailer["Root"].num,
+           int(pdf.rsplit(b"startxref", 1)[1].split()[0]), xref_at)
+    )
+    escaped = pdfparse.PdfFile(pdf + obj + tail)
+    assert b"/F#31 10 Tf" in escaped.get_object(ref.num).raw
+    words = pf.extract_page(0)["words"]
+    assert [w["text"] for w in words] == ["alpha", "beta"]
+    assert escaped.extract_page(0)["words"] == words

@@ -207,3 +207,34 @@ def test_r6_corpus_envelope_golden_spans_hold():
         raw = unwrap_pdf_bytes(bytes(e["pdf"]))
         assert b"/AESV3" in raw
         assert e["spans"] == p["spans"]
+
+
+@pytest.mark.parametrize("envelope", ["encrypted", "encrypted-r6", "structured"])
+def test_encrypted_envelope_docs_read_like_their_plain_twins(envelope, monkeypatch):
+    """Every object of the envelope's first 8 docs loads (a cross-reference
+    stream is not encrypted, §7.6.1), and every page reads the same words
+    and images, image data included, as the same doc written without
+    encryption (an /Indexed palette string in an image dict is encrypted
+    like every other string of the file)."""
+    from docprompt_spark import corpus, pdfparse
+
+    docs = [corpus.gen_doc(i, seed=7, envelope=envelope) for i in range(8)]
+    write = corpus.write_pdf
+    monkeypatch.setattr(
+        corpus, "write_pdf", lambda *a, **k: write(*a, **{**k, "encrypt": None})
+    )
+    twins = [corpus.gen_doc(i, seed=7, envelope=envelope) for i in range(8)]
+    n_encrypted = 0
+    for doc, twin in zip(docs, twins):
+        pf = pdfparse.PdfFile(bytes(doc["pdf"]))
+        plain = pdfparse.PdfFile(bytes(twin["pdf"]))
+        assert plain._crypt is None
+        n_encrypted += pf._crypt is not None
+        for num in [*pf.xref, *pf._compressed]:
+            pf.get_object(num)
+        assert pf.page_count == plain.page_count
+        for p in range(pf.page_count):
+            got = pf.extract_page(p, with_vectors=False, with_image_data=True)
+            want = plain.extract_page(p, with_vectors=False, with_image_data=True)
+            assert (got["words"], got["images"]) == (want["words"], want["images"])
+    assert n_encrypted == (2 if envelope == "structured" else 8)

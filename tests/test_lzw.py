@@ -89,6 +89,59 @@ def test_lzw_image_decodes():
     assert px.shape == (32, 32) and px[0, 5] == 5
 
 
+def _early_change_0_sample():
+    # long enough to cross the 9 -> 10 bit width bump, where the two
+    # EarlyChange values differ by one code
+    data = bytes((i * 37 + (i >> 3)) % 256 for i in range(3000))
+    enc = lzw.encode(data, early_change=0)
+    with pytest.raises(ValueError):
+        lzw.decode(enc)  # read as the default EarlyChange 1
+    return data, enc
+
+
+def test_stream_honours_early_change_0():
+    from docprompt_spark.pdfparse import Name, Stream
+
+    data, enc = _early_change_0_sample()
+    for parms in ({"EarlyChange": 0}, [{"EarlyChange": 0}]):
+        stm = Stream(
+            {"Filter": Name("LZWDecode"), "DecodeParms": parms}, enc
+        )
+        assert stm.data(lambda x: x) == data
+    default = Stream({"Filter": Name("LZWDecode")}, lzw.encode(data))
+    assert default.data(lambda x: x) == data
+
+
+def test_lzw_image_with_early_change_0_decodes():
+    """An LZW image's /EarlyChange 0 rides its codec tag as ;e0, and the
+    decode stage reads the payload with it."""
+    import numpy as np
+
+    from docprompt_spark import multimodal
+    from docprompt_spark.pdfparse import Name
+
+    data, enc = _early_change_0_sample()
+    xo = {
+        "Filter": Name("LZWDecode"), "ColorSpace": Name("DeviceGray"),
+        "BitsPerComponent": 8, "Width": 60, "Height": 50,
+        "DecodeParms": {"EarlyChange": 0},
+    }
+    codec = multimodal._codec_of(xo, lambda x: x)
+    assert codec == "lzw-gray8;e0"
+    px = multimodal.decode_image(enc, 60, 50, codec)
+    assert np.array_equal(px, np.frombuffer(data, np.uint8).reshape(50, 60))
+    xo["DecodeParms"] = {"EarlyChange": 1}
+    assert multimodal._codec_of(xo, lambda x: x) == "lzw-gray8"
+    xo["ColorSpace"] = Name("DeviceRGB")
+    xo["DecodeParms"] = {"EarlyChange": 0}
+    assert multimodal._codec_of(xo, lambda x: x) == "lzw-rgb8;e0"
+    rgb = multimodal.decode_image(enc, 20, 50, "lzw-rgb8;e0")
+    want = multimodal.rgb_to_gray8(
+        np.frombuffer(data, np.uint8).reshape(50, 20, 3)
+    )
+    assert np.array_equal(rgb, want)
+
+
 def test_final_code_width_boundary_phantom_entry():
     """The decoder adds a PHANTOM table entry for the final data code and
     may bump the code width before reading EOD; the encoder must mirror
