@@ -46,6 +46,7 @@ def main() -> None:
         "q1_pricing_summary",
         "q5_supplier_volume_by_nation",
         "minhash_lsh_neardup_pairs",
+        "simhash_neardup_pairs",
         "ann_lsh_bucketed_top5",
         "ann_bruteforce_cosine_top10",
         "sessionize_events",

@@ -416,7 +416,7 @@ def decode_image(
     elif base == "lzw-gray8":
         from docprompt_spark import lzw as _lzw
 
-        raw = _lzw.decode(bytes(payload), early)
+        raw = _unpredict(_lzw.decode(bytes(payload), early))
         px = np.frombuffer(raw, dtype=np.uint8)[: width * height].reshape(
             height, width
         )

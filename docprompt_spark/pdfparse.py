@@ -392,23 +392,26 @@ class _Lexer:
                 return LitString(seg)
         depth = 1
         out = bytearray()
-        while self.pos < len(d):
+        n = len(d)
+        while self.pos < n:
             c = d[self.pos]
             if c == 0x5C:  # backslash
                 self.pos += 1
+                if self.pos == n:
+                    break
                 e = d[self.pos]
                 if e in b"nrtbf":
                     out.append({0x6E: 10, 0x72: 13, 0x74: 9, 0x62: 8, 0x66: 12}[e])
                     self.pos += 1
                 elif 0x30 <= e <= 0x37:  # octal, up to 3 digits
-                    oct_digits = bytearray()
-                    while len(oct_digits) < 3 and 0x30 <= d[self.pos] <= 0x37:
-                        oct_digits.append(d[self.pos])
+                    end = min(self.pos + 3, n)
+                    start = self.pos
+                    while self.pos < end and 0x30 <= d[self.pos] <= 0x37:
                         self.pos += 1
-                    out.append(int(oct_digits, 8) & 0xFF)
+                    out.append(int(d[start : self.pos], 8) & 0xFF)
                 elif e in b"\r\n":  # line continuation
                     self.pos += 1
-                    if e == 0x0D and d[self.pos] == 0x0A:
+                    if e == 0x0D and self.pos < n and d[self.pos] == 0x0A:
                         self.pos += 1
                 else:
                     out.append(e)

@@ -26,11 +26,13 @@ Cross-engine determinism rules used throughout:
 from __future__ import annotations
 
 import functools
+import hashlib
 import itertools
 import sys
 from types import MappingProxyType
 from typing import Callable, Dict, Tuple, Union
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1748,6 +1750,42 @@ def dedup_connected_components(spark, sf_dir):
     )
 
 
+_MINHASH_COLS = "doc_id long, shingles array<string>, band_keys array<string>"
+_P61 = (1 << 61) - 1
+_MH_ROUNDS = np.arange(64, dtype=np.int64)[:, None]
+
+
+def _md5_words(strings, salt: bytes = b"") -> np.ndarray:
+    """The md5 digest of each salted UTF-8 string as two big-endian 64-bit
+    words, shape (n, 2): ``_h60``'s hash is word 0 >> 4 (hex digits 1-15)."""
+    digests = b"".join(hashlib.md5(salt + s.encode()).digest() for s in strings)
+    return np.frombuffer(digests, dtype=">u8").reshape(-1, 2)
+
+
+def _minhash_rows(doc_id, text):
+    """One document's MinHash row, or none with fewer than 3 tokens: its
+    distinct word trigrams in first-seen order (as ``_tri_shingles`` builds
+    them), and its 16 band keys, each the md5 of 4 minhashes joined by ':'.
+
+    64 minhashes from ONE md5 per shingle (Kirsch-Mitzenmacher double
+    hashing): h_i = (h1 + i*h2) mod 2^61-1, with h1 the digest's first 60
+    bits and h2 its next 56 (hex digits 1-15 and 17-30), so i*h2 + h1 <
+    2^63 stays in int64."""
+    toks = [t for t in (text or "").split(" ") if t]
+    if len(toks) < 3:
+        return
+    shingles = list(dict.fromkeys(map(" ".join, zip(toks, toks[1:], toks[2:]))))
+    words = _md5_words(shingles)
+    h1 = (words[:, 0] >> np.uint64(4)).astype(np.int64)
+    h2 = (words[:, 1] >> np.uint64(8)).astype(np.int64)
+    mh = ((h1 + _MH_ROUNDS * h2) % _P61).min(axis=1).tolist()
+    keys = [
+        hashlib.md5(":".join(map(str, mh[i : i + 4])).encode()).hexdigest()
+        for i in range(0, 64, 4)
+    ]
+    yield doc_id, shingles, keys
+
+
 @query(
     "minhash_lsh_neardup_pairs",
     f"""
@@ -1763,9 +1801,9 @@ def dedup_connected_components(spark, sf_dir):
     """,
 )
 def minhash_lsh_neardup_pairs(spark, sf_dir):
-    """MinHash + LSH near-dup: shingle → 64 minhashes → 16 bands of 4 →
-    band-bucket join (with an oversized-bucket guard) → exact-Jaccard
-    verification ≥ 0.6.
+    """MinHash + LSH near-dup: per-doc signature (shingles → 64 minhashes →
+    16 band keys of 4) → band-bucket join (with an oversized-bucket guard)
+    → exact-Jaccard verification ≥ 0.6.
 
     Scale-hardened config (round-1 verdict flagged 16 hashes / 2-row bands
     as candidate-volume-fragile at 100 TB): 4-row bands collide with
@@ -1779,61 +1817,23 @@ def minhash_lsh_neardup_pairs(spark, sf_dir):
     (none do here; at 100 TB a capped bucket is logged work intentionally
     skipped, not silent wrongness).
     """
-    # _spread: the per-row work downstream (shingle transform + two md5s +
-    # 64 mins per shingle) is heavy, and the documents table reads as a
-    # single small parquet split locally — interleaved A/B showed spread
-    # wins for hash-heavy pipelines and loses for cheap map-side aggs
-    aug = _spread(_aug_near(spark, sf_dir))
-    tri = _tri_shingles(aug)
-    n_hashes, n_bands, rows_per_band = 64, 16, 4
-    # 64 minhashes from ONE md5 per shingle (Kirsch-Mitzenmacher double
-    # hashing: h_i = (h1 + i*h2) mod 2^61-1; h1 = 60-bit, h2 = 56-bit halves
-    # of the digest, so i*h2 + h1 < 2^63 stays in BIGINT on both engines) —
-    # 64 cheap arithmetic mins in one groupBy pass instead of 64 md5s
-    P61 = 2305843009213693951  # 2^61 - 1
-    hashed = tri.select(
-        "doc_id",
-        F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long").alias("h1"),
-        F.conv(F.substring(F.md5("shingle"), 17, 14), 16, 10).cast("long").alias("h2"),
-    )
-    mh = hashed.groupBy("doc_id").agg(
-        *[
-            F.min((F.col("h1") + F.lit(i) * F.col("h2")) % F.lit(P61)).alias(f"mh{i}")
-            for i in range(n_hashes)
-        ],
-    )
-    # 16 bands of 4 rows → bucket membership on (band_idx, band_key).
-    # Instead of semi-joining a bucket whitelist and then SELF-JOINING the
-    # banded table (three shuffles of the banded rows), aggregate each
-    # bucket's members once and generate the in-bucket pairs with a narrow
-    # nested explode over the sorted member array — one shuffle, no join.
-    # (No _spread here: mh is post-shuffle output, already distributed;
-    # interleaved A/B showed the extra exchange only costs — sf0.1
-    # 5.34s -> 3.88s and sfsynth1.0 9.39 -> 8.85 without it.)
-    bands = mh.select(
-        "doc_id",
-        F.posexplode(
-            F.array(
-                *[
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            *[
-                                F.col(f"mh{rows_per_band * b + r}")
-                                for r in range(rows_per_band)
-                            ],
-                        )
-                    )
-                    for b in range(n_bands)
-                ]
-            )
-        ).alias("band_idx", "band_key"),
-    )
-    buckets = bands.groupBy("band_idx", "band_key").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("docs")
+    # _spread: the signature kernel is the heavy per-row work, and the
+    # documents table reads as a single small parquet split locally.
+    # localCheckpoint: the kernel runs once; the band buckets and both
+    # shingle joins below read its rows (each branch would re-run it).
+    sig = map_rows(
+        _spread(_aug_near(spark, sf_dir)), _minhash_rows, _MINHASH_COLS
+    ).localCheckpoint()
+    # bucket membership on (band_idx, band_key): aggregate each bucket's
+    # members once and generate the in-bucket pairs with a narrow nested
+    # explode over the sorted member array — one shuffle, no self-join
+    buckets = (
+        sig.select("doc_id", F.posexplode("band_keys").alias("band_idx", "band_key"))
+        .groupBy("band_idx", "band_key")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("docs"))
     )
     # band-bucket skew guard: degenerate buckets (> _LSH_BUCKET_CAP docs)
-    # are dropped before any pair is generated, same semantics as before
+    # are dropped before any pair is generated
     cand = (
         buckets.filter(
             (F.size("docs") >= 2) & (F.size("docs") <= _LSH_BUCKET_CAP)
@@ -1845,37 +1845,17 @@ def minhash_lsh_neardup_pairs(spark, sf_dir):
         )
         .distinct()
     )
-    # exact-Jaccard verification: per-doc shingle ARRAYS for candidate docs
-    # only (semi-join first — at scale almost every doc is not a candidate),
-    # then set intersection in the JVM. Replaces two full shingle-table
-    # joins (which re-shuffled every shingle of every doc) with one
-    # aggregation over candidate docs' shingles + two small joins.
-    cand_docs = (
-        cand.select(F.col("doc_a").alias("doc_id"))
-        .unionAll(cand.select(F.col("doc_b").alias("doc_id")))
-        .distinct()
-    )
-    # NOTE (r6, measured): building sets from the in-row array column
-    # (_tri_shingle_arrays + semi-join, skipping this collect_list) looks
-    # cheaper on paper but is a ~10x REGRESSION at sf1.0 (104s vs 10s,
-    # interleaved A/B): the groupBy's exchange is a load-bearing
-    # materialization point — jac references sets twice, and without an
-    # exchange to reuse, each reference re-evaluates the whole candidate
-    # pipeline upstream. Keep the aggregation.
-    sets = (
-        tri.join(cand_docs, "doc_id", "left_semi")
-        .groupBy("doc_id")
-        .agg(F.collect_list("shingle").alias("sh"))  # already distinct per doc
-    )
+    # exact-Jaccard verification: each candidate pair joins its two
+    # docs' shingle arrays (already distinct per doc), set intersection in
+    # the JVM
+    def shingles(side):
+        return sig.select(
+            F.col("doc_id").alias(f"doc_{side}"), F.col("shingles").alias(f"sh_{side}")
+        )
+
     jac = (
-        cand.join(
-            sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a")),
-            "doc_a",
-        )
-        .join(
-            sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b")),
-            "doc_b",
-        )
+        cand.join(shingles("a"), "doc_a")
+        .join(shingles("b"), "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -1910,23 +1890,22 @@ def minhash_lsh_neardup_pairs(spark, sf_dir):
     )
 
 
-def _simhash_spark(df, text_col="text", bits=60):
-    toks = df.select(
-        "doc_id", F.explode(F.array_distinct(F.split(text_col, " "))).alias("tok")
-    ).filter(F.col("tok") != "")
-    h = toks.withColumn("h", _h60(F.col("tok"), salt="sim:"))
-    aggs = [
-        F.sum(
-            F.when(F.shiftright(F.col("h"), k).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-        ).alias(f"s{k}")
-        for k in range(bits)
-    ]
-    sums = h.groupBy("doc_id").agg(*aggs)
-    sim = None
-    for k in range(bits):
-        term = F.when(F.col(f"s{k}") > 0, F.lit(1 << k)).otherwise(F.lit(0))
-        sim = term if sim is None else sim + term
-    return sums.select("doc_id", sim.cast("long").alias("simhash"))
+_SIMHASH_COLS = "doc_id long, simhash bigint"
+_SIM_BITS = np.arange(60, dtype=np.uint64)
+_SIM_WEIGHTS = np.uint64(1) << _SIM_BITS
+
+
+def _simhash_rows(doc_id, text):
+    """One document's 60-bit SimHash over its distinct non-empty tokens,
+    or no row without one: bit k is set when more tokens than not have bit
+    k set in their ``_h60(tok, "sim:")``."""
+    toks = set((text or "").split(" "))
+    toks.discard("")
+    if not toks:
+        return
+    h = _md5_words(toks, b"sim:")[:, 0] >> np.uint64(4)
+    ones = ((h[:, None] >> _SIM_BITS) & np.uint64(1)).sum(axis=0)
+    yield doc_id, int(_SIM_WEIGHTS[2 * ones > len(toks)].sum())
 
 
 def _simhash_sql(src_sql: str, bits: int = 60) -> str:
@@ -1949,7 +1928,8 @@ def _simhash_sql(src_sql: str, bits: int = 60) -> str:
 @query("simhash_signatures", _simhash_sql("SELECT doc_id, text FROM documents"))
 def simhash_signatures(spark, sf_dir):
     """SimHash (60-bit) over distinct tokens, portable md5-based hashing."""
-    return _simhash_spark(_t(spark, sf_dir, "documents").select("doc_id", "text"))
+    docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
+    return map_rows(_spread(docs), _simhash_rows, _SIMHASH_COLS)
 
 
 @query(
@@ -1988,7 +1968,11 @@ def simhash_neardup_pairs(spark, sf_dir):
     Output set is identical: every a<b pair with hamming ≤ 3 appears
     exactly once (within-group pairs share a signature; cross-group pairs
     are ordered with least/greatest)."""
-    sims = _simhash_spark(_spread(_aug_near(spark, sf_dir)))
+    # localCheckpoint: the kernel runs once; the signature groups below
+    # feed four branches
+    sims = map_rows(
+        _spread(_aug_near(spark, sf_dir)), _simhash_rows, _SIMHASH_COLS
+    ).localCheckpoint()
     grp = sims.groupBy("simhash").agg(
         F.array_sort(F.collect_list("doc_id")).alias("members")
     )
@@ -2020,7 +2004,8 @@ def simhash_neardup_pairs(spark, sf_dir):
         ).alias("band"),
     ).select("simhash", "band.band_idx", "band.band_val")
     a, b = banded.alias("a"), banded.alias("b")
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+    # TINYINT, as DuckDB's bit_count types it
+    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("byte")
     sig_pairs = (
         a.join(
             b,
@@ -2050,7 +2035,7 @@ def simhash_neardup_pairs(spark, sf_dir):
     selfpairs = grp.filter(F.size("members") >= 2).select(
         F.col("simhash").alias("sig_a"),
         F.col("simhash").alias("sig_b"),
-        F.lit(0).cast("integer").alias("hamming"),
+        F.lit(0).cast("byte").alias("hamming"),
     )
     gax = grp.select(F.col("simhash").alias("sig_a"), F.explode("members").alias("x"))
     gbx = grp.select(F.col("simhash").alias("sig_b"), F.explode("members").alias("y"))

@@ -203,8 +203,8 @@ def _lexer_tokens(data):
 def _outcome(tokenize, data):
     try:
         return [_typed(t) for t in tokenize(data)]
-    except Exception as e:  # both readers must fail alike
-        return type(e).__name__
+    except ValueError:  # the one error either reader may raise
+        return "ValueError"
 
 
 # the content cases without BI and without a byte where no token starts
@@ -247,10 +247,20 @@ def _random_inputs(n, seed):
             yield sep.join(rng.choice(_FRAGMENTS) for _ in range(k))
 
 
+@pytest.mark.parametrize("data", [b"(\\", b"(\\12", b"(\\7", b"(\\\r"])
+def test_string_ending_inside_an_escape_raises_value_error(data):
+    """Data that ends inside a literal string's escape (a lone backslash,
+    an octal run, a CR continuation) is malformed, not an index error."""
+    for tokenize in (pdfparse._tokenize_content, _lexer_tokens):
+        with pytest.raises(ValueError):
+            list(tokenize(data))
+
+
 def test_both_readers_agree_on_random_token_strings():
     """One grammar: over 4,000 seeded strings the object lexer and the
     content tokenizer return the same typed tokens, stop at the same
-    byte, and raise alike."""
+    byte, and raise alike; ``ValueError`` is the only error either may
+    raise."""
     seen = set()
     for data in _random_inputs(4000, seed=20261019):
         want = _outcome(pdfparse._tokenize_content, data)

@@ -142,6 +142,31 @@ def test_lzw_image_with_early_change_0_decodes():
     assert np.array_equal(rgb, want)
 
 
+def test_lzw_gray_image_undoes_its_predictor():
+    """An LZW gray image with PNG Up rows (tag ``lzw-gray8;p12;c8``)
+    decodes to the same pixels as its Flate twin."""
+    import numpy as np
+
+    from docprompt_spark import multimodal
+    from docprompt_spark.pdfparse import Name
+
+    px = np.array([[(r * 29 + c * 11) % 256 for c in range(8)] for r in range(8)],
+                  dtype=np.uint8)
+    up = np.diff(px.astype(np.int16), axis=0, prepend=0).astype(np.uint8)
+    rows = b"".join(b"\x02" + row.tobytes() for row in up)  # filter 2 = Up
+    xo = {
+        "Filter": Name("LZWDecode"), "ColorSpace": Name("DeviceGray"),
+        "BitsPerComponent": 8, "Width": 8, "Height": 8,
+        "DecodeParms": {"Predictor": 12, "Columns": 8},
+    }
+    codec = multimodal._codec_of(xo, lambda x: x)
+    assert codec == "lzw-gray8;p12;c8"
+    got = multimodal.decode_image(lzw.encode(rows), 8, 8, codec)
+    flate = multimodal.decode_image(zlib.compress(rows), 8, 8, "flate-gray8;p12;c8")
+    assert np.array_equal(flate, px)
+    assert np.array_equal(got, flate)
+
+
 def test_final_code_width_boundary_phantom_entry():
     """The decoder adds a PHANTOM table entry for the final data code and
     may bump the code width before reading EOD; the encoder must mirror

@@ -87,6 +87,28 @@ def test_query_matches_oracle(spark, duck, name):
     _assert_frames_equal(spark_pdf, duck_pdf, name)
 
 
+# pandas and str() equate INTEGER with BIGINT; DuckDB's relation types do not
+_NEAR_DUP = [
+    "minhash_lsh_neardup_pairs",
+    "simhash_neardup_pairs",
+    "simhash_signatures",
+    "dedup_connected_components",
+]
+
+
+@pytest.mark.parametrize("name", _NEAR_DUP)
+def test_near_dup_output_types_match_oracle(spark, duck, name):
+    """Each output column's Spark type maps to the DuckDB type of the
+    oracle's column of the same position and name."""
+    from docprompt_spark import queries as q
+
+    duck_of = {**q._DUCK_TYPES, "tinyint": "TINYINT"}
+    fn, oracle = q.registry()[name]
+    rel = duck.sql(oracle() if callable(oracle) else oracle)
+    got = [(f.name, duck_of[f.dataType.simpleString()]) for f in fn(spark, SF_DIR).schema]
+    assert got == list(zip(rel.columns, map(str, rel.types)))
+
+
 def test_every_query_has_an_oracle():
     """Round-2 close: the rows-only set is EMPTY — every registry query has
     a DuckDB-checkable oracle. Guard against regressions."""

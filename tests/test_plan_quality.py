@@ -3,6 +3,7 @@ actually appear in the executed plans (pushdown, broadcast, partial agg,
 whole-stage codegen)."""
 
 import os
+import time
 
 import pyspark.sql.functions as F
 import pytest
@@ -287,3 +288,34 @@ def test_ann_topk_uses_take_ordered(spark):
         plan = _plan(q.registry()[name][0](spark, SF_DIR))
         assert "TakeOrderedAndProject" in plan, name
         assert "Window" not in plan, name
+
+
+def _stages_run(spark, group, action) -> int:
+    """Stages that ran tasks in the jobs ``action`` starts, read from the
+    status store once every job of the group has ended."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    deadline = time.monotonic() + 30
+    while True:
+        jobs = [st.getJobInfo(j) for j in st.getJobIdsForGroup(group)]
+        if all(j.status == "SUCCEEDED" for j in jobs) or time.monotonic() > deadline:
+            break
+        time.sleep(0.1)
+    # a later job lists the stages it reuses, as skipped: same ids, no tasks
+    infos = [st.getStageInfo(s) for s in {s for j in jobs for s in j.stageIds}]
+    return sum(1 for i in infos if i is not None and i.numCompletedTasks > 0)
+
+
+def test_minhash_runs_in_few_stages(spark):
+    """The per-doc signature kernel replaced the 64-column minhash
+    groupBy, the wide band posexplode, a second shingle pass and the
+    candidate-doc shingle collect: here the query's build and action run
+    7 stages in all, against 12 with the JVM-side signature."""
+    fn = _queries.registry()["minhash_lsh_neardup_pairs"][0]
+    n = _stages_run(spark, "minhash-stages", lambda: fn(spark, SF_DIR).collect())
+    assert 0 < n <= 7, n
