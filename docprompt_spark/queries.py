@@ -187,8 +187,25 @@ def _ordered_names() -> list:
     return pri + mid + low
 
 
+# Each query table's columns as Spark infers them from the files: a declared
+# read runs no schema-inference job. A declared column missing from a file
+# would read as NULL, so tests/test_query_tables.py checks each declaration.
+_TABLE_DDL = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double, c_mktsegment string",
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int, p_retailprice double",
+    "orders": "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double, o_orderdate timestamp_ntz, o_orderpriority string",
+    "lineitem": "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int, l_quantity double, l_extendedprice double, l_discount double, l_tax double, l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz",
+    "events": "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, value double, props string",
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(_TABLE_DDL[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def _h60(col, salt: str = ""):
@@ -208,6 +225,7 @@ _DUCK_TYPES = {
     "bigint": "BIGINT",
     "double": "DOUBLE",
     "boolean": "BOOLEAN",
+    "tinyint": "TINYINT",
 }
 
 
@@ -358,19 +376,17 @@ def q3_shipping_priority(spark, sf_dir):
 )
 def q5_supplier_volume_by_nation(spark, sf_dir):
     """Multi-way star join: every dimension broadcast (no shuffle until the
-    final groupBy)."""
+    final groupBy). Each dimension joins lineitem directly, so the three
+    broadcasts build side by side, none waiting on another's job."""
     li = _t(spark, sf_dir, "lineitem")
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _t(spark, sf_dir, "nation")
     r = _t(spark, sf_dir, "region").filter(F.col("r_name").isin("ASIA", "EUROPE"))
     dec = lambda c_: F.col(c_).cast("decimal(18,4)")
-    dims = F.broadcast(
-        s.join(n, s.s_nationkey == n.n_nationkey)
-        .join(r, n.n_regionkey == r.r_regionkey)
-        .select("s_suppkey", "n_name")
-    )
     return (
-        li.join(dims, li.l_suppkey == dims.s_suppkey)
+        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
+        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
+        .join(F.broadcast(r.select("r_regionkey")), n.n_regionkey == r.r_regionkey)
         .groupBy("n_name")
         .agg(
             F.round(
@@ -594,7 +610,7 @@ def clean_text_lengths(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
-        F.length(F.trim(F.regexp_replace("text", r"\s+", " "))).alias("clean_len"),
+        F.length(F.trim(F.regexp_replace("text", r"\s+", " "))).cast("long").alias("clean_len"),
     )
 
 
@@ -1171,7 +1187,7 @@ def token_counts_bpe_ish(spark, sf_dir):
         "doc_id",
         F.size(
             F.expr(r"regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]', 0)")
-        ).alias("n_tokens"),
+        ).cast("long").alias("n_tokens"),
     )
 
 
@@ -1533,14 +1549,8 @@ def url_domain_filter(spark, sf_dir):
 def _tri_shingles(df):
     """Distinct word-trigram shingles, computed entirely inside the row
     (array higher-order functions): split → drop empty tokens →
-    consecutive-triple transform → per-doc array_distinct → explode.
-
-    The former implementation exploded tokens and ran a lead() window
-    (shuffle + sort of every token) followed by a global distinct (second
-    shuffle). Same output — (doc_id, shingle) pairs are unique either way
-    because doc_id is in the key — with ZERO exchanges, so callers that
-    reference the shingle table more than once recompute a narrow codegen
-    scan instead of two shuffles each time.
+    consecutive-triple transform → per-doc array_distinct → explode. No
+    exchange: a caller that reads the table twice recomputes a narrow scan.
 
     DO NOT split this into a project-the-array step + explode(column):
     putting the array behind a Project alias lets CollapseProject inline
@@ -1548,20 +1558,30 @@ def _tri_shingles(df):
     split() re-evaluates ~3x PER SHINGLE — measured 140x slower at sf1.0
     (tri count 0.7s -> 99.8s). The explode must wrap the expression
     directly so the Generate keeps ``toks`` materialized below it."""
-    toks = df.select(
+    return _tokens(df).select(
+        "doc_id", F.explode(F.array_distinct(F.expr(_TRIGRAMS))).alias("shingle")
+    )
+
+
+# a document's word trigrams over its non-empty tokens ``toks``
+_TRIGRAMS = (
+    "IF(size(toks) < 3, CAST(array() AS array<string>), "
+    "transform(sequence(0, size(toks) - 3), "
+    "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
+)
+
+
+def _tokens(df):
+    return df.select(
         "doc_id", F.expr("filter(split(text, ' '), t -> t != '')").alias("toks")
     )
-    return toks.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    "IF(size(toks) < 3, CAST(array() AS array<string>), "
-                    "transform(sequence(0, size(toks) - 3), "
-                    "i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])))"
-                )
-            )
-        ).alias("shingle"),
+
+
+def _shingle_sets(df):
+    """(doc_id, shingles): each document's distinct trigrams in first-seen
+    order, as one array: the set ``_tri_shingles`` explodes."""
+    return _tokens(df).select(
+        "doc_id", F.array_distinct(F.expr(_TRIGRAMS)).alias("shingles")
     )
 
 
@@ -1750,7 +1770,7 @@ def dedup_connected_components(spark, sf_dir):
     )
 
 
-_MINHASH_COLS = "doc_id long, shingles array<string>, band_keys array<string>"
+_MINHASH_COLS = "doc_id long, band_keys array<string>"
 _P61 = (1 << 61) - 1
 _MH_ROUNDS = np.arange(64, dtype=np.int64)[:, None]
 
@@ -1763,9 +1783,9 @@ def _md5_words(strings, salt: bytes = b"") -> np.ndarray:
 
 
 def _minhash_rows(doc_id, text):
-    """One document's MinHash row, or none with fewer than 3 tokens: its
-    distinct word trigrams in first-seen order (as ``_tri_shingles`` builds
-    them), and its 16 band keys, each the md5 of 4 minhashes joined by ':'.
+    """One document's MinHash row, or none with fewer than 3 tokens: its 16
+    band keys over its distinct word trigrams (``_shingle_sets``), each the
+    md5 of 4 minhashes joined by ':'.
 
     64 minhashes from ONE md5 per shingle (Kirsch-Mitzenmacher double
     hashing): h_i = (h1 + i*h2) mod 2^61-1, with h1 the digest's first 60
@@ -1783,7 +1803,7 @@ def _minhash_rows(doc_id, text):
         hashlib.md5(":".join(map(str, mh[i : i + 4])).encode()).hexdigest()
         for i in range(0, 64, 4)
     ]
-    yield doc_id, shingles, keys
+    yield doc_id, keys
 
 
 @query(
@@ -1817,13 +1837,12 @@ def minhash_lsh_neardup_pairs(spark, sf_dir):
     (none do here; at 100 TB a capped bucket is logged work intentionally
     skipped, not silent wrongness).
     """
+    aug = _aug_near(spark, sf_dir)
     # _spread: the signature kernel is the heavy per-row work, and the
-    # documents table reads as a single small parquet split locally.
-    # localCheckpoint: the kernel runs once; the band buckets and both
-    # shingle joins below read its rows (each branch would re-run it).
-    sig = map_rows(
-        _spread(_aug_near(spark, sf_dir)), _minhash_rows, _MINHASH_COLS
-    ).localCheckpoint()
+    # documents table reads as a single small parquet split locally. The
+    # kernel's rows feed the band buckets alone, so it runs once in the
+    # buckets' map stage, with no checkpoint job of its own.
+    sig = map_rows(_spread(aug), _minhash_rows, _MINHASH_COLS)
     # bucket membership on (band_idx, band_key): aggregate each bucket's
     # members once and generate the in-bucket pairs with a narrow nested
     # explode over the sorted member array — one shuffle, no self-join
@@ -1845,11 +1864,13 @@ def minhash_lsh_neardup_pairs(spark, sf_dir):
         )
         .distinct()
     )
-    # exact-Jaccard verification: each candidate pair joins its two
-    # docs' shingle arrays (already distinct per doc), set intersection in
-    # the JVM
+    # exact-Jaccard verification: each candidate pair joins its two docs'
+    # distinct shingle arrays, a narrow JVM expression over the documents
+    # that both joins share, and intersects them in the JVM
+    sets = _shingle_sets(aug)
+
     def shingles(side):
-        return sig.select(
+        return sets.select(
             F.col("doc_id").alias(f"doc_{side}"), F.col("shingles").alias(f"sh_{side}")
         )
 
@@ -1956,39 +1977,37 @@ def simhash_neardup_pairs(spark, sf_dir):
 
     1. group docs by signature (one row per distinct signature, sorted
        member array);
-    2. WITHIN-group pairs (hamming 0) are emitted by a narrow nested
-       explode over each sorted member array — C(n,2) rows, no join, no
-       shuffle, no dedup;
+    2. WITHIN-group pairs (hamming 0): a signature that two docs or more
+       share pairs with itself in the banded join below, and the expansion
+       emits its C(n,2) doc pairs;
     3. CROSS-group candidates come from the banded self-join on the ~2×
        smaller distinct-signature table (tiny → broadcast), hamming is
-       evaluated once per signature pair, the ≤3 survivors are deduped at
-       signature level (~500k rows, not 100M), then expanded to doc pairs
-       via two broadcast joins + explodes.
+       evaluated once per signature pair, each ≤3 survivor is kept from the
+       lowest band its pair agrees in (~500k rows, not 100M), then expanded
+       to doc pairs via two broadcast joins + explodes.
 
     Output set is identical: every a<b pair with hamming ≤ 3 appears
     exactly once (within-group pairs share a signature; cross-group pairs
     are ordered with least/greatest)."""
-    # localCheckpoint: the kernel runs once; the signature groups below
-    # feed four branches
+    # _spread as in minhash. A numbered hash repartition, which AQE does not
+    # coalesce, keeps the groups on all cores for the compute-dense band
+    # join (2x at sfsynth1.0 against 1-2 coalesced partitions); every branch
+    # reads that one exchange of the kernel's rows, so the kernel runs once.
     sims = map_rows(
         _spread(_aug_near(spark, sf_dir)), _simhash_rows, _SIMHASH_COLS
-    ).localCheckpoint()
-    grp = sims.groupBy("simhash").agg(
-        F.array_sort(F.collect_list("doc_id")).alias("members")
     )
-    # --- cross-group candidates: banded join on distinct signatures only.
-    # The distinct-sig table is tiny in BYTES (8 B/row), so AQE coalesces
-    # it to 1-2 partitions, but the band explode + self-join downstream is
-    # compute-dense: a DIRECT round-robin repartition keeps it on all
-    # cores — measured 2x at sfsynth1.0 (5.15s vs 9.91s without; costs
-    # ~0.8s of fixed exchange at sf0.1 — the right trade at the measured
-    # scale, and the shuffled payload is O(#distinct sigs), not O(docs)).
-    # Deliberately NOT the guarded _spread: this spread is wanted whatever
-    # the size estimate of the post-shuffle input says.
-    sc_ = spark.sparkContext
-    sigs = grp.select("simhash").repartition(sc_.defaultParallelism * 2)
-    banded = sigs.select(
+    grp = (
+        sims.repartition(spark.sparkContext.defaultParallelism * 2, "simhash")
+        .groupBy("simhash")
+        .agg(F.array_sort(F.collect_list("doc_id")).alias("members"))
+    )
+    # --- candidates: banded self-join on distinct signatures only; a
+    # signature that two docs or more share pairs with itself. Both sides
+    # read the member count: a side reading `simhash` alone would prune
+    # doc_id from its exchange, which then would run the kernel again.
+    banded = grp.select(
         "simhash",
+        F.size("members").alias("n"),
         F.explode(
             F.array(
                 *[
@@ -2002,46 +2021,47 @@ def simhash_neardup_pairs(spark, sf_dir):
                 ]
             )
         ).alias("band"),
-    ).select("simhash", "band.band_idx", "band.band_val")
+    ).select("simhash", "n", "band.band_idx", "band.band_val")
     a, b = banded.alias("a"), banded.alias("b")
+    xor = F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
     # TINYINT, as DuckDB's bit_count types it
-    ham = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))).cast("byte")
+    ham = F.bit_count(xor).cast("byte")
+    # a signature pair that agrees in several bands is kept from the lowest
+    # of them alone, so each pair comes out once, with no dedup shuffle
+    first_band = F.least(
+        *[F.when(F.shiftright(xor, k * 15).bitwiseAND(32767) == 0, k) for k in range(4)]
+    )
+    shared = (F.col("a.n") >= 2) & (F.col("b.n") >= 2)
     sig_pairs = (
         a.join(
             b,
             (F.col("a.band_idx") == F.col("b.band_idx"))
             & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.simhash") < F.col("b.simhash")),
+            & (
+                (F.col("a.simhash") < F.col("b.simhash"))
+                | ((F.col("a.simhash") == F.col("b.simhash")) & shared)
+            ),
         )
+        .filter((ham <= 3) & (F.col("a.band_idx") == first_band))
         .select(
             F.col("a.simhash").alias("sig_a"),
             F.col("b.simhash").alias("sig_b"),
             ham.alias("hamming"),
         )
-        .filter(F.col("hamming") <= 3)
-        .dropDuplicates(["sig_a", "sig_b"])
     )
-    # --- expansion to doc pairs. Same-signature (hamming 0) groups are
-    # folded in as self-pairs of the signature table, and the expansion is
-    # done by JOINING against EXPLODED member tables: the join's
-    # multi-match iteration emits each pair as a narrow scalar row. (A
-    # Generate over a carried members array copies the array bytes once
-    # per emitted row — measured as the dominant GC + straggler cost at
-    # sf1.0, where one signature holds 3,258 docs → 5.3M pairs from a
-    # single task.) No _spread on the union: both inputs are post-shuffle
-    # (already distributed) and the explode fan-out happens inside the
-    # joins — interleaved A/B showed the extra exchange only costs
-    # (sfsynth1.0 8.77s -> 5.40s, sf0.1 6.29s -> 2.83s without it).
-    selfpairs = grp.filter(F.size("members") >= 2).select(
-        F.col("simhash").alias("sig_a"),
-        F.col("simhash").alias("sig_b"),
-        F.lit(0).cast("byte").alias("hamming"),
-    )
+    # --- expansion to doc pairs, by JOINING against EXPLODED member
+    # tables: the join's multi-match iteration emits each pair as a narrow
+    # scalar row. (A Generate over a carried members array copies the array
+    # bytes once per emitted row — measured as the dominant GC + straggler
+    # cost at sf1.0, where one signature holds 3,258 docs → 5.3M pairs from
+    # a single task.) No _spread on the signature pairs: they are
+    # post-shuffle (already distributed) and the explode fan-out happens
+    # inside the joins — interleaved A/B showed the extra exchange only
+    # costs (sfsynth1.0 8.77s -> 5.40s, sf0.1 6.29s -> 2.83s without it).
     gax = grp.select(F.col("simhash").alias("sig_a"), F.explode("members").alias("x"))
     gbx = grp.select(F.col("simhash").alias("sig_b"), F.explode("members").alias("y"))
     return (
-        sig_pairs.unionAll(selfpairs)
-        .join(gax, "sig_a")
+        sig_pairs.join(gax, "sig_a")
         .join(gbx, "sig_b")
         .filter((F.col("sig_a") != F.col("sig_b")) | (F.col("x") < F.col("y")))
         .select(
@@ -2092,7 +2112,7 @@ def fuzzy_term_match(spark, sf_dir):
     )
     return (
         vocab.crossJoin(qs)
-        .withColumn("dist", F.levenshtein("q", "tok"))
+        .withColumn("dist", F.levenshtein("q", "tok").cast("long"))
         .filter(F.col("dist") <= 2)
         .select("q", "tok", "dist")
     )
@@ -2970,7 +2990,7 @@ def ntile_chunking(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("event_id")
     return (
-        ev.select("user_id", "event_id", F.ntile(8).over(w).alias("chunk"))
+        ev.select("user_id", "event_id", F.ntile(8).over(w).cast("long").alias("chunk"))
         .groupBy("user_id", "chunk")
         .agg(F.count("*").alias("n"), F.min("event_id").alias("first_id"))
     )
@@ -4905,7 +4925,7 @@ def line_block_word_assignment(spark, sf_dir):
     pairs = wdf.join(ldf, ov > 0).select("w_idx", "l_idx", ov.alias("ov"))
     w = Window.partitionBy("w_idx").orderBy(F.desc("ov"), F.asc("l_idx"))
     best = pairs.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
-    return best.groupBy("l_idx").agg(
+    return best.groupBy(F.col("l_idx").cast("int").alias("l_idx")).agg(
         F.count("*").cast("long").alias("n_words"),
         F.min("w_idx").cast("int").alias("first_word"),
     )

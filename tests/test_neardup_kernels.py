@@ -85,21 +85,21 @@ def docs(spark):
 
 
 def test_minhash_kernel_matches_spark_expressions(docs):
-    got = {
-        r.doc_id: (r.shingles, r.band_keys)
-        for r in map_rows(docs, q._minhash_rows, q._MINHASH_COLS).collect()
-    }
+    """The kernel's band keys, and the shingle arrays the verification
+    joins read (``_shingle_sets``), against the former expressions."""
+    got = dict(map_rows(docs, q._minhash_rows, q._MINHASH_COLS).collect())
+    sets = dict(q._shingle_sets(docs).collect())
     want = {r.doc_id: (r.shingles, r.band_keys) for r in _ref_minhash(docs).collect()}
     assert docs.count() == 500 + len(EDGE_TEXTS)
     assert set(got) == set(want)
     # fewer than 3 tokens, empty and None text give no row
     assert sorted(i for i in got if i < 0) == [-10, -9, -8, -2, -1]
+    assert {i for i, sh in sets.items() if sh} == set(want)
     for doc_id, (shingles, keys) in want.items():
-        got_sh, got_keys = got[doc_id]
-        assert got_keys == keys, doc_id
-        assert len(set(got_sh)) == len(got_sh), doc_id
-        assert sorted(got_sh) == sorted(shingles), doc_id
-    assert got[-8][0] == ["x y z", "y z x", "z x y"]
+        assert got[doc_id] == keys, doc_id
+        assert len(set(sets[doc_id])) == len(sets[doc_id]), doc_id
+        assert sorted(sets[doc_id]) == sorted(shingles), doc_id
+    assert sets[-8] == ["x y z", "y z x", "z x y"]
 
 
 def test_simhash_kernel_matches_spark_expressions(docs):

@@ -76,37 +76,44 @@ def duck():
     con.close()
 
 
+def _assert_types_match(df, rel, name: str):
+    """Each output column's Spark type maps to the DuckDB relation type of
+    the oracle's column of the same position and name. pandas and str()
+    equate INTEGER with BIGINT; the relation types do not, and neither does
+    a type-aware hash of the oracle's rows."""
+    from docprompt_spark import queries as q
+
+    got = [(f.name, q._DUCK_TYPES[f.dataType.simpleString()]) for f in df.schema]
+    assert got == list(zip(rel.columns, map(str, rel.types))), name
+
+
+# text_quality_scores.n_tok is INTEGER in Spark and BIGINT in its oracle.
+# perfbench pins the query's fingerprint, which hashes the INTEGER column,
+# so the cast waits for a change to the benchmark.
+_TYPE_DRIFT = ["text_quality_scores"]
+
+
 @pytest.mark.parametrize("name", _all_query_names())
 def test_query_matches_oracle(spark, duck, name):
     import __spark_entry__ as entrymod
 
     fn = entrymod.queries()[name]
     sql = entrymod.oracle_sql()[name]
-    spark_pdf = fn(spark, SF_DIR).toPandas()
+    df = fn(spark, SF_DIR)
+    spark_pdf = df.toPandas()
     duck_pdf = duck.execute(sql).df()
     _assert_frames_equal(spark_pdf, duck_pdf, name)
+    if name not in _TYPE_DRIFT:
+        _assert_types_match(df, duck.sql(sql), name)
 
 
-# pandas and str() equate INTEGER with BIGINT; DuckDB's relation types do not
-_NEAR_DUP = [
-    "minhash_lsh_neardup_pairs",
-    "simhash_neardup_pairs",
-    "simhash_signatures",
-    "dedup_connected_components",
-]
-
-
-@pytest.mark.parametrize("name", _NEAR_DUP)
-def test_near_dup_output_types_match_oracle(spark, duck, name):
-    """Each output column's Spark type maps to the DuckDB type of the
-    oracle's column of the same position and name."""
+@pytest.mark.xfail(strict=True, reason="n_tok is INTEGER; perfbench pins its fingerprint")
+@pytest.mark.parametrize("name", _TYPE_DRIFT)
+def test_output_types_that_still_drift_from_oracle(spark, duck, name):
     from docprompt_spark import queries as q
 
-    duck_of = {**q._DUCK_TYPES, "tinyint": "TINYINT"}
     fn, oracle = q.registry()[name]
-    rel = duck.sql(oracle() if callable(oracle) else oracle)
-    got = [(f.name, duck_of[f.dataType.simpleString()]) for f in fn(spark, SF_DIR).schema]
-    assert got == list(zip(rel.columns, map(str, rel.types)))
+    _assert_types_match(fn(spark, SF_DIR), duck.sql(oracle), name)
 
 
 def test_every_query_has_an_oracle():
@@ -221,8 +228,10 @@ def test_line_block_assignment_on_synthetic_fixture(spark, monkeypatch, tmp_path
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     spark_pdf = df.toPandas()
-    duck_pdf = duckdb.connect().execute(oracle()).df()
+    con = duckdb.connect()
+    duck_pdf = con.execute(oracle()).df()
     _assert_frames_equal(spark_pdf, duck_pdf, "line_block_word_assignment")
+    _assert_types_match(df, con.sql(oracle()), "line_block_word_assignment")
     got = sorted(zip(spark_pdf.l_idx, spark_pdf.n_words, spark_pdf.first_word))
     # line 0: words 0-2; line 1: words 3-4 (4 ties with line 2); line 2:
     # words 5-7; word 8 overlaps no line, word 9 only the dropped line 3

@@ -312,10 +312,31 @@ def _stages_run(spark, group, action) -> int:
 
 
 def test_minhash_runs_in_few_stages(spark):
-    """The per-doc signature kernel replaced the 64-column minhash
-    groupBy, the wide band posexplode, a second shingle pass and the
-    candidate-doc shingle collect: here the query's build and action run
-    7 stages in all, against 12 with the JVM-side signature."""
+    """The signature kernel runs in the band buckets' map stage, with no
+    checkpoint job of its own, and both verification joins read one
+    broadcast of the shingle arrays: here the query's build and action run
+    5 stages in all (the spread, the shingle broadcast, kernel and band
+    map, band reduce and candidate dedup, verification), against 7 with a
+    checkpointed kernel and 12 with the JVM-side signature."""
     fn = _queries.registry()["minhash_lsh_neardup_pairs"][0]
     n = _stages_run(spark, "minhash-stages", lambda: fn(spark, SF_DIR).collect())
-    assert 0 < n <= 7, n
+    assert 0 < n <= 5, n
+
+
+def test_simhash_runs_in_few_stages(spark):
+    """The kernel's rows are hash-partitioned straight into the signature
+    groups and every branch reads that one exchange: the spread, the
+    kernel, the band broadcast, the member broadcast and the expansion,
+    against 10 stages with a checkpointed kernel."""
+    fn = _queries.registry()["simhash_neardup_pairs"][0]
+    n = _stages_run(spark, "simhash-stages", lambda: fn(spark, SF_DIR).collect())
+    assert 0 < n <= 5, n
+
+
+def test_q5_runs_in_few_stages(spark):
+    """Three dimension broadcasts, the lineitem stage and the final
+    aggregate; each dimension joins lineitem directly, so no broadcast
+    waits on another."""
+    fn = _queries.registry()["q5_supplier_volume_by_nation"][0]
+    n = _stages_run(spark, "q5-stages", lambda: fn(spark, SF_DIR).collect())
+    assert 0 < n <= 5, n
