@@ -116,6 +116,24 @@ def test_output_types_that_still_drift_from_oracle(spark, duck, name):
     _assert_types_match(fn(spark, SF_DIR), duck.sql(oracle), name)
 
 
+# The near-dup queries keep a check of their own, by name, so that their
+# types stay pinned even if one joins _TYPE_DRIFT.
+_NEAR_DUP = [
+    "minhash_lsh_neardup_pairs",
+    "simhash_neardup_pairs",
+    "simhash_signatures",
+    "dedup_connected_components",
+]
+
+
+@pytest.mark.parametrize("name", _NEAR_DUP)
+def test_near_dup_output_types_match_oracle(spark, duck, name):
+    from docprompt_spark import queries as q
+
+    fn, oracle = q.registry()[name]
+    _assert_types_match(fn(spark, SF_DIR), duck.sql(oracle), name)
+
+
 def test_every_query_has_an_oracle():
     """Round-2 close: the rows-only set is EMPTY — every registry query has
     a DuckDB-checkable oracle. Guard against regressions."""
